@@ -34,11 +34,6 @@ def main(argv: list[str] | None = None) -> int:
         action="store_true",
         help="use the reference's declared FLOAT schemas instead of sampled DOUBLEs",
     )
-    p.add_argument(
-        "--no-stage",
-        action="store_true",
-        help="skip the JSON->parquet staging round-trip (tiny or already-columnar inputs)",
-    )
     p.add_argument("--master", default=None, help="Spark master override (default: env/local)")
     args = p.parse_args(argv)
 
@@ -62,7 +57,7 @@ def main(argv: list[str] | None = None) -> int:
         declared_schemas=args.declared_schemas,
     )
     t0 = time.perf_counter()
-    tables = sparkify.run_pipeline(spark, cfg, stage=not args.no_stage)
+    tables = sparkify.run_pipeline(spark, cfg)
     for name, df in tables.items():
         log.info("table %-10s -> %s/%s", name, args.output, name)
     log.info("pipeline complete in %.1fs (%d tables)", time.perf_counter() - t0, len(tables))

@@ -422,7 +422,13 @@ def ngram_jaccard_pairs(
     while the verify join shuffles 8-byte array elements instead of
     n-token strings and the intersect compares longs. Sizes |A|, |B| are
     taken from the string sets before hashing.
+
+    ``threshold`` must be positive: a NULL-text doc has no shingles and
+    scores 0.0 against every non-empty doc, so only a positive threshold
+    keeps such pairs out.
     """
+    if threshold <= 0:
+        raise ValueError(f"threshold must be > 0, got {threshold}")
     df = ensure_map_parallelism(df)
     # r14: coalesce makes the staged shingle-hash array NON-NULLABLE.
     # Nullable __sh/__n made InferFiltersFromConstraints add isnotnull()

@@ -176,15 +176,18 @@ def image_features(df: DataFrame, dim: int = 64, strict: bool = False) -> DataFr
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in it:
             rows = pdf[pdf["kind"] == "image"]
+            # object dtype: an image-free batch would otherwise type the
+            # empty column float64, which Arrow refuses as list<float>
+            features = pd.Series(
+                [
+                    _decode_image(bytes(c), strict, dim) if c is not None else [0.0] * dim
+                    for c in rows["content"]
+                ],
+                index=rows.index,
+                dtype=object,
+            )
             yield pd.DataFrame(
-                {
-                    "media_id": rows["media_id"],
-                    "feat_dim": dim,
-                    "features": [
-                        _decode_image(bytes(c), strict, dim) if c is not None else [0.0] * dim
-                        for c in rows["content"]
-                    ],
-                }
+                {"media_id": rows["media_id"], "feat_dim": dim, "features": features}
             )
 
     return df.mapInPandas(batches, IMAGE_FEATURES_SCHEMA)
@@ -278,7 +281,8 @@ def audio_features(df: DataFrame, dim: int = 16, strict: bool = False) -> DataFr
                 out["media_id"].append(r["media_id"]); out["sample_rate"].append(rate)
                 out["n_frames"].append(n); out["rms"].append(rms)
                 out["zero_crossing_rate"].append(zcr); out["features"].append(env)
-            yield pd.DataFrame(out)
+            # object dtype, as in image_features: empty batches stay list-typed
+            yield pd.DataFrame({**out, "features": pd.Series(out["features"], dtype=object)})
 
     return df.mapInPandas(batches, AUDIO_FEATURES_SCHEMA)
 

@@ -25,16 +25,15 @@ def write_parquet(
     compression: str = "snappy",
     max_records_per_file: int | None = None,
     dynamic_partition_overwrite: bool = False,
-    cluster_by_partitions: bool = True,
 ) -> None:
-    """``cluster_by_partitions`` repartitions on the partition columns before
-    a partitioned write so each output directory is produced by ONE task —
-    without it every task touches every directory it holds rows for, and a
-    high-cardinality partition key (e.g. the reference's ``artist_id``
-    layout, etl.py:107) explodes into tasks×dirs tiny files. Costs one
-    shuffle; at scale that shuffle is far cheaper than the small-file storm.
+    """A partitioned write is repartitioned on the partition columns first,
+    so each output directory is produced by ONE task — otherwise every
+    task touches every directory it holds rows for, and a high-cardinality
+    partition key (e.g. the reference's ``artist_id`` layout, etl.py:107)
+    explodes into tasks×dirs tiny files. Costs one shuffle; at scale that
+    shuffle is far cheaper than the small-file storm.
     """
-    if partition_by and cluster_by_partitions:
+    if partition_by:
         df = df.repartition(*partition_by)
     writer = df.write.mode(mode).option("compression", compression)
     if partition_by:

@@ -41,6 +41,15 @@ def test_null_content_yields_zero_vector(media):
     assert feats[5] == [0.0] * 64
 
 
+@pytest.mark.parametrize("kind", ["image", "audio"])
+def test_features_of_a_batch_without_that_kind(media, kind):
+    """Every Arrow batch here holds only video rows: the producer yields an
+    empty frame, whose list-typed ``features`` column must still convert."""
+    only_video = media.filter(F.col("kind") == "video")
+    produce = {"image": multimodal.image_features, "audio": multimodal.audio_features}[kind]
+    assert produce(only_video).collect() == []
+
+
 def test_video_frame_sampling(media):
     frames = multimodal.sample_video_frames(media, every_ms=1000).collect()
     # 3500ms at 1 frame/s → 3 frames, contiguous indices, 32-byte payloads

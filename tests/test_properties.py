@@ -97,6 +97,13 @@ def test_prefix_filter_candidates_are_exact_superset(spark, sf_dir):
     assert got == truth
 
 
+def test_ngram_jaccard_pairs_rejects_nonpositive_threshold(spark):
+    df = spark.createDataFrame([(1, None), (2, "a b c")], "doc_id long, text string")
+    for t in (0, -0.5):
+        with pytest.raises(ValueError, match="threshold must be > 0"):
+            dedup.ngram_jaccard_pairs(df, "text", "doc_id", threshold=t)
+
+
 def test_prefix_filter_orders_verify_to_identical_pairs(spark, sf_dir):
     """The two global shingle orders — 'df' (ascending document
     frequency, the PPJoin ordering that keeps candidate buckets flat as

@@ -45,6 +45,27 @@ def test_partitioned_sink_max_records(spark, tmp_path):
     assert {r["bucket"] for r in back.select("bucket").distinct().collect()} == {0, 1}
 
 
+def test_partitioned_sink_one_file_per_partition(spark, tmp_path):
+    """Every task holds rows of every key, yet each partition directory
+    gets exactly one data file, and the rows come back unchanged."""
+    df = (
+        spark.range(3000)
+        .withColumn("key", (F.col("id") % 60).cast("int"))
+        .withColumn("v", (F.col("id") * 7 % 11).cast("int"))
+        .repartition(8)
+    )
+    out = str(tmp_path / "clustered")
+    write_parquet(df, out, partition_by=["key"])
+    part_dirs = [d for d in os.listdir(out) if d.startswith("key=")]
+    assert len(part_dirs) == 60
+    for d in part_dirs:
+        files = [f for f in os.listdir(os.path.join(out, d)) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+    cols = ["id", "key", "v"]
+    back = sorted(map(tuple, spark.read.parquet(out).select(*cols).collect()))
+    assert back == sorted(map(tuple, df.select(*cols).collect()))
+
+
 def test_orc_roundtrip_partitioned(spark, sf_dir, tmp_path):
     from data_engineering_nd_datalake_project_4_spark.sources import read_orc
     from data_engineering_nd_datalake_project_4_spark.sources.sinks import write_orc

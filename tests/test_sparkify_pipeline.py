@@ -103,6 +103,50 @@ def test_songs_table_partition_layout(built):
     assert any(a.startswith("artist_id=") for a in inner)
 
 
+def test_lake_holds_only_the_five_tables(built):
+    """The feeds are parsed into persisted frames, not staged into the lake."""
+    cfg, tables, _, _ = built
+    assert sorted(os.listdir(cfg.output_root)) == sorted(sparkify.TABLE_SPECS)
+    assert sorted(tables) == sorted(sparkify.TABLE_SPECS)
+
+
+def _persisted_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_feeds_are_persisted_then_released(spark, tmp_path, monkeypatch):
+    """Both feeds are cached while the tables are built, and released once
+    ``run_pipeline`` returns."""
+    cfg = _write_fixture(str(tmp_path))
+    before = _persisted_rdds(spark)
+    during: set[int] = set()
+    build_users, parts = sparkify.TABLE_SPECS["users"]
+
+    def spying_users(logs, songs):
+        during.update(_persisted_rdds(spark))
+        return build_users(logs, songs)
+
+    monkeypatch.setitem(sparkify.TABLE_SPECS, "users", (spying_users, parts))
+    sparkify.run_pipeline(spark, cfg)
+    assert len(during - before) == 2, "logs and songs are each persisted once"
+    assert _persisted_rdds(spark) - before == set()
+
+
+def test_failed_write_releases_the_feeds(spark, tmp_path, monkeypatch):
+    """A table write that fails mid-job still unpersists both feeds."""
+    cfg = _write_fixture(str(tmp_path))
+    before = _persisted_rdds(spark)
+
+    def failing_users(logs, songs):
+        boom = F.raise_error(F.lit("planted write failure"))
+        return logs.select(F.when(F.col("ts").isNotNull(), boom).otherwise(F.col("ts")).alias("ts"))
+
+    monkeypatch.setitem(sparkify.TABLE_SPECS, "users", (failing_users, None))
+    with pytest.raises(Exception, match="planted write failure"):
+        sparkify.run_pipeline(spark, cfg)
+    assert _persisted_rdds(spark) - before == set()
+
+
 def test_users_retains_empty_string_user(built):
     _, tables, _, _ = built
     users = tables["users"]
