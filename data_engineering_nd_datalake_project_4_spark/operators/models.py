@@ -17,11 +17,20 @@ jobs answer from state):
   (per-subspace PQ centroids; ``subspace`` is -1 for coarse rows).
 
 Bit-exactness: centroids are Python floats (IEEE doubles) end-to-end —
-parquet DOUBLE stores them exactly, so a loaded model folds the
-IDENTICAL literals into encode/search plans and every downstream result
-(``pq_encode``, ``pq_adc_topk``, ``ivfpq_adc_topk``, assignment cells)
-is bit-identical to the freshly-trained model's. The round-trip property
-test pins this.
+parquet DOUBLE stores them exactly, so a loaded model is the IDENTICAL
+list of doubles, and every downstream result (``pq_encode``,
+``pq_adc_topk``, ``ivfpq_adc_topk``, assignment cells) is bit-identical
+to the freshly-trained model's. The round-trip property test pins this.
+
+Serving contract (model as data): the encode/search kernels never fold a
+model into the plan as literals. Each ships it as one row of a pandas →
+Arrow ``LocalRelation``, read through a scalar subquery
+(``similarity._with_model``), and ``transform``s over that staged
+column — so plan size does not depend on the model. Two traps shape
+this: ``createDataFrame(<python list>)`` would plan ``Scan
+ExistingRDD`` and rerun a job on every execution, and a subquery inside
+a higher-order function is rejected by Spark, so the ``.scalar()``
+column is staged before any ``transform`` reads it.
 
 Empty models (trained on zero vectors — the `empty` soak contract)
 round-trip too: both tables are written with DECLARED schemas and read

@@ -12,6 +12,14 @@ The scale paths are:
 
 All pure Catalyst expressions (zip_with/aggregate) — vectorized JVM-side,
 no Python on the data path.
+
+MODEL AS DATA: every model-driven kernel (nearest centroid, kmeans
+assignment, PQ/IVFPQ encode, ADC LUT fan-out) reads its driver-side model
+from one staged column, attached by :func:`_with_model` as a scalar
+subquery over an Arrow-built ``LocalRelation``, and ``transform``s over
+it. No kernel folds the model into the plan as per-double literals, so
+plan size does not grow with the model and no plan-size budget or
+fallback path exists.
 """
 
 from __future__ import annotations
@@ -102,11 +110,43 @@ def brute_force_topk(
     )
 
 
-#: Hard cap on plan-folded centroid literals (doubles) for the map-side
-#: nearest-centroid expressions. Past it, fall back to the broadcast-join
-#: + window path — the pq_adc lesson: a plan that grows with the model
-#: needs an explicit budget, not hope.
-_MAX_CENTROID_PLAN_DOUBLES = 1 << 16
+def _arrow_frame(spark, columns: dict[str, list], schema: str) -> DataFrame:
+    """A driver-built frame (model rows, probe rows) as a ``LocalRelation``:
+    pandas → Arrow → ``LocalTableScan``. Never ``createDataFrame(<python
+    list>)`` here: that plans as ``Scan ExistingRDD``, which reruns a
+    4-task job on every execution (0.40–0.53 s warm and 1.85 s cold
+    against 0.13–0.21 s for the local scan, 4-core microbenchmark)."""
+    import pandas as pd
+
+    # object columns: pandas must not widen ints-with-None to float64
+    pdf = pd.DataFrame({c: pd.Series(v, dtype=object) for c, v in columns.items()})
+    return spark.createDataFrame(pdf, schema)
+
+
+def _with_model(df: DataFrame, model: list, dtype: str) -> DataFrame:
+    """Attach a driver-side model (centroids, codebooks, per-query LUTs) to
+    every row as the column ``__model`` of type ``dtype``: MODEL AS DATA.
+
+    The model is one row of a :func:`_arrow_frame` relation, read through
+    a scalar subquery — evaluated once per execution, and the plan holds
+    ``LocalTableScan [m]`` instead of one literal per double, so plan size
+    no longer grows with the model. (A crossJoined model row would plan a
+    ``BroadcastNestedLoopJoin`` instead.) Kernels ``transform`` over the
+    STAGED column: Spark rejects a subquery inside a higher-order function
+    (``UNSUPPORTED_SUBQUERY_EXPRESSION_CATEGORY.HIGHER_ORDER_FUNCTION``).
+    Callers drop ``__model`` when done."""
+    frame = _arrow_frame(df.sparkSession, {"m": [model]}, f"m {dtype}")
+    return df.withColumn("__model", frame.scalar())
+
+
+def _sq_dist(a: Column, b: Column) -> Column:
+    """Squared L2 distance between two array<double> expressions, left to
+    right (zip_with + aggregate) — the numpy-replicated kmeans/PQ metric."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
 
 
 def _collect_centroid_model(
@@ -121,30 +161,57 @@ def _collect_centroid_model(
     return out
 
 
-def _nearest_centroid_keys(vec: Column, cents: list[tuple]) -> Column:
-    """``array<struct<k,c>>`` with ``k = -cosine(vec, centroid)`` (NULL →
-    +inf): ascending struct order is exactly ``cosine DESC NULLS LAST,
-    cid ASC`` — the order the shuffled fallback's window uses, so both
-    paths pick identical buckets (ties and zero-norm vectors included)."""
-    return F.array(
-        *[
-            F.struct(
-                F.coalesce(
-                    -cosine_similarity(vec, F.array(*[F.lit(x) for x in cv])),
-                    F.lit(float("inf")),
-                ).alias("k"),
-                F.lit(cid).alias("c"),
-            )
-            for cid, cv in cents
-        ]
+def _with_centroids(df: DataFrame, cents: list[tuple], cid_type) -> DataFrame:
+    return _with_model(
+        df,
+        [{"c": cid, "v": cv} for cid, cv in cents],
+        f"array<struct<c: {cid_type.simpleString()}, v: array<double>>>",
     )
 
 
-def _centroid_plan_fits(cents: list[tuple]) -> bool:
-    return (
-        not cents
-        or len(cents) * max(len(cv) for _, cv in cents) <= _MAX_CENTROID_PLAN_DOUBLES
+def _nearest_centroid_keys(vec: Column) -> Column:
+    """``array<struct<k,c>>`` over the staged ``__model`` centroids with
+    ``k = -cosine(vec, centroid)`` (NULL → +inf): ascending struct order is
+    exactly ``cosine DESC NULLS LAST, cid ASC``, so ``array_min`` is the
+    nearest centroid with ties to the lowest id (zero-norm vectors
+    included)."""
+    return F.transform(
+        F.col("__model"),
+        lambda m: F.struct(
+            F.coalesce(
+                -cosine_similarity(vec, m["v"]), F.lit(float("inf"))
+            ).alias("k"),
+            m["c"].alias("c"),
+        ),
     )
+
+
+def _bucketize(
+    vectors: DataFrame, cents: list[tuple], cid_type, vec_col: str
+) -> DataFrame:
+    """The map-side nearest-centroid assignment behind
+    :func:`assign_ivf_buckets`, over an already-collected model."""
+    from data_engineering_nd_datalake_project_4_spark.operators import ensure_map_parallelism
+
+    vectors = vectors.filter(valid_vector(F.col(vec_col)))
+    if not cents:
+        # empty model (trained on zero rows): no assignments, but the
+        # output schema must still carry a typed bucket column (empty soak)
+        return vectors.limit(0).withColumn("bucket", F.lit(None).cast(cid_type))
+    vectors = vectors.filter(F.size(F.col(vec_col)) == len(cents[0][1]))
+    staged = _with_centroids(ensure_map_parallelism(vectors), cents, cid_type)
+    # r14: coalesce makes `bucket` NON-NULLABLE (array_min's static
+    # nullability is true), so a downstream equi-join cannot infer
+    # isnotnull(bucket) and push the whole argmin into the scan filter as
+    # a second evaluation (q42's before-plan carried a 38 kB filter with
+    # 30 re-run aggregates). The fallback value is the first centroid id —
+    # type-correct for any id type — and unreachable: every struct key is
+    # coalesced to +inf, never NULL, so the min of the non-empty model
+    # array is always found.
+    keys = _nearest_centroid_keys(F.col(vec_col))
+    return staged.withColumn(
+        "bucket", F.coalesce(F.array_min(keys)["c"], F.lit(cents[0][0]))
+    ).drop("__model")
 
 
 def assign_ivf_buckets(
@@ -158,14 +225,21 @@ def assign_ivf_buckets(
     """Assign each vector to its nearest centroid (max cosine, ties to the
     lowest centroid id); adds a ``bucket`` column.
 
-    MAP-SIDE: the centroid model folds into the plan as literals and every
-    row evaluates one argmin expression — ZERO shuffles, like
-    :func:`pq_encode` / :func:`ivfpq_encode`. The previous shape
-    (broadcast crossJoin + row_number window) pushed |V|·C vector-carrying
-    rows through a ``hashpartitioning(id)`` exchange — C× the corpus over
-    the wire, exactly what the repo-wide wide-shuffle audit
-    (``plans.wide_shuffle_sites``) exists to catch. Models past the
-    literal budget fall back to that path (``_assign_ivf_buckets_shuffled``).
+    MAP-SIDE, ONE PATH: the centroids are collected once (k·dim doubles of
+    driver-side model state) and ride back as DATA — one Arrow-built
+    ``LocalRelation`` row read through a scalar subquery
+    (:func:`_with_model`) — and every row evaluates one ``array_min`` over
+    a ``transform`` of that column. Zero shuffles, and a plan whose size
+    does not grow with k. The crossJoin + row_number window shape would
+    push |V|·C vector-carrying rows through a ``hashpartitioning(id)``
+    exchange — exactly what the repo-wide wide-shuffle audit
+    (``plans.wide_shuffle_sites``) exists to catch.
+
+    Two traps the model row avoids: ``createDataFrame(<python list>)``
+    would plan ``Scan ExistingRDD`` and rerun a job on every execution,
+    and Spark rejects a subquery inside a higher-order function, so the
+    ``.scalar()`` column is staged before any higher-order function
+    reads it.
 
     Degenerate vectors (``valid_vector``) get NO bucket (row dropped):
     there is no distance to be nearest by, and the map-side argmin would
@@ -174,65 +248,9 @@ def assign_ivf_buckets(
     Vectors whose dimension differs from the model's (the raggeddim
     contract) are unassignable for the same reason.
     """
-    vectors = vectors.filter(valid_vector(F.col(vec_col)))
     cents = _collect_centroid_model(centroids, centroid_id, centroid_vec)
-    if cents:
-        vectors = vectors.filter(F.size(F.col(vec_col)) == len(cents[0][1]))
-    if not _centroid_plan_fits(cents):
-        return _assign_ivf_buckets_shuffled(
-            vectors, centroids, id_col, vec_col, centroid_id, centroid_vec
-        )
-    if not cents:
-        # empty model (trained on zero rows): no assignments, but the
-        # output schema must still carry a typed bucket column (empty soak)
-        return vectors.limit(0).withColumn(
-            "bucket", F.lit(None).cast(centroids.schema[centroid_id].dataType)
-        )
-    from data_engineering_nd_datalake_project_4_spark.operators import ensure_map_parallelism
-
-    vectors = ensure_map_parallelism(vectors)
-    keys = _nearest_centroid_keys(F.col(vec_col), cents)
-    # r14: coalesce makes `bucket` NON-NULLABLE (array_min's static
-    # nullability is true even over this never-empty literal array), so a
-    # downstream equi-join cannot infer isnotnull(bucket) and push the
-    # whole argmin into the scan filter as a second evaluation (q42's
-    # before-plan carried a 38 kB filter with 30 re-run aggregates). The
-    # fallback value is the first centroid id — type-correct for any id
-    # type — and unreachable: every struct key is coalesced to +inf, never
-    # NULL, so the min of a non-empty array is always found.
-    return vectors.withColumn(
-        "bucket", F.coalesce(F.array_min(keys)["c"], F.lit(cents[0][0]))
-    )
-
-
-def _assign_ivf_buckets_shuffled(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str,
-    vec_col: str,
-    centroid_id: str,
-    centroid_vec: str,
-) -> DataFrame:
-    """Broadcast-crossJoin + window fallback for models too large to fold
-    into the plan. Shuffles |V|·C vector-carrying rows — only acceptable
-    because a model this size (> 2^16 plan doubles) should be using
-    :func:`ivfpq_adc_topk` (LUTs ride as data rows) instead."""
-    from data_engineering_nd_datalake_project_4_spark.operators import ensure_map_parallelism
-
-    vectors = ensure_map_parallelism(vectors)
-    c = F.broadcast(
-        centroids.select(
-            F.col(centroid_id).alias("__cid"), F.col(centroid_vec).alias("__cv")
-        )
-    )
-    scored = vectors.crossJoin(c).withColumn(
-        "__csim", cosine_similarity(F.col(vec_col), F.col("__cv"))
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("__csim"), F.asc("__cid"))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(*vectors.columns, F.col("__cid").alias("bucket"))
+    return _bucketize(
+        vectors, cents, centroids.schema[centroid_id].dataType, vec_col
     )
 
 
@@ -249,11 +267,12 @@ def ivf_topk(
     centroid buckets are scored. Recall < 1.0 by construction; recall vs
     :func:`brute_force_topk` is property-tested, not oracle-hashed.
 
-    Probe selection is the same map-side literal argmin as
+    Probe selection is the same model-as-data argmin as
     :func:`assign_ivf_buckets` (sort the per-centroid key array, slice
     ``nprobe`` — clamped to the trained cell count like FAISS): neither
     the corpus nor the query vectors ride a keyed shuffle anywhere in
-    this plan; the only exchange is the bucket-key candidate join.
+    this plan; the only exchange is the bucket-key candidate join. The
+    centroids are collected once for both sides.
 
     REPLAY SEMANTICS: every step is a per-ROW map/join — exact duplicate
     feed rows (at-least-once delivery) each probe and each candidate
@@ -263,12 +282,13 @@ def ivf_topk(
     compute-per-distinct-then-join-back pattern (duprows soak).
 
     Degenerate query vectors (``valid_vector``) probe nothing; degenerate
-    corpus vectors are unbucketed by :func:`assign_ivf_buckets` — both
-    classes simply don't appear in the result. Off-model-dimension
-    vectors (raggeddim) are degenerate on both sides too."""
+    corpus vectors are unbucketed — both classes simply don't appear in
+    the result. Off-model-dimension vectors (raggeddim) are degenerate on
+    both sides too."""
     queries = queries.filter(valid_vector(F.col(vec_col)))
     cid = centroids.columns[0]
     cvec = centroids.columns[1]
+    cid_type = centroids.schema[cid].dataType
     cents = _collect_centroid_model(centroids, cid, cvec)
     if not cents:
         # empty model: typed empty result (empty soak)
@@ -283,44 +303,29 @@ def ivf_topk(
         )
         return vectors.sparkSession.createDataFrame([], schema)
     queries = queries.filter(F.size(F.col(vec_col)) == len(cents[0][1]))
-    bucketed = assign_ivf_buckets(vectors, centroids, id_col, vec_col, cid, cvec)
+    bucketed = _bucketize(vectors, cents, cid_type, vec_col)
 
-    if _centroid_plan_fits(cents):
-        keys = _nearest_centroid_keys(F.col(vec_col), cents)
-        probe_buckets = F.transform(
-            F.slice(F.array_sort(keys), 1, min(nprobe, len(cents))),
-            lambda s: s["c"],
-        )
-        # explode_outer: a plain explode makes InferFiltersFromGenerate add
-        # `size(probe_buckets) > 0 AND isnotnull(probe_buckets)` — the full
-        # k-centroid argmin re-evaluated per query row in a filter that is
-        # always true (the slice of a literal-length sorted array is never
-        # empty). The outer variant gets no inferred filter; its one extra
-        # NULL row per empty array cannot occur here, and the cheap
-        # isNotNull on the GENERATED column (not pushable below the
-        # Generate) keeps the schema contract identical.
-        probes = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv"),
-            F.explode_outer(probe_buckets).alias("bucket"),
-        ).filter(F.col("bucket").isNotNull())
-    else:
-        c = F.broadcast(
-            centroids.select(F.col(cid).alias("__cid"), F.col(cvec).alias("__cv"))
-        )
-        qscored = queries.crossJoin(c).withColumn(
-            "__csim", cosine_similarity(F.col(vec_col), F.col("__cv"))
-        )
-        wq = Window.partitionBy(id_col).orderBy(F.desc("__csim"), F.asc("__cid"))
-        probes = (
-            qscored.withColumn("__rn", F.row_number().over(wq))
-            .filter(F.col("__rn") <= nprobe)
-            .select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("__qv"),
-                F.col("__cid").alias("bucket"),
-            )
-        )
+    probe_buckets = F.transform(
+        F.slice(
+            F.array_sort(_nearest_centroid_keys(F.col(vec_col))),
+            1,
+            min(nprobe, len(cents)),
+        ),
+        lambda s: s["c"],
+    )
+    # explode_outer: a plain explode makes InferFiltersFromGenerate add
+    # `size(probe_buckets) > 0 AND isnotnull(probe_buckets)` — the full
+    # k-centroid argmin re-evaluated per query row in a filter that is
+    # always true (the slice of the sorted non-empty model array is never
+    # empty). The outer variant gets no inferred filter; its one extra
+    # NULL row per empty array cannot occur here, and the cheap isNotNull
+    # on the GENERATED column (not pushable below the Generate) keeps the
+    # schema contract identical.
+    probes = _with_centroids(queries, cents, cid_type).select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("__qv"),
+        F.explode_outer(probe_buckets).alias("bucket"),
+    ).filter(F.col("bucket").isNotNull())
     cand = bucketed.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__vv"), "bucket"
     )
@@ -498,17 +503,6 @@ def sized_gemm_block(n_vectors: int, min_blocks: int = 12, floor: int = 256, cap
     return max(floor, min(cap, b))
 
 
-def _sq_dist_to_literal(vec: Column, centroid: list[float]) -> Column:
-    """Squared L2 distance from an array<double> column to a constant
-    centroid, as a pure Catalyst expression (zip_with + aggregate)."""
-    clit = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(vec, clit, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def kmeans(
     df: DataFrame,
     id_col: str,
@@ -523,12 +517,20 @@ def kmeans(
     Deterministic init: centroids = the vectors of the ``k`` smallest ids.
     Per iteration the only data-path shuffle is the centroid recompute
     (posexplode -> partial+final avg per (cluster, dim)); the assignment
-    step is map-side only — the k centroids are folded into the plan as
-    literal arrays, so each row evaluates k codegen'd squared-distance
-    expressions and picks argmin (first-match tie-break = lowest cluster,
-    matching numpy argmin). The driver holds just the k*d model state per
-    round (512 doubles here), never row data — at 100 TB the per-iteration
-    cost is one scan + one k*dim-sized shuffle.
+    step is map-side only — the round's k centroids ride as DATA (one
+    Arrow-built ``LocalRelation`` row read through a scalar subquery,
+    :func:`_with_model`), each row ``transform``s the staged model column
+    into k squared distances and picks argmin (first-match tie-break =
+    lowest cluster, matching numpy argmin). The plan holds no per-double
+    literals, so its size does not grow with k·dim. The driver holds just
+    the k*d model state per round (512 doubles here), never row data — at
+    100 TB the per-iteration cost is one scan + one k*dim-sized shuffle.
+
+    Two traps the model row avoids: ``createDataFrame(<python list>)``
+    would plan ``Scan ExistingRDD`` and rerun a job on every execution,
+    and Spark rejects a subquery inside a higher-order function, so the
+    ``.scalar()`` column is staged before any higher-order function
+    reads it.
 
     The reference has no clustering; this is a north-star extension
     (BASELINE.json training-data ops). Non-SQL-expressible (iterative) —
@@ -573,16 +575,18 @@ def kmeans(
 
     assignments = None
     for _ in range(iters):
-        dists = F.array(*[_sq_dist_to_literal(F.col("v"), c) for c in centroids])
         assigned = (
-            rows.withColumn("dists", dists)
+            _with_model(rows, centroids, "array<array<double>>")
+            .withColumn(
+                "dists", F.transform("__model", lambda c: _sq_dist(F.col("v"), c))
+            )
             .withColumn(
                 "cluster",
                 (F.array_position(F.col("dists"), F.array_min("dists")) - 1).cast(
                     "int"
                 ),
             )
-            .drop("dists")
+            .drop("dists", "__model")
         )
         dim_means = (
             assigned.select("cluster", F.posexplode("v").alias("pos", "x"))
@@ -844,9 +848,9 @@ def semantic_dedup(
       bands/band_bits.
     - ``"kmeans"``: the published SemDeDup shape — vectors block by
       their k-means cluster (``clusters``/``kmeans_iters``;
-      :func:`kmeans`'s assignment step folds the centroids into the plan
-      as literals, so assignment is MAP-SIDE — the broadcast-centroid
-      pattern) and only same-cluster pairs rescore. Right for trained
+      :func:`kmeans`'s assignment step reads the centroids as a one-row
+      model relation, so assignment is MAP-SIDE) and only same-cluster
+      pairs rescore. Right for trained
       embeddings where clusters capture semantics; iterative → not
       oracle-expressible (property-tested equality vs the exact variant
       on planted duplicates instead).
@@ -1001,10 +1005,6 @@ def semantic_dedup(
     )
 
 
-def _pq_subspace(v: Column, s: int, sub_dim: int) -> Column:
-    return F.slice(v, s * sub_dim + 1, sub_dim)
-
-
 def _collect_train_sample(df: DataFrame, id_col: str, vec_col: str, n: int):
     """The ``n`` lowest-id REFERENCE-DIM vectors as a float64 matrix (None
     if empty). One limit(1) job resolves the model dimension (the
@@ -1085,9 +1085,9 @@ def pq_train(
     honest design — iterative full-corpus training jobs would re-scan the
     dataset iters·m times for a model whose quality saturates at a few
     thousand samples per centroid; ENCODE and SEARCH stay fully
-    distributed (map-side literal argmin / LUT folds). Same deterministic
-    init (k smallest ids) and first-match argmin tie-break as
-    :func:`kmeans`; only the mean's float association order differs
+    distributed (map-side model-as-data argmin / LUT fan-out). Same
+    deterministic init (k smallest ids) and first-match argmin tie-break
+    as :func:`kmeans`; only the mean's float association order differs
     (identical contract to the distributed partial+final avg — the PQ
     gates are recall/exactness properties, not centroid bits).
     """
@@ -1109,16 +1109,15 @@ def pq_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     out_col: str = "pq_codes",
-    pre_validated: bool = False,
 ) -> DataFrame:
     """Encode vectors against trained codebooks: per subspace the argmin
     squared-distance centroid index, as ``array<int>`` of length m.
 
-    Entirely map-side: the m*k centroids fold into the plan as literal
-    arrays, each row evaluates m*k codegen'd squared distances — no
-    shuffle, no UDF, no model broadcast round-trip. Ties break to the
-    lowest index (array_position finds the first match), matching
-    :func:`kmeans` assignment.
+    Entirely map-side: the m*k codebook centroids ride as ONE model row
+    (:func:`_with_model` — data, not plan literals, so the plan does not
+    grow with the model), each row evaluates m*k squared distances — no
+    shuffle, no UDF. Ties break to the lowest index (array_position finds
+    the first match), matching :func:`kmeans` assignment.
 
     Degenerate vectors (``valid_vector``) and vectors whose dimension
     differs from the model's (m·sub — the raggeddim contract, FAISS
@@ -1133,55 +1132,57 @@ def pq_encode(
         # they must not run in this branch (ADVICE r11: filtering first
         # silently dropped rows from a non-empty df under an empty model).
         return df.withColumn(out_col, F.expr("CAST(array() AS ARRAY<INT>)"))
-    m, sub = len(codebooks), len(codebooks[0][0])
-    if not pre_validated:
-        df = df.filter(valid_vector(F.col(vec_col)))
-        df = df.filter(F.size(F.col(vec_col)) == m * sub)
-    # ``pre_validated=True`` (r14): the caller PROVES the vector column is
-    # already valid and of dimension m·sub (ivfpq_encode's residual: a
-    # zip_with of two same-length non-null arrays derived from a vector
-    # that passed the same checks). The redundant re-filter was not just
-    # wasted work — predicate pushdown substituted the whole residual
-    # expression below the staging projections, and codegen's
-    # subexpression elimination evaluates those filter subtrees EAGERLY
-    # (before the short-circuit AND), so they also ran on rows the dim
-    # filter was about to drop.
-    # r14 (guide §1.2): STAGE the per-subspace distance arrays as
-    # materialized columns. The old shape passed the `dists` python
-    # variable to BOTH array_position and array_min, so the whole m·k
-    # distance computation was inlined TWICE per row (the CLAUDE.md
-    # CollapseProject trap — kmeans already staged its dists; this site
-    # didn't). Staging halves the encode kernel (q151/q153 plans: 64
-    # zip_with → 32). The double-cast vector is staged once for the same
-    # reason (it fed every subspace's dists inline).
-    v = as_double_array(F.col(vec_col))
-    staged = df.withColumn("__pqv", v)
-    for s in range(m):
-        staged = staged.withColumn(
-            f"__pqd{s}",
-            F.array(
-                *[
-                    _sq_dist_to_literal(_pq_subspace(F.col("__pqv"), s, sub), c)
-                    for c in codebooks[s]
-                ]
+    dim = len(codebooks) * len(codebooks[0][0])
+    df = df.filter(valid_vector(F.col(vec_col)))
+    df = df.filter(F.size(F.col(vec_col)) == dim)
+    return _pq_codes(df, codebooks, vec_col, out_col)
+
+
+def _pq_codes(
+    df: DataFrame, codebooks: list[list[list[float]]], vec_col: str, out_col: str
+) -> DataFrame:
+    """The UNVALIDATED PQ-encode kernel: the caller guarantees every
+    ``vec_col`` value is a valid vector of the model's dimension
+    (:func:`pq_encode` filters first; :func:`ivfpq_encode`'s residual is
+    a zip_with of two such vectors). Re-filtering here would let
+    predicate pushdown substitute the whole residual below the staging
+    projections, where codegen's subexpression elimination evaluates it
+    eagerly, also on rows the dim filter was about to drop.
+
+    The distances (``__pqd``, one array per subspace) and the double-cast
+    vector are STAGED as columns, so ``array_position`` and ``array_min``
+    read them instead of each inlining the m·k distance computation (the
+    CollapseProject trap)."""
+    sub = len(codebooks[0][0])
+    staged = _with_model(
+        df.withColumn("__pqv", as_double_array(F.col(vec_col))),
+        codebooks,
+        "array<array<array<double>>>",
+    ).withColumn(
+        "__pqd",
+        F.transform(
+            "__model",
+            lambda book, s: F.transform(
+                book,
+                lambda c: _sq_dist(F.slice(F.col("__pqv"), s * sub + 1, sub), c),
             ),
-        )
-    codes = [
-        (
-            F.array_position(F.col(f"__pqd{s}"), F.array_min(f"__pqd{s}")) - 1
-        ).cast("int")
-        for s in range(m)
-    ]
-    return staged.withColumn(out_col, F.array(*codes)).drop(
-        "__pqv", *[f"__pqd{s}" for s in range(m)]
+        ),
     )
+    codes = F.transform(
+        "__pqd", lambda d: (F.array_position(d, F.array_min(d)) - 1).cast("int")
+    )
+    return staged.withColumn(out_col, codes).drop("__pqv", "__pqd", "__model")
 
 
-#: Hard cap on plan-folded ADC lookup-table literals (doubles). 2^20
-#: doubles ~ 8 MB of literal expressions — past this, Catalyst analysis +
-#: codegen time and driver plan memory dominate (the q151/q153 family's
-#: one non-data scale axis). ivfpq_adc_topk is exempt: its LUTs are rows.
-_MAX_LUT_PLAN_DOUBLES = 1 << 20
+def _adc_dist(luts: Column, codes: Column, m: int) -> Column:
+    """ADC estimate: ``sum_s luts[s][codes[s]]``, added in subspace order."""
+    return sum(
+        (
+            F.element_at(F.element_at(luts, s + 1), F.element_at(codes, s + 1) + 1)
+            for s in range(m)
+        ),
+        start=F.lit(0.0),
+    )
 
 
 def pq_adc_topk(
@@ -1201,25 +1202,25 @@ def pq_adc_topk(
     is precomputed per query (the PQ paper's ADC estimator — queries stay
     exact, database vectors are quantized).
 
-    Scale shape: the LUTs are m*k doubles per query, folded into the plan
-    as ONE literal array of (query_id, luts) structs exploded against each
-    code row — a single scan of the codes table fans out map-side to all
-    Q queries (no per-query re-scan, no join); the query set is the small,
-    driver-known probe side — same contract as :func:`brute_force_topk`'s
-    broadcast, enforced by ``max_queries``. The scan reads ONLY the m-byte
-    code column — the O(N·Q) kernel is m array lookups + adds per pair
-    instead of dim multiplies, and the full-precision vector column never
-    loads. Ranking is the same per-query top-k window.
+    Scale shape: the LUTs (m*k doubles per query) are computed on the
+    driver and ride as DATA — one model row holding an array of
+    (query_id, luts) structs (:func:`_with_model`: an Arrow-built
+    ``LocalRelation`` read through a scalar subquery, so the plan holds a
+    ``LocalTableScan`` instead of Q·m·ncodes literals and does not grow
+    with the probe set or the model). The staged column is exploded
+    against each code row: a single scan of the codes table fans out
+    map-side to all Q queries (no per-query re-scan, no join). The scan
+    reads ONLY the m-byte code column — the O(N·Q) kernel is m array
+    lookups + adds per pair instead of dim multiplies, and the
+    full-precision vector column never loads. Ranking is the same
+    per-query top-k window. ``max_queries`` bounds the probe set (Q LUTs
+    built on the driver, Q× the code rows fanned out): chunk larger ones.
 
-    PLAN-SIZE BOUND: the folded literal is Q·m·ncodes doubles — the PLAN
-    grows with the model, not just the data. At the defaults (m=4,
-    ncodes=16) 1024 queries fold 64K doubles (fine); at a FAISS-typical
-    m=16/ncodes=256 each query folds 4096 doubles and the expression tree
-    blows up (Catalyst analysis/codegen time, driver plan memory) long
-    before any executor is busy. Guarded at ``_MAX_LUT_PLAN_DOUBLES``
-    (2²⁰ ≈ 8 MB of literals): beyond it, chunk the probe set — or use
-    :func:`ivfpq_adc_topk`, which ships its LUTs as a broadcast DATA
-    frame (rows, not plan literals) and has no such bound.
+    Two traps the model row avoids: ``createDataFrame(<python list>)``
+    would plan ``Scan ExistingRDD`` and rerun a job on every execution,
+    and Spark rejects a subquery inside a higher-order function, so the
+    ``.scalar()`` column is staged before any higher-order function
+    reads it.
 
     Output: ``query_id, neighbor_id, adc_dist`` (ascending = nearer).
     """
@@ -1240,57 +1241,34 @@ def pq_adc_topk(
     ).collect()
     if len(qrows) > max_queries:
         raise ValueError(
-            f"{len(qrows)} queries > max_queries={max_queries}: ADC folds one "
-            "m*k LUT per query into the plan — chunk the probe set"
-        )
-    ncodes = len(codebooks[0])
-    lut_doubles = len(qrows) * m * ncodes
-    if lut_doubles > _MAX_LUT_PLAN_DOUBLES:
-        raise ValueError(
-            f"ADC LUT literals would fold {lut_doubles} doubles "
-            f"({len(qrows)} queries x m={m} x ncodes={ncodes}) into the plan "
-            f"(> {_MAX_LUT_PLAN_DOUBLES}): the expression tree, not the data, "
-            "becomes the bottleneck — chunk the probe set, or use "
-            "ivfpq_adc_topk (LUTs ride as broadcast data rows, not literals)"
+            f"{len(qrows)} queries > max_queries={max_queries}: ADC builds one "
+            "m*k LUT per query on the driver — chunk the probe set"
         )
     if not qrows:
         return _empty_adc_frame(codes_df, queries, id_col, query_id_col)
-    qlits = []
+    model = []
     for r in qrows:
         luts = []
         for s in range(m):
             qs = r["v"][s * sub : (s + 1) * sub]
             luts.append(
-                F.array(
-                    *[
-                        F.lit(sum((a - b) * (a - b) for a, b in zip(qs, c)))
-                        for c in codebooks[s]
-                    ]
-                )
+                [sum((a - b) * (a - b) for a, b in zip(qs, c)) for c in codebooks[s]]
             )
-        qlits.append(
-            F.struct(F.lit(r["query_id"]).alias("query_id"), F.array(*luts).alias("luts"))
-        )
-    codes_df = ensure_map_parallelism(codes_df)
-    fanned = codes_df.select(
+        model.append({"query_id": r["query_id"], "luts": luts})
+    qtype = queries.schema[query_id_col].dataType.simpleString()
+    fanned = _with_model(
+        ensure_map_parallelism(codes_df),
+        model,
+        f"array<struct<query_id: {qtype}, luts: array<array<double>>>>",
+    ).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(codes_col).alias("__codes"),
-        F.explode(F.array(*qlits)).alias("__q"),
-    )
-    dist = sum(
-        (
-            F.element_at(
-                F.element_at("__q.luts", s + 1),
-                F.element_at(F.col("__codes"), s + 1) + 1,
-            )
-            for s in range(m)
-        ),
-        start=F.lit(0.0),
+        F.explode("__model").alias("__q"),
     )
     scored = fanned.select(
         F.col("__q.query_id").alias("query_id"),
         "neighbor_id",
-        dist.alias("adc_dist"),
+        _adc_dist(F.col("__q.luts"), F.col("__codes"), m).alias("adc_dist"),
     ).filter(F.col("neighbor_id") != F.col("query_id"))
     w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
     return (
@@ -1364,11 +1342,11 @@ def ivfpq_encode(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Encode vectors as (coarse cell, PQ codes of the residual). Entirely
-    map-side: both codebook levels fold into the plan as literals — no
-    shuffle, no UDF, no model broadcast. Output columns: ``ivf_cell int,
-    pq_codes array<int>`` appended to the input. Degenerate vectors
-    (``valid_vector``) and off-model-dim vectors (raggeddim) are
-    uncodable — rows dropped."""
+    map-side: both model levels ride as model rows (:func:`_with_model`)
+    — no shuffle, no UDF, no per-double plan literals. Output columns:
+    ``ivf_cell int, pq_codes array<int>`` appended to the input.
+    Degenerate vectors (``valid_vector``) and off-model-dim vectors
+    (raggeddim) are uncodable — rows dropped."""
     if not coarse:
         # empty model: typed pass-through columns so downstream schemas
         # hold — ALL input rows kept (codability is a property of a trained
@@ -1378,41 +1356,40 @@ def ivfpq_encode(
         )
     df = df.filter(valid_vector(F.col(vec_col)))
     df = df.filter(F.size(F.col(vec_col)) == len(coarse[0]))
-    # r14 (guide §1.2/§2.4): stage the double vector and the coarse
-    # distance array (each was inlined into every consumer — the
-    # CollapseProject trap), and make ivf_cell NON-NULLABLE via coalesce.
-    # The nullable argmin made InferFiltersFromConstraints add
-    # isnotnull(ivf_cell) for the ADC probe join, and predicate pushdown
-    # substituted the FULL coarse-assign into the scan filter — q153's
-    # before-plan carried a 94 kB filter condition with 44 zip_with
-    # (re-)evaluations per row. The coalesce never fires at runtime
-    # (valid_vector guarantees non-null distances, and the min of a
-    # literal-length array is always found), it only fixes nullability.
-    staged = df.withColumn("__v", as_double_array(F.col(vec_col)))
-    staged = staged.withColumn(
-        "__cd", F.array(*[_sq_dist_to_literal(F.col("__v"), c) for c in coarse])
-    )
-    cell = (F.array_position(F.col("__cd"), F.array_min("__cd")) - 1).cast("int")
-    staged = staged.withColumn("ivf_cell", F.coalesce(cell, F.lit(-1)))
-    clit = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in coarse])
-    # try_element_at: the -1 coalesce fallback is unreachable on rows the
-    # valid_vector+dim filters pass, but codegen subexpression elimination
-    # may evaluate expressions EAGERLY on rows a sibling AND-branch is
-    # about to drop — a throwing element_at(clit, 0) there would fail the
-    # whole query (seen via pq_encode's pushed-down re-validation filters
-    # on the raggeddim shape). NULL-for-impossible matches the old
-    # nullable-cell semantics exactly.
-    staged = staged.withColumn(
-        "__resid",
-        F.zip_with(
-            F.col("__v"),
-            F.try_element_at(clit, F.col("ivf_cell") + 1),
-            lambda a, b: a - b,
+    # The coarse cell AND its centroid come from ONE array_min over
+    # struct(dist, idx, centroid): lowest distance, ties to the lowest
+    # index (numpy argmin), and the residual reads the winning centroid
+    # straight from the struct — no index lookup that could throw. The
+    # double vector and the argmin struct are STAGED (each was inlined
+    # into every consumer — the CollapseProject trap). r14 (guide
+    # §1.2/§2.4): ivf_cell is NON-NULLABLE via coalesce. A nullable argmin
+    # made InferFiltersFromConstraints add isnotnull(ivf_cell) for the ADC
+    # probe join, and predicate pushdown substituted the FULL coarse assign
+    # into the scan filter (q153's before-plan: a 94 kB filter condition
+    # with 44 zip_with re-evaluations per row). The -1 never surfaces on
+    # rows that passed the filters above; elsewhere the struct is NULL
+    # and so is the residual — nothing throws.
+    staged = _with_model(
+        df.withColumn("__v", as_double_array(F.col(vec_col))),
+        coarse,
+        "array<array<double>>",
+    ).withColumn(
+        "__cm",
+        F.array_min(
+            F.transform(
+                "__model",
+                lambda c, i: F.struct(
+                    _sq_dist(F.col("__v"), c).alias("d"), i.alias("i"), c.alias("c")
+                ),
+            )
         ),
-    ).drop("__v", "__cd")
-    return pq_encode(
-        staged, codebooks, id_col, "__resid", pre_validated=True
-    ).drop("__resid")
+    )
+    staged = (
+        staged.withColumn("ivf_cell", F.coalesce(F.col("__cm.i"), F.lit(-1)))
+        .withColumn("__resid", F.zip_with("__v", "__cm.c", lambda a, b: a - b))
+        .drop("__v", "__cm", "__model")
+    )
+    return _pq_codes(staged, codebooks, "__resid", "pq_codes").drop("__resid")
 
 
 def ivfpq_adc_topk(
@@ -1487,9 +1464,15 @@ def ivfpq_adc_topk(
                 for s in range(m)
             ]
             probe_rows.append((r["query_id"], ci, luts))
-    spark = codes_df.sparkSession
-    probes = spark.createDataFrame(
-        probe_rows, "query_id long, ivf_cell int, luts array<array<double>>"
+    qtype = queries.schema[query_id_col].dataType.simpleString()
+    probes = _arrow_frame(
+        codes_df.sparkSession,
+        {
+            "query_id": [q for q, _, _ in probe_rows],
+            "ivf_cell": [ci for _, ci, _ in probe_rows],
+            "luts": [luts for _, _, luts in probe_rows],
+        },
+        f"query_id {qtype}, ivf_cell int, luts array<array<double>>",
     )
     # r14 (guide §6 / VERDICT r13 task 3): the probed-cell set is
     # driver-known — push it as an IN filter on the codes side instead of
@@ -1505,18 +1488,10 @@ def ivfpq_adc_topk(
     if len(probed_cells) < nlist:
         codes_side = codes_side.filter(F.col("ivf_cell").isin(probed_cells))
     cand = F.broadcast(probes).join(codes_side, "ivf_cell")
-    dist = sum(
-        (
-            F.element_at(
-                F.element_at("luts", s + 1),
-                F.element_at(F.col("pq_codes"), s + 1) + 1,
-            )
-            for s in range(m)
-        ),
-        start=F.lit(0.0),
-    )
     scored = cand.select(
-        "query_id", "neighbor_id", dist.alias("adc_dist")
+        "query_id",
+        "neighbor_id",
+        _adc_dist(F.col("luts"), F.col("pq_codes"), m).alias("adc_dist"),
     ).filter(F.col("neighbor_id") != F.col("query_id"))
     w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
     return (

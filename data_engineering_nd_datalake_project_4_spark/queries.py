@@ -3147,7 +3147,8 @@ def q90_sliding_window(spark, sf_dir):
     "q91_kmeans",
     None,
     "distributed Lloyd's k-means (k=8, 4 iterations) over the 64-dim "
-    "embeddings: literal-centroid map-side assignment + one posexplode "
+    "embeddings: map-side assignment against a one-row centroid model "
+    "relation + one posexplode "
     "avg shuffle per iteration; iterative => rows-only here, exact numpy "
     "replication in tests/test_similarity.py",
 )
@@ -5634,8 +5635,8 @@ def q150_resample_locf(spark, sf_dir):
     None,
     "product-quantization ANN (similarity.pq_train/pq_encode/pq_adc_topk, "
     "Jégou et al. 2011): per-subspace k-means codebooks, m-byte codes, "
-    "asymmetric-distance top-k via per-query lookup tables folded into "
-    "ONE exploded literal (single scan of the code column — the "
+    "asymmetric-distance top-k via per-query lookup tables shipped as "
+    "ONE model row, exploded map-side (single scan of the code column — the "
     "full-precision vectors never load at query time). Iterative k-means "
     "training is not SQL-expressible — declared rows-only (the q91 "
     "class); exactness on in-codebook vectors + recall-vs-exact-L2 + "

@@ -129,6 +129,32 @@ def test_no_accidental_nested_loop_joins(registry_frames):
     assert not cartesian, f"cartesian plans: {cartesian}"
 
 
+def _filter_conditions(df) -> list[str]:
+    """Every Filter condition of the optimized logical plan, as text."""
+    out, stack = [], [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Filter":
+            out.append(node.condition().toString())
+        for i in range(node.children().size()):
+            stack.append(node.children().apply(i))
+    return out
+
+
+@pytest.mark.parametrize("name", ["q42_ivf_topk", "q153_ivfpq_adc_topk"])
+def test_ann_argmin_never_reevaluated_in_a_filter(registry_frames, name):
+    """The r14 re-evaluation trap, pinned: a nullable argmin output
+    (bucket / ivf_cell) lets a downstream equi-join infer isnotnull() on
+    it, and predicate pushdown then substitutes the WHOLE nearest-centroid
+    kernel into the scan filter — a second evaluation per row (q42's
+    before-plan carried a 38 kB filter, q153's a 94 kB one). No Filter in
+    these plans may contain the distance kernel."""
+    offenders = [
+        c[:300] for c in _filter_conditions(registry_frames[name]) if "zip_with(" in c
+    ]
+    assert not offenders, f"{name}: distance kernel in Filter: {offenders}"
+
+
 def test_q34_jaccard_is_bucketed_not_cartesian(spark, sf_dir):
     """q34's Jaccard verification must run over prefix-filter candidates
     (hash join on the exploded shingle prefix), never the all-pairs

@@ -103,37 +103,86 @@ def test_pq_adc_caps_query_fanout(emb, codebooks):
         pq_adc_topk(codes, emb, codebooks, k=3, max_queries=10)
 
 
-def test_pq_adc_caps_plan_folded_lut_literals(spark, emb, codebooks):
-    """The NON-data scale axis: pq_adc_topk folds Q*m*ncodes doubles into
-    the plan as literals. At FAISS-typical m=16/ncodes=256 the 2^20-double
-    cap (_MAX_LUT_PLAN_DOUBLES) trips at 257 queries — the error must name
-    the budget and point at ivfpq_adc_topk (LUTs as broadcast data)."""
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_plan_size_does_not_grow_with_the_model(spark):
+    """Model as data: centroids, codebooks and ADC LUTs ride as one
+    LocalRelation row read through a scalar subquery, never as one plan
+    literal per double — so the executed plan of assign_ivf_buckets,
+    pq_encode and pq_adc_topk is the same size for a small and a large
+    model: k=8 vs k=256 centroids, and 2 vs 300 ADC queries at the
+    FAISS-typical m=16/ncodes=256 (300·16·256 doubles, past the 2^20
+    literal budget the folded design needed). Planned, never executed."""
     from data_engineering_nd_datalake_project_4_spark.operators.similarity import (
-        _MAX_LUT_PLAN_DOUBLES,
+        assign_ivf_buckets,
     )
 
-    m, ncodes, sub = 16, 256, 1
-    big_codebooks = [
-        [[float(c)] for c in range(ncodes)] for _ in range(m)
-    ]
-    n_q = _MAX_LUT_PLAN_DOUBLES // (m * ncodes) + 1  # one past the budget
-    queries = spark.createDataFrame(
-        [(i, [float(i % 7)] * (m * sub)) for i in range(n_q)],
+    dim = 16
+    vecs = spark.createDataFrame(
+        [(i, [float((i * 5 + d) % 7) for d in range(dim)]) for i in range(8)],
         "vec_id long, embedding array<double>",
     )
-    codes = spark.createDataFrame(
-        [(0, [0] * m)], "vec_id long, pq_codes array<int>"
+
+    def centroids(k):
+        return spark.createDataFrame(
+            [(c, [float((c + d) % 11) for d in range(dim)]) for c in range(k)],
+            "centroid_id long, centroid array<double>",
+        )
+
+    def books(m, k, sub):
+        return [
+            [[float((s + c + j) % 13) for j in range(sub)] for c in range(k)]
+            for s in range(m)
+        ]
+
+    def grows(small, large):
+        return abs(len(_executed_plan(large)) - len(_executed_plan(small)))
+
+    assert grows(
+        assign_ivf_buckets(vecs, centroids(8)),
+        assign_ivf_buckets(vecs, centroids(256)),
+    ) < 512
+    assert grows(
+        pq_encode(vecs, books(4, 8, 4)), pq_encode(vecs, books(4, 256, 4))
+    ) < 512
+
+    m, ncodes = 16, 256
+    queries = spark.createDataFrame(
+        [(i, [float(i % 7)] * m) for i in range(300)],
+        "vec_id long, embedding array<double>",
     )
-    with pytest.raises(ValueError, match="1048576"):
-        pq_adc_topk(codes, queries, big_codebooks, k=3, max_queries=10_000)
-    # a small within-budget probe set plans fine with the same model shape
-    # (NOT a near-budget one: folding ~2^20 literals is exactly the
-    # minutes-long Catalyst analysis the guard exists to prevent)
-    ok = pq_adc_topk(
-        codes, queries.filter(F.col("vec_id") < 2), big_codebooks,
-        k=3, max_queries=10_000,
+    codes = spark.createDataFrame([(0, [0] * m)], "vec_id long, pq_codes array<int>")
+    adc_books = books(m, ncodes, 1)
+    assert grows(
+        pq_adc_topk(codes, queries.filter(F.col("vec_id") < 2), adc_books, k=3),
+        pq_adc_topk(codes, queries, adc_books, k=3),
+    ) < 512
+
+
+def test_adc_model_frames_are_local_scans(emb, codebooks):
+    """The driver-built probe frame of ivfpq_adc_topk and pq_adc_topk's LUT
+    row go through Arrow into a LocalRelation (LocalTableScan), never
+    createDataFrame(<python list>)'s Scan ExistingRDD, which reruns a
+    job on every execution."""
+    from data_engineering_nd_datalake_project_4_spark.operators.similarity import (
+        ivfpq_adc_topk,
+        ivfpq_encode,
+        ivfpq_train,
     )
-    assert ok.columns == ["query_id", "neighbor_id", "adc_dist"]
+
+    coarse, cbs = ivfpq_train(emb, nlist=4, m=4, k=8, iters=2)
+    queries = emb.filter(F.col("vec_id") < 3)
+    outs = [
+        ivfpq_adc_topk(ivfpq_encode(emb, coarse, cbs), queries, coarse, cbs, k=3),
+        pq_adc_topk(pq_encode(emb, codebooks), queries, codebooks, k=3),
+    ]
+    for out in outs:
+        assert out.count() > 0
+        plan = _executed_plan(out)
+        assert "LocalTableScan" in plan, plan
+        assert "ExistingRDD" not in plan, plan
 
 
 class TestIvfPq:
@@ -258,6 +307,49 @@ class TestIvfPq:
             (r["query_id"], r["neighbor_id"], r["adc_dist"]) for r in df.collect()
         )
         assert rows(clamped) == rows(full)
+
+
+def test_ivfpq_encode_ansi_never_raises_on_degenerate_rows(spark):
+    """ANSI on, over a frame mixing valid, degenerate (NULL / empty /
+    NULL-element) and off-dimension vectors: encoding and searching never
+    raise (no index lookup is left for an eagerly evaluated or pushed-down
+    copy of the kernel to throw on), degenerate and off-dim rows are
+    dropped, and every valid row gets the numpy cell of its nearest coarse
+    centroid and a residual equal to ``v - coarse[cell]``: each codebook
+    entry i IS valid row i's residual subvector, so row i encodes to
+    [i, i] exactly when its residual is right."""
+    from data_engineering_nd_datalake_project_4_spark.operators.similarity import (
+        ivfpq_adc_topk,
+        ivfpq_encode,
+    )
+
+    rng = np.random.default_rng(5)
+    dim, m, sub = 8, 2, 4
+    C = rng.normal(size=(3, dim))
+    V = rng.normal(size=(12, dim))
+    cells = ((V[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+    R = V - C[cells]
+    books = [
+        [[float(x) for x in r[s * sub : (s + 1) * sub]] for r in R] for s in range(m)
+    ]
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(V)] + [
+        (100, None),
+        (101, []),
+        (102, [1.0, None] + [0.0] * (dim - 2)),
+        (103, [1.0] * (dim // 2)),
+        (104, [1.0] * (dim + 4)),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    coarse = [[float(x) for x in c] for c in C]
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        enc = ivfpq_encode(df, coarse, books)
+        got = {r.vec_id: (r.ivf_cell, list(r.pq_codes)) for r in enc.collect()}
+        ivfpq_adc_topk(enc, df, coarse, books, k=3, nprobe=2).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert got == {i: (int(cells[i]), [i, i]) for i in range(len(V))}
 
 
 def test_mixed_dimension_model_contract(spark):
