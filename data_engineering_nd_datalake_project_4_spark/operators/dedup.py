@@ -634,7 +634,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iter: int = 20,
 ) -> DataFrame:
     """Connected components over an undirected edge list — the clustering
     step that turns near-dup *candidate pairs* (MinHash/SimHash/Jaccard
@@ -642,12 +641,14 @@ def connected_components(
 
     Algorithm: iterative min-label propagation. Each node starts labeled
     with its own id; every round each node takes the min of its own label
-    and its neighbors' labels; stop when a round changes nothing. Rounds
-    needed = graph diameter — for dedup graphs (small, dense clusters)
-    that is 2-4. Each round is one shuffle join + one groupBy min, all
-    DataFrame ops; ``localCheckpoint`` truncates the growing lineage so
-    round N's plan doesn't replay rounds 1..N-1. The loop is driver-side
-    over *iterations*, never over rows (GraphFrames does the same).
+    and its neighbors' labels; stop when a round changes nothing. That
+    always happens within diameter + 1 rounds, so there is no round cap
+    and the labels returned are always converged — for dedup graphs
+    (small, dense clusters) 2-4 rounds. Each round is one shuffle join +
+    one groupBy min, all DataFrame ops; ``localCheckpoint`` truncates the
+    growing lineage so round N's plan doesn't replay rounds 1..N-1. The
+    loop is driver-side over *iterations*, never over rows (GraphFrames
+    does the same).
 
     At 100 TB: label propagation is O(diameter) rounds; for adversarial
     long-path graphs the published fix is alternating large-star/small-star
@@ -670,7 +671,8 @@ def connected_components(
         .withColumn("component", F.col("node"))
         .localCheckpoint()
     )
-    for _ in range(max_iter):
+    changed = 1
+    while changed:
         # neighbor labels: edge (u,v) carries v's current label to u
         msgs = sym.join(
             labels.select(F.col("node").alias("v"), F.col("component")), "v"
@@ -689,8 +691,6 @@ def connected_components(
             .count()
         )
         labels = new_labels
-        if changed == 0:
-            break
     return labels
 
 
@@ -962,7 +962,6 @@ def lsh_near_dedup(
     max_bucket_size: int | None = 100,
     hash_fn: str = "xxhash64",
     verify_jaccard: float | None = 0.5,
-    max_iter: int = 20,
 ) -> DataFrame:
     """END-TO-END MinHash near-dedup — the operation an LLM-corpus user
     actually runs (the SlimPajama / Lee et al. 2022 pipeline): LSH
@@ -1023,7 +1022,7 @@ def lsh_near_dedup(
             )
             .select("id_a", "id_b")
         )
-    labels = connected_components(pairs, max_iter=max_iter)
+    labels = connected_components(pairs)
     removed = labels.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)
     )

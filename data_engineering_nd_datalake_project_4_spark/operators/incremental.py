@@ -1,25 +1,33 @@
-"""Incremental deduplication against a persisted fingerprint store.
+"""Incremental deduplication against a persisted band store.
 
 The reference's only "incremental" idiom is overwrite-everything
 (/root/reference/etl.py:225-237: each run rewrites the full output table).
 At 100 TB that is the one thing you cannot do: deduping a NEW batch of
 documents must not rescan — let alone rewrite — the existing corpus. This
-module persists only the corpus *fingerprints* (8-byte ``xxhash64``
-content hashes, ~16 bytes/doc on disk), hash-partitioned so each new batch
-reads just the store partitions its own fingerprints could live in.
+module persists only the corpus *signatures*, hash-partitioned so each new
+batch reads just the store partitions its own signature could live in.
+
+One store format serves the whole family (``_STORE_SCHEMA``): one
+``(band, bucket, first_id[, src_batch], bkt_part)`` row per band bucket the
+corpus claimed. The exact/canonical fingerprint of :func:`incremental_dedup`
+is a ONE-band signature (band 0, bucket = the 8-byte ``xxhash64``); MinHash
+(:func:`incremental_lsh_dedup`) and sign-LSH
+(:func:`incremental_semantic_dedup`) signatures have ``bands`` bands. All
+three share the store-rows builder, the writer, the probe and
+:func:`compact_band_store`.
 
 Data motion per batch at any corpus scale:
-- the batch shuffles once on its 8-byte fingerprint (in-batch first-wins);
-- the store scan is pruned to the batch's touched ``fp_bucket`` partitions
-  (static IN-literal pruning — the bucket list is at most ``num_buckets``
-  driver-side integers, never data);
-- the anti-join shuffles 8-byte keys only — document text never moves;
-- the store append writes only the survivors' fingerprints, into the same
-  bucket layout, so the NEXT batch prunes just as well. Periodic
-  :func:`compact_fingerprint_store` / :func:`compact_band_store`
-  (partition-layout-preserving, replay-safe) keep file counts bounded.
+- the batch maps to ~24-byte ``(id, band, bucket)`` rows — text never moves;
+- the store scan is pruned to the batch's touched ``bkt_part`` partitions
+  (static IN-literal pruning — the partition list is at most
+  ``num_buckets`` driver-side integers, never data);
+- every shuffle carries hash/id keys only;
+- the store append writes only the survivors' buckets, into the same
+  layout, so the NEXT batch prunes just as well. Periodic
+  :func:`compact_band_store` (partition-layout-preserving, replay-safe)
+  keeps file counts bounded.
 
-Fingerprint modes:
+Fingerprint modes of :func:`incremental_dedup`:
 - ``exact``: ``xxhash64(text)`` — byte-identical duplicates.
 - ``canonical``: ``xxhash64(canonical_text_key(text))`` — token-set
   duplicates (permutations/repetitions collide), same store machinery.
@@ -37,10 +45,20 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_engineering_nd_datalake_project_4_spark.operators.dedup import canonical_text_key, latest_per_key
+from data_engineering_nd_datalake_project_4_spark.operators.dedup import (
+    canonical_text_key,
+    latest_per_key,
+    minhash_band_rows,
+)
 
-#: store schema: fp (long), first_id (long), fp_bucket (int, partition col)
-_STORE_COLS = ("fp", "first_id", "fp_bucket")
+#: the one store format: a row per (band, bucket) the corpus claimed,
+#: ``first_id`` the minimum id that claimed it, ``src_batch`` the versioned
+#: append stamp (NULL for bootstrap and unversioned rows; files written
+#: without the column read it as NULL), ``bkt_part`` the partition column
+#: (pmod of the bucket hash). Declared on every read: a store built from
+#: an EMPTY corpus is a valid directory with zero data files, where schema
+#: inference would fail UNABLE_TO_INFER_SCHEMA (empty soak).
+_STORE_SCHEMA = "band INT, bucket LONG, first_id LONG, src_batch LONG, bkt_part INT"
 
 
 def _fingerprint(text_col: str, mode: str) -> Column:
@@ -55,10 +73,76 @@ def _fingerprint(text_col: str, mode: str) -> Column:
     raise ValueError(f"unknown fingerprint mode: {mode!r}")
 
 
-def _read_store_cold_start(spark: SparkSession, store_path: str, schema: str):
-    """Read a persisted dedup-state store with the declared ``schema``;
-    a MISSING store returns None ("first batch", the cold-start
-    contract). Two hard lines inside that leniency:
+def _one_band(df: DataFrame, fp: Column, id_col: str) -> DataFrame:
+    """A fingerprint as a one-band signature in the fan-out shape
+    ``(__id, __band, __bucket)``: band 0, bucket = the fingerprint."""
+    return df.select(
+        F.col(id_col).alias("__id"), F.lit(0).alias("__band"), fp.alias("__bucket")
+    )
+
+
+def _minhash_rows(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    shingle_n: int,
+    hash_fn: str,
+) -> DataFrame:
+    """MinHash band fan-out ``(__id, __band, __bucket)``. NULL-text rows
+    get no signature (see :func:`incremental_lsh_dedup` for the contract)."""
+    return minhash_band_rows(
+        df.filter(F.col(text_col).isNotNull()),
+        text_col, id_col, num_hashes, bands, shingle_n, hash_fn,
+    )
+
+
+def _bkt_part(bucket: Column, num_buckets: int) -> Column:
+    # pmod keeps negative xxhash64 bucket values in [0, num_buckets)
+    return F.pmod(bucket, F.lit(num_buckets)).cast("int").alias("bkt_part")
+
+
+def _first_claims(fanout: DataFrame) -> DataFrame:
+    """One ``(__band, __bucket, __id)`` row per distinct band bucket of the
+    fan-out: the minimum id that claimed it. One groupBy shuffle on
+    (int, 8-byte hash) keys."""
+    return fanout.groupBy("__band", "__bucket").agg(F.min("__id").alias("__id"))
+
+
+def _store_rows(
+    claims: DataFrame, num_buckets: int, src_batch: int | None = None
+) -> DataFrame:
+    """``(__band, __bucket, __id)`` claims, one per bucket, in the store
+    format; with ``src_batch`` every row carries the versioned stamp."""
+    cols = [
+        F.col("__band").cast("int").alias("band"),
+        F.col("__bucket").cast("long").alias("bucket"),
+        F.col("__id").cast("long").alias("first_id"),
+    ]
+    if src_batch is not None:
+        # replay re-appends the same stamped rows — duplicates with an
+        # identical stamp, invisible to the replaying batch itself and
+        # decision-neutral for later ones (existence + min id)
+        cols.append(F.lit(int(src_batch)).cast("long").alias("src_batch"))
+    return claims.select(*cols, _bkt_part(F.col("__bucket"), num_buckets))
+
+
+def _write_store(rows: DataFrame, store_path: str, mode: str) -> None:
+    # one task per bkt_part: ~one file per partition per write
+    rows.repartition("bkt_part").write.mode(mode).partitionBy("bkt_part").parquet(
+        store_path
+    )
+
+
+def _build_store(fanout: DataFrame, store_path: str, num_buckets: int) -> None:
+    _write_store(_store_rows(_first_claims(fanout), num_buckets), store_path, "overwrite")
+
+
+def _read_store_cold_start(spark: SparkSession, store_path: str):
+    """Read a persisted dedup-state store with the declared
+    ``_STORE_SCHEMA``; a MISSING store returns None ("first batch", the
+    cold-start contract). Two hard lines inside that leniency:
 
     - any AnalysisException other than path-not-found propagates (a
       corrupt footer / permission error must never read as "no state",
@@ -71,7 +155,7 @@ def _read_store_cold_start(spark: SparkSession, store_path: str, schema: str):
       tests/test_incremental_lsh.py::test_compact_band_store_crash_windows.
     """
     try:
-        return spark.read.schema(schema).parquet(store_path)
+        return spark.read.schema(_STORE_SCHEMA).parquet(store_path)
     except AnalysisException as e:
         if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
             raise
@@ -89,28 +173,43 @@ def _read_store_cold_start(spark: SparkSession, store_path: str, schema: str):
         return None
 
 
-def _bucket(fp: Column, num_buckets: int) -> Column:
-    # pmod keeps negative xxhash64 values in [0, num_buckets)
-    return F.pmod(fp, F.lit(num_buckets)).cast("int")
+def _probe_store(
+    spark: SparkSession,
+    fanout: DataFrame,
+    store_path: str,
+    num_buckets: int,
+    src_batch: int | None,
+) -> DataFrame | None:
+    """The store's ``(band, bucket)`` rows a batch's fan-out can hit, or
+    None when no store exists yet (first batch).
 
+    The scan is pruned to the ``bkt_part`` partitions the fan-out touches
+    (at most ``num_buckets`` driver-side ints → static partition pruning
+    literals). Missing store = first batch; mid-swap / corrupt stores fail
+    loudly (:func:`_read_store_cold_start`).
 
-def fingerprints(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    mode: str = "exact",
-    num_buckets: int = 64,
-) -> DataFrame:
-    """One ``(fp, first_id, fp_bucket)`` row per distinct fingerprint —
-    ``first_id`` is the minimum ``id_col`` carrying it. Single groupBy
-    shuffle on the 8-byte hash (partial+final HashAggregate)."""
-    fp = _fingerprint(text_col, mode)
-    return (
-        df.select(fp.alias("fp"), F.col(id_col).alias("__id"))
-        .groupBy("fp")
-        .agg(F.min("__id").alias("first_id"))
-        .withColumn("fp_bucket", _bucket(F.col("fp"), num_buckets))
-    )
+    ``src_batch`` (VERSIONED mode — the exactly-once-decisions contract
+    for at-least-once feeds, used by the streaming wrappers): the probe
+    sees only rows whose stamp is NULL (bootstrap rows written by
+    build_*_store / unversioned appends — always visible) or STRICTLY
+    BELOW this batch id, so a replayed batch ignores its own earlier
+    append. Requires monotone batch ids (Structured Streaming's
+    foreachBatch guarantee; for scheduled jobs, any monotone run counter).
+    """
+    touched = [
+        r[0]
+        for r in fanout.select(_bkt_part(F.col("__bucket"), num_buckets))
+        .distinct()
+        .collect()
+    ]
+    store = _read_store_cold_start(spark, store_path)
+    if store is None:
+        return None
+    if src_batch is not None:
+        store = store.filter(
+            F.col("src_batch").isNull() | (F.col("src_batch") < F.lit(int(src_batch)))
+        )
+    return store.filter(F.col("bkt_part").isin(touched)).select("band", "bucket")
 
 
 def build_fingerprint_store(
@@ -121,15 +220,12 @@ def build_fingerprint_store(
     mode: str = "exact",
     num_buckets: int = 64,
 ) -> None:
-    """Materialize the corpus fingerprint store, hash-partitioned by
-    ``fp_bucket``. One-time full scan of the corpus; every later batch
-    touches only its own buckets."""
-    (
-        fingerprints(df, text_col, id_col, mode, num_buckets)
-        .repartition("fp_bucket")
-        .write.mode("overwrite")
-        .partitionBy("fp_bucket")
-        .parquet(store_path)
+    """Materialize the corpus fingerprint store: one one-band row per
+    distinct fingerprint (``first_id`` the minimum ``id_col`` carrying
+    it), hash-partitioned by ``bkt_part``. One-time full scan of the
+    corpus; every later batch touches only its own partitions."""
+    _build_store(
+        _one_band(df, _fingerprint(text_col, mode), id_col), store_path, num_buckets
     )
 
 
@@ -149,7 +245,7 @@ def incremental_dedup(
     batch itself.
 
     With ``update_store=True`` the survivors' fingerprints are appended to
-    the store first (same bucket layout), making the operation idempotent:
+    the store first (same layout), making the operation idempotent:
     replaying the identical batch then yields zero survivors.
 
     ``src_batch`` (VERSIONED mode — the exactly-once-decisions contract,
@@ -160,16 +256,16 @@ def incremental_dedup(
     STRICTLY-earlier stamps, so re-running the same batch with the same
     id returns the IDENTICAL survivor set instead of zero survivors.
     Implies ``update_store``; parquet schema evolution merges stamped
-    and legacy layouts in one store, and
-    :func:`compact_fingerprint_store` always carries the stamp through.
+    and unstamped files in one store, and :func:`compact_band_store`
+    always carries the stamp through.
 
     Multi-consumer consistency (BOTH paths): the batch plan feeds several
-    consumers — the touched-bucket collect, the survivor anti-join the
+    consumers — the touched-partition collect, the survivor anti-join the
     caller later actions, and (update_store=True) the store append. A
     nondeterministic or sampled upstream must not evaluate once per
-    consumer, or fingerprints could land in buckets that were pruned from
-    the store scan (silently letting duplicates pass), or the store could
-    permanently record fingerprints disagreeing with the survivors
+    consumer, or fingerprints could land in partitions that were pruned
+    from the store scan (silently letting duplicates pass), or the store
+    could permanently record fingerprints disagreeing with the survivors
     returned. So the keyed batch is ``localCheckpoint(eager=True)``-frozen
     ONCE up front — every consumer, including the caller's consumption
     after this function returns, reads the same materialized rows (a
@@ -185,104 +281,24 @@ def incremental_dedup(
     keyed = batch.withColumn("__fp", fp).localCheckpoint(eager=True)
     # first-wins within the batch: one window shuffle on the 8-byte hash
     firsts = latest_per_key(keyed, ["__fp"], [F.col(id_col)])
-
-    # prune the store scan to the buckets this batch can touch: at most
-    # num_buckets driver-side ints → static partition pruning literals
-    touched = [
-        r[0]
-        for r in keyed.select(_bucket(F.col("__fp"), num_buckets).alias("b"))
-        .distinct()
-        .collect()
-    ]
-    # explicit schema (the probe needs only fp + the partition column):
-    # a store built from an EMPTY corpus is a valid directory with zero
-    # data files (partitionBy writes no part files for no rows), where
-    # schema inference would fail UNABLE_TO_INFER_SCHEMA — with the
-    # declared schema it reads as the correct empty frame (empty soak).
-    # fp is always xxhash64 -> LONG; fp_bucket is _bucket -> INT.
-    # Missing store = first batch; mid-swap / corrupt stores fail loudly
-    # (_read_store_cold_start).
-    probe_schema = "fp LONG" + (
-        ", src_batch LONG" if src_batch is not None else ""
-    ) + ", fp_bucket INT"
-    store = _read_store_cold_start(spark, store_path, probe_schema)
-    if store is not None and src_batch is not None:
-        # versioned visibility: bootstrap rows (NULL stamp) + strictly
-        # earlier batches; a replay's own earlier append is invisible
-        store = store.filter(
-            F.col("src_batch").isNull() | (F.col("src_batch") < F.lit(int(src_batch)))
-        )
-    if store is not None:
-        seen = store.filter(F.col("fp_bucket").isin(touched)).select("fp")
-        survivors = firsts.join(
-            seen, firsts["__fp"] == seen["fp"], "left_anti"
-        )
+    seen = _probe_store(
+        spark, _one_band(keyed, F.col("__fp"), id_col), store_path, num_buckets, src_batch
+    )
+    if seen is not None:
+        # one band: the fingerprint is the bucket
+        survivors = firsts.join(seen, firsts["__fp"] == seen["bucket"], "left_anti")
     else:  # no store yet: everything survives in-batch dedup
         survivors = firsts
 
     if update_store:
-        # freeze the survivor set once; append and caller share it
+        # freeze the survivor set once; append and caller share it. The
+        # survivors are already one per fingerprint: no claim aggregation
         survivors = survivors.localCheckpoint(eager=True)
-        cols = [
-            F.col("__fp").alias("fp"),
-            F.col(id_col).cast("long").alias("first_id"),
-        ]
-        if src_batch is not None:
-            # replay re-appends identical stamped rows — invisible to the
-            # replaying batch itself, decision-neutral for later ones
-            cols.append(F.lit(int(src_batch)).cast("long").alias("src_batch"))
-        cols.append(_bucket(F.col("__fp"), num_buckets).alias("fp_bucket"))
-        (
-            survivors.select(*cols)
-            .repartition("fp_bucket")
-            .write.mode("append")
-            .partitionBy("fp_bucket")
-            .parquet(store_path)
+        _write_store(
+            _store_rows(_one_band(survivors, F.col("__fp"), id_col), num_buckets, src_batch),
+            store_path, "append",
         )
     return survivors.drop("__fp")
-
-
-#: band store schema: one row per distinct (band, bucket) in the corpus;
-#: bkt_part is the partition column (pmod of the 8-byte bucket hash)
-_BAND_STORE_SCHEMA = "band INT, bucket LONG, first_id LONG"
-
-
-def _band_part(bucket: Column, num_buckets: int) -> Column:
-    # pmod keeps negative xxhash64 bucket values in [0, num_buckets)
-    return F.pmod(bucket, F.lit(num_buckets)).cast("int")
-
-
-def band_store_rows(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    hash_fn: str = "xxhash64",
-    num_buckets: int = 64,
-) -> DataFrame:
-    """One ``(band, bucket, first_id, bkt_part)`` row per distinct MinHash
-    band bucket occupied by the corpus — ``first_id`` is the minimum
-    ``id_col`` that claimed it. NULL-text rows contribute nothing (no
-    signature — see :func:`incremental_lsh_dedup` for the contract).
-    Single groupBy shuffle on (int, 8-byte hash) keys; text never moves."""
-    from data_engineering_nd_datalake_project_4_spark.operators.dedup import minhash_band_rows
-
-    banded = minhash_band_rows(
-        df.filter(F.col(text_col).isNotNull()),
-        text_col, id_col, num_hashes, bands, shingle_n, hash_fn,
-    )
-    return (
-        banded.groupBy("__band", "__bucket")
-        .agg(F.min("__id").alias("first_id"))
-        .select(
-            F.col("__band").cast("int").alias("band"),
-            F.col("__bucket").cast("long").alias("bucket"),
-            F.col("first_id").cast("long").alias("first_id"),
-            _band_part(F.col("__bucket"), num_buckets).alias("bkt_part"),
-        )
-    )
 
 
 def build_band_store(
@@ -296,20 +312,17 @@ def build_band_store(
     hash_fn: str = "xxhash64",
     num_buckets: int = 64,
 ) -> None:
-    """Materialize the corpus MinHash band-bucket store, hash-partitioned
-    by ``bkt_part``. One-time full scan of the corpus; every later batch
-    reads only the store partitions its own band buckets could live in —
-    the near-dup twin of :func:`build_fingerprint_store`. On disk the
-    store is ~bands·20 bytes per distinct corpus document signature, never
-    the corpus itself."""
-    (
-        band_store_rows(
-            df, text_col, id_col, num_hashes, bands, shingle_n, hash_fn, num_buckets
-        )
-        .repartition("bkt_part")
-        .write.mode("overwrite")
-        .partitionBy("bkt_part")
-        .parquet(store_path)
+    """Materialize the corpus MinHash band-bucket store: one row per
+    distinct band bucket the corpus occupies (``first_id`` the minimum
+    ``id_col`` that claimed it), hash-partitioned by ``bkt_part``. One-time
+    full scan of the corpus; every later batch reads only the store
+    partitions its own band buckets could live in — the near-dup twin of
+    :func:`build_fingerprint_store`. NULL-text rows contribute nothing. On
+    disk the store is ~bands·20 bytes per distinct corpus document
+    signature, never the corpus itself."""
+    _build_store(
+        _minhash_rows(df, text_col, id_col, num_hashes, bands, shingle_n, hash_fn),
+        store_path, num_buckets,
     )
 
 
@@ -386,15 +399,12 @@ def incremental_lsh_dedup(
     batch-sized (never corpus-sized) rows. Single-writer store assumption,
     as for the fingerprint store.
     """
-    from data_engineering_nd_datalake_project_4_spark.operators.dedup import minhash_band_rows
-
     keyed = batch.localCheckpoint(eager=True)
-    banded = minhash_band_rows(
-        keyed.filter(F.col(text_col).isNotNull()),
-        text_col, id_col, num_hashes, bands, shingle_n, hash_fn,
+    banded = _minhash_rows(
+        keyed, text_col, id_col, num_hashes, bands, shingle_n, hash_fn
     ).localCheckpoint(eager=True)
     # src_batch (versioned mode) implies a store append: the stamp IS the
-    # replay-safety mechanism — see _banded_store_dropped
+    # replay-safety mechanism — see _probe_store
     dropped = _banded_store_dropped(
         spark, banded, store_path, num_buckets,
         update_store or src_batch is not None, src_batch,
@@ -425,51 +435,21 @@ def _banded_store_dropped(
     survivors' buckets are appended first (same layout), so the append
     and the caller's consumption share one evaluation of the decision.
 
-    ``src_batch`` (VERSIONED mode — the exactly-once-decisions contract
-    for at-least-once feeds, used by the streaming wrappers): the store
-    read sees only rows whose ``src_batch`` stamp is NULL (bootstrap
-    rows written by build_*_store / unversioned batch appends — always
-    visible) or STRICTLY BELOW this batch id, and the survivor append is
-    stamped with this id. A replayed batch therefore ignores its own
-    earlier append and reproduces IDENTICAL decisions — versioned
-    replays return the same survivors, where unversioned replay returns
-    zero new survivors (each doc hits its own stored bands). Requires
-    monotone batch ids (Structured Streaming's foreachBatch guarantee;
-    for scheduled jobs, any monotone run counter). Parquet schema
-    evolution makes the two layouts one store: files written without the
-    column read as NULL under the declared versioned schema."""
-    # prune the store scan to the partitions this batch can touch
-    touched = [
-        r[0]
-        for r in banded.select(_band_part(F.col("__bucket"), num_buckets).alias("b"))
-        .distinct()
-        .collect()
-    ]
-    # declared schema: a store built from an empty corpus is a valid
-    # directory with zero data files (empty soak — round-7 rule). Missing
-    # store = first batch; mid-swap / corrupt stores fail loudly
-    # (_read_store_cold_start).
-    schema = _BAND_STORE_SCHEMA + (
-        ", src_batch LONG" if src_batch is not None else ""
-    ) + ", bkt_part INT"
-    store = _read_store_cold_start(spark, store_path, schema)
-    if store is not None and src_batch is not None:
-        # versioned visibility: bootstrap rows (NULL stamp) + strictly
-        # earlier batches; a replay's own earlier append is invisible
-        store = store.filter(
-            F.col("src_batch").isNull() | (F.col("src_batch") < F.lit(int(src_batch)))
-        )
-
+    ``src_batch``: the versioned probe (:func:`_probe_store`) plus a
+    stamped append. A replayed batch therefore reproduces IDENTICAL
+    decisions — versioned replays return the same survivors, where
+    unversioned replay returns zero new survivors (each doc hits its own
+    stored bands)."""
     from pyspark.sql import Window
 
+    seen = _probe_store(spark, banded, store_path, num_buckets, src_batch)
     w = Window.partitionBy("__band", "__bucket")
     killed_in_batch = (
         banded.withColumn("__min", F.min("__id").over(w))
         .filter(F.col("__min") < F.col("__id"))
         .select("__id")
     )
-    if store is not None:
-        seen = store.filter(F.col("bkt_part").isin(touched)).select("band", "bucket")
+    if seen is not None:
         hit_store = (
             banded.join(
                 seen,
@@ -484,27 +464,10 @@ def _banded_store_dropped(
     dropped = dropped.distinct().localCheckpoint(eager=True)
 
     if update_store:
-        surv_banded = banded.join(
-            dropped, banded["__id"] == dropped["__id"], "left_anti"
-        )
-        cols = [
-            F.col("__band").cast("int").alias("band"),
-            F.col("__bucket").cast("long").alias("bucket"),
-            F.col("first_id").cast("long").alias("first_id"),
-        ]
-        if src_batch is not None:
-            # replay re-appends the same stamped rows — duplicates with
-            # an identical stamp, invisible to the replaying batch itself
-            # and decision-neutral for later ones (existence + min id)
-            cols.append(F.lit(int(src_batch)).cast("long").alias("src_batch"))
-        (
-            surv_banded.groupBy("__band", "__bucket")
-            .agg(F.min("__id").alias("first_id"))
-            .select(*cols, _band_part(F.col("__bucket"), num_buckets).alias("bkt_part"))
-            .repartition("bkt_part")
-            .write.mode("append")
-            .partitionBy("bkt_part")
-            .parquet(store_path)
+        survivors = banded.join(dropped, on="__id", how="left_anti")
+        _write_store(
+            _store_rows(_first_claims(survivors), num_buckets, src_batch),
+            store_path, "append",
         )
     return dropped
 
@@ -554,32 +517,18 @@ def build_sign_band_store(
     distinct corpus (band, key), hash-partitioned by ``bkt_part``. On disk
     ~bands·20 B per distinct vector signature — the corpus VECTORS never
     persist and are never rescanned."""
-    (
-        _sign_band_rows(df, id_col, vec_col, bands, band_bits)
-        .groupBy("__band", "__bucket")
-        .agg(F.min("__id").alias("first_id"))
-        .select(
-            F.col("__band").cast("int").alias("band"),
-            F.col("__bucket").cast("long").alias("bucket"),
-            F.col("first_id").cast("long").alias("first_id"),
-            _band_part(F.col("__bucket"), num_buckets).alias("bkt_part"),
-        )
-        .repartition("bkt_part")
-        .write.mode("overwrite")
-        .partitionBy("bkt_part")
-        .parquet(store_path)
+    _build_store(
+        _sign_band_rows(df, id_col, vec_col, bands, band_bits), store_path, num_buckets
     )
 
 
 def compact_band_store(
     spark: SparkSession,
     store_path: str,
-    versioned: bool | None = None,
     dedup_exact: bool = False,
 ) -> int:
-    """Compact an append-only band-bucket store in place (shared by the
-    lexical MinHash store of :func:`incremental_lsh_dedup` and the
-    sign-LSH store of :func:`incremental_semantic_dedup`): every
+    """Compact an append-only store in place — any store of this module
+    (fingerprint, MinHash or sign-LSH; they share one format): every
     ``update_store=True`` batch appends ~one file per ``bkt_part``
     partition, so months of daily batches leave thousands of KB-sized
     files whose per-file task + footer fetch eventually dominates the
@@ -593,55 +542,29 @@ def compact_band_store(
     assumption as the appends themselves: don't compact concurrently with
     a batch. Returns the post-compaction data-file count.
 
-    ``src_batch`` is ALWAYS carried through the rewrite (ADVICE r12):
-    the old ``versioned=True`` opt-in meant compacting a stamped store
-    with the default flag silently erased every stamp — every row became
-    bootstrap-visible and the streaming wrappers' replay-stability
-    contract broke with no error. Now files without the column read it
-    as NULL and the rewrite writes the NULL column back, which is
-    decision-neutral for unversioned probes (their declared read schema
-    omits the column, so parquet prunes it) AND for a later versioned
-    probe (explicit NULL == absent == bootstrap-visible). ``versioned``
-    is retained for source compatibility and ignored.
+    ``src_batch`` is ALWAYS carried through the rewrite: files without
+    the column read it as NULL and the rewrite writes the NULL column
+    back, which is decision-neutral for unversioned probes (they never
+    read the column) AND for a later versioned probe (explicit NULL ==
+    absent == bootstrap-visible). Dropping it would make every stamped
+    row bootstrap-visible and silently break the streaming wrappers'
+    replay-stability contract.
 
     ``dedup_exact`` additionally collapses EXACT duplicate rows during
     the rewrite — the row-level reclaim for sustained at-least-once
-    replay (VERDICT r12 task 4): every replayed delivery of a batch
-    re-appends its surviving ``(band, bucket, first_id, src_batch)``
-    rows VERBATIM (same stamp → identical rows), so k extra deliveries
-    grow the store by k× the batch's surviving band rows. Identical
-    rows are probe-invisible (existence + min-id semantics, and the
-    stamp filter treats equal stamps equally), so ``distinct()`` is
-    decision-identical — replay stability and later batches' decisions
-    are untouched (tests prove it). Distinct rows from DIFFERENT
-    batches/stamps are never collapsed. Default off: the plain
-    compaction stays a pure layout change."""
-    del versioned  # deprecated no-op — stamps are always preserved
-    from data_engineering_nd_datalake_project_4_spark.sources.sinks import compact_partitioned_parquet_dir
-
-    schema = _BAND_STORE_SCHEMA + ", src_batch LONG, bkt_part INT"
-    return compact_partitioned_parquet_dir(
-        spark, store_path, "bkt_part", schema=schema,
-        transform=(lambda df: df.distinct()) if dedup_exact else None,
-    )
-
-
-def compact_fingerprint_store(
-    spark: SparkSession,
-    store_path: str,
-    dedup_exact: bool = False,
-) -> int:
-    """:func:`compact_band_store` for the exact/canonical fingerprint
-    store of :func:`incremental_dedup` (``fp_bucket`` layout). Same
-    contracts: ``src_batch`` stamps (versioned mode) are ALWAYS carried
-    through (unstamped files read the column as NULL — decision-neutral
-    both ways), and ``dedup_exact`` reclaims the identical rows that
-    at-least-once replays of a versioned batch re-append."""
+    replay: every replayed delivery of a batch re-appends its surviving
+    ``(band, bucket, first_id, src_batch)`` rows VERBATIM (same stamp →
+    identical rows), so k extra deliveries grow the store by k× the
+    batch's surviving rows. Identical rows are probe-invisible (existence
+    + min-id semantics, and the stamp filter treats equal stamps
+    equally), so ``distinct()`` is decision-identical — replay stability
+    and later batches' decisions are untouched (tests prove it). Distinct
+    rows from DIFFERENT batches/stamps are never collapsed. Default off:
+    the plain compaction stays a pure layout change."""
     from data_engineering_nd_datalake_project_4_spark.sources.sinks import compact_partitioned_parquet_dir
 
     return compact_partitioned_parquet_dir(
-        spark, store_path, "fp_bucket",
-        schema="fp LONG, first_id LONG, src_batch LONG, fp_bucket INT",
+        spark, store_path, "bkt_part", schema=_STORE_SCHEMA,
         transform=(lambda df: df.distinct()) if dedup_exact else None,
     )
 

@@ -4645,7 +4645,8 @@ def q129_contamination(spark, sf_dir):
        ORDER BY b.doc_id""",
     "incremental dedup against a persisted fingerprint store: docs < 250 "
     "are the existing corpus (only their canonical-token xxhash64 "
-    "fingerprints persist, hash-partitioned by fp_bucket); the new batch "
+    "fingerprints persist, as one-band rows of the bkt_part-partitioned "
+    "band store); the new batch "
     "(>= 250) is deduped in-batch (first doc_id wins) then anti-joined "
     "against the bucket-pruned store — 8-byte keys on every shuffle, "
     "corpus text never rescanned. Replaces the reference's "
@@ -6727,7 +6728,8 @@ def q171_versioned_lsh_dedup_replay(spark, sf_dir):
     "VERSIONED incremental EXACT dedup across two sequential batches WITH "
     "A REPLAY — the exact-fingerprint twin of q171 (same src_batch stamp "
     "filter, canonical-token xxhash64 fingerprints instead of MinHash "
-    "bands): corpus < 250 bootstraps the fingerprint store; batch 0 "
+    "bands, stored as one-band rows of the same bkt_part-partitioned "
+    "band store): corpus < 250 bootstraps the fingerprint store; batch 0 "
     "(250-374) runs at src_batch=0, batch 1 (>= 375) at src_batch=1 and "
     "is then REPLAYED at the same id — the emitted batch-1 survivors come "
     "from the REPLAY, so the oracle match proves the exactly-once replay "

@@ -4,9 +4,10 @@ Partitioned snappy parquet, written natively — including to s3a:// — never
 via an ``aws s3 cp`` subprocess side-channel (reference anti-pattern,
 /root/reference/etl.py:239-251).
 
-Scale notes: dynamic partition overwrite only rewrites touched partitions;
-``max_records_per_file`` bounds file sizes so a skewed partition key cannot
-produce multi-GB files.
+Scale notes: ``write_parquet`` is a static overwrite — a rerun replaces the
+whole output; only ``upsert_partitioned`` rewrites just the partitions an
+update touches. ``max_records_per_file`` bounds file sizes so a skewed
+partition key cannot produce multi-GB files.
 """
 
 from __future__ import annotations
@@ -21,10 +22,7 @@ def write_parquet(
     df: DataFrame,
     path: str,
     partition_by: Sequence[str] | None = None,
-    mode: str = "overwrite",
-    compression: str = "snappy",
     max_records_per_file: int | None = None,
-    dynamic_partition_overwrite: bool = False,
 ) -> None:
     """A partitioned write is repartitioned on the partition columns first,
     so each output directory is produced by ONE task — otherwise every
@@ -35,13 +33,11 @@ def write_parquet(
     """
     if partition_by:
         df = df.repartition(*partition_by)
-    writer = df.write.mode(mode).option("compression", compression)
+    writer = df.write.mode("overwrite").option("compression", "snappy")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    if dynamic_partition_overwrite:
-        writer = writer.option("partitionOverwriteMode", "dynamic")
     writer.parquet(path)
 
 

@@ -12,6 +12,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from data_engineering_nd_datalake_project_4_spark.operators import incremental
+
 
 def read_file_stream(
     spark: SparkSession,
@@ -285,8 +287,6 @@ def run_cdc_upsert_stream(
     if initial is not None and latest_snapshot_version(snapshot_root) is None:
         initial.write.mode("overwrite").parquet(f"{snapshot_root}/v-1")
 
-    from data_engineering_nd_datalake_project_4_spark.operators.incremental import apply_changelog
-
     def batch_fn(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
         base_ver = latest_snapshot_version(snapshot_root, before=int(batch_id))
@@ -299,7 +299,7 @@ def run_cdc_upsert_stream(
             # frame shaped like the payload (every change becomes an upsert)
             payload = [c for c in batch_df.columns if c != op_col and c not in seq_cols]
             snap = spark.createDataFrame([], batch_df.select(*payload).schema)
-        out = apply_changelog(snap, batch_df, key, list(seq_cols), op_col)
+        out = incremental.apply_changelog(snap, batch_df, key, list(seq_cols), op_col)
         out.write.mode("overwrite").parquet(f"{snapshot_root}/v{int(batch_id)}")
 
     run_foreach_batch(stream_changes, batch_fn, checkpoint, query_name)
@@ -490,6 +490,30 @@ def run_topk_candidate_stream(
     run_foreach_batch(stream_df, batch_fn, checkpoint, query_name)
 
 
+def _run_versioned_dedup_stream(
+    stream: DataFrame, operator, cols: tuple[str, str], store_path: str,
+    decisions_root: str, checkpoint: str, query_name: str,
+    compact_every: int | None, **kw,
+) -> None:
+    """The body of the three incremental dedup stream wrappers: per
+    micro-batch, ``operator(spark, batch, *cols, store_path, **kw)`` in
+    versioned mode overwrites ``decisions_root/v<batch_id>``; every
+    ``compact_every``-th batch then runs ``compact_band_store(dedup_exact=True)``."""
+
+    def batch_fn(batch_df, batch_id: int) -> None:
+        out = operator(
+            batch_df.sparkSession, batch_df, *cols, store_path,
+            src_batch=int(batch_id), **kw,
+        )
+        out.write.mode("overwrite").parquet(f"{decisions_root}/v{int(batch_id)}")
+        if compact_every and int(batch_id) % compact_every == compact_every - 1:
+            incremental.compact_band_store(
+                batch_df.sparkSession, store_path, dedup_exact=True
+            )
+
+    run_foreach_batch(stream, batch_fn, checkpoint, query_name)
+
+
 def run_incremental_lsh_dedup_stream(
     stream_docs: DataFrame,
     text_col: str,
@@ -527,13 +551,12 @@ def run_incremental_lsh_dedup_stream(
 
     Scale shape per batch: identical to the batch operator (24-byte band
     rows, bucket-pruned store scan, batch-sized checkpoints); decisions
-    are batch-sized. Store maintenance: ``compact_band_store`` (since r13
-    the compaction ALWAYS carries ``src_batch`` through — the old
-    ``versioned=False`` default silently erased stamps; ADVICE r12).
-    Crash between the store append and the decisions write is healed by
-    the replay (test_lsh_stream_crash_between_store_append_and_decisions_
-    write pins it); sustained replay grows the store by one duplicate
-    stamped row per surviving (band, bucket) per extra delivery —
+    are batch-sized. Store maintenance: ``compact_band_store`` (the
+    compaction ALWAYS carries ``src_batch`` through). Crash between the
+    store append and the decisions write is healed by the replay
+    (test_lsh_stream_crash_between_store_append_and_decisions_write pins
+    it); sustained replay grows the store by one duplicate stamped row
+    per surviving (band, bucket) per extra delivery —
     ``compact_band_store(..., dedup_exact=True)`` reclaims them
     (decision-identical: exact-duplicate rows are probe-invisible).
 
@@ -547,22 +570,12 @@ def run_incremental_lsh_dedup_stream(
     harmlessly re-compacts. Decisions are identical with or without
     (compaction is decision-neutral — tested).
     """
-    from data_engineering_nd_datalake_project_4_spark.operators import incremental
-
-    def batch_fn(batch_df, batch_id: int) -> None:
-        out = incremental.incremental_lsh_dedup(
-            batch_df.sparkSession, batch_df, text_col, id_col, store_path,
-            num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
-            hash_fn=hash_fn, num_buckets=num_buckets,
-            src_batch=int(batch_id),
-        )
-        out.write.mode("overwrite").parquet(f"{decisions_root}/v{int(batch_id)}")
-        if compact_every and int(batch_id) % compact_every == compact_every - 1:
-            incremental.compact_band_store(
-                batch_df.sparkSession, store_path, dedup_exact=True
-            )
-
-    run_foreach_batch(stream_docs, batch_fn, checkpoint, query_name)
+    _run_versioned_dedup_stream(
+        stream_docs, incremental.incremental_lsh_dedup, (text_col, id_col),
+        store_path, decisions_root, checkpoint, query_name, compact_every,
+        num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
+        hash_fn=hash_fn, num_buckets=num_buckets,
+    )
 
 
 def run_incremental_exact_dedup_stream(
@@ -591,25 +604,16 @@ def run_incremental_exact_dedup_stream(
     strictly-earlier-stamp probe make a replayed micro-batch reproduce
     the identical survivor set and overwrite ``v<batch_id>`` with the
     same rows; a crash between the store append and the decisions write
-    is healed by the replay. Store maintenance:
-    ``compact_fingerprint_store`` (stamps always carried;
-    ``dedup_exact=True`` reclaims replay-duplicate rows);
+    is healed by the replay. Store maintenance: ``compact_band_store``
+    (the fingerprint store is a one-band band store; stamps always
+    carried; ``dedup_exact=True`` reclaims replay-duplicate rows);
     ``compact_every=N`` runs it in-stream after every Nth batch (see
     :func:`run_incremental_lsh_dedup_stream` for the safety argument)."""
-    from data_engineering_nd_datalake_project_4_spark.operators import incremental
-
-    def batch_fn(batch_df, batch_id: int) -> None:
-        out = incremental.incremental_dedup(
-            batch_df.sparkSession, batch_df, text_col, id_col, store_path,
-            mode=mode, num_buckets=num_buckets, src_batch=int(batch_id),
-        )
-        out.write.mode("overwrite").parquet(f"{decisions_root}/v{int(batch_id)}")
-        if compact_every and int(batch_id) % compact_every == compact_every - 1:
-            incremental.compact_fingerprint_store(
-                batch_df.sparkSession, store_path, dedup_exact=True
-            )
-
-    run_foreach_batch(stream_docs, batch_fn, checkpoint, query_name)
+    _run_versioned_dedup_stream(
+        stream_docs, incremental.incremental_dedup, (text_col, id_col),
+        store_path, decisions_root, checkpoint, query_name, compact_every,
+        mode=mode, num_buckets=num_buckets,
+    )
 
 
 def run_incremental_semantic_dedup_stream(
@@ -632,19 +636,9 @@ def run_incremental_semantic_dedup_stream(
     the q170 contract). Same stamp-filter exactly-once contract, same
     store coexistence with batch-mode appends and
     ``build_sign_band_store`` bootstraps; same ``compact_every``
-    in-stream reclaim (the sign store shares the band-store layout)."""
-    from data_engineering_nd_datalake_project_4_spark.operators import incremental
-
-    def batch_fn(batch_df, batch_id: int) -> None:
-        out = incremental.incremental_semantic_dedup(
-            batch_df.sparkSession, batch_df, id_col, vec_col, store_path,
-            bands=bands, band_bits=band_bits, num_buckets=num_buckets,
-            src_batch=int(batch_id),
-        )
-        out.write.mode("overwrite").parquet(f"{decisions_root}/v{int(batch_id)}")
-        if compact_every and int(batch_id) % compact_every == compact_every - 1:
-            incremental.compact_band_store(
-                batch_df.sparkSession, store_path, dedup_exact=True
-            )
-
-    run_foreach_batch(stream_vecs, batch_fn, checkpoint, query_name)
+    in-stream reclaim (every incremental store shares one format)."""
+    _run_versioned_dedup_stream(
+        stream_vecs, incremental.incremental_semantic_dedup, (id_col, vec_col),
+        store_path, decisions_root, checkpoint, query_name, compact_every,
+        bands=bands, band_bits=band_bits, num_buckets=num_buckets,
+    )

@@ -1,16 +1,13 @@
 """Incremental dedup vs a persisted fingerprint store: equivalence to
-full-corpus dedup, idempotence of store updates, bucket-partitioned layout
-and scan pruning, canonical-mode permutation capture."""
+full-corpus dedup, idempotence of store updates, canonical-mode
+permutation capture. The store layout and its scan pruning are tested
+for every store kind in test_incremental_lsh.py."""
 
 from __future__ import annotations
-
-import re
-from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
-from data_engineering_nd_datalake_project_4_spark import plans
 from data_engineering_nd_datalake_project_4_spark.operators import incremental
 from data_engineering_nd_datalake_project_4_spark.operators.dedup import exact_dedup_by_hash
 
@@ -106,7 +103,7 @@ def test_nondeterministic_batch_store_matches_survivors(spark, tmp_path):
         spark.createDataFrame([(0, "seed corpus doc")], "doc_id LONG, text STRING"),
         "text", "doc_id", store,
     )
-    before = {r["fp"] for r in spark.read.parquet(store).select("fp").collect()}
+    before = {r["bucket"] for r in spark.read.parquet(store).select("bucket").collect()}
     survivors = incremental.incremental_dedup(
         spark, batch, "text", "doc_id", store, update_store=True
     )
@@ -114,33 +111,10 @@ def test_nondeterministic_batch_store_matches_survivors(spark, tmp_path):
         r["fp"]
         for r in survivors.select(F.xxhash64("text").alias("fp")).collect()
     }
-    after = {r["fp"] for r in spark.read.parquet(store).select("fp").collect()}
+    after = {r["bucket"] for r in spark.read.parquet(store).select("bucket").collect()}
     assert after - before == got_fps
     # and the frozen survivors are stable across re-collection
     assert _ids(survivors) == _ids(survivors)
-
-
-def test_store_layout_and_pruned_scan(spark, corpus_and_batch, tmp_path):
-    """The store is hash-partitioned by fp_bucket and a batch's store scan
-    is pruned to its touched buckets (static IN literals → fewer files)."""
-    corpus, _ = corpus_and_batch
-    store = str(tmp_path / "store")
-    incremental.build_fingerprint_store(
-        corpus, "text", "doc_id", store, num_buckets=8
-    )
-    buckets = sorted(
-        p.name for p in Path(store).iterdir() if p.name.startswith("fp_bucket=")
-    )
-    assert len(buckets) >= 2  # 10 docs over 8 buckets: layout is partitioned
-    one_bucket = int(buckets[0].split("=")[1])
-    pruned = spark.read.parquet(store).filter(
-        F.col("fp_bucket").isin([one_bucket])
-    )
-    # the bucket predicate must land as a PartitionFilter on the scan
-    # (directory-level skip), not a post-scan Filter
-    plan = plans.explain_str(pruned)
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "fp_bucket" in m.group(1), plan
 
 
 def test_canonical_mode_catches_permutations(spark, corpus_and_batch, tmp_path):

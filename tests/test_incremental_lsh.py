@@ -1,15 +1,19 @@
 """Incremental MinHash-LSH near-dedup vs a persisted band-bucket store:
 equivalence to the band-candidate rule computed from scratch, idempotent
 store replay, NULL-text pass-through, empty-corpus store, duplicate feed
-rows, multi-batch sequencing, and the partitioned store layout."""
+rows, multi-batch sequencing; and, for every store kind (fingerprint,
+MinHash, sign-LSH), the one partitioned layout and its compaction."""
 
 from __future__ import annotations
 
+import re
+import shutil
 from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+from data_engineering_nd_datalake_project_4_spark import plans
 from data_engineering_nd_datalake_project_4_spark.operators import incremental
 from data_engineering_nd_datalake_project_4_spark.operators.dedup import minhash_band_rows
 
@@ -184,16 +188,6 @@ def test_duplicate_feed_rows_emit_once(spark, corpus_and_batch, tmp_path):
     assert sorted(ids) == sorted(set(ids))  # one row per id
     assert 102 in ids and 108 in ids
     assert sorted(set(ids)) == _expected_survivors(corpus, batch)
-
-
-def test_store_layout_is_bucket_partitioned(spark, corpus_and_batch, tmp_path):
-    corpus, _ = corpus_and_batch
-    store = tmp_path / "store"
-    incremental.build_band_store(corpus, "text", "doc_id", str(store), **_KW)
-    parts = {p.name for p in Path(store).iterdir() if p.name.startswith("bkt_part=")}
-    assert parts  # hash-partitioned layout on disk
-    for p in parts:
-        assert 0 <= int(p.split("=")[1]) < _KW["num_buckets"]
 
 
 def test_streaming_ingest_with_incremental_lsh_dedup(spark, tmp_path):
@@ -386,6 +380,88 @@ def test_semantic_degenerate_vectors_pass_through(spark, vec_corpus_and_batch, t
 # compact_band_store: layout-only rewrite of the append-only stores
 # ---------------------------------------------------------------------------
 
+#: every store kind shares one format: these tests run once per builder
+_KINDS = ["fingerprint", "band", "sign"]
+_VSCHEMA = "band INT, bucket LONG, first_id LONG, src_batch LONG, bkt_part INT"
+
+
+def _store_world(spark, kind, corpus_and_batch, vec_corpus_and_batch):
+    """One store kind: its builder over the fixture corpus, its operator
+    as ``kept(batch, store, **kw)`` → sorted kept ids, the fixture batch,
+    a fresh later-batch row, and the batch fan-out its probe reads
+    partitions for."""
+    import math
+    from types import SimpleNamespace
+
+    if kind == "sign":
+        corpus, batch = vec_corpus_and_batch
+
+        def kept(df, store, **kw):
+            out = incremental.incremental_semantic_dedup(
+                spark, df, "vec_id", "embedding", store, **_SKW, **kw
+            )
+            return sorted(r["vec_id"] for r in out.collect() if not r["sem_removed"])
+
+        fresh = spark.createDataFrame(
+            [(201, [math.cos(7.0 * (i + 1)) for i in range(16)])], batch.schema
+        )
+        return SimpleNamespace(
+            id_col="vec_id", content="embedding", batch=batch, kept=kept,
+            fresh=fresh, num_buckets=_SKW["num_buckets"],
+            build=lambda store: incremental.build_sign_band_store(
+                corpus, "vec_id", "embedding", store, **_SKW),
+            fanout=lambda df: incremental._sign_band_rows(
+                df, "vec_id", "embedding", _SKW["bands"], _SKW["band_bits"]),
+        )
+    corpus, batch = corpus_and_batch
+    if kind == "fingerprint":
+        kw = dict(mode="exact", num_buckets=_KW["num_buckets"])
+        build, op = incremental.build_fingerprint_store, incremental.incremental_dedup
+
+        def fanout(df):
+            return incremental._one_band(df, incremental._fingerprint("text", "exact"), "doc_id")
+    else:
+        kw = _KW
+        build, op = incremental.build_band_store, incremental.incremental_lsh_dedup
+
+        def fanout(df):
+            return incremental._minhash_rows(df, "text", "doc_id", 32, 8, 3, "xxhash64")
+    fresh = spark.createDataFrame(
+        [(201, "brand new round thirteen document with tokens")], batch.schema
+    )
+    return SimpleNamespace(
+        id_col="doc_id", content="text", batch=batch, fanout=fanout, fresh=fresh,
+        num_buckets=kw["num_buckets"],
+        build=lambda store: build(corpus, "text", "doc_id", store, **kw),
+        kept=lambda df, store, **k: _ids(op(spark, df, "text", "doc_id", store, **kw, **k)),
+    )
+
+
+@pytest.mark.parametrize("kind", _KINDS)
+def test_store_layout_is_bucket_partitioned(
+    spark, kind, corpus_and_batch, vec_corpus_and_batch, tmp_path
+):
+    """Every builder writes the one layout: bkt_part= directories, each
+    holding exactly the rows whose bucket hashes to it (pmod), and the
+    operator's probe of that store is pruned to the batch's touched
+    partitions by a PartitionFilter (directory-level skip, not a post-scan
+    Filter)."""
+    w = _store_world(spark, kind, corpus_and_batch, vec_corpus_and_batch)
+    store = str(tmp_path / "store")
+    w.build(store)
+    parts = {p.name for p in Path(store).iterdir() if p.name.startswith("bkt_part=")}
+    assert len(parts) >= 2  # hash-partitioned layout on disk
+    rows = spark.read.schema(_VSCHEMA).parquet(store).collect()
+    assert rows and {f"bkt_part={r['bkt_part']}" for r in rows} == parts
+    for r in rows:
+        assert r["bkt_part"] == r["bucket"] % w.num_buckets  # pmod, never negative
+    seen = incremental._probe_store(
+        spark, w.fanout(w.batch), store, w.num_buckets, src_batch=None
+    )
+    plan = plans.explain_str(seen)
+    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
+    assert m and "bkt_part" in m.group(1), plan
+
 
 def _store_rows(spark, store, schema="band INT, bucket LONG, first_id LONG, bkt_part INT"):
     return sorted(
@@ -432,48 +508,52 @@ def test_compact_band_store_preserves_rows_and_replay(spark, corpus_and_batch, t
     assert replay == [108]
 
 
+@pytest.mark.parametrize("kind", _KINDS)
 def test_compact_band_store_dedup_exact_reclaims_replay_duplicates(
-    spark, corpus_and_batch, tmp_path
+    spark, kind, corpus_and_batch, vec_corpus_and_batch, tmp_path
 ):
-    """Sustained at-least-once replay growth + its reclaim (VERDICT r12
-    task 4): each replayed delivery of a versioned batch re-appends its
-    surviving band rows verbatim (identical stamp → identical rows), so
-    k extra deliveries add exactly k× the batch's surviving band rows.
-    compact_band_store(dedup_exact=True) collapses exact duplicates —
-    provably decision-identical: replay of the same batch, a LATER batch,
-    and an unversioned probe all decide the same before/after."""
-    corpus, batch = corpus_and_batch
+    """Sustained at-least-once replay growth + its reclaim, for every
+    store kind: each replayed delivery of a versioned batch re-appends its
+    surviving rows verbatim (identical stamp → identical rows), so k extra
+    deliveries add exactly k× the batch's surviving rows.
+    compact_band_store(dedup_exact=True) collapses exact duplicates and
+    carries every stamp through: replay of the same batch decides the
+    same, and a LATER batch still sees the batch's rows."""
+    w = _store_world(spark, kind, corpus_and_batch, vec_corpus_and_batch)
     store = str(tmp_path / "store")
-    vschema = "band INT, bucket LONG, first_id LONG, src_batch LONG, bkt_part INT"
-    incremental.build_band_store(corpus, "text", "doc_id", store, **_KW)
-    base_rows = len(_store_rows(spark, store, vschema))
-    s0 = _ids(incremental.incremental_lsh_dedup(
-        spark, batch, "text", "doc_id", store, src_batch=1, **_KW))
-    after_first = len(_store_rows(spark, store, vschema))
+    w.build(store)
+    base_rows = len(_store_rows(spark, store, _VSCHEMA))
+    s0 = w.kept(w.batch, store, src_batch=1)
+    after_first = len(_store_rows(spark, store, _VSCHEMA))
     appended = after_first - base_rows
     assert appended > 0
     replays = 3
     for _ in range(replays):
-        assert _ids(incremental.incremental_lsh_dedup(
-            spark, batch, "text", "doc_id", store, src_batch=1, **_KW)) == s0
+        assert w.kept(w.batch, store, src_batch=1) == s0
     # growth law: +appended rows per extra delivery, all exact duplicates
-    assert len(_store_rows(spark, store, vschema)) == after_first + replays * appended
-    distinct_before = sorted(set(_store_rows(spark, store, vschema)))
+    assert len(_store_rows(spark, store, _VSCHEMA)) == after_first + replays * appended
+    distinct_before = sorted(set(_store_rows(spark, store, _VSCHEMA)))
+    uncompacted = str(tmp_path / "uncompacted")
+    shutil.copytree(store, uncompacted)
     incremental.compact_band_store(spark, store, dedup_exact=True)
-    rows_after = _store_rows(spark, store, vschema)
+    rows_after = _store_rows(spark, store, _VSCHEMA)
     assert rows_after == distinct_before          # exact dups reclaimed
     assert len(rows_after) == after_first         # back to single-delivery size
-    # decisions identical post-reclaim: same-batch replay, later batch,
-    # unversioned probe
-    assert _ids(incremental.incremental_lsh_dedup(
-        spark, batch, "text", "doc_id", store, src_batch=1, **_KW)) == s0
-    b2 = spark.createDataFrame(
-        [(200, "completely fresh text one with enough tokens"),  # dup of survivor 102
-         (201, "brand new round thirteen document with tokens")],
-        "doc_id LONG, text STRING",
+    assert sum(r[3] == 1 for r in rows_after) == appended  # stamps carried
+    # decisions identical post-reclaim: the same-id replay (an erased
+    # stamp would make it hit its own rows), and a later batch — batch-1's
+    # signed survivors re-fed under new ids, plus one fresh row — decides
+    # as it does against the uncompacted copy, dropping every re-fed row
+    assert w.kept(w.batch, store, src_batch=1) == s0
+    refed = (
+        w.batch.filter(F.col(w.content).isNotNull() & F.col(w.id_col).isin(s0))
+        .withColumn(w.id_col, F.col(w.id_col) + 1000)
     )
-    assert _ids(incremental.incremental_lsh_dedup(
-        spark, b2, "text", "doc_id", store, src_batch=2, **_KW)) == [201]
+    assert refed.count() > 0
+    later = refed.unionByName(w.fresh)
+    got = w.kept(later, store, src_batch=2)
+    assert got == w.kept(later, uncompacted, src_batch=2)
+    assert not set(got) & {i + 1000 for i in s0}
 
 
 def test_compact_band_store_semantic_replay(spark, vec_corpus_and_batch, tmp_path):
@@ -580,23 +660,3 @@ def test_compact_band_store_crash_windows(spark, corpus_and_batch, tmp_path):
     assert not os.path.exists(old)
     assert _store_rows(spark, store) == baseline_rows
     assert replay_ids() == expected
-
-
-def test_compact_fingerprint_store(spark, corpus_and_batch, tmp_path):
-    """compact_fingerprint_store: the exact-dedup (fp_bucket) twin — rows
-    unchanged, replay still yields zero new survivors for non-NULL text."""
-    corpus, batch = corpus_and_batch
-    store = str(tmp_path / "store")
-    incremental.build_fingerprint_store(corpus, "text", "doc_id", store)
-    incremental.incremental_dedup(
-        spark, batch, "text", "doc_id", store, update_store=True
-    ).collect()
-    schema = "fp LONG, first_id LONG, fp_bucket INT"
-    before_rows = _store_rows(spark, store, schema)
-    incremental.compact_fingerprint_store(spark, store)
-    assert _store_rows(spark, store, schema) == before_rows
-    replay = incremental.incremental_dedup(
-        spark, batch, "text", "doc_id", store, update_store=True
-    )
-    # exact mode HAS a NULL class (xxhash64(NULL)=seed): replay yields zero
-    assert replay.count() == 0

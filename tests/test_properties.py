@@ -347,19 +347,19 @@ def test_interval_join_equals_theta_join(spark, sf_dir):
 
 
 def test_connected_components_path_and_islands(spark):
-    # path 1-2-3-4-5 (diameter 4 -> needs multiple propagation rounds),
-    # triangle 10-11-12, isolated edge 20-21
+    # path 1-2-...-23 (diameter 22 -> more propagation rounds than any
+    # fixed cap of 20 would allow), triangle 30-31-32, isolated edge 40-41
+    path = [(n, n + 1) for n in range(1, 23)]
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (10, 12), (21, 20)],
-        ["id_a", "id_b"],
+        path + [(30, 31), (31, 32), (30, 32), (41, 40)], ["id_a", "id_b"],
     )
     got = {
         (r["node"], r["component"])
         for r in dedup.connected_components(edges).collect()
     }
-    want = {(n, 1) for n in (1, 2, 3, 4, 5)} | {
-        (n, 10) for n in (10, 11, 12)
-    } | {(20, 20), (21, 20)}
+    want = {(n, 1) for n in range(1, 24)} | {
+        (n, 30) for n in (30, 31, 32)
+    } | {(40, 40), (41, 40)}
     assert got == want
 
 

@@ -86,16 +86,16 @@ def test_versioned_lsh_dedup_replay_stability(spark, lsh_world, tmp_path):
 
 
 def test_versioned_store_compaction_preserves_stamps(spark, lsh_world):
-    """compact_band_store(versioned=True) keeps src_batch stamps, so
-    replay stability holds across a compaction; the unversioned schema
-    would erase them (documented at the call site)."""
+    """compact_band_store keeps src_batch stamps, so replay stability
+    holds across a compaction (a rewrite that dropped the column would
+    make every stamped row bootstrap-visible)."""
     _, store = lsh_world
     b0 = spark.createDataFrame(
         [(100, "fresh alpha " + _doc(41))], "doc_id LONG, text STRING"
     )
     assert _ids(incremental.incremental_lsh_dedup(
         spark, b0, "text", "doc_id", store, src_batch=5, **_KW)) == [100]
-    incremental.compact_band_store(spark, store, versioned=True)
+    incremental.compact_band_store(spark, store)
     # replay after compaction: still the identical survivor set
     assert _ids(incremental.incremental_lsh_dedup(
         spark, b0, "text", "doc_id", store, src_batch=5, **_KW)) == [100]
@@ -356,42 +356,6 @@ def test_versioned_exact_dedup_replay_stability(spark, tmp_path):
     )
     assert _ids(incremental.incremental_dedup(
         spark, b2, "text", "doc_id", store, src_batch=3, **KW)) == [301]
-
-
-def test_compact_fingerprint_store_preserves_stamps_and_reclaims(spark, tmp_path):
-    """compact_fingerprint_store always carries src_batch (the ADVICE r12
-    stamp-erasure class) and dedup_exact reclaims replay duplicates with
-    identical decisions."""
-    corpus = spark.createDataFrame(
-        [(i, _doc(i)) for i in range(10)], "doc_id LONG, text STRING"
-    )
-    store = str(tmp_path / "fpstore")
-    KW = dict(mode="exact", num_buckets=16)
-    VSCHEMA = "fp LONG, first_id LONG, src_batch LONG, fp_bucket INT"
-    incremental.build_fingerprint_store(corpus, "text", "doc_id", store, **KW)
-    b0 = spark.createDataFrame(
-        [(100, "fresh alpha"), (101, "fresh beta")], "doc_id LONG, text STRING"
-    )
-    s0 = _ids(incremental.incremental_dedup(
-        spark, b0, "text", "doc_id", store, src_batch=5, **KW))
-    assert s0 == [100, 101]
-    rows = lambda: spark.read.schema(VSCHEMA).parquet(store).count()  # noqa: E731
-    after_first = rows()
-    for _ in range(2):  # sustained replay
-        assert _ids(incremental.incremental_dedup(
-            spark, b0, "text", "doc_id", store, src_batch=5, **KW)) == s0
-    assert rows() == after_first + 2 * 2  # +2 survivor fp rows per replay
-    incremental.compact_fingerprint_store(spark, store, dedup_exact=True)
-    assert rows() == after_first
-    # stamps survived: same-id replay still returns identical survivors,
-    # and a later batch still sees batch-5 fingerprints (5 < 6)
-    assert _ids(incremental.incremental_dedup(
-        spark, b0, "text", "doc_id", store, src_batch=5, **KW)) == s0
-    b1 = spark.createDataFrame(
-        [(200, "fresh alpha")], "doc_id LONG, text STRING"
-    )
-    assert _ids(incremental.incremental_dedup(
-        spark, b1, "text", "doc_id", store, src_batch=6, **KW)) == []
 
 
 def test_exact_dedup_stream_end_to_end(spark, tmp_path):

@@ -867,7 +867,7 @@ def run_incremental_semantic_scale(spark, reps: int) -> None:
         # measurements of the batch wall's components, not an additive
         # partition of it.
         from data_engineering_nd_datalake_project_4_spark.operators.incremental import (
-            _BAND_STORE_SCHEMA,
+            _STORE_SCHEMA,
             _sign_band_rows,
         )
 
@@ -884,7 +884,7 @@ def run_incremental_semantic_scale(spark, reps: int) -> None:
             return _sign_band_rows(batch, "vec_id", "embedding", 4, bits)
 
         def _probe():
-            st = spark.read.schema(_BAND_STORE_SCHEMA + ", bkt_part INT").parquet(store)
+            st = spark.read.schema(_STORE_SCHEMA).parquet(store)
             b = _banded()
             _run(
                 b.join(
