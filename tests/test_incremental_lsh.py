@@ -575,6 +575,27 @@ def test_compact_band_store_semantic_replay(spark, vec_corpus_and_batch, tmp_pat
     assert kept == [102]
 
 
+def test_compact_fingerprint_store(spark, corpus_and_batch, tmp_path):
+    """The exact-dedup (one-band) store compacts with compact_band_store:
+    rows unchanged, replay still yields zero new survivors for non-NULL
+    text."""
+    corpus, batch = corpus_and_batch
+    store = str(tmp_path / "store")
+    incremental.build_fingerprint_store(corpus, "text", "doc_id", store)
+    incremental.incremental_dedup(
+        spark, batch, "text", "doc_id", store, update_store=True
+    ).collect()
+    before_rows = _store_rows(spark, store)
+    assert before_rows and {r[0] for r in before_rows} == {0}  # one band
+    incremental.compact_band_store(spark, store)
+    assert _store_rows(spark, store) == before_rows
+    replay = incremental.incremental_dedup(
+        spark, batch, "text", "doc_id", store, update_store=True
+    )
+    # exact mode HAS a NULL class (xxhash64(NULL)=seed): replay yields zero
+    assert replay.count() == 0
+
+
 def test_compact_empty_band_store(spark, corpus_and_batch, tmp_path):
     """An empty-corpus store (zero data files, round-7 rule) compacts to
     itself — the declared-schema read keeps the rewrite legal — and the

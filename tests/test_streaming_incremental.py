@@ -358,6 +358,43 @@ def test_versioned_exact_dedup_replay_stability(spark, tmp_path):
         spark, b2, "text", "doc_id", store, src_batch=3, **KW)) == [301]
 
 
+def test_compact_fingerprint_store_preserves_stamps_and_reclaims(spark, tmp_path):
+    """Compacting a fingerprint store (compact_band_store, the one
+    compactor) always carries src_batch (the ADVICE r12 stamp-erasure
+    class) and dedup_exact reclaims replay duplicates with identical
+    decisions."""
+    corpus = spark.createDataFrame(
+        [(i, _doc(i)) for i in range(10)], "doc_id LONG, text STRING"
+    )
+    store = str(tmp_path / "fpstore")
+    KW = dict(mode="exact", num_buckets=16)
+    VSCHEMA = "band INT, bucket LONG, first_id LONG, src_batch LONG, bkt_part INT"
+    incremental.build_fingerprint_store(corpus, "text", "doc_id", store, **KW)
+    b0 = spark.createDataFrame(
+        [(100, "fresh alpha"), (101, "fresh beta")], "doc_id LONG, text STRING"
+    )
+    s0 = _ids(incremental.incremental_dedup(
+        spark, b0, "text", "doc_id", store, src_batch=5, **KW))
+    assert s0 == [100, 101]
+    rows = lambda: spark.read.schema(VSCHEMA).parquet(store).count()  # noqa: E731
+    after_first = rows()
+    for _ in range(2):  # sustained replay
+        assert _ids(incremental.incremental_dedup(
+            spark, b0, "text", "doc_id", store, src_batch=5, **KW)) == s0
+    assert rows() == after_first + 2 * 2  # +2 survivor fp rows per replay
+    incremental.compact_band_store(spark, store, dedup_exact=True)
+    assert rows() == after_first
+    # stamps survived: same-id replay still returns identical survivors,
+    # and a later batch still sees batch-5 fingerprints (5 < 6)
+    assert _ids(incremental.incremental_dedup(
+        spark, b0, "text", "doc_id", store, src_batch=5, **KW)) == s0
+    b1 = spark.createDataFrame(
+        [(200, "fresh alpha")], "doc_id LONG, text STRING"
+    )
+    assert _ids(incremental.incremental_dedup(
+        spark, b1, "text", "doc_id", store, src_batch=6, **KW)) == []
+
+
 def test_exact_dedup_stream_end_to_end(spark, tmp_path):
     """foreachBatch wrapper for the exact-dedup member of the trio:
     per-batch decisions land in decisions_root/v<id>; corpus dups drop,
