@@ -8,9 +8,17 @@ The reference is run as ``python etl.py`` with an INI config
         --song-data /path/to/song_data \
         --output    /path/to/lake
 
-Paths accept any Hadoop-supported URI (file://, s3a://, hdfs://) — the
-s3a committer/credential confs are wired in ``session.py``; no code
-change is needed to point at an object store.
+Paths accept any Hadoop-supported URI (file://, s3a://, hdfs://).
+``session.py`` sets only ``fs.s3a.impl`` (the S3A filesystem class).
+Credentials, endpoint and output committer are not configured here: S3A
+takes them from its default credential chain (environment variables,
+instance profile) or from ``spark.hadoop.fs.s3a.*`` settings in
+``spark-defaults.conf``, and the hadoop-aws jar must be on the classpath.
+
+Each table logs one line, ``written`` or ``unchanged`` with the first 12
+hex digits of its fingerprint: a table whose source feeds and builder did
+not change since the last run is not rewritten (delete its
+``_FINGERPRINT`` file, or the table, to force a rewrite).
 """
 
 from __future__ import annotations
@@ -57,9 +65,7 @@ def main(argv: list[str] | None = None) -> int:
         declared_schemas=args.declared_schemas,
     )
     t0 = time.perf_counter()
-    tables = sparkify.run_pipeline(spark, cfg)
-    for name, df in tables.items():
-        log.info("table %-10s -> %s/%s", name, args.output, name)
+    tables = sparkify.run_pipeline(spark, cfg)  # logs one line per table
     log.info("pipeline complete in %.1fs (%d tables)", time.perf_counter() - t0, len(tables))
     if not preexisting:  # embedded callers (tests) keep their session
         spark.stop()

@@ -99,7 +99,6 @@ def upsert_partitioned(
 
     from pyspark.errors import AnalysisException
 
-    prev_overwrite_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     # the updates plan drives THREE consumers (touched-partition collect,
     # the merge union, and — past the cap — the semi-join build side):
     # persist so an expensive/nondeterministic upstream runs once and the
@@ -151,15 +150,12 @@ def upsert_partitioned(
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        try:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            latest.repartition(*partition_by).write.mode("overwrite").partitionBy(
-                *partition_by
-            ).parquet(path)
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_overwrite_mode
-            )
+        # per-write option, never the session conf: flipping
+        # spark.sql.sources.partitionOverwriteMode would turn every other
+        # write running in the session meanwhile into a dynamic overwrite
+        latest.repartition(*partition_by).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(*partition_by).parquet(path)
     finally:
         updates.unpersist()
 

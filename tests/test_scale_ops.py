@@ -184,6 +184,29 @@ def test_upsert_older_version_loses(spark, tmp_path):
     assert len(rows) == 1 and rows[0]["v"] == "new"
 
 
+def test_upsert_never_sets_the_session_overwrite_mode(spark, tmp_path, monkeypatch):
+    """The dynamic overwrite is a per-write option: flipping the session
+    conf would make every other write running in the session meanwhile a
+    dynamic overwrite that keeps stale partitions."""
+    from data_engineering_nd_datalake_project_4_spark.sources.sinks import upsert_partitioned
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    set_calls = []
+    real_set = spark.conf.set
+    monkeypatch.setattr(spark.conf, "set", lambda k, v: (set_calls.append(k), real_set(k, v)))
+    path = str(tmp_path / "tbl")
+    schema = "id INT, v STRING, part INT, ver INT"
+    base = spark.createDataFrame([(1, "a", 1, 10), (2, "b", 2, 10)], schema)
+    upsert_partitioned(spark, base, path, ["id"], "ver", ["part"])
+    upd = spark.createDataFrame([(1, "a2", 1, 20)], schema)
+    upsert_partitioned(spark, upd, path, ["id"], "ver", ["part"])
+    assert key not in set_calls
+    assert spark.conf.get(key) == before
+    got = {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
+    assert got == {1: "a2", 2: "b"}, "the untouched partition survives"
+
+
 def test_compact_parquet_dir(spark, tmp_path):
     import os
     from data_engineering_nd_datalake_project_4_spark.sources.sinks import compact_parquet_dir

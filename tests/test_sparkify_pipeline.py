@@ -5,7 +5,9 @@ from SURVEY.md §1.3."""
 from __future__ import annotations
 
 import json
+import logging
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -147,6 +149,196 @@ def test_failed_write_releases_the_feeds(spark, tmp_path, monkeypatch):
     assert _persisted_rdds(spark) - before == set()
 
 
+def _lake_files(root: str) -> dict[str, tuple[int, int]]:
+    """relative path → (size, mtime_ns) of every file in the lake, markers
+    and checksums included."""
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            st = os.stat(os.path.join(d, f))
+            out[os.path.relpath(os.path.join(d, f), root)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def _spy_writes(monkeypatch) -> list[str]:
+    """Table names ``run_pipeline`` hands to ``write_parquet``, in order."""
+    written: list[str] = []
+    real = sparkify.write_parquet
+
+    def spy(df, path, **kw):
+        written.append(os.path.basename(path))
+        real(df, path, **kw)
+
+    monkeypatch.setattr(sparkify, "write_parquet", spy)
+    return written
+
+
+def _marker_text(cfg, table: str) -> str | None:
+    path = os.path.join(cfg.output_root, table, sparkify.FINGERPRINT_FILE)
+    return open(path).read() if os.path.exists(path) else None
+
+
+def test_rerun_over_unchanged_feeds_writes_nothing(spark, tmp_path, monkeypatch):
+    cfg = _write_fixture(str(tmp_path))
+    first = {n: sorted(map(tuple, df.collect())) for n, df in sparkify.run_pipeline(spark, cfg).items()}
+    before = _lake_files(cfg.output_root)
+    assert all(_marker_text(cfg, t) for t in sparkify.TABLE_SPECS)
+    written = _spy_writes(monkeypatch)
+    again = sparkify.run_pipeline(spark, cfg)
+    assert written == []
+    assert _lake_files(cfg.output_root) == before, "no data file or marker touched"
+    assert {n: sorted(map(tuple, df.collect())) for n, df in again.items()} == first
+
+
+def test_new_log_file_rewrites_only_the_log_tables(spark, tmp_path, monkeypatch):
+    cfg = _write_fixture(str(tmp_path))
+    sparkify.run_pipeline(spark, cfg)
+    songs_files = {k: v for k, v in _lake_files(cfg.output_root).items()
+                   if k.split(os.sep)[0] in ("songs", "artists")}
+    event = {
+        "artist": "Artist 3", "auth": "Logged In", "firstName": "Cy", "gender": "F",
+        "itemInSession": 0, "lastName": "N", "length": 183.0, "level": "free",
+        "location": "Z", "method": "PUT", "page": "NextSong", "registration": 1.54e12,
+        "sessionId": 400, "song": "Song Title 3", "status": 200,
+        "ts": BASE_TS + 90_000_000, "userAgent": "UA", "userId": "3",
+    }
+    with open(os.path.join(cfg.log_data_path, "2018", "11", "2018-11-02-events.json"), "w") as f:
+        f.write(json.dumps(event))
+    written = _spy_writes(monkeypatch)
+    tables = sparkify.run_pipeline(spark, cfg)
+    assert sorted(written) == ["songplays", "time", "users"]
+    assert {k: v for k, v in _lake_files(cfg.output_root).items()
+            if k.split(os.sep)[0] in ("songs", "artists")} == songs_files
+    back = spark.read.parquet(os.path.join(cfg.output_root, "users"))
+    assert back.filter(F.col("userId") == "3").count() == 1
+    assert tables["songplays"].count() == 6
+
+
+def test_edited_song_file_rewrites_the_song_tables(spark, tmp_path, monkeypatch):
+    cfg = _write_fixture(str(tmp_path))
+    sparkify.run_pipeline(spark, cfg)
+    song_file = os.path.join(cfg.song_data_path, "A", "B", "C", "TR003.json")
+    with open(song_file) as f:
+        song = json.load(f)
+    song["title"] = "Song Title 1 (remaster)"
+    with open(song_file, "w") as f:
+        json.dump(song, f)
+    written = _spy_writes(monkeypatch)
+    sparkify.run_pipeline(spark, cfg)
+    assert sorted(written) == ["artists", "songplays", "songs"]
+    back = spark.read.parquet(os.path.join(cfg.output_root, "songs"))
+    assert back.filter(F.col("title") == "Song Title 1 (remaster)").count() == 1
+
+
+def test_changed_builder_rewrites_only_its_table(spark, tmp_path, monkeypatch):
+    cfg = _write_fixture(str(tmp_path))
+    sparkify.run_pipeline(spark, cfg)
+    markers = {t: _marker_text(cfg, t) for t in sparkify.TABLE_SPECS}
+    monkeypatch.setitem(sparkify.TABLE_SPECS, "users",
+                        (lambda logs, songs: sparkify.users_table(logs, fidelity=True), None))
+    written = _spy_writes(monkeypatch)
+    sparkify.run_pipeline(spark, cfg)
+    assert written == ["users"]
+    assert _marker_text(cfg, "users") != markers["users"]
+    assert all(_marker_text(cfg, t) == markers[t] for t in markers if t != "users")
+
+
+def test_table_fingerprint_is_stable_and_sensitive(spark, tmp_path):
+    """Fresh DataFrames of the same code (new expression ids) share a
+    fingerprint; an output column name, a column type or the declared
+    feed schemas change it."""
+    import dataclasses
+
+    cfg = _write_fixture(str(tmp_path))
+    fps = ["feed"]
+
+    def fingerprint(df, name="songs"):
+        return sparkify.table_fingerprint(name, df, ("year", "artist_id"), fps)
+
+    a = sparkify.songs_table(sparkify.ingest_songs(spark, cfg))
+    b = sparkify.songs_table(sparkify.ingest_songs(spark, cfg))
+    plan = lambda df: df._jdf.queryExecution().analyzed().toString()  # noqa: E731
+    assert plan(a) != plan(b), "fresh frames carry new expression ids"
+    assert fingerprint(a) == fingerprint(b)
+    assert fingerprint(a.withColumnRenamed("title", "name")) != fingerprint(a)
+    assert fingerprint(a.withColumn("year", F.col("year").cast("long"))) != fingerprint(a)
+    assert fingerprint(a, name="songs2") != fingerprint(a)
+    # an expression prints cut at spark.sql.debug.maxToStringFields (25),
+    # so the text could hide a difference past the cut: no fingerprint
+    wide = a.select(F.xxhash64(*[F.col("duration") + i for i in range(30)]).alias("h"))
+    assert fingerprint(wide) is None
+    declared = sparkify.ingest_songs(spark, dataclasses.replace(cfg, declared_schemas=True))
+    assert fingerprint(sparkify.songs_table(declared)) != fingerprint(a)
+    # users' output and plan text are the same under both schemas: the
+    # feed fingerprint carries the difference
+    logs = sparkify.ingest_logs(spark, cfg)
+    logs_declared = sparkify.ingest_logs(spark, dataclasses.replace(cfg, declared_schemas=True))
+    assert sparkify.feed_fingerprint(logs) != sparkify.feed_fingerprint(logs_declared)
+
+
+def test_failed_write_leaves_no_marker_and_is_retried(spark, tmp_path, monkeypatch):
+    cfg = _write_fixture(str(tmp_path))
+    sparkify.run_pipeline(spark, cfg)
+    build_users, _ = sparkify.TABLE_SPECS["users"]
+
+    def failing_users(logs, songs):
+        boom = F.raise_error(F.lit("planted write failure"))
+        return build_users(logs, songs).withColumn("level", boom)
+
+    with monkeypatch.context() as m:
+        m.setitem(sparkify.TABLE_SPECS, "users", (failing_users, None))
+        with pytest.raises(Exception, match="planted write failure"):
+            sparkify.run_pipeline(spark, cfg)
+    assert _marker_text(cfg, "users") is None
+    written = _spy_writes(monkeypatch)
+    sparkify.run_pipeline(spark, cfg)
+    assert written == ["users"]
+    assert _marker_text(cfg, "users")
+    assert spark.read.parquet(os.path.join(cfg.output_root, "users")).count() == 3
+
+
+def test_feed_fingerprint_sees_null_positions_and_never_overflows(spark):
+    schema = "a STRING, b STRING"
+    ann_a = spark.createDataFrame([("Ann", None)], schema)
+    ann_b = spark.createDataFrame([(None, "Ann")], schema)
+    assert sparkify.feed_fingerprint(ann_a) != sparkify.feed_fingerprint(ann_b)
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    ids = spark.range(2000)
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW|overflow"):
+        ids.agg(F.sum(F.xxhash64("id"))).first()  # the trap a LONG sum falls into
+    fp = sparkify.feed_fingerprint(ids)
+    assert fp.rsplit("|", 2)[1] == "2000"
+    assert sparkify.feed_fingerprint(ids.orderBy(F.desc("id"))) == fp, "order-insensitive"
+
+
+def test_builder_reading_an_undeclared_feed_raises(spark, tmp_path, monkeypatch):
+    cfg = _write_fixture(str(tmp_path))
+    monkeypatch.setitem(sparkify.TABLE_SPECS, "users",
+                        (lambda logs, songs: songs.select("artist_id"), None))
+    with pytest.raises(AttributeError):
+        sparkify.run_pipeline(spark, cfg)
+
+
+def test_each_table_logs_written_or_unchanged(spark, tmp_path, caplog):
+    cfg = _write_fixture(str(tmp_path))
+    caplog.set_level(logging.INFO, logger=sparkify.__name__)
+    line = re.compile(r"table (\w+)\s+(written|unchanged)\s+([0-9a-f]{12}) ")
+
+    def run() -> dict[str, tuple[str, str]]:
+        caplog.clear()
+        sparkify.run_pipeline(spark, cfg)
+        found = [line.match(r.getMessage()) for r in caplog.records if r.name == sparkify.__name__]
+        return {m[1]: (m[2], m[3]) for m in found if m}
+
+    first, second = run(), run()
+    assert sorted(first) == sorted(second) == sorted(sparkify.TABLE_SPECS)
+    assert {s for s, _ in first.values()} == {"written"}
+    assert {s for s, _ in second.values()} == {"unchanged"}
+    assert {t: fp for t, (_, fp) in first.items()} == {t: fp for t, (_, fp) in second.items()}
+    assert all(_marker_text(cfg, t).startswith(fp) for t, (_, fp) in first.items())
+
+
 def test_users_retains_empty_string_user(built):
     _, tables, _, _ = built
     users = tables["users"]
@@ -214,12 +406,13 @@ def test_declared_float_schema_variant(spark, tmp_path_factory, built):
     assert reg_declared != reg_default
 
 
-def test_cli_main_runs_pipeline(spark, tmp_path):
+def test_cli_main_runs_pipeline(spark, tmp_path, caplog):
     """python -m data_engineering_nd_datalake_project_4_spark (the reference's `python etl.py` twin) runs
     the full pipeline from argv and writes all five tables. Called in-process
     (main(argv)) so it reuses the test session instead of forking a JVM."""
     from data_engineering_nd_datalake_project_4_spark.__main__ import main
 
+    caplog.set_level(logging.INFO, logger=sparkify.__name__)
     cfg = _write_fixture(str(tmp_path))
     rc = main(
         [
@@ -231,6 +424,8 @@ def test_cli_main_runs_pipeline(spark, tmp_path):
     assert rc == 0
     for table in ("songs", "artists", "users", "songplays", "time"):
         assert os.path.exists(os.path.join(cfg.output_root, table)), table
+        assert any(r.getMessage().startswith(f"table {table} ") and " written " in r.getMessage()
+                   for r in caplog.records), table
 
 
 def test_pipeline_corrupt_feed_dropmalformed_matches_clean_run(spark, tmp_path_factory):
