@@ -150,13 +150,3 @@ def grouping_sets(
     if keep_grouping_id:
         return out.withColumnRenamed(_GID, keep_grouping_id)
     return out.drop(_GID)
-
-
-def count_distinct(df: DataFrame, cols: Sequence[str], exact: bool = True, rsd: float = 0.05) -> DataFrame:
-    """Exact (shuffling) or HLL-approximate distinct counts per column.
-
-    At 100 TB prefer ``exact=False``: approx_count_distinct is a fixed-size
-    mergeable sketch — one narrow shuffle regardless of key cardinality.
-    """
-    fn = F.countDistinct if exact else (lambda c: F.approx_count_distinct(c, rsd))
-    return df.agg(*[fn(c).alias(f"n_{c}") for c in cols])

@@ -41,7 +41,6 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,6 +49,7 @@ from data_engineering_nd_datalake_project_4_spark.operators.dedup import (
     latest_per_key,
     minhash_band_rows,
 )
+from data_engineering_nd_datalake_project_4_spark.sources import lakefs
 
 #: the one store format: a row per (band, bucket) the corpus claimed,
 #: ``first_id`` the minimum id that claimed it, ``src_batch`` the versioned
@@ -139,40 +139,6 @@ def _build_store(fanout: DataFrame, store_path: str, num_buckets: int) -> None:
     _write_store(_store_rows(_first_claims(fanout), num_buckets), store_path, "overwrite")
 
 
-def _read_store_cold_start(spark: SparkSession, store_path: str):
-    """Read a persisted dedup-state store with the declared
-    ``_STORE_SCHEMA``; a MISSING store returns None ("first batch", the
-    cold-start contract). Two hard lines inside that leniency:
-
-    - any AnalysisException other than path-not-found propagates (a
-      corrupt footer / permission error must never read as "no state",
-      or every batch doc silently passes dedup);
-    - a missing live path WITH a ``__old`` aside present is a compaction
-      swap that crashed between its renames (``_swap_compacted`` window
-      2) — treating it as a cold start would silently rebuild dedup
-      state from scratch and pass every duplicate. Refuse loudly with
-      the one-rename recovery step. Pinned by
-      tests/test_incremental_lsh.py::test_compact_band_store_crash_windows.
-    """
-    try:
-        return spark.read.schema(_STORE_SCHEMA).parquet(store_path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-            raise
-        jvm = spark._jvm
-        old = jvm.org.apache.hadoop.fs.Path(store_path.rstrip("/") + "__old")
-        fs = old.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(old):
-            raise IOError(
-                f"store missing at {store_path} but {store_path}__old exists: "
-                "a compaction swap crashed between its renames (or is in "
-                "flight). Recover by renaming the __old aside back to the "
-                "live path; refusing to treat an interrupted swap as a "
-                "cold start."
-            ) from e
-        return None
-
-
 def _probe_store(
     spark: SparkSession,
     fanout: DataFrame,
@@ -186,7 +152,8 @@ def _probe_store(
     The scan is pruned to the ``bkt_part`` partitions the fan-out touches
     (at most ``num_buckets`` driver-side ints → static partition pruning
     literals). Missing store = first batch; mid-swap / corrupt stores fail
-    loudly (:func:`_read_store_cold_start`).
+    loudly (:func:`..sources.lakefs.read_or_none`, read with the declared
+    ``_STORE_SCHEMA``).
 
     ``src_batch`` (VERSIONED mode — the exactly-once-decisions contract
     for at-least-once feeds, used by the streaming wrappers): the probe
@@ -202,7 +169,7 @@ def _probe_store(
         .distinct()
         .collect()
     ]
-    store = _read_store_cold_start(spark, store_path)
+    store = lakefs.read_or_none(spark, store_path, _STORE_SCHEMA)
     if store is None:
         return None
     if src_batch is not None:

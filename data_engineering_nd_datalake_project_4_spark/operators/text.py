@@ -54,24 +54,6 @@ def bpe_ish_token_count(text_col: Column | str) -> Column:
     return F.size(F.regexp_extract_all(c, F.lit(BPE_ISH_PATTERN), 0))
 
 
-def text_stats(df: DataFrame, text_col: str = "text", group_col: str = "lang") -> DataFrame:
-    """Per-group corpus stats: doc count, char sum, avg token count.
-
-    avg = exact integer-sum / count (deterministic double) — never
-    ``ROUND(AVG, k)`` of integer data, whose x.xx5 averages land on
-    half-boundaries where Spark and DuckDB rounding disagree."""
-    return (
-        df.groupBy(group_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.length(text_col)).alias("total_chars"),
-            (F.sum(token_count(text_col)).cast("double") / F.count(F.lit(1))).alias(
-                "avg_tokens"
-            ),
-        )
-    )
-
-
 #: the 52 ASCII letters + space — quality_score's alpha class, deleted by
 #: translate() to count non-alpha chars (see the alpha note in the body)
 _ALPHA_SPACE_CHARS = (
@@ -154,25 +136,6 @@ def doc_fingerprint(text_col: Column | str, hash_fn: str = "xxhash64") -> Column
     if hash_fn != "xxhash64":
         raise ValueError(f"hash_fn must be 'xxhash64' or 'portable', got {hash_fn!r}")
     return F.xxhash64(c)
-
-
-def rolling_hash_fingerprints(text_col: Column | str, window: int = 5, keep_mod: int = 8) -> Column:
-    """Winnowing-style selective fingerprints: hash every ``window``-token
-    shingle, keep hashes ≡ 0 (mod ``keep_mod``) — a deterministic ~1/keep_mod
-    sample robust to local edits. Returns array<bigint> (sorted).
-
-    NOTE: single-expression form; on hot paths prefer
-    :func:`winnowing_fingerprints`, which pre-hashes tokens once and chains
-    fixed-width hashes per window instead of building a string per window.
-    """
-    toks = tokens(text_col)
-    k = F.size(toks) - F.lit(window - 1)
-    idx = F.sequence(F.lit(0), F.greatest(k - 1, F.lit(0)))
-    hashes = F.when(
-        F.size(toks) >= window,
-        F.transform(idx, lambda i: F.xxhash64(F.array_join(F.slice(toks, i + 1, window), " "))),
-    ).otherwise(F.array(F.xxhash64(F.array_join(toks, " "))))
-    return F.array_sort(F.filter(hashes, lambda h: h % keep_mod == 0))
 
 
 def winnowing_fingerprints(
@@ -574,16 +537,6 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
     ("phone", r"(?:\+\d{1,2}[ -])?\b\d{3}[ -]\d{3}[ -]\d{4}\b", "<PHONE>"),
     ("ip", r"\b\d{1,3}(?:\.\d{1,3}){3}\b", "<IP>"),
 )
-
-
-def pii_scrub(text_col: Column | str) -> Column:
-    """Redact PII spans (URL/email/SSN/phone/IPv4) with typed placeholder
-    tokens — the standard pre-training scrub stage. Pure chained
-    ``regexp_replace``: map-side, zero shuffle, whole-stage codegen."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    for _, pat, token in PII_PATTERNS:
-        c = F.regexp_replace(c, pat, token)
-    return c
 
 
 def pii_scrub_with_counts(

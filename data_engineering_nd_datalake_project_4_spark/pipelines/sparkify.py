@@ -34,13 +34,13 @@ import re
 from dataclasses import dataclass
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_engineering_nd_datalake_project_4_spark import schemas
 from data_engineering_nd_datalake_project_4_spark.functions import weekday_monday
 from data_engineering_nd_datalake_project_4_spark.operators.dedup import latest_per_key
-from data_engineering_nd_datalake_project_4_spark.sources import read_json
+from data_engineering_nd_datalake_project_4_spark.sources import lakefs, read_json
 from data_engineering_nd_datalake_project_4_spark.sources.sinks import write_parquet
 
 log = logging.getLogger(__name__)
@@ -228,34 +228,6 @@ def table_fingerprint(
     return digest.hexdigest()
 
 
-def _marker(spark: SparkSession, table_path: str):
-    """(Hadoop path, filesystem) of a table's fingerprint marker — the
-    FileSystem API, so ``s3a://`` and ``hdfs://`` lakes work too."""
-    path = spark._jvm.org.apache.hadoop.fs.Path(f"{table_path}/{FINGERPRINT_FILE}")
-    return path, path.getFileSystem(spark._jsc.hadoopConfiguration())
-
-
-def _read_marker(spark: SparkSession, table_path: str) -> str | None:
-    path, fs = _marker(spark, table_path)
-    if not fs.exists(path):
-        return None
-    jio = spark._jvm.java.io
-    reader = jio.BufferedReader(jio.InputStreamReader(fs.open(path), "UTF-8"))
-    try:
-        return reader.readLine()
-    finally:
-        reader.close()
-
-
-def _write_marker(spark: SparkSession, table_path: str, fingerprint: str) -> None:
-    path, fs = _marker(spark, table_path)
-    out = fs.create(path, True)
-    try:
-        out.write(bytearray(fingerprint.encode()))
-    finally:
-        out.close()
-
-
 def run_pipeline(spark: SparkSession, cfg: SparkifyConfig) -> dict[str, DataFrame]:
     """Build all five tables and write those whose fingerprint changed;
     returns the built DataFrames (every table, written or not).
@@ -314,13 +286,14 @@ def run_pipeline(spark: SparkSession, cfg: SparkifyConfig) -> dict[str, DataFram
         sources = TABLE_SOURCES[name]
         df = builder(*(feeds[f] if f in sources else None for f in feeds))
         path = f"{cfg.output_root}/{name}"
+        marker = f"{path}/{FINGERPRINT_FILE}"
         fingerprint = table_fingerprint(name, df, parts, [fingerprints[f] for f in sources])
-        if fingerprint is not None and _read_marker(spark, path) == fingerprint:
+        if fingerprint is not None and lakefs.read_marker(spark, marker) == fingerprint:
             status = "unchanged"
         else:
             write_parquet(df, path, partition_by=parts)
             if fingerprint is not None:
-                _write_marker(spark, path, fingerprint)
+                lakefs.write_marker(spark, marker, fingerprint)
             status = "written"
         log.info("table %-9s %-9s %s -> %s", name, status, (fingerprint or "none")[:12], path)
         return name, df

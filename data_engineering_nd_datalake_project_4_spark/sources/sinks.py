@@ -17,6 +17,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_engineering_nd_datalake_project_4_spark.sources import lakefs
+
 
 def write_parquet(
     df: DataFrame,
@@ -93,11 +95,17 @@ def upsert_partitioned(
     distinct partition tuples of ``updates``, and dynamic partition pruning
     does the directory skip at runtime — bounded driver memory at any
     partition cardinality.
+
+    Only a MISSING table is a first write (:func:`.lakefs.read_or_none`).
+    A table that exists but cannot be read raises, and so does a missing
+    table with ``<path>__old`` beside it — a compaction swap that stopped
+    between its renames: the upsert raises ``IOError`` naming the aside
+    and writes nothing. Treated as a first write, the live path would hold
+    only the updates, and the next compaction would delete the aside with
+    every other row in it. Paths are Hadoop paths: ``file://``,
+    ``hdfs://`` and ``s3a://`` work alike.
     """
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from pyspark.errors import AnalysisException
 
     # the updates plan drives THREE consumers (touched-partition collect,
     # the merge union, and — past the cap — the semi-join build side):
@@ -113,15 +121,7 @@ def upsert_partitioned(
             .limit(max_touched_partitions + 1)
             .collect()
         ]
-        try:
-            existing = spark.read.parquet(path)
-        except AnalysisException as e:
-            # ONLY a missing table means first write — a schema-drift or
-            # column error below must propagate, or the dynamic overwrite
-            # would silently replace touched partitions with updates-only
-            if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-                raise
-            existing = None
+        existing = lakefs.read_or_none(spark, path)
         if existing is not None:
             if len(touched) <= max_touched_partitions:
                 pred = F.lit(False)
@@ -171,76 +171,22 @@ def compact_parquet_dir(
     thousands of KB-sized files (each file costs a task + footer fetch on
     every downstream scan).
 
-    Filesystem ops go through the Hadoop FileSystem API, so the same code
-    works on ``file://``, ``hdfs://`` and ``s3a://`` paths (sizing via
-    ``getContentSummary``, swap via ``rename``). The swap order is
-    old→aside, new→live, delete-aside: a crash can leave the table under
-    the ``__old`` name (recoverable by a rename), never half-deleted. On
-    a rename-less object store the two renames are copies, not atomic —
-    a table format (Delta/Iceberg) is the real answer there; the data
-    motion is identical.
+    Sizing and the swap go through :mod:`.lakefs` (the Hadoop FileSystem
+    API), so ``file://``, ``hdfs://`` and ``s3a://`` paths work alike; the
+    swap's crash contract is :func:`.lakefs.swap_in`'s — a crash can leave
+    the table under the ``__old`` name (recoverable by a rename), never
+    half-deleted.
     """
     import math
 
     df = spark.read.parquet(path)
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path.rstrip("/"))
-    fs = jpath.getFileSystem(hconf)
-    total_bytes = fs.getContentSummary(jpath).getLength()
-    n_files = max(1, math.ceil(total_bytes / target_file_bytes))
-    _swap_compacted(
+    n_files = max(1, math.ceil(lakefs.size_bytes(spark, path) / target_file_bytes))
+    lakefs.swap_in(
         spark,
         path,
         lambda tmp: df.coalesce(n_files).write.mode("overwrite").parquet(tmp),
     )
     return n_files
-
-
-def _swap_compacted(spark, path: str, write_tmp) -> None:
-    """The compact-in-place swap shared by :func:`compact_parquet_dir` and
-    :func:`compact_partitioned_parquet_dir`: ``write_tmp(tmp_path)`` writes
-    the compacted copy (while the live path is still readable), then the
-    swap goes old→aside, new→live, delete-aside.
-
-    Crash contract, per window (pinned by
-    ``tests/test_incremental_lsh.py::test_compact_band_store_crash_windows``):
-
-    1. die during/after ``write_tmp`` → live store untouched; the orphaned
-       ``__compacting`` is overwritten by the next compaction.
-    2. die between the renames → the ONLY window where the live path is
-       missing; the full store sits intact under ``__old`` — recoverable
-       by exactly one rename (+ ``refreshByPath`` in a live session). A
-       concurrent reader in this window fails LOUDLY (path not found),
-       never reads a half-state.
-    3. die before the aside delete → live is already the compacted copy
-       (written in full before any rename); the stale ``__old`` is cleared
-       by the next compaction.
-
-    Never half-deleted, and replay decisions are identical in every
-    readable state. Single-WRITER assumption: don't append a batch while
-    a swap runs (same assumption the appends already make). Finishes with
-    ``refreshByPath``: the session FileStatusCache pins file listings
-    (round-5 rule), so without the refresh this same session would keep
-    reading the pre-compaction file set it already listed."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path.rstrip("/"))
-    fs = jpath.getFileSystem(hconf)
-    tmp = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__compacting")
-    old = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__old")
-    write_tmp(tmp.toString())
-    if fs.exists(old):
-        fs.delete(old, True)
-    if not fs.rename(jpath, old):
-        raise IOError(f"compact: could not move {path} aside")
-    if not fs.rename(tmp, jpath):
-        # put the original back before failing — never leave the live
-        # path missing
-        fs.rename(old, jpath)
-        raise IOError(f"compact: could not swap in compacted {path}")
-    fs.delete(old, True)
-    spark.catalog.refreshByPath(path)
 
 
 def compact_partitioned_parquet_dir(
@@ -275,7 +221,7 @@ def compact_partitioned_parquet_dir(
     df = reader.parquet(path)
     if transform is not None:
         df = transform(df)
-    _swap_compacted(
+    lakefs.swap_in(
         spark,
         path,
         lambda tmp: (
@@ -285,16 +231,7 @@ def compact_partitioned_parquet_dir(
             .parquet(tmp)
         ),
     )
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path.rstrip("/"))
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    n = 0
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        name = it.next().getPath().getName()
-        if not name.startswith("_") and not name.startswith("."):
-            n += 1
-    return n
+    return lakefs.data_file_count(spark, path)
 
 
 def write_orc(df: DataFrame, path: str, partition_by: Sequence[str] | None = None) -> None:

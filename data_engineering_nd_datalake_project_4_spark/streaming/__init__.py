@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from data_engineering_nd_datalake_project_4_spark.operators import incremental
+from data_engineering_nd_datalake_project_4_spark.sources.lakefs import latest_snapshot_version
 
 
 def read_file_stream(
@@ -227,28 +228,35 @@ def stream_stream_interval_join(
     return lw.join(rw, cond, how)
 
 
-def latest_snapshot_version(snapshot_root: str, before: int | None = None) -> int | None:
-    """Highest COMMITTED snapshot version under ``snapshot_root`` (dirs
-    named ``v<number>`` containing Spark's ``_SUCCESS`` commit marker),
-    optionally restricted to versions < ``before``. None if no committed
-    snapshot exists."""
-    import os
+def _run_snapshot_stream(stream: DataFrame, root: str, checkpoint: str, name: str, step) -> None:
+    """The body of the four versioned-snapshot sinks: per micro-batch,
+    read the latest COMMITTED version below the batch id (``prior``, or
+    None when there is none), and overwrite ``<root>/v<batch_id>`` with
+    ``step(batch_df, prior)``.
 
-    best = None
-    if not os.path.isdir(snapshot_root):
-        return None
-    for name in os.listdir(snapshot_root):
-        if not name.startswith("v"):
-            continue
-        try:
-            ver = int(name[1:])
-        except ValueError:
-            continue
-        if before is not None and ver >= before:
-            continue
-        if os.path.exists(os.path.join(snapshot_root, name, "_SUCCESS")):
-            best = ver if best is None else max(best, ver)
-    return best
+    Crash-safety without a transaction log:
+    - versions are keyed by ``batch_id``, so a replayed batch OVERWRITES
+      its own version (idempotent);
+    - a half-written version has no ``_SUCCESS`` marker and is never read
+      (:func:`latest_snapshot_version`);
+    - reading "latest committed below my batch id" means a replay never
+      consumes its own output, failed or complete — so even a merge that
+      is not idempotent (a CDC apply, a cell SUM) applies exactly once per
+      batch id however often the batch fires.
+
+    This is the public-Spark equivalent of a Delta/Hudi streaming MERGE;
+    real object stores want a conditional-put pointer instead of a
+    directory listing. Old versions are retention garbage for an external
+    vacuum. Roots are Hadoop paths (plain, ``file://``, ``hdfs://``,
+    ``s3a://``)."""
+
+    def batch_fn(batch_df, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        ver = latest_snapshot_version(spark, root, before=int(batch_id))
+        prior = None if ver is None else spark.read.parquet(f"{root}/v{ver}")
+        step(batch_df, prior).write.mode("overwrite").parquet(f"{root}/v{int(batch_id)}")
+
+    run_foreach_batch(stream, batch_fn, checkpoint, name)
 
 
 def run_cdc_upsert_stream(
@@ -264,45 +272,27 @@ def run_cdc_upsert_stream(
     """Streaming CDC materialization: consume a change feed (Debezium/DMS
     shape — ``key``, ``op_col`` I/U/D, ``seq_cols`` ordering, payload
     columns) and maintain a queryable snapshot table on disk, one
-    versioned parquet directory per micro-batch.
-
-    Each micro-batch: read the latest COMMITTED snapshot version BELOW the
-    current batch id, :func:`operators.incremental.apply_changelog` the
-    batch onto it, write ``v<batch_id>``. Crash-safety without a
-    transaction log: versions are keyed by ``batch_id`` (a replayed batch
-    OVERWRITES its own version — idempotent), a half-written version has
-    no ``_SUCCESS`` marker and is never read, and reading "latest below
-    my batch id" means a replay never consumes its own failed output
-    (which would double-apply the changes). This is the public-Spark
-    equivalent of a Delta/Hudi streaming MERGE; real object stores want a
-    conditional-put pointer instead of directory listing — noted, not
-    needed for file:// semantics.
+    versioned parquet directory per micro-batch: each batch is
+    :func:`operators.incremental.apply_changelog`-ed onto the prior
+    snapshot (crash-safety: :func:`_run_snapshot_stream`).
 
     Scale: batch cost = one changelog compaction + one full-outer join vs
-    the snapshot (see apply_changelog); old versions are retention
-    garbage for an external vacuum. Bootstrap: pass ``initial``; it is
+    the snapshot (see apply_changelog). Bootstrap: pass ``initial``; it is
     written once as version ``-1`` (``v-1``), which sorts below every
-    batch id.
+    batch id. Without one, the first batch applies against an empty
+    frame shaped like the payload (every change becomes an upsert).
     """
-    if initial is not None and latest_snapshot_version(snapshot_root) is None:
+    spark = stream_changes.sparkSession
+    if initial is not None and latest_snapshot_version(spark, snapshot_root) is None:
         initial.write.mode("overwrite").parquet(f"{snapshot_root}/v-1")
 
-    def batch_fn(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        base_ver = latest_snapshot_version(snapshot_root, before=int(batch_id))
-        if base_ver is None:
-            snap = None
-        else:
-            snap = spark.read.parquet(f"{snapshot_root}/v{base_ver}")
+    def step(batch_df, snap):
         if snap is None:
-            # cold start with no initial snapshot: apply against an empty
-            # frame shaped like the payload (every change becomes an upsert)
             payload = [c for c in batch_df.columns if c != op_col and c not in seq_cols]
-            snap = spark.createDataFrame([], batch_df.select(*payload).schema)
-        out = incremental.apply_changelog(snap, batch_df, key, list(seq_cols), op_col)
-        out.write.mode("overwrite").parquet(f"{snapshot_root}/v{int(batch_id)}")
+            snap = batch_df.sparkSession.createDataFrame([], batch_df.select(*payload).schema)
+        return incremental.apply_changelog(snap, batch_df, key, list(seq_cols), op_col)
 
-    run_foreach_batch(stream_changes, batch_fn, checkpoint, query_name)
+    _run_snapshot_stream(stream_changes, snapshot_root, checkpoint, query_name, step)
 
 
 def run_sketch_state_stream(
@@ -317,42 +307,33 @@ def run_sketch_state_stream(
     """Streaming distinct-count state maintenance — the streaming face of
     the q168 sketch-state rollup: each micro-batch builds
     ``hll_registers`` over its own rows and MAX-merges them into a
-    versioned on-disk register table (the :func:`run_cdc_upsert_stream`
-    crash-safety scheme: versions keyed by ``batch_id``, a half-written
-    version has no ``_SUCCESS`` and is never read, and reading "latest
-    COMMITTED version below my batch id" means a replay never consumes
-    its own failed output).
+    versioned on-disk register table (crash-safety:
+    :func:`_run_snapshot_stream`).
 
-    Register MAX-merge is idempotent AND commutative, which buys a
-    STRONGER guarantee than the CDC sink needs sequence columns for: a
-    replayed or duplicated batch merges to the identical state
-    (``max(a, a) = a``), so at-least-once delivery converges to the exact
-    union registers — no dedup, no ordering requirements. Any committed
-    version answers distinct-count questions via
+    Register MAX-merge is idempotent AND commutative, so a replayed or
+    duplicated batch merges to the identical state (``max(a, a) = a``)
+    even without the versioning: at-least-once delivery converges to the
+    exact union registers — no dedup, no ordering requirements. Any
+    committed version answers distinct-count questions via
     ``sketches.hll_estimate`` (and the estimate equals a from-scratch
     batch build over everything consumed so far, by the merge theorem).
 
     Scale shape: per batch the state moved is the batch's own registers
     plus the latest snapshot — each bounded by ≤ 2^p rows PER GROUP —
     never raw history; the snapshot is the entire state whatever the
-    stream's lifetime. Old versions are retention garbage for an
-    external vacuum, exactly like the CDC sink's.
+    stream's lifetime.
     """
     from data_engineering_nd_datalake_project_4_spark.operators.sketches import hll_merge, hll_registers
 
     gcols = list(group_cols)
 
-    def batch_fn(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df, prior):
         regs = hll_registers(batch_df, col, p=p, group_cols=gcols)
-        base_ver = latest_snapshot_version(snapshot_root, before=int(batch_id))
-        if base_ver is not None:
-            regs = spark.read.parquet(f"{snapshot_root}/v{base_ver}").unionByName(regs)
-        hll_merge(regs, group_cols=gcols).write.mode("overwrite").parquet(
-            f"{snapshot_root}/v{int(batch_id)}"
-        )
+        if prior is not None:
+            regs = prior.unionByName(regs)
+        return hll_merge(regs, group_cols=gcols)
 
-    run_foreach_batch(stream_df, batch_fn, checkpoint, query_name)
+    _run_snapshot_stream(stream_df, snapshot_root, checkpoint, query_name, step)
 
 
 def run_cms_state_stream(
@@ -369,17 +350,10 @@ def run_cms_state_stream(
     """Streaming FREQUENCY state maintenance — the CMS face of
     :func:`run_sketch_state_stream`: each micro-batch builds a Count-Min
     sketch over its own rows and cell-SUM-merges it into a versioned
-    on-disk cell table.
-
-    Unlike HLL register MAX, cell SUM is NOT idempotent — blindly
-    re-adding a replayed batch double-counts. The versioned-snapshot
-    scheme (shared with :func:`run_cdc_upsert_stream`) is what makes
-    at-least-once delivery safe anyway: versions are keyed by
-    ``batch_id``, so a replayed batch recomputes FROM the latest
-    committed version BELOW its own id (never from its own failed or
-    duplicated output) and OVERWRITES ``v<batch_id>`` — the merge applies
-    exactly once per batch id no matter how many times the batch fires.
-    A half-written version has no ``_SUCCESS`` marker and is never read.
+    on-disk cell table. Unlike HLL register MAX, cell SUM is NOT
+    idempotent — blindly re-adding a replayed batch double-counts; the
+    versioned snapshots (:func:`_run_snapshot_stream`) are what make
+    at-least-once delivery safe anyway.
 
     Any committed version answers frequency questions via
     :func:`operators.sketches.cms_estimate` / ``heavy_hitters_from_cms``
@@ -390,25 +364,21 @@ def run_cms_state_stream(
 
     Scale shape: per batch the state moved is the batch's own cells plus
     the snapshot — each bounded by depth·width rows PER GROUP — never raw
-    history. Old versions are retention garbage for an external vacuum.
+    history.
     """
     from data_engineering_nd_datalake_project_4_spark.operators.sketches import build_cms, merge_cms
 
     gcols = list(group_cols)
 
-    def batch_fn(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df, prior):
         cells = build_cms(
             batch_df, col, width=width, depth=depth, hash_fn=hash_fn, group_cols=gcols
         )
-        base_ver = latest_snapshot_version(snapshot_root, before=int(batch_id))
-        if base_ver is not None:
-            cells = spark.read.parquet(f"{snapshot_root}/v{base_ver}").unionByName(cells)
-        merge_cms(cells, group_cols=gcols).write.mode("overwrite").parquet(
-            f"{snapshot_root}/v{int(batch_id)}"
-        )
+        if prior is not None:
+            cells = prior.unionByName(cells)
+        return merge_cms(cells, group_cols=gcols)
 
-    run_foreach_batch(stream_df, batch_fn, checkpoint, query_name)
+    _run_snapshot_stream(stream_df, snapshot_root, checkpoint, query_name, step)
 
 
 def run_topk_candidate_stream(
@@ -426,9 +396,8 @@ def run_topk_candidate_stream(
     (``grouped_heavy_hitters``). This sink maintains that head
     vocabulary from the stream itself: each micro-batch's per-item
     counts are SUM-merged with the prior state and the top-``pool``
-    rows (count desc, item asc — total order) are kept, under the same
-    batch-id-versioned snapshot scheme (replay recomputes from the
-    state below its id and overwrites — exactly once per batch id).
+    rows (count desc, item asc — total order) are kept (crash-safety:
+    :func:`_run_snapshot_stream`).
 
     Approximation contract (the lossy-counting / SpaceSaving shape,
     Metwally et al. 2005): state is ≤ ``pool`` rows forever. An item
@@ -469,25 +438,22 @@ def run_topk_candidate_stream(
     counts (one map-side-combining groupBy) plus ≤ pool state rows;
     NULL items are dropped (the build_cms NULL contract).
     """
-    def batch_fn(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def step(batch_df, prior):
         counts = (
             batch_df.filter(F.col(col).isNotNull())
             .groupBy(F.col(col).alias("item"))
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        base_ver = latest_snapshot_version(snapshot_root, before=int(batch_id))
-        if base_ver is not None:
-            counts = spark.read.parquet(f"{snapshot_root}/v{base_ver}").unionByName(counts)
-        merged = (
+        if prior is not None:
+            counts = prior.unionByName(counts)
+        return (
             counts.groupBy("item")
             .agg(F.sum("cnt").alias("cnt"))
             .orderBy(F.desc("cnt"), F.asc("item"))
             .limit(pool)
         )
-        merged.write.mode("overwrite").parquet(f"{snapshot_root}/v{int(batch_id)}")
 
-    run_foreach_batch(stream_df, batch_fn, checkpoint, query_name)
+    _run_snapshot_stream(stream_df, snapshot_root, checkpoint, query_name, step)
 
 
 def _run_versioned_dedup_stream(
@@ -566,7 +532,7 @@ def run_incremental_lsh_dedup_stream(
     single-writer assumption holds — the compaction never races an
     append. A crash mid-swap leaves the ``__old`` aside and the next
     batch's store read refuses loudly with the one-rename recovery
-    (the pinned ``_read_store_cold_start`` contract); a replayed batch
+    (:func:`..sources.lakefs.read_or_none`); a replayed batch
     harmlessly re-compacts. Decisions are identical with or without
     (compaction is decision-neutral — tested).
     """

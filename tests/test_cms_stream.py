@@ -6,6 +6,8 @@ heavy-hitter questions answered from the streamed state alone."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from data_engineering_nd_datalake_project_4_spark.operators.sketches import (
@@ -21,10 +23,12 @@ from data_engineering_nd_datalake_project_4_spark.streaming import (
 
 SCHEMA = "token string, domain string"
 W, D = 256, 3
+#: snapshot roots as plain paths and as ``file://`` URIs
+ROOT_FORMS = (str, Path.as_uri)
 
 
 def _state(spark, root):
-    v = latest_snapshot_version(root)
+    v = latest_snapshot_version(spark, root)
     assert v is not None
     return spark.read.parquet(f"{root}/v{v}")
 
@@ -36,42 +40,45 @@ def _cells(df, grouped=False):
 
 
 def test_cms_stream_state_bit_identical_to_batch_build(spark, tmp_path_factory):
-    src = str(tmp_path_factory.mktemp("cms_src"))
-    root = str(tmp_path_factory.mktemp("cms_snap"))
-    chk = str(tmp_path_factory.mktemp("cms_chk"))
+    # each root form in turn: a snapshot listing that misreads one
+    # restarts every micro-batch from empty state
+    for as_root in ROOT_FORMS:
+        src = str(tmp_path_factory.mktemp("cms_src"))
+        root = as_root(tmp_path_factory.mktemp("cms_snap"))
+        chk = str(tmp_path_factory.mktemp("cms_chk"))
 
-    b1 = [(f"t{i % 17}", "a") for i in range(300)] + [("hot", "a")] * 40
-    spark.createDataFrame(b1, SCHEMA).coalesce(1).write.parquet(src + "/b1")
-    stream = lambda: spark.readStream.schema(SCHEMA).parquet(src + "/*")  # noqa: E731
-    run_cms_state_stream(stream(), root, "token", chk, width=W, depth=D, query_name="cms_t1a")
+        b1 = [(f"t{i % 17}", "a") for i in range(300)] + [("hot", "a")] * 40
+        spark.createDataFrame(b1, SCHEMA).coalesce(1).write.parquet(src + "/b1")
+        stream = lambda: spark.readStream.schema(SCHEMA).parquet(src + "/*")  # noqa: E731
+        run_cms_state_stream(stream(), root, "token", chk, width=W, depth=D, query_name="cms_t1a")
 
-    direct = build_cms(spark.createDataFrame(b1, SCHEMA), "token", width=W, depth=D)
-    assert _cells(_state(spark, root)) == _cells(direct)
+        direct = build_cms(spark.createDataFrame(b1, SCHEMA), "token", width=W, depth=D)
+        assert _cells(_state(spark, root)) == _cells(direct)
 
-    # second feed file: the same checkpoint consumes only the delta, and
-    # the state is BIT-IDENTICAL to a from-scratch build over everything
-    # (cell addition is exact, not just estimate-equivalent)
-    b2 = [(f"t{i % 29}", "a") for i in range(200)] + [("hot", "a")] * 25
-    spark.createDataFrame(b2, SCHEMA).coalesce(1).write.parquet(src + "/b2")
-    spark.catalog.refreshByPath(src)
-    run_cms_state_stream(stream(), root, "token", chk, width=W, depth=D, query_name="cms_t1b")
+        # second feed file: the same checkpoint consumes only the delta, and
+        # the state is BIT-IDENTICAL to a from-scratch build over everything
+        # (cell addition is exact, not just estimate-equivalent)
+        b2 = [(f"t{i % 29}", "a") for i in range(200)] + [("hot", "a")] * 25
+        spark.createDataFrame(b2, SCHEMA).coalesce(1).write.parquet(src + "/b2")
+        spark.catalog.refreshByPath(src)
+        run_cms_state_stream(stream(), root, "token", chk, width=W, depth=D, query_name="cms_t1b")
 
-    direct_all = build_cms(spark.createDataFrame(b1 + b2, SCHEMA), "token", width=W, depth=D)
-    assert _cells(_state(spark, root)) == _cells(direct_all)
+        direct_all = build_cms(spark.createDataFrame(b1 + b2, SCHEMA), "token", width=W, depth=D)
+        assert _cells(_state(spark, root)) == _cells(direct_all)
 
-    # frequency read from state: CMS never underestimates, and at this
-    # width/vocab the hot token is exact
-    est = {
-        r["item"]: r["est"]
-        for r in cms_estimate(
-            _state(spark, root),
-            spark.createDataFrame([("hot",)], "token string"),
-            "token",
-            width=W,
-            depth=D,
-        ).collect()
-    }
-    assert est["hot"] >= 65
+        # frequency read from state: CMS never underestimates, and at this
+        # width/vocab the hot token is exact
+        est = {
+            r["item"]: r["est"]
+            for r in cms_estimate(
+                _state(spark, root),
+                spark.createDataFrame([("hot",)], "token string"),
+                "token",
+                width=W,
+                depth=D,
+            ).collect()
+        }
+        assert est["hot"] >= 65
 
 
 def test_cms_replay_overwrites_not_double_counts(spark, tmp_path_factory):
@@ -90,13 +97,13 @@ def test_cms_replay_overwrites_not_double_counts(spark, tmp_path_factory):
     chk1 = str(tmp_path_factory.mktemp("cmsr_chk1"))
     run_cms_state_stream(stream(), root, "token", chk1, width=W, depth=D, query_name="cms_t2a")
     first = _cells(_state(spark, root))
-    assert latest_snapshot_version(root) == 0
+    assert latest_snapshot_version(spark, root) == 0
 
     # replay: fresh checkpoint → the SAME rows fire again as batch 0,
     # recompute from "latest version below 0" (none) and overwrite v0
     chk2 = str(tmp_path_factory.mktemp("cmsr_chk2"))
     run_cms_state_stream(stream(), root, "token", chk2, width=W, depth=D, query_name="cms_t2b")
-    assert latest_snapshot_version(root) == 0
+    assert latest_snapshot_version(spark, root) == 0
     assert _cells(_state(spark, root)) == first
 
     # the naive scheme this sink exists to avoid WOULD have doubled:
@@ -162,7 +169,7 @@ def test_cms_stream_empty_cold_start(spark, tmp_path_factory):
     spark.createDataFrame([], SCHEMA).coalesce(1).write.parquet(src + "/b1")
     stream = lambda: spark.readStream.schema(SCHEMA).parquet(src + "/*")  # noqa: E731
     run_cms_state_stream(stream(), root, "token", chk, width=W, depth=D, query_name="cms_t4a")
-    assert latest_snapshot_version(root) == 0
+    assert latest_snapshot_version(spark, root) == 0
     assert _state(spark, root).count() == 0
 
     rows = [("x", "a")] * 12
@@ -314,18 +321,28 @@ def test_candidate_stream_lossy_counting_bound(spark, tmp_path_factory):
 
 def test_candidate_stream_replay_exactly_once(spark, tmp_path_factory):
     """SUM-merge double-counts under blind replay; the versioning makes a
-    re-fired batch overwrite its own version — counts unchanged."""
+    re-fired batch overwrite its own version — counts unchanged — and the
+    next batch merges onto the replayed state."""
     from data_engineering_nd_datalake_project_4_spark.streaming import run_topk_candidate_stream
 
-    src = str(tmp_path_factory.mktemp("cr_src"))
-    root = str(tmp_path_factory.mktemp("cr_snap"))
-    rows = [("x", "a")] * 9 + [("y", "a")] * 4
-    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(src + "/b1")
-    stream = lambda: spark.readStream.schema(SCHEMA).parquet(src + "/*")  # noqa: E731
+    # each root form in turn: a snapshot listing that misreads one
+    # restarts every micro-batch from empty state
+    for as_root in ROOT_FORMS:
+        src = str(tmp_path_factory.mktemp("cr_src"))
+        root = as_root(tmp_path_factory.mktemp("cr_snap"))
+        rows = [("x", "a")] * 9 + [("y", "a")] * 4
+        spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(src + "/b1")
+        stream = lambda: spark.readStream.schema(SCHEMA).parquet(src + "/*")  # noqa: E731
 
-    for i in (1, 2):  # second run = fresh checkpoint = replay of batch 0
-        chk = str(tmp_path_factory.mktemp(f"cr_chk{i}"))
-        run_topk_candidate_stream(stream(), root, "token", chk, pool=4,
-                                  query_name=f"cr_{i}")
+        for i in (1, 2):  # second run = fresh checkpoint = replay of batch 0
+            chk = str(tmp_path_factory.mktemp(f"cr_chk{i}"))
+            run_topk_candidate_stream(stream(), root, "token", chk, pool=4,
+                                      query_name=f"cr_{i}")
+            counts = {r["item"]: r["cnt"] for r in _state(spark, root).collect()}
+            assert counts == {"x": 9, "y": 4}
+
+        spark.createDataFrame([("y", "a")] * 6, SCHEMA).coalesce(1).write.parquet(src + "/b2")
+        spark.catalog.refreshByPath(src)
+        run_topk_candidate_stream(stream(), root, "token", chk, pool=4, query_name="cr_3")
         counts = {r["item"]: r["cnt"] for r in _state(spark, root).collect()}
-        assert counts == {"x": 9, "y": 4}
+        assert counts == {"x": 9, "y": 10}

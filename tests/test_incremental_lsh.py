@@ -613,7 +613,7 @@ def test_compact_empty_band_store(spark, corpus_and_batch, tmp_path):
 
 
 def test_compact_band_store_crash_windows(spark, corpus_and_batch, tmp_path):
-    """Pin ``_swap_compacted``'s crash contract (VERDICT r11 task 7). The
+    """Pin ``lakefs.swap_in``'s crash contract (VERDICT r11 task 7). The
     swap is: write ``__compacting`` → rename live→``__old`` →
     rename ``__compacting``→live → delete ``__old``. A crash in ANY
     window leaves either the original or the fully-written compacted copy
@@ -660,7 +660,7 @@ def test_compact_band_store_crash_windows(spark, corpus_and_batch, tmp_path):
     # batch replay in this window must fail LOUDLY: the operator's
     # cold-start contract (missing store = first batch) would otherwise
     # silently rebuild dedup state from scratch and pass every duplicate
-    # — _read_store_cold_start detects the __old aside and refuses.
+    # — lakefs.read_or_none detects the __old aside and refuses.
     shutil.copytree(store, tmp)  # the compacted copy the crash abandoned
     os.rename(store, old)
     spark.catalog.refreshByPath(store)

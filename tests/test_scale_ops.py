@@ -296,6 +296,31 @@ def test_upsert_schema_drift_errors_not_data_loss(spark, tmp_path):
     assert spark.read.parquet(path).count() == 2
 
 
+def test_upsert_refuses_a_table_mid_compaction_swap(spark, tmp_path):
+    """A compaction that stopped between its two renames leaves the live
+    path missing and the whole table under ``<path>__old``. An upsert must
+    refuse, not treat the table as a first write: the live path would then
+    hold only the update, and the next compaction would delete the aside
+    with every other row in it."""
+    import os
+
+    from data_engineering_nd_datalake_project_4_spark.sources.sinks import upsert_partitioned
+
+    path = str(tmp_path / "tbl")
+    base = spark.createDataFrame(
+        [(i, 1, f"p{i % 3}") for i in range(30)], "id INT, ver INT, part STRING"
+    )
+    upsert_partitioned(spark, base, path, ["id"], "ver", ["part"])
+    os.rename(path, path + "__old")
+    spark.catalog.refreshByPath(path)
+    upd = spark.createDataFrame([(1, 2, "p1")], "id INT, ver INT, part STRING")
+    with pytest.raises(IOError, match="__old"):
+        upsert_partitioned(spark, upd, path, ["id"], "ver", ["part"])
+    assert not os.path.exists(path)
+    rows = {(r["id"], r["ver"]) for r in spark.read.parquet(path + "__old").collect()}
+    assert rows == {(i, 1) for i in range(30)}
+
+
 def test_upsert_null_partition_value_preserved(spark, tmp_path):
     """Existing rows in the NULL partition must survive an upsert that
     touches that partition (eqNullSafe pruning)."""

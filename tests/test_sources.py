@@ -285,6 +285,64 @@ def test_malformed_option_validation(spark, tmp_path):
                  bad_records_path=str(tmp_path / "bad"))
 
 
+#: literals that name the lake's filesystem conventions; only
+#: ``sources/lakefs.py`` may spell them out in code (docs may mention them)
+_LAKEFS_LITERALS = ("__old", "__compacting", "PATH_NOT_FOUND")
+
+
+def _lakefs_violations(pkg: Path) -> list[str]:
+    """Code outside ``sources/lakefs.py`` that reaches the filesystem
+    itself: a Hadoop FileSystem call (an attribute chain through
+    ``hadoop.fs`` or ``getFileSystem``), a non-docstring string literal
+    holding one of ``_LAKEFS_LITERALS``, or an ``os`` import under
+    ``streaming/``. Configuration keys such as ``spark.hadoop.fs.s3a.impl``
+    are strings, not calls, and pass."""
+    import ast
+
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "sources/lakefs.py":
+            continue
+        tree = ast.parse(path.read_text())
+        docstrings = {
+            id(node.body[0].value)
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+            and node.body
+            and isinstance(node.body[0], ast.Expr)
+            and isinstance(node.body[0].value, ast.Constant)
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and (
+                node.attr == "getFileSystem" or ast.unparse(node).endswith("hadoop.fs")
+            ):
+                found.append(f"{rel}:{node.lineno} {ast.unparse(node)}")
+            elif (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and id(node) not in docstrings
+                and any(lit in node.value for lit in _LAKEFS_LITERALS)
+            ):
+                found.append(f"{rel}:{node.lineno} {node.value!r}")
+            elif rel.startswith("streaming/") and (
+                (isinstance(node, ast.Import) and any(a.name.split(".")[0] == "os" for a in node.names))
+                or (isinstance(node, ast.ImportFrom) and (node.module or "").split(".")[0] == "os")
+            ):
+                found.append(f"{rel}:{node.lineno} imports os")
+    return found
+
+
+def test_lake_filesystem_conventions_live_in_lakefs():
+    """One module owns the lake's on-disk conventions (missing-table reads,
+    the compaction swap, snapshot versions, markers); a second copy is how
+    the snapshot sinks came to lose state on ``file://`` roots and the
+    upsert came to overwrite a table that sat mid-swap."""
+    import data_engineering_nd_datalake_project_4_spark as pkg
+
+    assert _lakefs_violations(Path(pkg.__file__).parent) == []
+
+
 class TestBinaryFileIngest:
     """binaryFile source → multimodal decode: the raw-media ingestion path."""
 
