@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from data_engineering_nd_datalake_project_4_spark.functions import (
@@ -645,18 +645,19 @@ def connected_components(
     always happens within diameter + 1 rounds, so there is no round cap
     and the labels returned are always converged — for dedup graphs
     (small, dense clusters) 2-4 rounds. Each round is one shuffle join +
-    one groupBy min, all DataFrame ops; ``localCheckpoint`` truncates the
-    growing lineage so round N's plan doesn't replay rounds 1..N-1. The
-    loop is driver-side over *iterations*, never over rows (GraphFrames
-    does the same).
+    one groupBy min, all DataFrame ops, run as ONE job: the round's eager
+    ``localCheckpoint`` (which truncates the growing lineage so round N's
+    plan doesn't replay rounds 1..N-1) also fills an ``Observation`` of
+    the label sum. Labels only ever decrease, so a round changed nothing
+    exactly when that sum did not move. The loop is driver-side over
+    *iterations*, never over rows (GraphFrames does the same).
 
     At 100 TB: label propagation is O(diameter) rounds; for adversarial
     long-path graphs the published fix is alternating large-star/small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond"),
     which converges in O(log² n) rounds — same join+min building blocks,
-    worth swapping in if components can be path-shaped. The early-exit
-    count per round is a tiny aggregate (one long per node), not a data
-    collect.
+    worth swapping in if components can be path-shaped. The convergence
+    test is one observed decimal per round, not a data collect.
 
     Returns ``(node, component)`` where component = min node id reachable.
     """
@@ -665,33 +666,29 @@ def connected_components(
     ).union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
     sym = sym.filter(F.col("u") != F.col("v")).distinct().localCheckpoint()
 
-    labels = (
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint()
+    def checkpoint(frame: DataFrame) -> tuple[DataFrame, object]:
+        # the label sum rides the checkpoint's own job; decimal(38,0)
+        # because a LONG sum of ids can overflow under ANSI
+        obs = Observation()
+        frame = frame.observe(
+            obs, F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
+        ).localCheckpoint()
+        return frame, obs.get["s"]
+
+    labels, total = checkpoint(
+        sym.select(F.col("u").alias("node")).distinct().withColumn("component", F.col("node"))
     )
-    changed = 1
-    while changed:
+    while True:
         # neighbor labels: edge (u,v) carries v's current label to u
         msgs = sym.join(
             labels.select(F.col("node").alias("v"), F.col("component")), "v"
         ).select(F.col("u").alias("node"), "component")
-        new_labels = (
-            labels.union(msgs)
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint()
+        labels, new_total = checkpoint(
+            labels.union(msgs).groupBy("node").agg(F.min("component").alias("component"))
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-    return labels
+        if new_total == total:
+            return labels
+        total = new_total
 
 
 def stratified_sample(
@@ -961,7 +958,7 @@ def lsh_near_dedup(
     shingle_n: int = 3,
     max_bucket_size: int | None = 100,
     hash_fn: str = "xxhash64",
-    verify_jaccard: float | None = 0.5,
+    verify_jaccard: float = 0.5,
 ) -> DataFrame:
     """END-TO-END MinHash near-dedup — the operation an LLM-corpus user
     actually runs (the SlimPajama / Lee et al. 2022 pipeline): LSH
@@ -970,18 +967,19 @@ def lsh_near_dedup(
     input rows (all columns).
 
     Composition of :func:`minhash_lsh_candidate_pairs` (banded signature
-    join), the verification re-join, and :func:`connected_components`
-    (min-label propagation). ``verify_jaccard`` filters LSH candidates by
-    TRUE shingle-set Jaccard before clustering (``None`` skips — clusters
-    then chain on banding collisions alone, the recall-over-precision
-    mode); the ratio is one exact IEEE division of set-size integers, so
-    the gate is cross-engine exact. Rows whose ``text_col`` is NULL carry
-    nothing to compare and always survive.
+    join), :func:`ngram_jaccard_pairs` as the verifier (the repo's one
+    exact-Jaccard kernel, fed the LSH pairs as ``candidates``), and
+    :func:`connected_components` (min-label propagation).
+    ``verify_jaccard`` (> 0) keeps a candidate only if its TRUE
+    shingle-set Jaccard reaches it; the ratio is one exact IEEE division
+    of set-size integers, so the gate is cross-engine exact. Rows whose
+    ``text_col`` is NULL carry nothing to compare and always survive.
 
     Scale shape: the expensive stages keep their audited plans — signature
     build map-side, band join on 8-byte bucket hashes, verification joins
-    shingle ARRAYS only for candidate pairs (a vanishing fraction of the
-    corpus), label propagation shuffles (node, label) longs for
+    arrays of 64-bit shingle hashes only for candidate pairs (a vanishing
+    fraction of the corpus; no string array is ever an exchange key or
+    payload), label propagation shuffles (node, label) longs for
     diameter-many rounds. The final survivor filter is a left-anti join on
     the id — full document payloads move through exactly one anti-join and
     no window. With ``hash_fn="portable"`` the ENTIRE pipeline (pairs,
@@ -999,29 +997,9 @@ def lsh_near_dedup(
         max_bucket_size=max_bucket_size,
         hash_fn=hash_fn,
     )
-    if verify_jaccard is not None:
-        sh = docs.select(
-            F.col(id_col).alias("__vid"),
-            _shingles(F.col(text_col), shingle_n).alias("__vsh"),
-        )
-        inter = F.size(F.array_intersect("__sha", "__shb"))
-        pairs = (
-            pairs.join(
-                sh.select(F.col("__vid").alias("id_a"), F.col("__vsh").alias("__sha")),
-                "id_a",
-            )
-            .join(
-                sh.select(F.col("__vid").alias("id_b"), F.col("__vsh").alias("__shb")),
-                "id_b",
-            )
-            .withColumn("__int", inter)
-            .filter(
-                F.col("__int").cast("double")
-                / (F.size("__sha") + F.size("__shb") - F.col("__int"))
-                >= F.lit(verify_jaccard)
-            )
-            .select("id_a", "id_b")
-        )
+    pairs = ngram_jaccard_pairs(
+        docs, text_col, id_col, n=shingle_n, threshold=verify_jaccard, candidates=pairs
+    )
     labels = connected_components(pairs)
     removed = labels.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)

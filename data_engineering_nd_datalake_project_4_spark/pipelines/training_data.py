@@ -2,22 +2,26 @@
 into the standard corpus-prep flow —
 
     score (lang-ID, quality, token counts)
-      → quality filter
+      → quality gate
       → exact dedup (64-bit content hash)
       → canonical near-dedup (keep lowest doc_id per token-set group)
       → per-language corpus stats
 
-Everything is one declarative DataFrame chain: Catalyst fuses the scoring
-projections, the two dedups are one window each over an 8-byte hash key
-(document text never becomes a shuffle key), and the stats are a
-partial+final aggregate. At 100 TB the near-dedup stage would be preceded
-by MinHash/LSH candidate pruning (operators.dedup) — the exact canonical
-pass here doubles as its verifier.
+There is ONE curation cascade, :func:`curate_annotated`: every row comes
+back with the first gate that rejected it, and
+:func:`curate_with_quarantine` splits that one annotated plan into the
+kept and the quarantined rows. Catalyst fuses the scoring projections, the
+two dedups are one window each over an 8-byte hash key (document text
+never becomes a shuffle key), and the stats are a partial+final
+aggregate. The gates rank behind the dedup windows instead of filtering
+ahead of them, so the scorer is never pushed into a scan filter and runs
+once per row. Corpus-scale fuzzy dedup of the kept rows is
+:func:`operators.dedup.lsh_near_dedup`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_engineering_nd_datalake_project_4_spark.functions import tokens
@@ -35,8 +39,8 @@ def score(df: DataFrame, text_col: str = "text", keep_toks: bool = False) -> Dat
     share a split (the staging trap). The token array is staged ONCE and
     passed to each scorer; measured on q58's full chain 0.93 → 0.78 s at
     sf0.1, identical output. ``keep_toks=True`` leaves the staged
-    ``__toks`` column for downstream token-consumers (curate's canonical
-    key) to reuse — callers drop it when done."""
+    ``__toks`` column for downstream token-consumers (the curation
+    cascade's canonical key) to reuse — callers drop it when done."""
     tk = F.col("__toks")
     out = df.withColumn("__toks", tokens(text_col)).withColumns(
         {
@@ -46,46 +50,6 @@ def score(df: DataFrame, text_col: str = "text", keep_toks: bool = False) -> Dat
         }
     )
     return out if keep_toks else out.drop("__toks")
-
-
-def keep_first_per_key(df: DataFrame, key: Column, id_col: str) -> Column | DataFrame:
-    """Keep the lowest-id row per key — the curation-standard deterministic
-    survivor rule. One window over the (hashed) key."""
-    w = Window.partitionBy(key).orderBy(F.asc(id_col))
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
-
-
-def curate(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_quality: float = 0.3,
-) -> DataFrame:
-    """Full curation flow → the surviving, scored documents.
-
-    Both dedup hash keys are STAGED as materialized columns in one
-    projection before the first window: a window keyed on a raw
-    ``xxhash64(text)`` expression forces ``text`` through BOTH window
-    exchanges (the second key still references it), whereas staged keys
-    let Catalyst's ColumnPruning drop ``text`` below the shuffles
-    whenever the consumer doesn't select it (q58/q140: the corpus never
-    rides an exchange — verified by the repo-wide wide-shuffle audit).
-    """
-    scored = score(df, text_col, keep_toks=True)
-    filtered = scored.filter(F.col("quality") >= min_quality)
-    # the canonical key reuses score()'s staged token array (r13: one
-    # split per row across the whole chain instead of five)
-    staged = filtered.withColumns(
-        {
-            "__h_exact": F.xxhash64(F.col(text_col)),
-            "__h_canon": F.xxhash64(
-                F.array_join(F.array_sort(F.array_distinct(F.col("__toks"))), " ")
-            ),
-        }
-    ).drop("__toks")
-    exact = keep_first_per_key(staged, F.col("__h_exact"), id_col)
-    near = keep_first_per_key(exact, F.col("__h_canon"), id_col)
-    return near.drop("__h_exact", "__h_canon")
 
 
 def curate_annotated(
@@ -101,13 +65,14 @@ def curate_annotated(
     rejects: the quarantine stream (reason-coded) is what audits the
     corpus diet, debugs a bad gate, and feeds reclamation reruns.
 
-    Same survivor set as :func:`curate` (property-tested), computed
-    WITHOUT re-running any gate: the dedup windows rank only rows still
-    alive at their stage by carrying the alive-flag in the window
-    PARTITION key (dead rows land in their own partitions and cannot
-    steal a survivor slot), so the whole annotation is the same two
-    8-byte-hash window passes ``curate`` runs — one scan, plus a reason
-    CASE. Write kept and quarantined in one action via
+    No gate filters rows ahead of another: the dedup windows rank only
+    rows still alive at their stage by carrying the alive-flag in the
+    window PARTITION key (dead rows land in their own partitions and
+    cannot steal a survivor slot), so the whole annotation is two
+    8-byte-hash window passes — one scan, plus a reason CASE. The kept
+    rows are the lowest-id survivor of each exact class, then of each
+    canonical class, among the rows that pass the quality gate. Write
+    kept and quarantined in one action via
     ``partitionBy('reject_reason')``-style sinks, or filter the two
     streams off this frame.
 
@@ -119,12 +84,13 @@ def curate_annotated(
     # stage BOTH dedup hash keys alongside the gate flag so neither
     # window expression references text — ColumnPruning then drops the
     # corpus below the window exchanges when the consumer doesn't select
-    # it (see curate(); q140 shuffles 8-byte hashes + flags only)
+    # it (q58/q140 shuffle 8-byte hashes + flags only)
     scored = scored.withColumns(
         {
             "__q_ok": q_ok,
             "__h_exact": F.xxhash64(F.col(text_col)),
-            # reuses score()'s staged token array (r13, see curate())
+            # reuses score()'s staged token array (r13: one split per row
+            # across the whole cascade instead of five)
             "__h_canon": F.xxhash64(
                 F.array_join(F.array_sort(F.array_distinct(F.col("__toks"))), " ")
             ),
@@ -158,7 +124,7 @@ def curate_with_quarantine(
     min_quality: float = 0.3,
 ) -> tuple[DataFrame, DataFrame]:
     """(kept, quarantined) split of :func:`curate_annotated` — kept rows
-    match :func:`curate` exactly; quarantined rows carry their reason.
+    drop the reason column; quarantined rows carry their reason.
     Both are filters over ONE annotated plan: persist (or write once,
     partitioned by reason) before actioning both at scale."""
     annotated = curate_annotated(df, text_col, id_col, min_quality)

@@ -1943,10 +1943,11 @@ def q57_blocked_near_dup(spark, sf_dir):
     "-> canonical near-dedup (keep lowest id) -> per-language stats",
 )
 def q58_training_curation(spark, sf_dir):
-    from data_engineering_nd_datalake_project_4_spark.pipelines.training_data import corpus_stats, curate
+    from data_engineering_nd_datalake_project_4_spark.pipelines import training_data
 
     d = _t(spark, sf_dir, "documents")
-    return corpus_stats(curate(d, min_quality=0.3), "lang")
+    kept, _ = training_data.curate_with_quarantine(d, min_quality=0.3)
+    return training_data.corpus_stats(kept, "lang")
 
 
 @q(
@@ -5146,10 +5147,10 @@ def q139_epoch_sample(spark, sf_dir):
     "— every input doc is accounted for with its FIRST reject reason "
     "(quality -> exact_dup -> near_dup) or kept. One pass: the dedup "
     "windows rank only still-alive rows by carrying the alive flag in the "
-    "window PARTITION key, so annotation costs exactly the two 8-byte-hash "
-    "window passes the silent pipeline already ran. NULL text quarantines "
-    "as 'quality' (COALESCEd gate) instead of vanishing. kept equals "
-    "curate() exactly (property-tested); kept ∪ quarantined = input",
+    "window PARTITION key, so annotation costs exactly two 8-byte-hash "
+    "window passes. NULL text quarantines "
+    "as 'quality' (COALESCEd gate) instead of vanishing. kept is q58's "
+    "survivor set; kept ∪ quarantined = input",
 )
 def q140_curation_quarantine(spark, sf_dir):
     from data_engineering_nd_datalake_project_4_spark.pipelines import training_data

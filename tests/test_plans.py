@@ -155,6 +155,52 @@ def test_ann_argmin_never_reevaluated_in_a_filter(registry_frames, name):
     assert not offenders, f"{name}: distance kernel in Filter: {offenders}"
 
 
+@pytest.mark.parametrize("name", ["q58_training_curation", "q140_curation_quarantine"])
+def test_curation_scorer_never_reevaluated_in_a_filter(registry_frames, name):
+    """The curation cascade ranks its gates behind the dedup windows, so
+    the quality scorer (token split + translate) runs once per row in a
+    projection. A quality gate written as a Filter ahead of the windows
+    is pushed into the scan and evaluates the scorer a second time (q58's
+    former plan: a 534-char scan Filter with three split() calls)."""
+    offenders = [
+        c[:300]
+        for c in _filter_conditions(registry_frames[name])
+        if "split(" in c or "translate(" in c
+    ]
+    assert not offenders, f"{name}: curation scorer in Filter: {offenders}"
+
+
+def test_lsh_verifier_pairs_shuffle_no_string_arrays(spark, sf_dir, monkeypatch):
+    """No keyed exchange in the pairs frame that lsh_near_dedup hands to
+    connected_components may carry a wide payload, even when no side fits
+    a broadcast: verification intersects 64-bit shingle hashes
+    (ngram_jaccard_pairs), never shingle-string arrays.
+
+    The repo-wide audits cannot see this frame. connected_components
+    checkpoints it eagerly, so the query's own plan starts from a
+    materialized RDD and every exchange inside the build is out of view.
+    The spy captures the frame before that happens."""
+    from data_engineering_nd_datalake_project_4_spark.operators import dedup
+
+    seen = []
+    real = dedup.connected_components
+
+    def spy(edges, *args, **kwargs):
+        seen.append(edges)
+        return real(edges, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "connected_components", spy)
+    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        REGISTRY["q152_lsh_near_dedup"].spark_fn(spark, sf_dir)
+        assert len(seen) == 1
+        sites = plans.wide_shuffle_sites(seen[0])
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+    assert not sites, f"wide verifier exchanges: {sites}"
+
+
 def test_q34_jaccard_is_bucketed_not_cartesian(spark, sf_dir):
     """q34's Jaccard verification must run over prefix-filter candidates
     (hash join on the exploded shingle prefix), never the all-pairs
@@ -288,8 +334,8 @@ def test_q138_epoch_shuffle_window_is_per_shard(spark, sf_dir):
 
 
 def test_q140_quarantine_single_annotation_pass(spark, sf_dir):
-    """Reason-coded annotation must cost the silent pipeline's two window
-    passes — not a window per gate, and no join back to the input."""
+    """Reason-coded annotation must cost two window passes, one per dedup
+    gate, and no join back to the input."""
     df = REGISTRY["q140_curation_quarantine"].spark_fn(spark, sf_dir)
     plan = plans.explain_str(df, "simple")
     assert plan.count("Window") == 2, plan

@@ -346,21 +346,41 @@ def test_interval_join_equals_theta_join(spark, sf_dir):
     assert binned == naive and len(binned) > 0
 
 
-def test_connected_components_path_and_islands(spark):
+def _path_and_islands(spark):
     # path 1-2-...-23 (diameter 22 -> more propagation rounds than any
     # fixed cap of 20 would allow), triangle 30-31-32, isolated edge 40-41
     path = [(n, n + 1) for n in range(1, 23)]
     edges = spark.createDataFrame(
         path + [(30, 31), (31, 32), (30, 32), (41, 40)], ["id_a", "id_b"],
     )
+    want = {(n, 1) for n in range(1, 24)} | {
+        (n, 30) for n in (30, 31, 32)
+    } | {(40, 40), (41, 40)}
+    return edges, want
+
+
+def test_connected_components_path_and_islands(spark):
+    edges, want = _path_and_islands(spark)
     got = {
         (r["node"], r["component"])
         for r in dedup.connected_components(edges).collect()
     }
-    want = {(n, 1) for n in range(1, 24)} | {
-        (n, 30) for n in (30, 31, 32)
-    } | {(40, 40), (41, 40)}
     assert got == want
+
+
+def test_connected_components_runs_no_count_job(spark, monkeypatch):
+    """A round's convergence test rides the round's own checkpoint job
+    (an Observation of the label sum): no separate count job per round."""
+    edges, want = _path_and_islands(spark)
+
+    def no_count(self):
+        raise AssertionError("connected_components ran a count() job")
+
+    # the concrete class: pyspark.sql.DataFrame is only its abstract base
+    monkeypatch.setattr(type(edges), "count", no_count)
+    labels = dedup.connected_components(edges)
+    monkeypatch.undo()
+    assert {(r["node"], r["component"]) for r in labels.collect()} == want
 
 
 def test_connected_components_empty_edges(spark):
@@ -957,34 +977,25 @@ class TestLshNearDedup:
         # NULL-text 7 always survives
         assert got == [1, 4, 5, 7]
 
-    def test_no_verification_mode_still_exact_on_identical_docs(self, spark):
-        from data_engineering_nd_datalake_project_4_spark.operators.dedup import lsh_near_dedup
-
-        out = lsh_near_dedup(
-            self._toy(spark), "text", "doc_id", num_hashes=32, bands=8,
-            shingle_n=1, verify_jaccard=None,
-        )
-        got = sorted(r.doc_id for r in out.collect())
-        # identical token sets share every band — same clusters survive
-        assert 1 in got and 4 in got and 5 in got and 7 in got
-        assert 2 not in got and 3 not in got and 6 not in got
-
     def test_survivors_equal_input_minus_removed_components(self, spark, sf_dir):
         from data_engineering_nd_datalake_project_4_spark.operators.dedup import (
             connected_components,
             lsh_near_dedup,
             minhash_lsh_candidate_pairs,
+            ngram_jaccard_pairs,
         )
 
         d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
         out = lsh_near_dedup(
             d, "text", "doc_id", num_hashes=32, bands=8, shingle_n=3,
-            max_bucket_size=100, verify_jaccard=None,
+            max_bucket_size=100, verify_jaccard=0.5,
         )
-        pairs = minhash_lsh_candidate_pairs(
-            d.filter(F.col("text").isNotNull()), "text", "doc_id",
+        docs = d.filter(F.col("text").isNotNull())
+        cand = minhash_lsh_candidate_pairs(
+            docs, "text", "doc_id",
             num_hashes=32, bands=8, shingle_n=3, max_bucket_size=100,
         )
+        pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.5, candidates=cand)
         labels = connected_components(pairs)
         removed = {
             r.node for r in labels.filter(F.col("node") != F.col("component")).collect()
