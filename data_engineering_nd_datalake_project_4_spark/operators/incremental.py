@@ -4,12 +4,11 @@ The reference's only "incremental" idiom is overwrite-everything
 (/root/reference/etl.py:225-237: each run rewrites the full output table).
 At 100 TB that is the one thing you cannot do: deduping a NEW batch of
 documents must not rescan — let alone rewrite — the existing corpus. This
-module persists only the corpus *signatures*, hash-partitioned so each new
-batch reads just the store partitions its own signature could live in.
+module persists only the corpus *signatures*, in one flat parquet directory.
 
 One store format serves the whole family (``_STORE_SCHEMA``): one
-``(band, bucket, first_id[, src_batch], bkt_part)`` row per band bucket the
-corpus claimed. The exact/canonical fingerprint of :func:`incremental_dedup`
+``(band, bucket, first_id[, src_batch])`` row per band bucket the corpus
+claimed. The exact/canonical fingerprint of :func:`incremental_dedup`
 is a ONE-band signature (band 0, bucket = the 8-byte ``xxhash64``); MinHash
 (:func:`incremental_lsh_dedup`) and sign-LSH
 (:func:`incremental_semantic_dedup`) signatures have ``bands`` bands. All
@@ -18,14 +17,18 @@ three share the store-rows builder, the writer, the probe and
 
 Data motion per batch at any corpus scale:
 - the batch maps to ~24-byte ``(id, band, bucket)`` rows — text never moves;
-- the store scan is pruned to the batch's touched ``bkt_part`` partitions
-  (static IN-literal pruning — the partition list is at most
-  ``num_buckets`` driver-side integers, never data);
+- the probe is a columnar scan of the store's ``band, bucket`` columns
+  (plus ``src_batch`` in versioned mode) — signature bytes, never text;
 - every shuffle carries hash/id keys only;
-- the store append writes only the survivors' buckets, into the same
-  layout, so the NEXT batch prunes just as well. Periodic
-  :func:`compact_band_store` (partition-layout-preserving, replay-safe)
-  keeps file counts bounded.
+- the store append writes only the survivors' buckets. Periodic
+  :func:`compact_band_store` (replay-safe) keeps file counts bounded.
+
+The store is flat on purpose. Hash-partitioning it on the bucket would let
+a batch skip the partitions none of its buckets hash to, but a batch with
+r distinct band rows leaves only ~P·(1-1/P)^r of P partitions untouched
+(~2·10⁻⁹ of 64 at r = 1,600): a 200-doc, 8-band batch touched all 64 of
+64, so such a layout prunes nothing below ~33-doc batches while every
+append writes a file into each partition directory it touches.
 
 Fingerprint modes of :func:`incremental_dedup`:
 - ``exact``: ``xxhash64(text)`` — byte-identical duplicates.
@@ -54,11 +57,10 @@ from data_engineering_nd_datalake_project_4_spark.sources import lakefs
 #: the one store format: a row per (band, bucket) the corpus claimed,
 #: ``first_id`` the minimum id that claimed it, ``src_batch`` the versioned
 #: append stamp (NULL for bootstrap and unversioned rows; files written
-#: without the column read it as NULL), ``bkt_part`` the partition column
-#: (pmod of the bucket hash). Declared on every read: a store built from
-#: an EMPTY corpus is a valid directory with zero data files, where schema
-#: inference would fail UNABLE_TO_INFER_SCHEMA (empty soak).
-_STORE_SCHEMA = "band INT, bucket LONG, first_id LONG, src_batch LONG, bkt_part INT"
+#: without the column read it as NULL). Declared on every read: a store
+#: built from an EMPTY corpus is a valid directory with zero data files,
+#: where schema inference would fail UNABLE_TO_INFER_SCHEMA (empty soak).
+_STORE_SCHEMA = "band INT, bucket LONG, first_id LONG, src_batch LONG"
 
 
 def _fingerprint(text_col: str, mode: str) -> Column:
@@ -98,11 +100,6 @@ def _minhash_rows(
     )
 
 
-def _bkt_part(bucket: Column, num_buckets: int) -> Column:
-    # pmod keeps negative xxhash64 bucket values in [0, num_buckets)
-    return F.pmod(bucket, F.lit(num_buckets)).cast("int").alias("bkt_part")
-
-
 def _first_claims(fanout: DataFrame) -> DataFrame:
     """One ``(__band, __bucket, __id)`` row per distinct band bucket of the
     fan-out: the minimum id that claimed it. One groupBy shuffle on
@@ -110,9 +107,7 @@ def _first_claims(fanout: DataFrame) -> DataFrame:
     return fanout.groupBy("__band", "__bucket").agg(F.min("__id").alias("__id"))
 
 
-def _store_rows(
-    claims: DataFrame, num_buckets: int, src_batch: int | None = None
-) -> DataFrame:
+def _store_rows(claims: DataFrame, src_batch: int | None = None) -> DataFrame:
     """``(__band, __bucket, __id)`` claims, one per bucket, in the store
     format; with ``src_batch`` every row carries the versioned stamp."""
     cols = [
@@ -125,34 +120,28 @@ def _store_rows(
         # identical stamp, invisible to the replaying batch itself and
         # decision-neutral for later ones (existence + min id)
         cols.append(F.lit(int(src_batch)).cast("long").alias("src_batch"))
-    return claims.select(*cols, _bkt_part(F.col("__bucket"), num_buckets))
+    return claims.select(*cols)
 
 
 def _write_store(rows: DataFrame, store_path: str, mode: str) -> None:
-    # one task per bkt_part: ~one file per partition per write
-    rows.repartition("bkt_part").write.mode(mode).partitionBy("bkt_part").parquet(
-        store_path
-    )
+    # one file per write task; AQE coalesces the shuffle feeding it, so a
+    # batch append is ~one file
+    rows.write.mode(mode).parquet(store_path)
 
 
-def _build_store(fanout: DataFrame, store_path: str, num_buckets: int) -> None:
-    _write_store(_store_rows(_first_claims(fanout), num_buckets), store_path, "overwrite")
+def _build_store(fanout: DataFrame, store_path: str) -> None:
+    _write_store(_store_rows(_first_claims(fanout)), store_path, "overwrite")
 
 
 def _probe_store(
-    spark: SparkSession,
-    fanout: DataFrame,
-    store_path: str,
-    num_buckets: int,
-    src_batch: int | None,
+    spark: SparkSession, store_path: str, src_batch: int | None
 ) -> DataFrame | None:
-    """The store's ``(band, bucket)`` rows a batch's fan-out can hit, or
-    None when no store exists yet (first batch).
+    """The store's ``(band, bucket)`` rows, or None when no store exists
+    yet (first batch). Plans only — it runs no job; the caller's semi/anti
+    join reads the two columns.
 
-    The scan is pruned to the ``bkt_part`` partitions the fan-out touches
-    (at most ``num_buckets`` driver-side ints → static partition pruning
-    literals). Missing store = first batch; mid-swap / corrupt stores fail
-    loudly (:func:`..sources.lakefs.read_or_none`, read with the declared
+    Missing store = first batch; mid-swap / corrupt stores fail loudly
+    (:func:`..sources.lakefs.read_or_none`, read with the declared
     ``_STORE_SCHEMA``).
 
     ``src_batch`` (VERSIONED mode — the exactly-once-decisions contract
@@ -163,12 +152,6 @@ def _probe_store(
     append. Requires monotone batch ids (Structured Streaming's
     foreachBatch guarantee; for scheduled jobs, any monotone run counter).
     """
-    touched = [
-        r[0]
-        for r in fanout.select(_bkt_part(F.col("__bucket"), num_buckets))
-        .distinct()
-        .collect()
-    ]
     store = lakefs.read_or_none(spark, store_path, _STORE_SCHEMA)
     if store is None:
         return None
@@ -176,7 +159,7 @@ def _probe_store(
         store = store.filter(
             F.col("src_batch").isNull() | (F.col("src_batch") < F.lit(int(src_batch)))
         )
-    return store.filter(F.col("bkt_part").isin(touched)).select("band", "bucket")
+    return store.select("band", "bucket")
 
 
 def build_fingerprint_store(
@@ -185,15 +168,12 @@ def build_fingerprint_store(
     id_col: str,
     store_path: str,
     mode: str = "exact",
-    num_buckets: int = 64,
 ) -> None:
     """Materialize the corpus fingerprint store: one one-band row per
     distinct fingerprint (``first_id`` the minimum ``id_col`` carrying
-    it), hash-partitioned by ``bkt_part``. One-time full scan of the
-    corpus; every later batch touches only its own partitions."""
-    _build_store(
-        _one_band(df, _fingerprint(text_col, mode), id_col), store_path, num_buckets
-    )
+    it). One-time full scan of the corpus; every later batch reads only
+    the store's fingerprint columns, never the corpus."""
+    _build_store(_one_band(df, _fingerprint(text_col, mode), id_col), store_path)
 
 
 def incremental_dedup(
@@ -203,7 +183,6 @@ def incremental_dedup(
     id_col: str,
     store_path: str,
     mode: str = "exact",
-    num_buckets: int = 64,
     update_store: bool = False,
     src_batch: int | None = None,
 ) -> DataFrame:
@@ -212,8 +191,8 @@ def incremental_dedup(
     batch itself.
 
     With ``update_store=True`` the survivors' fingerprints are appended to
-    the store first (same layout), making the operation idempotent:
-    replaying the identical batch then yields zero survivors.
+    the store first, making the operation idempotent: replaying the
+    identical batch then yields zero survivors.
 
     ``src_batch`` (VERSIONED mode — the exactly-once-decisions contract,
     identical to :func:`incremental_lsh_dedup`'s): pass a MONOTONE batch
@@ -227,30 +206,26 @@ def incremental_dedup(
     always carries the stamp through.
 
     Multi-consumer consistency (BOTH paths): the batch plan feeds several
-    consumers — the touched-partition collect, the survivor anti-join the
+    consumers — the in-batch first-wins window, the survivor anti-join the
     caller later actions, and (update_store=True) the store append. A
     nondeterministic or sampled upstream must not evaluate once per
-    consumer, or fingerprints could land in partitions that were pruned
-    from the store scan (silently letting duplicates pass), or the store
-    could permanently record fingerprints disagreeing with the survivors
-    returned. So the keyed batch is ``localCheckpoint(eager=True)``-frozen
-    ONCE up front — every consumer, including the caller's consumption
-    after this function returns, reads the same materialized rows (a
-    ``persist()`` released in ``finally`` could not cover that last
-    consumer). With update_store=True the survivor set is additionally
-    checkpointed so the append and the caller share one evaluation of the
-    anti-join. Both checkpoints hold only *batch*-sized rows (never
-    corpus-sized); on a real cluster with executor loss in scope, swap
-    for a reliable ``checkpoint()`` dir.
+    consumer, or the store could permanently record fingerprints disagreeing
+    with the survivors returned. So the keyed batch is
+    ``localCheckpoint(eager=True)``-frozen ONCE up front — every consumer,
+    including the caller's consumption after this function returns, reads
+    the same materialized rows (a ``persist()`` released in ``finally``
+    could not cover that last consumer). With update_store=True the survivor
+    set is additionally checkpointed so the append and the caller share one
+    evaluation of the anti-join. Both checkpoints hold only *batch*-sized
+    rows (never corpus-sized); on a real cluster with executor loss in
+    scope, swap for a reliable ``checkpoint()`` dir.
     """
     update_store = update_store or src_batch is not None
     fp = _fingerprint(text_col, mode)
     keyed = batch.withColumn("__fp", fp).localCheckpoint(eager=True)
     # first-wins within the batch: one window shuffle on the 8-byte hash
     firsts = latest_per_key(keyed, ["__fp"], [F.col(id_col)])
-    seen = _probe_store(
-        spark, _one_band(keyed, F.col("__fp"), id_col), store_path, num_buckets, src_batch
-    )
+    seen = _probe_store(spark, store_path, src_batch)
     if seen is not None:
         # one band: the fingerprint is the bucket
         survivors = firsts.join(seen, firsts["__fp"] == seen["bucket"], "left_anti")
@@ -262,7 +237,7 @@ def incremental_dedup(
         # survivors are already one per fingerprint: no claim aggregation
         survivors = survivors.localCheckpoint(eager=True)
         _write_store(
-            _store_rows(_one_band(survivors, F.col("__fp"), id_col), num_buckets, src_batch),
+            _store_rows(_one_band(survivors, F.col("__fp"), id_col), src_batch),
             store_path, "append",
         )
     return survivors.drop("__fp")
@@ -277,19 +252,17 @@ def build_band_store(
     bands: int = 8,
     shingle_n: int = 3,
     hash_fn: str = "xxhash64",
-    num_buckets: int = 64,
 ) -> None:
     """Materialize the corpus MinHash band-bucket store: one row per
     distinct band bucket the corpus occupies (``first_id`` the minimum
-    ``id_col`` that claimed it), hash-partitioned by ``bkt_part``. One-time
-    full scan of the corpus; every later batch reads only the store
-    partitions its own band buckets could live in — the near-dup twin of
-    :func:`build_fingerprint_store`. NULL-text rows contribute nothing. On
-    disk the store is ~bands·20 bytes per distinct corpus document
-    signature, never the corpus itself."""
+    ``id_col`` that claimed it). One-time full scan of the corpus; every
+    later batch reads only the store's signature columns — the near-dup
+    twin of :func:`build_fingerprint_store`. NULL-text rows contribute
+    nothing. On disk the store is ~bands·20 bytes per distinct corpus
+    document signature, never the corpus itself."""
     _build_store(
         _minhash_rows(df, text_col, id_col, num_hashes, bands, shingle_n, hash_fn),
-        store_path, num_buckets,
+        store_path,
     )
 
 
@@ -303,7 +276,6 @@ def incremental_lsh_dedup(
     bands: int = 8,
     shingle_n: int = 3,
     hash_fn: str = "xxhash64",
-    num_buckets: int = 64,
     update_store: bool = False,
     src_batch: int | None = None,
 ) -> DataFrame:
@@ -351,8 +323,7 @@ def incremental_lsh_dedup(
 
     Data motion per batch at any corpus scale: the batch maps to
     ~24-byte ``(id, band, bucket)`` rows (text stays in the projection);
-    the store scan is pruned to the batch's touched ``bkt_part``
-    partitions (at most ``num_buckets`` driver-side ints); every shuffle
+    the store probe scans its ``band, bucket`` columns; every shuffle
     carries hash/id keys; the final anti-join on ``id_col`` is the one
     move that carries batch payload columns — batch-sized, and column
     pruning keeps ``text_col`` out of it whenever the caller's projection
@@ -360,8 +331,8 @@ def incremental_lsh_dedup(
 
     Multi-consumer consistency (the :func:`incremental_dedup` rule): the
     batch is frozen once up front, the band rows once after the map, and
-    the dropped-id set once before the store append, so the touched-bucket
-    collect, the survivor set the caller actions, and the store append all
+    the dropped-id set once before the store append, so the in-batch
+    window, the survivor set the caller actions, and the store append all
     read the same materialized rows. All three checkpoints hold
     batch-sized (never corpus-sized) rows. Single-writer store assumption,
     as for the fingerprint store.
@@ -373,8 +344,7 @@ def incremental_lsh_dedup(
     # src_batch (versioned mode) implies a store append: the stamp IS the
     # replay-safety mechanism — see _probe_store
     dropped = _banded_store_dropped(
-        spark, banded, store_path, num_buckets,
-        update_store or src_batch is not None, src_batch,
+        spark, banded, store_path, update_store or src_batch is not None, src_batch
     )
     survivors = keyed.join(
         dropped, keyed[id_col] == dropped["__id"], "left_anti"
@@ -388,7 +358,6 @@ def _banded_store_dropped(
     spark: SparkSession,
     banded: DataFrame,
     store_path: str,
-    num_buckets: int,
     update_store: bool,
     src_batch: int | None = None,
 ) -> DataFrame:
@@ -399,8 +368,8 @@ def _banded_store_dropped(
     for the batch, return the CHECKPOINTED distinct set of dropped ids
     under the pairwise-greedy rule — any band bucket present in the
     store, or holding a smaller batch id. With ``update_store`` the
-    survivors' buckets are appended first (same layout), so the append
-    and the caller's consumption share one evaluation of the decision.
+    survivors' buckets are appended first, so the append and the
+    caller's consumption share one evaluation of the decision.
 
     ``src_batch``: the versioned probe (:func:`_probe_store`) plus a
     stamped append. A replayed batch therefore reproduces IDENTICAL
@@ -409,7 +378,7 @@ def _banded_store_dropped(
     stored bands)."""
     from pyspark.sql import Window
 
-    seen = _probe_store(spark, banded, store_path, num_buckets, src_batch)
+    seen = _probe_store(spark, store_path, src_batch)
     w = Window.partitionBy("__band", "__bucket")
     killed_in_batch = (
         banded.withColumn("__min", F.min("__id").over(w))
@@ -433,7 +402,7 @@ def _banded_store_dropped(
     if update_store:
         survivors = banded.join(dropped, on="__id", how="left_anti")
         _write_store(
-            _store_rows(_first_claims(survivors), num_buckets, src_batch),
+            _store_rows(_first_claims(survivors), src_batch),
             store_path, "append",
         )
     return dropped
@@ -477,16 +446,13 @@ def build_sign_band_store(
     store_path: str,
     bands: int = 4,
     band_bits: int = 6,
-    num_buckets: int = 16,
 ) -> None:
     """Materialize the corpus sign-LSH band-key store (the embedding twin
     of :func:`build_band_store`): one ``(band, bucket, first_id)`` row per
-    distinct corpus (band, key), hash-partitioned by ``bkt_part``. On disk
-    ~bands·20 B per distinct vector signature — the corpus VECTORS never
-    persist and are never rescanned."""
-    _build_store(
-        _sign_band_rows(df, id_col, vec_col, bands, band_bits), store_path, num_buckets
-    )
+    distinct corpus (band, key). On disk ~bands·20 B per distinct vector
+    signature — the corpus VECTORS never persist and are never
+    rescanned."""
+    _build_store(_sign_band_rows(df, id_col, vec_col, bands, band_bits), store_path)
 
 
 def compact_band_store(
@@ -496,12 +462,11 @@ def compact_band_store(
 ) -> int:
     """Compact an append-only store in place — any store of this module
     (fingerprint, MinHash or sign-LSH; they share one format): every
-    ``update_store=True`` batch appends ~one file per ``bkt_part``
-    partition, so months of daily batches leave thousands of KB-sized
-    files whose per-file task + footer fetch eventually dominates the
-    probe scan. One partition-preserving rewrite
-    (:func:`..sources.sinks.compact_partitioned_parquet_dir`) restores
-    ~one file per partition while keeping directory-level pruning intact.
+    ``update_store=True`` batch appends ~one small file, so months of
+    daily batches leave thousands of KB-sized files whose per-file task +
+    footer fetch eventually dominates the probe scan. One rewrite
+    (:func:`..sources.sinks.compact_parquet_dir`) restores ~target-sized
+    files.
 
     Pure layout change: the row multiset is untouched, so batch decisions
     — and replay idempotence — are identical before and after
@@ -528,10 +493,10 @@ def compact_band_store(
     and later batches' decisions are untouched (tests prove it). Distinct
     rows from DIFFERENT batches/stamps are never collapsed. Default off:
     the plain compaction stays a pure layout change."""
-    from data_engineering_nd_datalake_project_4_spark.sources.sinks import compact_partitioned_parquet_dir
+    from data_engineering_nd_datalake_project_4_spark.sources.sinks import compact_parquet_dir
 
-    return compact_partitioned_parquet_dir(
-        spark, store_path, "bkt_part", schema=_STORE_SCHEMA,
+    return compact_parquet_dir(
+        spark, store_path, schema=_STORE_SCHEMA,
         transform=(lambda df: df.distinct()) if dedup_exact else None,
     )
 
@@ -544,7 +509,6 @@ def incremental_semantic_dedup(
     store_path: str,
     bands: int = 4,
     band_bits: int = 6,
-    num_buckets: int = 16,
     update_store: bool = False,
     src_batch: int | None = None,
 ) -> DataFrame:
@@ -553,7 +517,7 @@ def incremental_semantic_dedup(
     held by a smaller-id batch vector — completing the incremental family
     (exact q130, lexical MinHash q169, semantic q170) with the same
     pairwise-greedy, exactly-SQL-expressible rule and the same
-    checkpoint/pruning/append machinery (:func:`_banded_store_dropped`).
+    checkpoint/probe/append machinery (:func:`_banded_store_dropped`).
 
     SIGNATURE-level semantics, stated honestly: batch-mode
     :func:`..similarity.semantic_dedup` (q142) rescores candidates with
@@ -582,8 +546,7 @@ def incremental_semantic_dedup(
     # src_batch: versioned/replay-stable mode, identical contract to
     # incremental_lsh_dedup's (monotone ids, implies update_store)
     dropped = _banded_store_dropped(
-        spark, banded, store_path, num_buckets,
-        update_store or src_batch is not None, src_batch,
+        spark, banded, store_path, update_store or src_batch is not None, src_batch
     )
     annotated = keyed.join(
         dropped, keyed[id_col] == dropped["__id"], "left"

@@ -4646,10 +4646,10 @@ def q129_contamination(spark, sf_dir):
        ORDER BY b.doc_id""",
     "incremental dedup against a persisted fingerprint store: docs < 250 "
     "are the existing corpus (only their canonical-token xxhash64 "
-    "fingerprints persist, as one-band rows of the bkt_part-partitioned "
-    "band store); the new batch "
-    "(>= 250) is deduped in-batch (first doc_id wins) then anti-joined "
-    "against the bucket-pruned store — 8-byte keys on every shuffle, "
+    "fingerprints persist, as one-band rows of the flat band store); the "
+    "new batch (>= 250) is deduped in-batch (first doc_id wins) then "
+    "anti-joined against a two-column scan of the store — 8-byte keys on "
+    "every shuffle, "
     "corpus text never rescanned. Replaces the reference's "
     "overwrite-everything upsert (/root/reference/etl.py:225-237) at "
     "scale. Oracle is the anti-join twin on the canonical key string "
@@ -4665,10 +4665,10 @@ def q130_incremental_dedup(spark, sf_dir):
     )
     store = _pid_scoped_store(sf_dir, "q130")
     incremental.build_fingerprint_store(
-        corpus, "text", "doc_id", store, mode="canonical", num_buckets=16
+        corpus, "text", "doc_id", store, mode="canonical"
     )
     survivors = incremental.incremental_dedup(
-        spark, batch, "text", "doc_id", store, mode="canonical", num_buckets=16
+        spark, batch, "text", "doc_id", store, mode="canonical"
     )
     return survivors.select("doc_id", "source", "n_chars").orderBy("doc_id")
 
@@ -6509,9 +6509,9 @@ def q168_sketch_state_rollup(spark, sf_dir):
        ORDER BY doc_id""",
     "incremental NEAR-dup dedup against a persisted MinHash band-bucket "
     "store (the LSH twin of q130): docs < 250 are the historical corpus — "
-    "only their (band, bucket) hashes persist (~bands·20 B/doc, "
-    "hash-partitioned by bkt_part); the new batch (>= 250) is dropped on "
-    "any band-bucket hit against the bucket-pruned store or a smaller-id "
+    "only their (band, bucket) hashes persist (~bands·20 B/doc, one flat "
+    "parquet directory); the new batch (>= 250) is dropped on "
+    "any band-bucket hit against the store or a smaller-id "
     "batch doc (pairwise-greedy rule — deliberately non-iterative, so "
     "the ENTIRE operator is this exact SQL twin; CC keep-min stays in "
     "q152). NULL-text docs pass through (no signature). Portable "
@@ -6530,11 +6530,11 @@ def q169_incremental_lsh_dedup(spark, sf_dir):
     store = _pid_scoped_store(sf_dir, "q169")
     incremental.build_band_store(
         corpus, "text", "doc_id", store,
-        num_hashes=32, bands=8, shingle_n=3, hash_fn="portable", num_buckets=16,
+        num_hashes=32, bands=8, shingle_n=3, hash_fn="portable",
     )
     survivors = incremental.incremental_lsh_dedup(
         spark, batch, "text", "doc_id", store,
-        num_hashes=32, bands=8, shingle_n=3, hash_fn="portable", num_buckets=16,
+        num_hashes=32, bands=8, shingle_n=3, hash_fn="portable",
     )
     return survivors.select("doc_id", "source", "n_chars").orderBy("doc_id")
 
@@ -6571,7 +6571,7 @@ def q169_incremental_lsh_dedup(spark, sf_dir):
     "MinHash q169): vectors < 100 are the historical corpus (only their "
     "4x6-bit sign-LSH band keys persist, ~bands*20 B/vec; the vectors "
     "themselves are never stored or rescanned); batch vectors (>= 100) "
-    "are dropped on any band-key hit against the bucket-pruned store or "
+    "are dropped on any band-key hit against the store or "
     "a smaller-id batch vector. SIGNATURE-level decision (documented: "
     "no rescore is possible without corpus vectors — q142 keeps the "
     "exact-threshold batch semantics); the sin()-plane family is q142's, "
@@ -6589,11 +6589,11 @@ def q170_incremental_semantic_dedup(spark, sf_dir):
     batch = e.filter(F.col("vec_id") >= 100).select("vec_id", "label", "embedding")
     store = _pid_scoped_store(sf_dir, "q170")
     incremental.build_sign_band_store(
-        corpus, "vec_id", "embedding", store, bands=4, band_bits=6, num_buckets=16
+        corpus, "vec_id", "embedding", store, bands=4, band_bits=6
     )
     out = incremental.incremental_semantic_dedup(
         spark, batch, "vec_id", "embedding", store,
-        bands=4, band_bits=6, num_buckets=16,
+        bands=4, band_bits=6,
     )
     return out.select(
         "vec_id",
@@ -6675,7 +6675,7 @@ def q171_versioned_lsh_dedup_replay(spark, sf_dir):
     )
     b1 = d.filter(F.col("doc_id") >= 375).select("doc_id", "text", "source")
     store = _pid_scoped_store(sf_dir, "q171")
-    kw = dict(num_hashes=32, bands=8, shingle_n=3, hash_fn="portable", num_buckets=16)
+    kw = dict(num_hashes=32, bands=8, shingle_n=3, hash_fn="portable")
     incremental.build_band_store(corpus, "text", "doc_id", store, **kw)
     s0 = incremental.incremental_lsh_dedup(
         spark, b0, "text", "doc_id", store, src_batch=0, **kw
@@ -6729,7 +6729,7 @@ def q171_versioned_lsh_dedup_replay(spark, sf_dir):
     "VERSIONED incremental EXACT dedup across two sequential batches WITH "
     "A REPLAY — the exact-fingerprint twin of q171 (same src_batch stamp "
     "filter, canonical-token xxhash64 fingerprints instead of MinHash "
-    "bands, stored as one-band rows of the same bkt_part-partitioned "
+    "bands, stored as one-band rows of the same flat "
     "band store): corpus < 250 bootstraps the fingerprint store; batch 0 "
     "(250-374) runs at src_batch=0, batch 1 (>= 375) at src_batch=1 and "
     "is then REPLAYED at the same id — the emitted batch-1 survivors come "
@@ -6751,7 +6751,7 @@ def q172_versioned_exact_dedup_replay(spark, sf_dir):
     )
     b1 = d.filter(F.col("doc_id") >= 375).select("doc_id", "text", "source")
     store = _pid_scoped_store(sf_dir, "q172")
-    kw = dict(mode="canonical", num_buckets=16)
+    kw = dict(mode="canonical")
     incremental.build_fingerprint_store(corpus, "text", "doc_id", store, **kw)
     s0 = incremental.incremental_dedup(
         spark, b0, "text", "doc_id", store, src_batch=0, **kw

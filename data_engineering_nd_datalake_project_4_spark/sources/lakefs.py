@@ -76,7 +76,8 @@ def swap_in(spark: SparkSession, path: str, write_tmp) -> None:
     (while the live path is still readable), then the swap goes
     live→``<path>__old``, copy→live, delete ``__old``.
 
-    Crash contract, per window (pinned by
+    Crash contract, per window (pinned, through
+    :func:`.sinks.compact_parquet_dir`, its one caller, by
     ``tests/test_incremental_lsh.py::test_compact_band_store_crash_windows``):
 
     1. die during/after ``write_tmp`` → live table untouched; the orphaned

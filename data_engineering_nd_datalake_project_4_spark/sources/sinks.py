@@ -164,12 +164,25 @@ def compact_parquet_dir(
     spark,
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
+    schema: str | None = None,
+    transform=None,
 ) -> int:
     """Compact a small-file parquet directory in place: read, coalesce to
-    ~target-sized files, swap in via rename. Returns the new file count.
-    The antidote to streaming sinks and over-parallel writes accumulating
-    thousands of KB-sized files (each file costs a task + footer fetch on
-    every downstream scan).
+    ~target-sized files, swap in via rename. Returns the post-compaction
+    data-file count. The antidote to streaming sinks, append-heavy stores
+    (:mod:`..operators.incremental`'s signature stores) and over-parallel
+    writes accumulating thousands of KB-sized files (each file costs a
+    task + footer fetch on every downstream scan). The rewrite is flat:
+    a partition column comes back as a data column.
+
+    ``schema`` (a DDL string) makes an EMPTY table — a valid directory
+    with zero data files (round-7 rule) — compact to itself instead of
+    failing schema inference. ``transform`` (optional ``df -> df``) is
+    applied to the whole table before the rewrite — the hook row-level
+    maintenance rides on (e.g.
+    :func:`..operators.incremental.compact_band_store`'s ``dedup_exact``
+    reclaim of at-least-once replay duplicates). The default (None)
+    preserves the row multiset exactly.
 
     Sizing and the swap go through :mod:`.lakefs` (the Hadoop FileSystem
     API), so ``file://``, ``hdfs://`` and ``s3a://`` paths work alike; the
@@ -179,57 +192,14 @@ def compact_parquet_dir(
     """
     import math
 
-    df = spark.read.parquet(path)
+    df = (spark.read.schema(schema) if schema else spark.read).parquet(path)
+    if transform is not None:
+        df = transform(df)
     n_files = max(1, math.ceil(lakefs.size_bytes(spark, path) / target_file_bytes))
     lakefs.swap_in(
         spark,
         path,
         lambda tmp: df.coalesce(n_files).write.mode("overwrite").parquet(tmp),
-    )
-    return n_files
-
-
-def compact_partitioned_parquet_dir(
-    spark,
-    path: str,
-    partition_by: str,
-    schema: str | None = None,
-    transform=None,
-) -> int:
-    """Compact a PARTITIONED parquet directory in place, PRESERVING the
-    ``partitionBy`` layout — the variant append-heavy stores need
-    (:mod:`..operators.incremental`'s band/fingerprint stores): months of
-    batch appends leave thousands of KB-sized files per partition
-    directory, and :func:`compact_parquet_dir` would flatten the partition
-    column into data files, silently demoting every later
-    partition-pruned probe to a full-store row filter.
-
-    One ``repartition(partition_by)`` pass: each partition value hashes to
-    exactly one task, so each partition directory comes back as ~one file.
-    ``schema`` (a DDL string INCLUDING the partition column) makes an
-    EMPTY store — a valid directory with zero data files (round-7 rule) —
-    compact to itself instead of failing schema inference.
-
-    ``transform`` (optional ``df -> df``) is applied to the full store
-    frame before the rewrite — the hook row-level maintenance rides on
-    (e.g. :func:`..operators.incremental.compact_band_store`'s
-    ``dedup_exact`` reclaim of at-least-once replay duplicates). The
-    DEFAULT (None) preserves the row multiset exactly.
-
-    Returns the post-compaction data-file count."""
-    reader = spark.read.schema(schema) if schema else spark.read
-    df = reader.parquet(path)
-    if transform is not None:
-        df = transform(df)
-    lakefs.swap_in(
-        spark,
-        path,
-        lambda tmp: (
-            df.repartition(partition_by)
-            .write.mode("overwrite")
-            .partitionBy(partition_by)
-            .parquet(tmp)
-        ),
     )
     return lakefs.data_file_count(spark, path)
 

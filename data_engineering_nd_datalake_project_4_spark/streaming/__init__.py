@@ -491,7 +491,6 @@ def run_incremental_lsh_dedup_stream(
     bands: int = 8,
     shingle_n: int = 3,
     hash_fn: str = "xxhash64",
-    num_buckets: int = 64,
     query_name: str = "incremental_lsh_dedup",
     compact_every: int | None = None,
 ) -> None:
@@ -516,7 +515,7 @@ def run_incremental_lsh_dedup_stream(
     re-appends duplicates and completes the write: same rows.
 
     Scale shape per batch: identical to the batch operator (24-byte band
-    rows, bucket-pruned store scan, batch-sized checkpoints); decisions
+    rows, a two-column store scan, batch-sized checkpoints); decisions
     are batch-sized. Store maintenance: ``compact_band_store`` (the
     compaction ALWAYS carries ``src_batch`` through). Crash between the
     store append and the decisions write is healed by the replay
@@ -540,7 +539,7 @@ def run_incremental_lsh_dedup_stream(
         stream_docs, incremental.incremental_lsh_dedup, (text_col, id_col),
         store_path, decisions_root, checkpoint, query_name, compact_every,
         num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
-        hash_fn=hash_fn, num_buckets=num_buckets,
+        hash_fn=hash_fn,
     )
 
 
@@ -552,7 +551,6 @@ def run_incremental_exact_dedup_stream(
     decisions_root: str,
     checkpoint: str,
     mode: str = "exact",
-    num_buckets: int = 64,
     query_name: str = "incremental_exact_dedup",
     compact_every: int | None = None,
 ) -> None:
@@ -578,7 +576,7 @@ def run_incremental_exact_dedup_stream(
     _run_versioned_dedup_stream(
         stream_docs, incremental.incremental_dedup, (text_col, id_col),
         store_path, decisions_root, checkpoint, query_name, compact_every,
-        mode=mode, num_buckets=num_buckets,
+        mode=mode,
     )
 
 
@@ -591,7 +589,6 @@ def run_incremental_semantic_dedup_stream(
     checkpoint: str,
     bands: int = 4,
     band_bits: int = 6,
-    num_buckets: int = 16,
     query_name: str = "incremental_semantic_dedup",
     compact_every: int | None = None,
 ) -> None:
@@ -606,5 +603,5 @@ def run_incremental_semantic_dedup_stream(
     _run_versioned_dedup_stream(
         stream_vecs, incremental.incremental_semantic_dedup, (id_col, vec_col),
         store_path, decisions_root, checkpoint, query_name, compact_every,
-        bands=bands, band_bits=band_bits, num_buckets=num_buckets,
+        bands=bands, band_bits=band_bits,
     )

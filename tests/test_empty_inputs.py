@@ -149,14 +149,14 @@ def test_train_sample_backfills_past_offdim_prefix(spark):
 def test_incremental_dedup_against_empty_store(spark, tmp_path):
     docs = spark.createDataFrame([], "doc_id long, text string")
     store = str(tmp_path / "store")
-    incremental.build_fingerprint_store(docs, "text", "doc_id", store, num_buckets=4)
+    incremental.build_fingerprint_store(docs, "text", "doc_id", store)
     batch = spark.createDataFrame(
         [(10, "alpha"), (11, "alpha"), (12, "beta")], "doc_id long, text string"
     )
-    out = incremental.incremental_dedup(spark, batch, "text", "doc_id", store, num_buckets=4)
+    out = incremental.incremental_dedup(spark, batch, "text", "doc_id", store)
     assert sorted(r["doc_id"] for r in out.collect()) == [10, 12]
     # and a fully empty batch against the empty store
-    out2 = incremental.incremental_dedup(spark, docs, "text", "doc_id", store, num_buckets=4)
+    out2 = incremental.incremental_dedup(spark, docs, "text", "doc_id", store)
     assert out2.count() == 0
 
 

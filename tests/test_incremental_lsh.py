@@ -2,22 +2,21 @@
 equivalence to the band-candidate rule computed from scratch, idempotent
 store replay, NULL-text pass-through, empty-corpus store, duplicate feed
 rows, multi-batch sequencing; and, for every store kind (fingerprint,
-MinHash, sign-LSH), the one partitioned layout and its compaction."""
+MinHash, sign-LSH), the one flat layout, its zero-job probe and its
+compaction."""
 
 from __future__ import annotations
 
-import re
 import shutil
 from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
-from data_engineering_nd_datalake_project_4_spark import plans
 from data_engineering_nd_datalake_project_4_spark.operators import incremental
 from data_engineering_nd_datalake_project_4_spark.operators.dedup import minhash_band_rows
 
-_KW = dict(num_hashes=32, bands=8, shingle_n=3, num_buckets=16)
+_KW = dict(num_hashes=32, bands=8, shingle_n=3)
 
 
 @pytest.fixture()
@@ -245,7 +244,7 @@ def test_streaming_ingest_with_incremental_lsh_dedup(spark, tmp_path):
 # incremental_semantic_dedup (sign-LSH band store — the embedding twin)
 # ---------------------------------------------------------------------------
 
-_SKW = dict(bands=4, band_bits=6, num_buckets=16)
+_SKW = dict(bands=4, band_bits=6)
 
 
 @pytest.fixture()
@@ -382,14 +381,13 @@ def test_semantic_degenerate_vectors_pass_through(spark, vec_corpus_and_batch, t
 
 #: every store kind shares one format: these tests run once per builder
 _KINDS = ["fingerprint", "band", "sign"]
-_VSCHEMA = "band INT, bucket LONG, first_id LONG, src_batch LONG, bkt_part INT"
+_VSCHEMA = "band INT, bucket LONG, first_id LONG, src_batch LONG"
 
 
 def _store_world(spark, kind, corpus_and_batch, vec_corpus_and_batch):
     """One store kind: its builder over the fixture corpus, its operator
-    as ``kept(batch, store, **kw)`` → sorted kept ids, the fixture batch,
-    a fresh later-batch row, and the batch fan-out its probe reads
-    partitions for."""
+    as ``kept(batch, store, **kw)`` → sorted kept ids, the fixture batch
+    and a fresh later-batch row."""
     import math
     from types import SimpleNamespace
 
@@ -407,63 +405,79 @@ def _store_world(spark, kind, corpus_and_batch, vec_corpus_and_batch):
         )
         return SimpleNamespace(
             id_col="vec_id", content="embedding", batch=batch, kept=kept,
-            fresh=fresh, num_buckets=_SKW["num_buckets"],
+            fresh=fresh,
             build=lambda store: incremental.build_sign_band_store(
                 corpus, "vec_id", "embedding", store, **_SKW),
-            fanout=lambda df: incremental._sign_band_rows(
-                df, "vec_id", "embedding", _SKW["bands"], _SKW["band_bits"]),
         )
     corpus, batch = corpus_and_batch
     if kind == "fingerprint":
-        kw = dict(mode="exact", num_buckets=_KW["num_buckets"])
+        kw = dict(mode="exact")
         build, op = incremental.build_fingerprint_store, incremental.incremental_dedup
-
-        def fanout(df):
-            return incremental._one_band(df, incremental._fingerprint("text", "exact"), "doc_id")
     else:
         kw = _KW
         build, op = incremental.build_band_store, incremental.incremental_lsh_dedup
-
-        def fanout(df):
-            return incremental._minhash_rows(df, "text", "doc_id", 32, 8, 3, "xxhash64")
     fresh = spark.createDataFrame(
         [(201, "brand new round thirteen document with tokens")], batch.schema
     )
     return SimpleNamespace(
-        id_col="doc_id", content="text", batch=batch, fanout=fanout, fresh=fresh,
-        num_buckets=kw["num_buckets"],
+        id_col="doc_id", content="text", batch=batch, fresh=fresh,
         build=lambda store: build(corpus, "text", "doc_id", store, **kw),
         kept=lambda df, store, **k: _ids(op(spark, df, "text", "doc_id", store, **kw, **k)),
     )
 
 
 @pytest.mark.parametrize("kind", _KINDS)
-def test_store_layout_is_bucket_partitioned(
+def test_store_layout_is_flat(
     spark, kind, corpus_and_batch, vec_corpus_and_batch, tmp_path
 ):
-    """Every builder writes the one layout: bkt_part= directories, each
-    holding exactly the rows whose bucket hashes to it (pmod), and the
-    operator's probe of that store is pruned to the batch's touched
-    partitions by a PartitionFilter (directory-level skip, not a post-scan
-    Filter)."""
+    """Every builder writes the one layout: a flat parquet directory — no
+    partition directories — that reads back, once a versioned batch has
+    appended to it, with exactly the declared ``_STORE_SCHEMA``."""
     w = _store_world(spark, kind, corpus_and_batch, vec_corpus_and_batch)
     store = str(tmp_path / "store")
     w.build(store)
-    parts = {p.name for p in Path(store).iterdir() if p.name.startswith("bkt_part=")}
-    assert len(parts) >= 2  # hash-partitioned layout on disk
+    w.kept(w.batch, store, src_batch=1)
+    assert not [p for p in Path(store).iterdir() if p.is_dir()]
+    got = spark.read.option("mergeSchema", "true").parquet(store).schema
+    want = spark.createDataFrame([], incremental._STORE_SCHEMA).schema
+    assert [(f.name, f.dataType) for f in got] == [(f.name, f.dataType) for f in want]
+
+
+def _new_job_ids(spark, fn):
+    """Ids of the Spark jobs that ``fn()`` started."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def job_ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup(None)) | set(tracker.getActiveJobsIds())
+
+    before = job_ids()
+    fn()
+    return job_ids() - before
+
+
+def test_probe_store_runs_no_job(spark, corpus_and_batch, tmp_path):
+    """The probe only plans a two-column scan: building it, unversioned or
+    versioned, starts no Spark job, and it still returns every stored
+    ``(band, bucket)`` the stamp filter admits."""
+    corpus, batch = corpus_and_batch
+    store = str(tmp_path / "store")
+    incremental.build_band_store(corpus, "text", "doc_id", store, **_KW)
+    incremental.incremental_lsh_dedup(
+        spark, batch, "text", "doc_id", store, src_batch=1, **_KW
+    ).collect()
     rows = spark.read.schema(_VSCHEMA).parquet(store).collect()
-    assert rows and {f"bkt_part={r['bkt_part']}" for r in rows} == parts
-    for r in rows:
-        assert r["bkt_part"] == r["bucket"] % w.num_buckets  # pmod, never negative
-    seen = incremental._probe_store(
-        spark, w.fanout(w.batch), store, w.num_buckets, src_batch=None
-    )
-    plan = plans.explain_str(seen)
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "bkt_part" in m.group(1), plan
+    for src_batch, visible in ((None, rows), (1, [r for r in rows if r[3] is None])):
+        seen = []
+        assert not _new_job_ids(
+            spark, lambda: seen.append(incremental._probe_store(spark, store, src_batch))
+        )
+        want = sorted((r[0], r[1]) for r in visible)
+        assert sorted(map(tuple, seen[0].collect())) == want
 
 
-def _store_rows(spark, store, schema="band INT, bucket LONG, first_id LONG, bkt_part INT"):
+def _store_rows(spark, store, schema="band INT, bucket LONG, first_id LONG"):
     return sorted(
         tuple(r) for r in spark.read.schema(schema).parquet(store).collect()
     )
@@ -478,10 +492,9 @@ def _data_files(store):
 
 def test_compact_band_store_preserves_rows_and_replay(spark, corpus_and_batch, tmp_path):
     """Compaction is a pure layout change: row multiset identical, the
-    bkt_part directory layout (partition pruning) survives, file count
-    drops to ~one per partition, and replay idempotence holds ACROSS the
-    compaction — the store a batch appended to yesterday answers
-    identically after tonight's compaction."""
+    small store comes back as one flat file, and replay idempotence holds
+    ACROSS the compaction — the store a batch appended to yesterday
+    answers identically after tonight's compaction."""
     corpus, batch = corpus_and_batch
     store = str(tmp_path / "store")
     incremental.build_band_store(corpus, "text", "doc_id", store, **_KW)
@@ -492,13 +505,9 @@ def test_compact_band_store_preserves_rows_and_replay(spark, corpus_and_batch, t
     before_files = len(_data_files(store))
     n_after = incremental.compact_band_store(spark, store)
     assert _store_rows(spark, store) == before_rows          # multiset unchanged
-    assert len(_data_files(store)) == n_after <= before_files
-    parts = {p.name for p in Path(store).iterdir() if p.name.startswith("bkt_part=")}
-    assert parts                                             # layout preserved
-    # one file per partition directory (the repartition(bkt_part) contract)
-    for p in Path(store).iterdir():
-        if p.name.startswith("bkt_part="):
-            assert len(_data_files(str(p))) == 1
+    assert before_files > 1
+    assert len(_data_files(store)) == n_after == 1           # KBs: one file
+    assert not [p for p in Path(store).iterdir() if p.is_dir()]  # still flat
     # replay across the compaction: only the NULL-text pass-through survives
     replay = _ids(
         incremental.incremental_lsh_dedup(

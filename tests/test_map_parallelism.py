@@ -4,9 +4,6 @@ under-parallel."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import DataFrame
-
 from data_engineering_nd_datalake_project_4_spark.operators import (
     _estimated_scan_splits,
     _parse_byte_conf,
@@ -42,7 +39,9 @@ def test_many_small_files_still_spread(spark, tmp_path, monkeypatch):
     def boom(self):  # the probe must never materialize the RDD here
         raise AssertionError("df.rdd touched on the file-scan fast path")
 
-    monkeypatch.setattr(DataFrame, "rdd", property(boom))
+    # the frame's own class: Spark 4's classic DataFrame overrides `rdd`,
+    # so a patch on the pyspark.sql.DataFrame base would never fire
+    monkeypatch.setattr(type(df), "rdd", property(boom))
     out = ensure_map_parallelism(df, min_partitions=4)
     assert out is not df  # tiny files pack into < 4 partitions → spread
 
@@ -62,7 +61,7 @@ def test_enough_real_partitions_is_noop(spark, tmp_path, monkeypatch):
         def boom(self):
             raise AssertionError("df.rdd touched on the file-scan fast path")
 
-        monkeypatch.setattr(DataFrame, "rdd", property(boom))
+        monkeypatch.setattr(type(df), "rdd", property(boom))
         out = ensure_map_parallelism(df, min_partitions=4)
         assert out is df
     finally:

@@ -170,16 +170,12 @@ def test_curation_scorer_never_reevaluated_in_a_filter(registry_frames, name):
     assert not offenders, f"{name}: curation scorer in Filter: {offenders}"
 
 
-def test_lsh_verifier_pairs_shuffle_no_string_arrays(spark, sf_dir, monkeypatch):
-    """No keyed exchange in the pairs frame that lsh_near_dedup hands to
-    connected_components may carry a wide payload, even when no side fits
-    a broadcast: verification intersects 64-bit shingle hashes
-    (ngram_jaccard_pairs), never shingle-string arrays.
-
-    The repo-wide audits cannot see this frame. connected_components
+def _q152_pairs_frame(spark, sf_dir, monkeypatch):
+    """The pairs frame lsh_near_dedup hands to connected_components when
+    q152 builds. The repo-wide audits cannot see it: connected_components
     checkpoints it eagerly, so the query's own plan starts from a
     materialized RDD and every exchange inside the build is out of view.
-    The spy captures the frame before that happens."""
+    A spy captures the frame before that happens."""
     from data_engineering_nd_datalake_project_4_spark.operators import dedup
 
     seen = []
@@ -190,15 +186,42 @@ def test_lsh_verifier_pairs_shuffle_no_string_arrays(spark, sf_dir, monkeypatch)
         return real(edges, *args, **kwargs)
 
     monkeypatch.setattr(dedup, "connected_components", spy)
+    REGISTRY["q152_lsh_near_dedup"].spark_fn(spark, sf_dir)
+    assert len(seen) == 1
+    return seen[0]
+
+
+def test_lsh_verifier_pairs_shuffle_no_string_arrays(spark, sf_dir, monkeypatch):
+    """No keyed exchange in the pairs frame may carry a wide payload, even
+    when no side fits a broadcast: verification intersects 64-bit shingle
+    hashes (ngram_jaccard_pairs), never shingle-string arrays."""
     thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        REGISTRY["q152_lsh_near_dedup"].spark_fn(spark, sf_dir)
-        assert len(seen) == 1
-        sites = plans.wide_shuffle_sites(seen[0])
+        sites = plans.wide_shuffle_sites(_q152_pairs_frame(spark, sf_dir, monkeypatch))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
     assert not sites, f"wide verifier exchanges: {sites}"
+
+
+def test_lsh_verifier_pairs_scan_the_docs_once(spark, sf_dir, monkeypatch):
+    """ngram_jaccard_pairs joins one shingle-hash frame as both pair
+    sides: executed, the pairs frame scans the documents ONCE — the second
+    side is a reused exchange, not a second scan, re-hash and round-robin
+    spread of ``[doc_id, text]`` — with the verify joins broadcast or
+    shuffled."""
+    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        for threshold in (thr, "-1"):
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+            pairs = _q152_pairs_frame(spark, sf_dir, monkeypatch)
+            pairs.collect()
+            plan = pairs._jdf.queryExecution().executedPlan().toString()
+            final = plan.split("== Initial Plan ==")[0]
+            assert final.count("FileScan parquet") == 1, final
+            assert final.count("lambdafunction(xxhash64(") == 1, final  # one re-hash
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
 
 
 def test_q34_jaccard_is_bucketed_not_cartesian(spark, sf_dir):

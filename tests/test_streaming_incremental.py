@@ -15,7 +15,7 @@ from data_engineering_nd_datalake_project_4_spark.streaming import (
     run_incremental_semantic_dedup_stream,
 )
 
-_KW = dict(num_hashes=32, bands=8, shingle_n=3, num_buckets=16)
+_KW = dict(num_hashes=32, bands=8, shingle_n=3)
 
 
 def _doc(i: int) -> str:
@@ -238,7 +238,7 @@ def test_lsh_stream_crash_between_store_append_and_decisions_write(
     # distinct store state identical; the multiset delta is exactly the
     # replayed batch-1 duplicate stamped rows (decision-neutral)
     read = lambda p: spark.read.schema(  # noqa: E731
-        "band INT, bucket LONG, first_id LONG, src_batch LONG, bkt_part INT"
+        "band INT, bucket LONG, first_id LONG, src_batch LONG"
     ).parquet(p)
     rows_ok = sorted(map(tuple, read(store_ok).collect()))
     rows_cr_distinct = sorted(map(tuple, read(store_cr).distinct().collect()))
@@ -298,7 +298,7 @@ def test_lsh_stream_compact_every_is_decision_neutral(spark, tmp_path):
         b = spark.read.parquet(f"{dec_cmp}/{v}")
         assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
     read = lambda p: spark.read.schema(  # noqa: E731
-        "band INT, bucket LONG, first_id LONG, src_batch LONG, bkt_part INT"
+        "band INT, bucket LONG, first_id LONG, src_batch LONG"
     ).parquet(p)
     assert (sorted(map(tuple, read(store_plain).distinct().collect()))
             == sorted(map(tuple, read(store_cmp).distinct().collect())))
@@ -323,7 +323,7 @@ def test_versioned_exact_dedup_replay_stability(spark, tmp_path):
         [(i, _doc(i)) for i in range(10)], "doc_id LONG, text STRING"
     )
     store = str(tmp_path / "fpstore")
-    KW = dict(mode="exact", num_buckets=16)
+    KW = dict(mode="exact")
     incremental.build_fingerprint_store(corpus, "text", "doc_id", store, **KW)
 
     b0 = spark.createDataFrame(
@@ -367,8 +367,8 @@ def test_compact_fingerprint_store_preserves_stamps_and_reclaims(spark, tmp_path
         [(i, _doc(i)) for i in range(10)], "doc_id LONG, text STRING"
     )
     store = str(tmp_path / "fpstore")
-    KW = dict(mode="exact", num_buckets=16)
-    VSCHEMA = "band INT, bucket LONG, first_id LONG, src_batch LONG, bkt_part INT"
+    KW = dict(mode="exact")
+    VSCHEMA = "band INT, bucket LONG, first_id LONG, src_batch LONG"
     incremental.build_fingerprint_store(corpus, "text", "doc_id", store, **KW)
     b0 = spark.createDataFrame(
         [(100, "fresh alpha"), (101, "fresh beta")], "doc_id LONG, text STRING"
@@ -406,7 +406,7 @@ def test_exact_dedup_stream_end_to_end(spark, tmp_path):
     )
     store = str(tmp_path / "fpstore")
     incremental.build_fingerprint_store(
-        corpus, "text", "doc_id", store, mode="exact", num_buckets=16
+        corpus, "text", "doc_id", store, mode="exact"
     )
     feed = str(tmp_path / "feed")
     spark.createDataFrame(
@@ -423,7 +423,7 @@ def test_exact_dedup_stream_end_to_end(spark, tmp_path):
     decisions = str(tmp_path / "decisions")
     run_incremental_exact_dedup_stream(
         stream, "text", "doc_id", store, decisions,
-        checkpoint=str(tmp_path / "ckpt"), mode="exact", num_buckets=16,
+        checkpoint=str(tmp_path / "ckpt"), mode="exact",
     )
     # 100 dups corpus; 200 dups whichever batch carried "stream alpha"
     got = spark.read.parquet(f"{decisions}/v*")
@@ -441,7 +441,7 @@ def test_semantic_versioned_replay(spark, tmp_path):
     )
     store = str(tmp_path / "vstore")
     incremental.build_sign_band_store(
-        corpus, "vec_id", "embedding", store, bands=4, band_bits=6, num_buckets=16
+        corpus, "vec_id", "embedding", store, bands=4, band_bits=6
     )
     batch = spark.createDataFrame(
         [(100, [2.0, 0.5, -0.25, 1.0]),   # same signature as corpus vec 1
@@ -453,7 +453,7 @@ def test_semantic_versioned_replay(spark, tmp_path):
     def flags(src):
         out = incremental.incremental_semantic_dedup(
             spark, batch, "vec_id", "embedding", store,
-            bands=4, band_bits=6, num_buckets=16, src_batch=src,
+            bands=4, band_bits=6, src_batch=src,
         )
         return {r["vec_id"]: r["sem_removed"] for r in out.collect()}
 
@@ -470,7 +470,7 @@ def test_semantic_dedup_stream_smoke(spark, tmp_path):
     )
     store = str(tmp_path / "vstore")
     incremental.build_sign_band_store(
-        corpus, "vec_id", "embedding", store, bands=4, band_bits=6, num_buckets=16
+        corpus, "vec_id", "embedding", store, bands=4, band_bits=6
     )
     feed = str(tmp_path / "vfeed")
     spark.createDataFrame(
@@ -485,7 +485,7 @@ def test_semantic_dedup_stream_smoke(spark, tmp_path):
     run_incremental_semantic_dedup_stream(
         stream, "vec_id", "embedding", store, decisions,
         checkpoint=str(tmp_path / "vckpt"),
-        bands=4, band_bits=6, num_buckets=16,
+        bands=4, band_bits=6,
     )
     got = {r["vec_id"]: r["sem_removed"]
            for r in spark.read.parquet(f"{decisions}/v*").collect()}

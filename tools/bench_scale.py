@@ -560,7 +560,7 @@ def run_incremental_dedup_scale(spark, reps: int) -> None:
     near-dup-deduped against a corpus that grows ~16x (sf0.1 documents
     minus the batch -> sf1.0). The one-time store build (the only
     corpus-scan stage) is timed separately; the per-batch wall times the
-    COMPLETE operator call (band fan-out, bucket-pruned store probe,
+    COMPLETE operator call (band fan-out, store probe,
     in-batch rule, survivor join — the operator materializes its
     decision set eagerly, so the fn call itself is the work). The honest
     expectation is NEAR-FLAT, not O(1): the corpus-linear term is the
@@ -596,14 +596,14 @@ def run_incremental_dedup_scale(spark, reps: int) -> None:
         t0 = time.perf_counter()
         incremental.build_band_store(
             corpus, "text", "doc_id", store, num_hashes=32, bands=8,
-            shingle_n=3, hash_fn="xxhash64", num_buckets=64,
+            shingle_n=3, hash_fn="xxhash64",
         )
         build_sec = round(time.perf_counter() - t0, 3)
 
         def run_batch():
             surv = incremental.incremental_lsh_dedup(
                 spark, batch, "text", "doc_id", store, num_hashes=32,
-                bands=8, shingle_n=3, hash_fn="xxhash64", num_buckets=64,
+                bands=8, shingle_n=3, hash_fn="xxhash64",
             )
             _run(surv.select("doc_id", "source", "n_chars"))
             return surv
@@ -688,8 +688,8 @@ def run_versioned_replay_scale(spark, reps: int) -> None:
     from data_engineering_nd_datalake_project_4_spark.operators import incremental
 
     BATCH = 2000
-    KW = dict(num_hashes=32, bands=8, shingle_n=3, hash_fn="xxhash64", num_buckets=64)
-    VSCHEMA = "band INT, bucket LONG, first_id LONG, src_batch LONG, bkt_part INT"
+    KW = dict(num_hashes=32, bands=8, shingle_n=3, hash_fn="xxhash64")
+    VSCHEMA = "band INT, bucket LONG, first_id LONG, src_batch LONG"
     points = [("sf0.1", SF01), ("sf1.0", SF10)]
     if os.path.exists(f"{SF100}/documents.parquet"):
         points.append(("sf10", SF100))
@@ -798,8 +798,8 @@ def run_incremental_semantic_scale(spark, reps: int) -> None:
     semantically deduped against a sign-LSH band store built from a
     corpus that grows 10x (sf0.1 embeddings minus the batch -> sf1.0,
     plus sf10 when materialized). The store holds only band keys
-    (~bands·20 B/vec) hash-partitioned by bkt_part, so the per-batch
-    probe join is pruned to the batch's touched partitions — the honest
+    (~bands·20 B/vec), so the per-batch probe join scans two hash
+    columns, never vectors — the honest
     expectation is NEAR-FLAT batch wall. band_bits follows the
     sized_band_bits discipline per corpus (the round-10 saturation
     lesson); bands fixed at 4. Merged into bench/results_sf1.json under
@@ -839,14 +839,14 @@ def run_incremental_semantic_scale(spark, reps: int) -> None:
         t0 = time.perf_counter()
         incremental.build_sign_band_store(
             corpus, "vec_id", "embedding", store,
-            bands=4, band_bits=bits, num_buckets=16,
+            bands=4, band_bits=bits,
         )
         build_sec = round(time.perf_counter() - t0, 3)
 
         def run_batch():
             out = incremental.incremental_semantic_dedup(
                 spark, batch, "vec_id", "embedding", store,
-                bands=4, band_bits=bits, num_buckets=16,
+                bands=4, band_bits=bits,
             )
             _run(out.select("vec_id", "label", "sem_removed"))
             return out
@@ -902,7 +902,7 @@ def run_incremental_semantic_scale(spark, reps: int) -> None:
             "checkpoint_sec": _timed_median(
                 lambda: _banded().distinct().localCheckpoint(eager=True).count()
             ),
-            # store scan (partition-pruned) + band-key decision join,
+            # store scan + band-key decision join,
             # including a banded-kernel re-run (overlaps banded_kernel_sec)
             "store_probe_sec": _timed_median(_probe),
         }
