@@ -22,23 +22,6 @@ def dec(col: Column | str) -> Column:
     return c.cast(DEC18_2)
 
 
-def dec_sum(col: Column | str, alias: str) -> Column:
-    """SUM(CAST(x AS DECIMAL(18,2))) cast back to DECIMAL(18,2).
-
-    Spark widens a decimal SUM to DECIMAL(28,2); casting back keeps the
-    declared output type identical across engines.
-
-    NOTE: do NOT put this in a *final* projection — use :func:`dec_sum_d`.
-    Decimal outputs render scale-dependently ("995.80" vs "995.8") and the
-    driver's canonical-CSV hasher reads the two engines through different
-    paths (Spark collect → ``Decimal`` at declared scale; DuckDB → float64),
-    so any result value with a trailing zero in its last decimal digit
-    hash-mismatches even when numerically identical (round-1 failures
-    q02/q08/q12/q14/q15/q17/q19/q31/q44 were exactly this).
-    """
-    return F.sum(dec(col)).cast(DEC18_2).alias(alias)
-
-
 #: widest decimal — the exact-integer carrier for summed cents (below)
 _DEC38_0 = DecimalType(38, 0)
 
@@ -100,6 +83,14 @@ def dec_sum_d(col: Column | str, alias: str) -> Column:
     so both engines produce the bit-identical float — which renders
     identically under every canonicalizer (no declared-scale trailing
     zeros). Oracle twin: ``CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE)``.
+
+    Never leave a DECIMAL sum in a *final* projection: decimal outputs
+    render scale-dependently ("995.80" vs "995.8") and the driver's
+    canonical-CSV hasher reads the two engines through different paths
+    (Spark collect → ``Decimal`` at declared scale; DuckDB → float64), so
+    any value with a trailing zero in its last decimal digit
+    hash-mismatches even when numerically identical (round-1 failures
+    q02/q08/q12/q14/q15/q17/q19/q31/q44 were exactly this).
     """
     return cents_sum_to_double(F.sum(cents(col, 2)), 2).alias(alias)
 

@@ -48,25 +48,6 @@ def latest_per_key(
     )
 
 
-def exact_dedup(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
-    """Exact dedup on a column subset (``dropDuplicates``) or full row
-    (``distinct``). Physical: partial+final HashAggregate, one shuffle.
-
-    At 100 TB: dedup on a long text column should dedup on ``xxhash64(text)``
-    instead (collision probability ~n²/2⁶⁴); see :func:`exact_dedup_by_hash`.
-    """
-    return df.dropDuplicates(list(cols)) if cols else df.distinct()
-
-
-def exact_dedup_by_hash(df: DataFrame, text_col: str, keep_order_cols: Sequence[Column] | None = None) -> DataFrame:
-    """Exact dedup of a wide text/binary column via 64-bit content hash: the
-    shuffle key is 8 bytes, not the document. Keeps the first row per hash
-    by the caller's order (default: ascending ``xxhash64`` is arbitrary, so
-    callers should pass a stable id ordering)."""
-    order = list(keep_order_cols) if keep_order_cols else [F.col(text_col)]
-    return latest_per_key(df.withColumn("__h", F.xxhash64(F.col(text_col))), ["__h"], order).drop("__h")
-
-
 def canonical_text_key(text_col: Column | str, sep: str = " ") -> Column:
     """Canonical near-dedup key: sorted distinct token set re-joined
     (SURVEY.md Q28). Two docs that are permutations / repetitions of the same
@@ -470,9 +451,8 @@ def simhash_fingerprints(
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """SimHash as a staged DataFrame transform: shingle-hash once into a
-    column, then fold the per-bit votes over that column. Prefer this over
-    the raw :func:`simhash64` expression on hot paths — the expression form
-    re-derives the shingle hashes for every one of the bit sums.
+    column, then fold the per-bit votes over that column, so the shingle
+    hashes are derived once, not once per bit sum.
     Output: ``(id_col, fp)``.
 
     ``hash_fn="portable"`` swaps xxhash64 for
@@ -506,22 +486,6 @@ def _simhash_from_hashes(hashes: Column, bits: int = 64) -> Column:
     for j in range(bits):
         fp = fp + F.when(bit_sum(j) > 0, F.lit(1).cast("long") * F.lit(2 ** j if j < 63 else -(2 ** 63)).cast("long")).otherwise(F.lit(0).cast("long"))
     return fp
-
-
-def simhash64(text_col: Column, shingle_n: int = 2) -> Column:
-    """64-bit SimHash fingerprint of a document, pure Catalyst.
-
-    For each bit position j: sum over shingles of ±1 according to bit j of
-    ``xxhash64(shingle)``; fingerprint bit j = sign of the sum. Emitted as a
-    BIGINT. Near-duplicate docs differ in few bits (small hamming distance).
-
-    NOTE: as a single expression the shingle hashing is re-evaluated per bit
-    position — use :func:`simhash_fingerprints` on anything bigger than a
-    test fixture.
-    """
-    sh = _shingles(text_col, shingle_n)
-    hashes = F.transform(sh, lambda s: F.xxhash64(s))
-    return _simhash_from_hashes(hashes)
 
 
 def hamming64(a: Column, b: Column) -> Column:
@@ -832,8 +796,9 @@ def subdoc_dedup(
     non-overlapping ``size``-token paragraphs, keep only the globally FIRST
     occurrence of each distinct paragraph (smallest ``(id, paragraph_idx)``),
     and reassemble the survivors in document order. This is the
-    sub-document-granularity member of the dedup family: :func:`exact_dedup`
-    drops whole duplicate documents, :func:`strip_duplicate_spans` scrubs
+    sub-document-granularity member of the dedup family: exact dedup
+    (q33, :func:`..incremental.incremental_dedup`) drops whole duplicate
+    documents, :func:`strip_duplicate_spans` scrubs
     repeated n-gram windows, this one removes repeated paragraphs while
     keeping each document's unique remainder (C4 removed duplicate three-
     sentence spans the same way; here the paragraph unit is a fixed token

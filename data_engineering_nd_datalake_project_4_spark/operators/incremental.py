@@ -23,6 +23,13 @@ Data motion per batch at any corpus scale:
 - the store append writes only the survivors' buckets. Periodic
   :func:`compact_band_store` (replay-safe) keeps file counts bounded.
 
+Each operator has two uses, chosen by ``src_batch`` alone. Without it the
+batch only PROBES the store (q130, q169, q170). With a monotone
+``src_batch`` id it probes the store as of the earlier batches and
+appends its survivors' buckets stamped with the id, so a replayed batch
+returns the same survivors (q171/q172, the streaming wrappers). There is
+no unstamped append: it could not tell a replay from a new batch.
+
 The store is flat on purpose. Hash-partitioning it on the bucket would let
 a batch skip the partitions none of its buckets hash to, but a batch with
 r distinct band rows leaves only ~P·(1-1/P)^r of P partitions untouched
@@ -56,10 +63,10 @@ from data_engineering_nd_datalake_project_4_spark.sources import lakefs
 
 #: the one store format: a row per (band, bucket) the corpus claimed,
 #: ``first_id`` the minimum id that claimed it, ``src_batch`` the versioned
-#: append stamp (NULL for bootstrap and unversioned rows; files written
-#: without the column read it as NULL). Declared on every read: a store
-#: built from an EMPTY corpus is a valid directory with zero data files,
-#: where schema inference would fail UNABLE_TO_INFER_SCHEMA (empty soak).
+#: append stamp (NULL for the bootstrap rows ``build_*_store`` writes
+#: without the column). Declared on every read: a store built from an
+#: EMPTY corpus is a valid directory with zero data files, where schema
+#: inference would fail UNABLE_TO_INFER_SCHEMA (empty soak).
 _STORE_SCHEMA = "band INT, bucket LONG, first_id LONG, src_batch LONG"
 
 
@@ -146,11 +153,11 @@ def _probe_store(
 
     ``src_batch`` (VERSIONED mode — the exactly-once-decisions contract
     for at-least-once feeds, used by the streaming wrappers): the probe
-    sees only rows whose stamp is NULL (bootstrap rows written by
-    build_*_store / unversioned appends — always visible) or STRICTLY
-    BELOW this batch id, so a replayed batch ignores its own earlier
-    append. Requires monotone batch ids (Structured Streaming's
-    foreachBatch guarantee; for scheduled jobs, any monotone run counter).
+    sees only rows whose stamp is NULL (the bootstrap rows written by
+    ``build_*_store`` — always visible) or STRICTLY BELOW this batch id,
+    so a replayed batch ignores its own earlier append. Requires monotone
+    batch ids (Structured Streaming's foreachBatch guarantee; for
+    scheduled jobs, any monotone run counter).
     """
     store = lakefs.read_or_none(spark, store_path, _STORE_SCHEMA)
     if store is None:
@@ -183,44 +190,37 @@ def incremental_dedup(
     id_col: str,
     store_path: str,
     mode: str = "exact",
-    update_store: bool = False,
     src_batch: int | None = None,
 ) -> DataFrame:
     """Rows of ``batch`` that are new to the corpus: not fingerprinted in
     the store, and the first (minimum-``id_col``) occurrence within the
-    batch itself.
-
-    With ``update_store=True`` the survivors' fingerprints are appended to
-    the store first, making the operation idempotent: replaying the
-    identical batch then yields zero survivors.
+    batch itself. Without ``src_batch`` the store is only probed.
 
     ``src_batch`` (VERSIONED mode — the exactly-once-decisions contract,
     identical to :func:`incremental_lsh_dedup`'s): pass a MONOTONE batch
-    id and the operator becomes REPLAY-STABLE — the survivor append is
-    stamped with the id and the probe sees only bootstrap rows (NULL
-    stamp: ``build_fingerprint_store`` / unversioned appends) or
-    STRICTLY-earlier stamps, so re-running the same batch with the same
-    id returns the IDENTICAL survivor set instead of zero survivors.
-    Implies ``update_store``; parquet schema evolution merges stamped
-    and unstamped files in one store, and :func:`compact_band_store`
-    always carries the stamp through.
+    id and the survivors' fingerprints are appended to the store stamped
+    with the id; the probe sees only bootstrap rows (NULL stamp:
+    ``build_fingerprint_store``) or STRICTLY-earlier stamps, so re-running
+    the same batch with the same id returns the IDENTICAL survivor set.
+    Parquet schema evolution merges stamped and unstamped files in one
+    store, and :func:`compact_band_store` always carries the stamp
+    through.
 
     Multi-consumer consistency (BOTH paths): the batch plan feeds several
     consumers — the in-batch first-wins window, the survivor anti-join the
-    caller later actions, and (update_store=True) the store append. A
+    caller later actions, and (versioned) the store append. A
     nondeterministic or sampled upstream must not evaluate once per
     consumer, or the store could permanently record fingerprints disagreeing
     with the survivors returned. So the keyed batch is
     ``localCheckpoint(eager=True)``-frozen ONCE up front — every consumer,
     including the caller's consumption after this function returns, reads
     the same materialized rows (a ``persist()`` released in ``finally``
-    could not cover that last consumer). With update_store=True the survivor
+    could not cover that last consumer). In versioned mode the survivor
     set is additionally checkpointed so the append and the caller share one
     evaluation of the anti-join. Both checkpoints hold only *batch*-sized
     rows (never corpus-sized); on a real cluster with executor loss in
     scope, swap for a reliable ``checkpoint()`` dir.
     """
-    update_store = update_store or src_batch is not None
     fp = _fingerprint(text_col, mode)
     keyed = batch.withColumn("__fp", fp).localCheckpoint(eager=True)
     # first-wins within the batch: one window shuffle on the 8-byte hash
@@ -232,7 +232,7 @@ def incremental_dedup(
     else:  # no store yet: everything survives in-batch dedup
         survivors = firsts
 
-    if update_store:
+    if src_batch is not None:
         # freeze the survivor set once; append and caller share it. The
         # survivors are already one per fingerprint: no claim aggregation
         survivors = survivors.localCheckpoint(eager=True)
@@ -276,7 +276,6 @@ def incremental_lsh_dedup(
     bands: int = 8,
     shingle_n: int = 3,
     hash_fn: str = "xxhash64",
-    update_store: bool = False,
     src_batch: int | None = None,
 ) -> DataFrame:
     """NEAR-duplicate incremental dedup: rows of ``batch`` that are not
@@ -304,22 +303,21 @@ def incremental_lsh_dedup(
     ``hash_fn="portable"`` NULL hashes to NULL, and under xxhash64 a
     NULL→seed class would near-dup "no content" against every other NULL
     doc, which is not near-duplication — route NULL/empty docs to
-    :func:`incremental_dedup` (exact mode) instead. Consequence: replay
-    idempotence (re-running the identical batch with ``update_store=True``
-    yields zero survivors) holds for the non-NULL-text rows only.
+    :func:`incremental_dedup` (exact mode) instead. Consequence: a LATER
+    batch repeating a NULL-text document keeps it too — the store records
+    nothing for it.
 
     Each surviving document is emitted ONCE even when the feed delivered
     duplicate copies of the row (at-least-once delivery — the duprows
     soak): exact copies share an id and collapse to one row.
 
     ``src_batch`` (versioned mode): pass a MONOTONE batch id and the
-    operator becomes REPLAY-STABLE — the store append is stamped with the
-    id and the probe sees only strictly-earlier stamps (bootstrap rows
-    always), so re-running the same batch with the same id returns the
-    IDENTICAL survivor set instead of zero survivors. This is the
-    exactly-once-decisions contract the streaming wrapper
-    (:func:`..streaming.run_incremental_lsh_dedup_stream`) builds on;
-    implies ``update_store``.
+    survivors' buckets are appended to the store stamped with the id; the
+    probe sees only strictly-earlier stamps (bootstrap rows always), so
+    re-running the same batch with the same id returns the IDENTICAL
+    survivor set. This is the exactly-once-decisions contract the
+    streaming wrapper (:func:`..streaming.run_incremental_lsh_dedup_stream`)
+    builds on. Without ``src_batch`` the store is only probed.
 
     Data motion per batch at any corpus scale: the batch maps to
     ~24-byte ``(id, band, bucket)`` rows (text stays in the projection);
@@ -341,11 +339,7 @@ def incremental_lsh_dedup(
     banded = _minhash_rows(
         keyed, text_col, id_col, num_hashes, bands, shingle_n, hash_fn
     ).localCheckpoint(eager=True)
-    # src_batch (versioned mode) implies a store append: the stamp IS the
-    # replay-safety mechanism — see _probe_store
-    dropped = _banded_store_dropped(
-        spark, banded, store_path, update_store or src_batch is not None, src_batch
-    )
+    dropped = _banded_store_dropped(spark, banded, store_path, src_batch)
     survivors = keyed.join(
         dropped, keyed[id_col] == dropped["__id"], "left_anti"
     )
@@ -358,8 +352,7 @@ def _banded_store_dropped(
     spark: SparkSession,
     banded: DataFrame,
     store_path: str,
-    update_store: bool,
-    src_batch: int | None = None,
+    src_batch: int | None,
 ) -> DataFrame:
     """The shared banded-store decision core behind
     :func:`incremental_lsh_dedup` (MinHash bands over text) and
@@ -367,15 +360,14 @@ def _banded_store_dropped(
     given eagerly-checkpointed ``(__id, __band, __bucket)`` fan-out rows
     for the batch, return the CHECKPOINTED distinct set of dropped ids
     under the pairwise-greedy rule — any band bucket present in the
-    store, or holding a smaller batch id. With ``update_store`` the
-    survivors' buckets are appended first, so the append and the
-    caller's consumption share one evaluation of the decision.
+    store, or holding a smaller batch id.
 
-    ``src_batch``: the versioned probe (:func:`_probe_store`) plus a
-    stamped append. A replayed batch therefore reproduces IDENTICAL
-    decisions — versioned replays return the same survivors, where
-    unversioned replay returns zero new survivors (each doc hits its own
-    stored bands)."""
+    ``src_batch`` given: the versioned probe (:func:`_probe_store`) plus
+    an append of the survivors' buckets stamped with it, written before
+    returning so the append and the caller's consumption share one
+    evaluation of the decision. A replayed batch reproduces IDENTICAL
+    decisions: its own earlier append is invisible to its probe.
+    ``src_batch=None``: probe only."""
     from pyspark.sql import Window
 
     seen = _probe_store(spark, store_path, src_batch)
@@ -399,7 +391,7 @@ def _banded_store_dropped(
         dropped = killed_in_batch
     dropped = dropped.distinct().localCheckpoint(eager=True)
 
-    if update_store:
+    if src_batch is not None:
         survivors = banded.join(dropped, on="__id", how="left_anti")
         _write_store(
             _store_rows(_first_claims(survivors), src_batch),
@@ -462,21 +454,21 @@ def compact_band_store(
 ) -> int:
     """Compact an append-only store in place — any store of this module
     (fingerprint, MinHash or sign-LSH; they share one format): every
-    ``update_store=True`` batch appends ~one small file, so months of
+    versioned (``src_batch``) batch appends ~one small file, so months of
     daily batches leave thousands of KB-sized files whose per-file task +
     footer fetch eventually dominates the probe scan. One rewrite
     (:func:`..sources.sinks.compact_parquet_dir`) restores ~target-sized
     files.
 
     Pure layout change: the row multiset is untouched, so batch decisions
-    — and replay idempotence — are identical before and after
+    — and replay stability — are identical before and after
     (``tests/test_incremental_lsh.py`` proves it). Same single-writer
     assumption as the appends themselves: don't compact concurrently with
     a batch. Returns the post-compaction data-file count.
 
     ``src_batch`` is ALWAYS carried through the rewrite: files without
     the column read it as NULL and the rewrite writes the NULL column
-    back, which is decision-neutral for unversioned probes (they never
+    back, which is decision-neutral for probe-only batches (they never
     read the column) AND for a later versioned probe (explicit NULL ==
     absent == bootstrap-visible). Dropping it would make every stamped
     row bootstrap-visible and silently break the streaming wrappers'
@@ -509,7 +501,6 @@ def incremental_semantic_dedup(
     store_path: str,
     bands: int = 4,
     band_bits: int = 6,
-    update_store: bool = False,
     src_batch: int | None = None,
 ) -> DataFrame:
     """Incremental SEMANTIC dedup: batch vectors dropped when any of their
@@ -543,11 +534,9 @@ def incremental_semantic_dedup(
     banded = _sign_band_rows(
         keyed, id_col, vec_col, bands, band_bits
     ).localCheckpoint(eager=True)
-    # src_batch: versioned/replay-stable mode, identical contract to
-    # incremental_lsh_dedup's (monotone ids, implies update_store)
-    dropped = _banded_store_dropped(
-        spark, banded, store_path, update_store or src_batch is not None, src_batch
-    )
+    # src_batch: versioned/replay-stable append, incremental_lsh_dedup's
+    # contract (monotone ids); None probes only
+    dropped = _banded_store_dropped(spark, banded, store_path, src_batch)
     annotated = keyed.join(
         dropped, keyed[id_col] == dropped["__id"], "left"
     ).select(*keyed.columns, F.col("__id").isNotNull().alias("sem_removed"))

@@ -277,7 +277,7 @@ def ivf_topk(
     REPLAY SEMANTICS: every step is a per-ROW map/join — exact duplicate
     feed rows (at-least-once delivery) each probe and each candidate
     independently, so duplicated ids surface as duplicated result rows.
-    Dedup the feed first (``dedup.exact_dedup``) when ids may repeat;
+    Dedup the feed first (``dropDuplicates``) when ids may repeat;
     the q42 oracle replicates the per-row contract via the
     compute-per-distinct-then-join-back pattern (duprows soak).
 
@@ -756,20 +756,20 @@ def banded_sign_lsh_keys(
 
 
 def _bucket_removal_udf(id_col: str, threshold: float):
-    """Per-bucket removal scan for :func:`semantic_dedup`'s bucket
-    rescore: inside one (band, band_key) group, find every id that has a
+    """Per-bucket removal scan for :func:`semantic_dedup`'s rescore:
+    inside one (band, band_key) group, find every id that has a
     SMALLER-id partner with cosine >= threshold.
 
-    BIT-EXACT twin of the pair-mode Catalyst arithmetic: the JVM path is
-    ``try_divide(dot(a,b), norm(a)*norm(b)) >= t`` with left-to-right
-    fold order. Here the dot is accumulated ONE DIMENSION AT A TIME
-    across the whole pair block (``acc += Vi[:,d] * Vj[:,d]``) — each
-    pair's scalar sequence is the identical chain of IEEE mul/adds, and
-    the norm/divide/compare are single IEEE ops — so every threshold
-    comparison lands on the same side in both modes (the equality test
-    and q142's unchanged DuckDB oracle pin this). NaNs (NULL vector
-    elements) and zero denominators (zero-norm vectors) compare False =
-    never removed, matching try_divide's NULL.
+    BIT-EXACT with the Catalyst cosine
+    (:func:`..functions.cosine_similarity`:
+    ``try_divide(dot(a,b), norm(a)*norm(b))`` with left-to-right fold
+    order). Here the dot is accumulated ONE DIMENSION AT A TIME across
+    the whole pair block (``acc += Vi[:,d] * Vj[:,d]``) — each pair's
+    scalar sequence is the identical chain of IEEE mul/adds, and the
+    norm/divide/compare are single IEEE ops — so every threshold
+    comparison lands on the same side (q142's DuckDB oracle pins this).
+    NaNs (NULL vector elements) and zero denominators (zero-norm vectors)
+    compare False = never removed, matching try_divide's NULL.
 
     Pair blocks are row/column-chunked (2048²) so a pathological bucket
     cannot allocate an unbounded matrix.
@@ -783,10 +783,11 @@ def _bucket_removal_udf(id_col: str, threshold: float):
             return pd.DataFrame({id_col: pdf[id_col][:0]})
         # mixed DIMENSIONS inside one bucket (raggeddim: LSH signatures
         # from different model dims can collide): scan each dim class
-        # separately — cross-dim cosine is undefined and never removes,
-        # exactly the pair-mode twin's behavior (zip_with pads the
-        # shorter vector with NULLs → NULL sim → threshold False), and
-        # per-class matrices keep np.array rectangular.
+        # separately — cross-dim cosine is undefined and never removes
+        # (as in cosine_similarity, where zip_with pads the shorter vector
+        # with NULLs → NULL sim → threshold False, and in q142's
+        # same-length guard), and per-class matrices keep np.array
+        # rectangular.
         lens = pdf["__vd"].map(len)
         if lens.nunique() > 1:
             parts = [scan(pdf[lens == d]) for d in sorted(lens.unique())]
@@ -829,172 +830,62 @@ def semantic_dedup(
     threshold: float = 0.45,
     bands: int = 4,
     band_bits: int = 4,
-    blocking: str = "lsh",
-    clusters: int = 8,
-    kmeans_iters: int = 3,
-    rescore: str = "bucket",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): a vector
     is REMOVED when some candidate with a SMALLER id has cosine similarity
     ≥ ``threshold`` — keep-earliest, so the kept set is deterministic and
     order-free.
 
-    ``blocking`` picks the candidate generator; the rescore/threshold/
-    keep-earliest semantics are identical either way:
+    One blocking, one rescore:
 
-    - ``"lsh"`` (default): :func:`banded_sign_lsh_keys` — pairs sharing
-      any band key. Deterministic and oracle-checkable (q142); pairs the
-      banding misses are the documented approximation, tunable via
-      bands/band_bits.
-    - ``"kmeans"``: the published SemDeDup shape — vectors block by
-      their k-means cluster (``clusters``/``kmeans_iters``;
-      :func:`kmeans`'s assignment step reads the centroids as a one-row
-      model relation, so assignment is MAP-SIDE) and only same-cluster
-      pairs rescore. Right for trained
-      embeddings where clusters capture semantics; iterative → not
-      oracle-expressible (property-tested equality vs the exact variant
-      on planted duplicates instead).
-
-    Use :func:`blocked_all_pairs_cosine` for the exact variant at oracle
-    scale.
-
-    ``rescore`` picks the physical verification strategy — SAME removal
-    set either way (bit-identical threshold comparisons; see
-    :func:`_bucket_removal_udf` and the equality test):
-
-    - ``"bucket"`` (default since round 10): vectors ride the blocking
-      exchange ONCE PER BAND/cluster (a bands-bounded, fan-out-free
-      replication) and each bucket's pairs are scanned by an
-      Arrow-batched numpy kernel that replicates the Catalyst fold order
-      exactly. Candidate PAIRS never carry vectors. Found necessary by
-      the second-decade lane: at sf10 (200k vectors, ~86M candidate
-      pairs) the pair-mode rescore joins pushed ~45 GB of vector-carrying
-      pair rows through the shuffle and fell off the memory cliff —
-      219 s (after spilling past the disk entirely at fixed banding);
-      bucket mode moves ~0.4 GB and runs the same step in seconds.
-      A pair appearing in several bands rescored once per band — harmless
-      (removal is an EXISTS; results distinct'd).
-    - ``"pair"``: the round-9 shape — distinct the (ida, idb) pair set,
-      then re-join each side's vector by id. Fine while the pair set is
-      small enough that pairs×dim fits comfortably in executor memory;
-      kept as the cross-check twin and for oracle-shaped debugging.
+    - Blocking: :func:`banded_sign_lsh_keys` — candidates are the pairs
+      sharing any band key. Deterministic and oracle-checkable (q142's
+      DuckDB oracle grades this exact path); pairs the banding misses are
+      the documented approximation, tunable via bands/band_bits. It stands
+      in for SemDeDup's k-means clusters, which are iterative and not
+      oracle-expressible. Use :func:`blocked_all_pairs_cosine` for the
+      exact variant at oracle scale.
+    - Rescore: vectors ride the blocking exchange ONCE PER BAND (a
+      bands-bounded, fan-out-free replication) and each bucket's pairs
+      are scanned by an Arrow-batched numpy kernel
+      (:func:`_bucket_removal_udf`) that replicates the Catalyst fold
+      order exactly. Candidate PAIRS never carry vectors. Why this kernel
+      and not a pair-set rescore (distinct the candidate pairs, re-join
+      each side's vector by id): at sf10 (200k vectors, ~86M candidate
+      pairs) those vector-carrying pair joins pushed ~45 GB through the
+      shuffle and fell off the memory cliff — 219 s, after spilling past
+      the disk at fixed banding; the bucket kernel moves ~0.4 GB and runs
+      the same step in seconds. A pair appearing in several bands is
+      rescored once per band — harmless (removal is an EXISTS; results
+      distinct'd).
 
     Returns the input plus a ``sem_removed`` boolean — every row is
     accounted for (quarantine-style observability, q140 pattern).
 
-    Scale shape (bucket mode): the blocking exchange carries
-    (id, band, key, vector) rows — bands× the corpus, the operator's
-    whole data motion (whitelisted in the wide-payload audit with the
-    q41/q57 bounded-replication reasoning); zero-norm vectors get NULL
-    cosine (try_divide) and are never removed, matching DuckDB. Real
+    Scale shape: the blocking exchange carries (id, band, key, vector)
+    rows — bands× the corpus, the operator's whole data motion
+    (whitelisted in the wide-payload audit with the q41/q57
+    bounded-replication reasoning); zero-norm vectors get NULL cosine
+    (NaN in the kernel) and are never removed, matching DuckDB. Real
     deployments run threshold 0.9+ on trained embeddings; the default is
     calibrated to this repo's synthetic near-uniform vectors. Size
     ``band_bits`` with :func:`sized_band_bits` — candidate volume is
     quadratic in bucket occupancy, and a FIXED key space saturates as
     the corpus grows (the round-10 second-decade lesson).
     """
-    if blocking not in ("lsh", "kmeans"):
-        raise ValueError(f"blocking must be 'lsh' or 'kmeans', got {blocking!r}")
-    if rescore not in ("bucket", "pair"):
-        raise ValueError(f"rescore must be 'bucket' or 'pair', got {rescore!r}")
+    from pyspark.sql.types import StructField, StructType
 
-    if rescore == "bucket":
-        from pyspark.sql.types import StructField, StructType
-
-        if blocking == "lsh":
-            # r13: the vector rides the band explode (keep_vec) instead of
-            # re-attaching by an id equi-join — the join broadcast only at
-            # test SF; at scale it was a second corpus shuffle (by id) on
-            # top of the whitelisted band-group one.
-            kv = banded_sign_lsh_keys(
-                vectors, id_col, vec_col, bands, band_bits, keep_vec=True
-            )
-            group_cols = ["band", "band_key"]
-        else:
-            # only the kmeans branch needs the id->vector re-attach; in the
-            # lsh branch the vector rides the band explode (keep_vec) and a
-            # top-level vproj would be dead code (ADVICE r13)
-            vproj = vectors.select(
-                F.col(id_col), as_double_array(F.col(vec_col)).alias("__vd")
-            )
-            assignments, _ = kmeans(
-                vectors, id_col, vec_col, k=clusters, iters=kmeans_iters
-            )
-            kv = assignments.withColumnRenamed("id", id_col).join(vproj, id_col)
-            group_cols = ["cluster"]
-        out_schema = StructType([StructField(id_col, vectors.schema[id_col].dataType)])
-        removed = (
-            kv.groupBy(*group_cols)
-            .applyInPandas(
-                _bucket_removal_udf(id_col, threshold), schema=out_schema
-            )
-            .distinct()
-        )
-        marker = removed.withColumn("__rm", F.lit(True))
-        return (
-            vectors.join(marker, id_col, "left")
-            .withColumn("sem_removed", F.coalesce(F.col("__rm"), F.lit(False)))
-            .drop("__rm")
-        )
-
-    if blocking == "lsh":
-        # the key frame is consumed by BOTH self-join sides: materialize it
-        # once (localCheckpoint, the q136 shared-subtree pattern) so the
-        # bands×band_bits sin-weighted plane folds — the heaviest map
-        # compute in this operator — run one time, not per branch. The
-        # checkpoint holds (id, band, band_key) 16-byte rows only.
-        keys = banded_sign_lsh_keys(
-            vectors, id_col, vec_col, bands, band_bits
-        ).localCheckpoint(eager=False)
-        a = keys.select(F.col(id_col).alias("__ida"), "band", "band_key")
-        b = keys.select(F.col(id_col).alias("__idb"), "band", "band_key")
-        cand = (
-            a.join(b, ["band", "band_key"])
-            .filter(F.col("__ida") < F.col("__idb"))
-            .select("__ida", "__idb")
-            .distinct()
-        )
-    else:
-        assignments, _ = kmeans(vectors, id_col, vec_col, k=clusters, iters=kmeans_iters)
-        a = assignments.select(F.col("id").alias("__ida"), "cluster")
-        b = assignments.select(F.col("id").alias("__idb"), "cluster")
-        # one cluster per id -> pair set is already distinct
-        cand = (
-            a.join(b, "cluster")
-            .filter(F.col("__ida") < F.col("__idb"))
-            .select("__ida", "__idb")
-        )
-    # Precompute each vector's L2 norm ONCE (per vector, not per pair):
-    # the rescore then costs one interpreted HOF aggregate per pair (the
-    # dot) instead of three. try_divide(dot, na*nb) is the exact same
-    # arithmetic cosine_similarity performs per pair — same values, same
-    # fold order, so the threshold comparison is bit-identical.
-    # NOTE: the rescore sides deliberately re-derive from the parquet scan
-    # (NOT a shared localCheckpoint): checkpointing would erase the scan
-    # statistics Catalyst uses to broadcast these |V|-bounded joins, and
-    # an RDD-scan join side defaults to "huge" — turning the rescores into
-    # vector-carrying shuffles (the exact shape plans.wide_shuffle_sites
-    # forbids). Re-reading the column-pruned (id, vector) projection twice
-    # costs two O(|V|·dim) map passes; each side computes its own norm.
-    va = vectors.select(
-        F.col(id_col).alias("__ida"),
-        as_double_array(F.col(vec_col)).alias("__va"),
-    ).withColumn("__na", l2_norm(F.col("__va")))
-    vb = vectors.select(
-        F.col(id_col).alias("__idb"),
-        as_double_array(F.col(vec_col)).alias("__vb"),
-    ).withColumn("__nb", l2_norm(F.col("__vb")))
+    # the vector rides the band explode (keep_vec) instead of re-attaching
+    # by an id equi-join — the join broadcast only at test SF; at scale it
+    # was a second corpus shuffle (by id) on top of the whitelisted
+    # band-group one
+    kv = banded_sign_lsh_keys(
+        vectors, id_col, vec_col, bands, band_bits, keep_vec=True
+    )
+    out_schema = StructType([StructField(id_col, vectors.schema[id_col].dataType)])
     removed = (
-        cand.join(va, "__ida")
-        .join(vb, "__idb")
-        .filter(
-            F.try_divide(
-                dot_product(F.col("__va"), F.col("__vb")),
-                F.col("__na") * F.col("__nb"),
-            )
-            >= threshold
-        )
-        .select(F.col("__idb").alias(id_col))
+        kv.groupBy("band", "band_key")
+        .applyInPandas(_bucket_removal_udf(id_col, threshold), schema=out_schema)
         .distinct()
     )
     marker = removed.withColumn("__rm", F.lit(True))

@@ -13,10 +13,6 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 
 
-def ordered(df: DataFrame, order_by: Sequence[Column]) -> DataFrame:
-    return df.orderBy(*order_by)
-
-
 def top_k(df: DataFrame, order_by: Sequence[Column], k: int) -> DataFrame:
     """Total order must include a unique tie-break column so the selected
     k rows are deterministic (SURVEY.md §2.3 rule 3)."""

@@ -129,7 +129,7 @@ def doc_fingerprint(text_col: Column | str, hash_fn: str = "xxhash64") -> Column
     the 60-bit cross-engine :func:`functions.portable_hash60`
     (``hash_fn="portable"`` — exactly computable in a DuckDB oracle). For a
     shift-robust variant combine with rolling-window shingles (see
-    operators.dedup.simhash64)."""
+    operators.dedup.simhash_fingerprints)."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     if hash_fn == "portable":
         return portable_hash60(c)

@@ -59,19 +59,6 @@ def running(df: DataFrame, expr: Column, partition_by: Sequence[str], order_by: 
     return df.withColumn(alias, expr.over(w))
 
 
-def sliding(
-    df: DataFrame,
-    expr: Column,
-    partition_by: Sequence[str],
-    order_by: Sequence[Column],
-    preceding: int,
-    alias: str,
-) -> DataFrame:
-    """ROWS <preceding> PRECEDING .. CURRENT ROW sliding aggregate."""
-    w = spec(partition_by, order_by).rowsBetween(-preceding, Window.currentRow)
-    return df.withColumn(alias, expr.over(w))
-
-
 def groups_between(
     df: DataFrame,
     aggs: dict[str, Column],

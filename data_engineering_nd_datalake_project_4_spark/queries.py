@@ -37,7 +37,6 @@ from data_engineering_nd_datalake_project_4_spark.functions import (
     dec,
     dec4,
     dec4_sum_d,
-    dec_sum,
     dec_sum_d,
     tokens,
     weekday_monday,
@@ -5244,9 +5243,10 @@ def q141_duplicate_spans(spark, sf_dir):
     "banded sign-LSH (4 bands x 6 bits of deterministic sin() planes — "
     "the MinHash-banding construction on the angular metric, standing in "
     "for SemDeDup's k-means clusters but deterministic and "
-    "oracle-checkable). The candidate join shuffles 16-byte (id, band, "
-    "key) rows, never vectors; vectors re-join ONCE per pair side for the "
-    "rescore; zero-norm vectors get NULL cosine and are never removed. "
+    "oracle-checkable). Vectors ride the band exchange once per band and "
+    "each bucket is rescored by a numpy kernel bit-exact with the Catalyst "
+    "cosine, so candidate pairs never carry vectors; zero-norm vectors get "
+    "NULL cosine and are never removed. "
     "Every input row is accounted for (kept/removed status). Real "
     "deployments run threshold 0.9+; 0.45 is calibrated to this repo's "
     "synthetic near-uniform embeddings so removals actually fire",
@@ -6659,8 +6659,8 @@ def q170_incremental_semantic_dedup(spark, sf_dir):
     "corpus < 250 bootstraps the band store; batch 0 (250-374) runs at "
     "src_batch=0, batch 1 (>= 375) at src_batch=1 and is then REPLAYED at "
     "the same id — the emitted batch-1 survivors come from the REPLAY, so "
-    "the oracle match proves replay stability end-to-end (an unversioned "
-    "replay would emit zero non-NULL survivors). Batch-1 decisions see "
+    "the oracle match proves replay stability end-to-end (a replay that "
+    "saw its own append would emit zero non-NULL survivors). Batch-1 decisions see "
     "corpus bands plus batch-0 SURVIVOR bands (stamp 0 < 1) but never "
     "batch 1's own appended stamp. Pure SQL twin: layered pairwise-greedy "
     "rule, batch-0 survivor bands as the only cross-batch state",
@@ -6734,8 +6734,8 @@ def q171_versioned_lsh_dedup_replay(spark, sf_dir):
     "(250-374) runs at src_batch=0, batch 1 (>= 375) at src_batch=1 and "
     "is then REPLAYED at the same id — the emitted batch-1 survivors come "
     "from the REPLAY, so the oracle match proves the exactly-once replay "
-    "contract end-to-end (an unversioned replay would emit zero "
-    "survivors: each doc hits its own stored fingerprint). NULL-text docs "
+    "contract end-to-end (a replay that saw its own append would emit "
+    "zero survivors: each doc hits its own stored fingerprint). NULL-text docs "
     "form ONE dedup class in exact mode (xxhash64(NULL) = seed; the "
     "round-5 trap, handled via IS NOT DISTINCT FROM in the oracle) — "
     "unlike LSH's NULL pass-through. Oracle: layered NULL-safe anti-joins "

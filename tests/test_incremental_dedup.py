@@ -1,7 +1,7 @@
 """Incremental dedup vs a persisted fingerprint store: equivalence to
-full-corpus dedup, idempotence of store updates, canonical-mode
-permutation capture. The store layout and its scan pruning are tested
-for every store kind in test_incremental_lsh.py."""
+full-corpus dedup, versioned store appends, canonical-mode permutation
+capture. The store layout and its probe are tested for every store kind
+in test_incremental_lsh.py."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_nd_datalake_project_4_spark.operators import incremental
-from data_engineering_nd_datalake_project_4_spark.operators.dedup import exact_dedup_by_hash
 
 
 @pytest.fixture()
@@ -50,44 +49,22 @@ def test_equivalent_to_full_dedup(spark, corpus_and_batch, tmp_path):
     survivors = incremental.incremental_dedup(
         spark, batch, "text", "doc_id", store
     )
-    full = exact_dedup_by_hash(
-        corpus.unionByName(batch), "text", keep_order_cols=[F.col("doc_id")]
-    )
-    assert sorted(_ids(corpus) + _ids(survivors)) == _ids(full)
+    # the model: the minimum doc_id per distinct text over corpus ∪ batch
+    first_per_text: dict[str, int] = {}
+    for r in corpus.unionByName(batch).collect():
+        t, i = r["text"], r["doc_id"]
+        first_per_text[t] = min(first_per_text.get(t, i), i)
+    assert sorted(_ids(corpus) + _ids(survivors)) == sorted(first_per_text.values())
     # exact mode: 100/101 (corpus dups) and 105 (in-batch dup) dropped;
     # the permutation 106 and empty 108 survive
     assert _ids(survivors) == [102, 103, 104, 106, 107, 108, 109]
 
 
-def test_update_store_is_idempotent(spark, corpus_and_batch, tmp_path):
-    corpus, batch = corpus_and_batch
-    store = str(tmp_path / "store")
-    incremental.build_fingerprint_store(corpus, "text", "doc_id", store)
-    first = incremental.incremental_dedup(
-        spark, batch, "text", "doc_id", store, update_store=True
-    )
-    # the survivor plan anti-joins the PRE-append store snapshot (pinned
-    # file listing): collecting after the append must NOT return empty
-    assert _ids(first) == [102, 103, 104, 106, 107, 108, 109]
-    replay = incremental.incremental_dedup(
-        spark, batch, "text", "doc_id", store
-    )
-    assert _ids(replay) == []
-    # a later batch still dedups against both corpus and first-batch docs
-    batch2 = spark.createDataFrame(
-        [(200, "fresh text one"), (201, "genuinely new")],
-        "doc_id LONG, text STRING",
-    )
-    assert _ids(
-        incremental.incremental_dedup(spark, batch2, "text", "doc_id", store)
-    ) == [201]
-
-
 def test_nondeterministic_batch_store_matches_survivors(spark, tmp_path):
     """A nondeterministic upstream batch (sampled feed) must append to the
-    store EXACTLY the fingerprints of the survivors it returns — the plan
-    is persisted + checkpointed so its three consumers (touched-bucket
-    collect, store append, returned rows) share one evaluation (ADVICE r4).
+    store EXACTLY the fingerprints of the survivors it returns — the batch
+    and the survivor set are checkpointed so the in-batch window, the
+    store append and the returned rows share one evaluation (ADVICE r4).
     """
     import random
 
@@ -105,7 +82,7 @@ def test_nondeterministic_batch_store_matches_survivors(spark, tmp_path):
     )
     before = {r["bucket"] for r in spark.read.parquet(store).select("bucket").collect()}
     survivors = incremental.incremental_dedup(
-        spark, batch, "text", "doc_id", store, update_store=True
+        spark, batch, "text", "doc_id", store, src_batch=1
     )
     got_fps = {
         r["fp"]
@@ -150,7 +127,8 @@ def test_unknown_mode_raises(spark, corpus_and_batch, tmp_path):
 def test_streaming_ingest_with_incremental_dedup(spark, tmp_path):
     """The production composition: a file stream ingested via foreachBatch,
     each micro-batch incrementally deduped against the fingerprint store
-    (update_store=True) and survivors appended to the corpus. Across three
+    (versioned: src_batch = 1, 2, 3) and survivors appended to the corpus.
+    Across three
     micro-batches with intra- and inter-batch duplicates, the corpus must
     equal a from-scratch batch dedup of all input."""
     import os
@@ -178,7 +156,7 @@ def test_streaming_ingest_with_incremental_dedup(spark, tmp_path):
 
     def ingest(batch_df, batch_id):
         survivors = incremental.incremental_dedup(
-            spark, batch_df, "text", "doc_id", store, update_store=True
+            spark, batch_df, "text", "doc_id", store, src_batch=batch_id + 1
         )
         survivors.write.mode("append").parquet(corpus)
 

@@ -1,6 +1,6 @@
 """Incremental MinHash-LSH near-dedup vs a persisted band-bucket store:
-equivalence to the band-candidate rule computed from scratch, idempotent
-store replay, NULL-text pass-through, empty-corpus store, duplicate feed
+equivalence to the band-candidate rule computed from scratch, NULL-text
+pass-through, empty-corpus store, duplicate feed
 rows, multi-batch sequencing; and, for every store kind (fingerprint,
 MinHash, sign-LSH), the one flat layout, its zero-job probe and its
 compaction."""
@@ -105,26 +105,6 @@ def test_equivalent_to_band_candidate_rule(spark, corpus_and_batch, tmp_path):
     assert {102, 103, 107, 109} <= set(got)   # fresh docs survive
 
 
-def test_update_store_replay_is_idempotent(spark, corpus_and_batch, tmp_path):
-    corpus, batch = corpus_and_batch
-    store = str(tmp_path / "store")
-    incremental.build_band_store(corpus, "text", "doc_id", store, **_KW)
-    first = _ids(
-        incremental.incremental_lsh_dedup(
-            spark, batch, "text", "doc_id", store, update_store=True, **_KW
-        )
-    )
-    replay = _ids(
-        incremental.incremental_lsh_dedup(
-            spark, batch, "text", "doc_id", store, update_store=True, **_KW
-        )
-    )
-    # every non-NULL-text survivor's buckets are now in the store; only the
-    # documented NULL-text pass-through re-survives
-    assert replay == [108]
-    assert 108 in first
-
-
 def test_multi_batch_sequencing(spark, corpus_and_batch, tmp_path):
     """A second batch near-dup of a FIRST-batch survivor is dropped: the
     store accumulated the survivors' band buckets."""
@@ -132,7 +112,7 @@ def test_multi_batch_sequencing(spark, corpus_and_batch, tmp_path):
     store = str(tmp_path / "store")
     incremental.build_band_store(corpus, "text", "doc_id", store, **_KW)
     first = incremental.incremental_lsh_dedup(
-        spark, batch, "text", "doc_id", store, update_store=True, **_KW
+        spark, batch, "text", "doc_id", store, src_batch=1, **_KW
     )
     assert 102 in _ids(first)
     batch2 = spark.createDataFrame(
@@ -192,8 +172,8 @@ def test_duplicate_feed_rows_emit_once(spark, corpus_and_batch, tmp_path):
 def test_streaming_ingest_with_incremental_lsh_dedup(spark, tmp_path):
     """The production composition (q130's streaming test, near-dup twin):
     a file stream ingested via foreachBatch, each micro-batch deduped
-    against the band store (update_store=True) and survivors appended to
-    the corpus. Token-disjoint base texts make every planted relation an
+    against the band store (versioned: src_batch = 1, 2, 3) and survivors
+    appended to the corpus. Token-disjoint base texts make every planted relation an
     exact copy, so the pairwise-greedy rule's expectations are
     deterministic: first occurrence wins within and across batches."""
     import os
@@ -224,7 +204,7 @@ def test_streaming_ingest_with_incremental_lsh_dedup(spark, tmp_path):
 
     def ingest(batch_df, batch_id):
         survivors = incremental.incremental_lsh_dedup(
-            spark, batch_df, "text", "doc_id", store, update_store=True, **_KW
+            spark, batch_df, "text", "doc_id", store, src_batch=batch_id + 1, **_KW
         )
         survivors.write.mode("append").parquet(corpus)
 
@@ -315,14 +295,17 @@ def test_semantic_equivalent_to_band_rule(spark, vec_corpus_and_batch, tmp_path)
 
 
 def test_semantic_replay_idempotent(spark, vec_corpus_and_batch, tmp_path):
+    """Once a versioned batch has appended, the same vectors fed again by a
+    later probe are all store hits — except the NULL vector, which is never
+    recorded."""
     corpus, batch = vec_corpus_and_batch
     store = str(tmp_path / "store")
     incremental.build_sign_band_store(corpus, "vec_id", "embedding", store, **_SKW)
     incremental.incremental_semantic_dedup(
-        spark, batch, "vec_id", "embedding", store, update_store=True, **_SKW
+        spark, batch, "vec_id", "embedding", store, src_batch=1, **_SKW
     ).collect()
     replay = incremental.incremental_semantic_dedup(
-        spark, batch, "vec_id", "embedding", store, update_store=True, **_SKW
+        spark, batch, "vec_id", "embedding", store, **_SKW
     )
     # every non-NULL survivor's keys are now stored: only NULL re-survives
     kept = sorted(r["vec_id"] for r in replay.collect() if not r["sem_removed"])
@@ -362,7 +345,7 @@ def test_semantic_degenerate_vectors_pass_through(spark, vec_corpus_and_batch, t
         "vec_id LONG, embedding ARRAY<DOUBLE>",
     )
     out = incremental.incremental_semantic_dedup(
-        spark, batch, "vec_id", "embedding", store, update_store=True, **_SKW
+        spark, batch, "vec_id", "embedding", store, src_batch=1, **_SKW
     )
     got = {r["vec_id"]: r["sem_removed"] for r in out.collect()}
     assert got == {200: False, 201: False, 202: False, 203: True}
@@ -458,7 +441,7 @@ def _new_job_ids(spark, fn):
 
 
 def test_probe_store_runs_no_job(spark, corpus_and_batch, tmp_path):
-    """The probe only plans a two-column scan: building it, unversioned or
+    """The probe only plans a two-column scan: building it, probe-only or
     versioned, starts no Spark job, and it still returns every stored
     ``(band, bucket)`` the stamp filter admits."""
     corpus, batch = corpus_and_batch
@@ -492,14 +475,14 @@ def _data_files(store):
 
 def test_compact_band_store_preserves_rows_and_replay(spark, corpus_and_batch, tmp_path):
     """Compaction is a pure layout change: row multiset identical, the
-    small store comes back as one flat file, and replay idempotence holds
-    ACROSS the compaction — the store a batch appended to yesterday
-    answers identically after tonight's compaction."""
+    small store comes back as one flat file, and decisions hold ACROSS
+    the compaction — the store a batch appended to yesterday answers
+    identically after tonight's compaction."""
     corpus, batch = corpus_and_batch
     store = str(tmp_path / "store")
     incremental.build_band_store(corpus, "text", "doc_id", store, **_KW)
     incremental.incremental_lsh_dedup(
-        spark, batch, "text", "doc_id", store, update_store=True, **_KW
+        spark, batch, "text", "doc_id", store, src_batch=1, **_KW
     ).collect()
     before_rows = _store_rows(spark, store)
     before_files = len(_data_files(store))
@@ -508,10 +491,11 @@ def test_compact_band_store_preserves_rows_and_replay(spark, corpus_and_batch, t
     assert before_files > 1
     assert len(_data_files(store)) == n_after == 1           # KBs: one file
     assert not [p for p in Path(store).iterdir() if p.is_dir()]  # still flat
-    # replay across the compaction: only the NULL-text pass-through survives
+    # the batch probed again across the compaction: only the NULL-text
+    # pass-through survives
     replay = _ids(
         incremental.incremental_lsh_dedup(
-            spark, batch, "text", "doc_id", store, update_store=True, **_KW
+            spark, batch, "text", "doc_id", store, **_KW
         )
     )
     assert replay == [108]
@@ -567,12 +551,12 @@ def test_compact_band_store_dedup_exact_reclaims_replay_duplicates(
 
 def test_compact_band_store_semantic_replay(spark, vec_corpus_and_batch, tmp_path):
     """The sign-LSH store compaction twin: decisions identical across the
-    compaction (update_store batch → compact → replay keeps only NULL)."""
+    compaction (versioned batch → compact → probe keeps only NULL)."""
     corpus, batch = vec_corpus_and_batch
     store = str(tmp_path / "store")
     incremental.build_sign_band_store(corpus, "vec_id", "embedding", store, **_SKW)
     incremental.incremental_semantic_dedup(
-        spark, batch, "vec_id", "embedding", store, update_store=True, **_SKW
+        spark, batch, "vec_id", "embedding", store, src_batch=1, **_SKW
     ).collect()
     before_rows = _store_rows(spark, store)
     incremental.compact_band_store(spark, store)
@@ -586,21 +570,19 @@ def test_compact_band_store_semantic_replay(spark, vec_corpus_and_batch, tmp_pat
 
 def test_compact_fingerprint_store(spark, corpus_and_batch, tmp_path):
     """The exact-dedup (one-band) store compacts with compact_band_store:
-    rows unchanged, replay still yields zero new survivors for non-NULL
-    text."""
+    rows unchanged, and probing the batch again still yields zero new
+    survivors."""
     corpus, batch = corpus_and_batch
     store = str(tmp_path / "store")
     incremental.build_fingerprint_store(corpus, "text", "doc_id", store)
     incremental.incremental_dedup(
-        spark, batch, "text", "doc_id", store, update_store=True
+        spark, batch, "text", "doc_id", store, src_batch=1
     ).collect()
     before_rows = _store_rows(spark, store)
     assert before_rows and {r[0] for r in before_rows} == {0}  # one band
     incremental.compact_band_store(spark, store)
     assert _store_rows(spark, store) == before_rows
-    replay = incremental.incremental_dedup(
-        spark, batch, "text", "doc_id", store, update_store=True
-    )
+    replay = incremental.incremental_dedup(spark, batch, "text", "doc_id", store)
     # exact mode HAS a NULL class (xxhash64(NULL)=seed): replay yields zero
     assert replay.count() == 0
 
@@ -639,7 +621,7 @@ def test_compact_band_store_crash_windows(spark, corpus_and_batch, tmp_path):
     store = str(tmp_path / "store")
     incremental.build_band_store(corpus, "text", "doc_id", store, **_KW)
     incremental.incremental_lsh_dedup(
-        spark, batch, "text", "doc_id", store, update_store=True, **_KW
+        spark, batch, "text", "doc_id", store, src_batch=1, **_KW
     ).collect()
     baseline_rows = _store_rows(spark, store)
 

@@ -12,8 +12,8 @@ from data_engineering_nd_datalake_project_4_spark.operators import dedup, simila
 from data_engineering_nd_datalake_project_4_spark.operators.dedup import (
     canonical_text_key,
     minhash_lsh_candidate_pairs,
-    simhash64,
 )
+from data_engineering_nd_datalake_project_4_spark.queries import REGISTRY
 
 
 def test_distinct_idempotent(spark, sf_dir):
@@ -43,9 +43,11 @@ def test_rollup_total_equals_plain_agg(spark, sf_dir):
 
 
 def test_exact_dedup_by_hash_equals_dropduplicates(spark, sf_dir):
+    """q33 counts distinct texts by their 8-byte xxhash64 (the NULL text
+    hashes to the seed: one class, as dropDuplicates keeps one NULL row)."""
     d = load_table(spark, sf_dir, "documents")
-    by_hash = dedup.exact_dedup_by_hash(d, "text", [F.asc("doc_id")])
-    assert by_hash.count() == d.dropDuplicates(["text"]).count()
+    by_hash = REGISTRY["q33_exact_dedup"].spark_fn(spark, sf_dir).first()["n_unique_texts"]
+    assert by_hash == d.dropDuplicates(["text"]).count()
 
 
 @pytest.fixture(scope="module")
@@ -154,7 +156,7 @@ def test_simhash_banding_equals_all_pairs(spark, sf_dir):
 
 def test_simhash_zero_distance_on_identical_token_sets(spark, sf_dir, planted_dup_pairs):
     d = load_table(spark, sf_dir, "documents")
-    fp = d.select("doc_id", simhash64(F.col("text"), shingle_n=1).alias("fp"))
+    fp = dedup.simhash_fingerprints(d, "text", "doc_id", shingle_n=1)
     a = fp.select(F.col("doc_id").alias("id_a"), F.col("fp").alias("fa"))
     b = fp.select(F.col("doc_id").alias("id_b"), F.col("fp").alias("fb"))
     ids = list({i for p in planted_dup_pairs for i in p})

@@ -70,60 +70,6 @@ def test_parameter_validation(spark):
         S.banded_sign_lsh_keys(df, band_bits=-1)
 
 
-def test_kmeans_blocking_equals_exact_on_planted(spark):
-    """The published SemDeDup shape: block by k-means cluster. On three
-    well-separated vector families with planted near-duplicates inside
-    each, the cluster blocking must produce EXACTLY the removal set of
-    the brute-force all-pairs rescore (duplicates always co-cluster:
-    the argmin assignment is deterministic and near-identical vectors
-    share it)."""
-    import itertools
-    import math
-
-    fams = {
-        0: [10.0, 0.0, 0.0, 1.0],
-        1: [0.0, 10.0, 0.0, -1.0],
-        2: [0.0, 0.0, 10.0, 0.5],
-    }
-    # ids interleave across families so kmeans' deterministic init (the k
-    # smallest ids) seeds one centroid per family — with all three seeds
-    # from one family Lloyd's can split that family across clusters and
-    # the blocking would miss pairs (standard k-means init sensitivity,
-    # not a blocking defect)
-    rows = []
-    vid = 0
-    for j in range(4):
-        for f, base in fams.items():
-            v = list(base)
-            v[3] += j * 1e-3  # near-dups within the family
-            rows.append((vid, v))
-            vid += 1
-    df = _vecs(spark, rows)
-    out = _status(
-        S.semantic_dedup(df, threshold=0.999, blocking="kmeans", clusters=3)
-    )
-
-    # exact removal set via brute force
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        return d / (math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(x * x for x in b)))
-
-    vec = dict(rows)
-    exact_removed = {
-        j for i, j in itertools.combinations(sorted(vec), 2) if cos(vec[i], vec[j]) >= 0.999
-    }
-    assert out == {i: (i in exact_removed) for i in vec}
-    # sanity: something actually got removed, and the earliest of each
-    # family survived
-    assert exact_removed and all(out[f] is False for f in fams)
-
-
-def test_blocking_validation(spark):
-    df = _vecs(spark, [(1, [1.0, 2.0])])
-    with pytest.raises(ValueError, match="blocking"):
-        S.semantic_dedup(df, blocking="ann")
-
-
 def test_sized_band_bits_discipline():
     """band_bits must grow ~log2(N) above the target occupancy and hold
     the floor below it — the sizing rule that keeps semantic-dedup
@@ -145,40 +91,10 @@ def test_sized_band_bits_discipline():
     assert S.sized_band_bits(10**12) >= S.sized_band_bits(10**9)
 
 
-def test_bucket_and_pair_rescore_identical(spark, sf_dir):
-    """The two rescore strategies are bit-identical in OUTCOME: the numpy
-    bucket kernel accumulates dots one dimension at a time, replicating
-    Catalyst's left-to-right fold per pair, so every threshold comparison
-    lands identically (this is what lets q142 keep its unchanged DuckDB
-    oracle after the r10 bucket-rescore switch). Checked for both
-    blockings on the real embeddings table."""
-    from data_engineering_nd_datalake_project_4_spark.catalog import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    for blocking in ("lsh", "kmeans"):
-        got = {}
-        for mode in ("bucket", "pair"):
-            out = S.semantic_dedup(
-                emb, threshold=0.45, bands=4, band_bits=6,
-                blocking=blocking, clusters=4, rescore=mode,
-            )
-            got[mode] = {
-                (r["vec_id"], r["sem_removed"])
-                for r in out.select("vec_id", "sem_removed").collect()
-            }
-        assert got["bucket"] == got["pair"], blocking
-
-
-def test_rescore_validation(spark):
-    df = _vecs(spark, [(1, [1.0, 2.0])])
-    with pytest.raises(ValueError, match="rescore"):
-        S.semantic_dedup(df, rescore="gpu")
-
-
 def test_bucket_rescore_empty_and_null_inputs(spark):
     """Empty frame -> typed empty result; NULL vectors are never removed
-    and never remove others (cosine NULL on the JVM side, NaN in the
-    bucket kernel — both compare False)."""
+    and never remove others (NaN in the bucket kernel compares False, as
+    the NULL cosine does in the oracle)."""
     from pyspark.sql.types import (
         ArrayType, FloatType, LongType, StructField, StructType,
     )
@@ -188,14 +104,14 @@ def test_bucket_rescore_empty_and_null_inputs(spark):
         StructField("embedding", ArrayType(FloatType())),
     ])
     empty = spark.createDataFrame([], schema)
-    out = S.semantic_dedup(empty, rescore="bucket")
+    out = S.semantic_dedup(empty)
     assert out.count() == 0 and "sem_removed" in out.columns
 
     rows = [(1, [1.0, 0.0]), (2, None), (3, [1.0, 0.0]), (4, [0.0, 0.0])]
     out = {r["vec_id"]: r["sem_removed"]
            for r in S.semantic_dedup(
                spark.createDataFrame(rows, schema),
-               threshold=0.99, band_bits=2, rescore="bucket"
+               threshold=0.99, band_bits=2
            ).collect()}
     assert out[3] is True       # exact duplicate of id 1
     assert out[2] is False      # NULL vector never removed
@@ -228,10 +144,3 @@ def test_mixed_dimension_contract(spark):
     assert got[3] is True                            # same-dim dup removed
     assert got[2] is False                           # prefix never cross-removes
     assert got[4] is False
-    # pair mode agrees (zip_with pads cross-dim pairs to NULL sim)
-    out2 = similarity.semantic_dedup(
-        spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>"),
-        "vec_id", "embedding", threshold=0.99, bands=4, band_bits=4,
-        rescore="pair",
-    )
-    assert {r["vec_id"]: r["sem_removed"] for r in out2.collect()} == got

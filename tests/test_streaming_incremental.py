@@ -38,11 +38,9 @@ def lsh_world(spark, tmp_path):
 
 
 def test_versioned_lsh_dedup_replay_stability(spark, lsh_world, tmp_path):
-    """The new contract vs plain update_store: a replayed batch with the
-    SAME src_batch reproduces the IDENTICAL survivor set (unversioned
-    replay yields zero non-NULL survivors — each doc hits its own stored
-    bands), and later batches decide the same whether or not the replay
-    happened (duplicate stamped rows are decision-neutral)."""
+    """A replayed batch with the SAME src_batch reproduces the IDENTICAL
+    survivor set, and later batches decide the same whether or not the
+    replay happened (duplicate stamped rows are decision-neutral)."""
     _, store = lsh_world
     b0 = spark.createDataFrame(
         [(100, _doc(0)),                 # dup of corpus -> dropped
@@ -78,11 +76,11 @@ def test_versioned_lsh_dedup_replay_stability(spark, lsh_world, tmp_path):
         spark, b2, "text", "doc_id", store, src_batch=2, **_KW))
     assert s2 == [301]
 
-    # and the versioned store still serves UNVERSIONED batch probes:
-    # unstamped mode sees every row (bootstrap + all stamps)
-    s2_replay_unversioned = _ids(incremental.incremental_lsh_dedup(
+    # and the versioned store still serves probe-only batches (no
+    # src_batch): they see every row (bootstrap + all stamps)
+    s2_probe_only = _ids(incremental.incremental_lsh_dedup(
         spark, b2, "text", "doc_id", store, **_KW))
-    assert s2_replay_unversioned == []  # both hit stored bands (301's own)
+    assert s2_probe_only == []  # both hit stored bands (301's own)
 
 
 def test_versioned_store_compaction_preserves_stamps(spark, lsh_world):
@@ -315,10 +313,9 @@ def test_lsh_stream_compact_every_is_decision_neutral(spark, tmp_path):
 def test_versioned_exact_dedup_replay_stability(spark, tmp_path):
     """Exact-fingerprint twin of the LSH versioned contract (q172): a
     replayed batch with the SAME src_batch reproduces the IDENTICAL
-    survivor set; unversioned replay yields zero; duplicate stamped rows
-    are decision-neutral for later batches; NULL-text docs form ONE
-    dedup class (xxhash64(NULL) = seed, unlike LSH pass-through); the
-    versioned store still serves unversioned probes."""
+    survivor set; duplicate stamped rows are decision-neutral for later
+    batches; NULL-text docs form ONE dedup class (xxhash64(NULL) = seed,
+    unlike LSH pass-through)."""
     corpus = spark.createDataFrame(
         [(i, _doc(i)) for i in range(10)], "doc_id LONG, text STRING"
     )
@@ -344,11 +341,9 @@ def test_versioned_exact_dedup_replay_stability(spark, tmp_path):
     s1 = _ids(incremental.incremental_dedup(
         spark, b1, "text", "doc_id", store, src_batch=1, **KW))
     assert s1 == [201]
-    # replay: identical survivors (unversioned replay would yield zero)
+    # replay: identical survivors
     assert _ids(incremental.incremental_dedup(
         spark, b1, "text", "doc_id", store, src_batch=1, **KW)) == s1
-    assert _ids(incremental.incremental_dedup(
-        spark, b1, "text", "doc_id", store, update_store=True, **KW)) == []
 
     # later batch decides the same despite the replay's duplicate rows
     b2 = spark.createDataFrame(

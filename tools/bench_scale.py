@@ -623,8 +623,7 @@ def run_incremental_dedup_scale(spark, reps: int) -> None:
             "batch_rows": batch.count(),
             "store_build_sec": build_sec,
             # count the LAST TIMED run's frame — never a fresh run_batch():
-            # a fresh invocation re-executes the whole operator (and would
-            # double-apply the batch if update_store were ever enabled here).
+            # a fresh invocation re-executes the whole operator.
             "survivors": last_surv.count(),
         }
         print(
@@ -655,18 +654,13 @@ def run_incremental_dedup_scale(spark, reps: int) -> None:
 
 
 def run_versioned_replay_scale(spark, reps: int) -> None:
-    """VERDICT r12 tasks 4+5: the versioned (src_batch-stamped) probe's
-    overhead vs the unversioned probe, plus store growth and reclaim
-    under sustained at-least-once replay, at the incremental lane's
-    scale points.
+    """The versioned (src_batch-stamped) first-delivery wall, plus store
+    growth and reclaim under sustained at-least-once replay, at the
+    incremental lane's scale points.
 
-    Overhead measurement (task 5): per point, per rep, FIRST DELIVERY of
-    the same 2000-doc batch against a fresh copy of the same corpus band
-    store — arm A unversioned (``update_store=True``), arm B versioned
-    (``src_batch=1``). Identical work modulo the stamp filter on the
-    store scan plus the literal stamp column in the append, so the
-    median delta IS the versioning cost (expected ~zero: the filter is a
-    pushable predicate over a 20 B/row hash store).
+    First-delivery measurement: per point, per rep, the same 2000-doc
+    batch at ``src_batch=1`` against a fresh copy of the same corpus band
+    store (probe, decision and stamped append).
 
     Growth measurement (task 4): on one versioned store, replay the same
     batch 3 extra times (the at-least-once worst case), recording store
@@ -713,49 +707,40 @@ def run_versioned_replay_scale(spark, reps: int) -> None:
             shutil.copytree(base, p)
             return p
 
-        def first_delivery(store: str, versioned: bool) -> float:
+        def first_delivery(store: str) -> float:
             t0 = time.perf_counter()
             surv = incremental.incremental_lsh_dedup(
-                spark, batch, "text", "doc_id", store,
-                **KW,
-                **({"src_batch": 1} if versioned else {"update_store": True}),
+                spark, batch, "text", "doc_id", store, src_batch=1, **KW
             )
             _run(surv.select("doc_id", "source"))
             return round(time.perf_counter() - t0, 3)
 
-        # one untimed warm-up pair (page cache + codegen), then interleaved reps
-        first_delivery(fresh("w_u"), False)
-        first_delivery(fresh("w_v"), True)
-        unv, ver = [], []
-        for i in range(reps):
-            unv.append(first_delivery(fresh(f"u{i}"), False))
-            ver.append(first_delivery(fresh(f"v{i}"), True))
-        unv.sort(); ver.sort()
-        m_unv, m_ver = unv[len(unv) // 2], ver[len(ver) // 2]
+        # one untimed warm-up (page cache + codegen), then the timed reps
+        first_delivery(fresh("w"))
+        ver = sorted(first_delivery(fresh(f"v{i}")) for i in range(reps))
+        m_ver = ver[len(ver) // 2]
 
         # growth + reclaim on one versioned store
         gstore = fresh("growth")
         rows = lambda: spark.read.schema(VSCHEMA).parquet(gstore).count()  # noqa: E731
         base_rows = rows()
-        first_delivery(gstore, True)
+        first_delivery(gstore)
         rows_per_delivery = [rows()]
         replay_walls = []
         for _ in range(3):
-            replay_walls.append(first_delivery(gstore, True))
+            replay_walls.append(first_delivery(gstore))
             rows_per_delivery.append(rows())
         appended = rows_per_delivery[0] - base_rows
         t0 = time.perf_counter()
         incremental.compact_band_store(spark, gstore, dedup_exact=True)
         compact_sec = round(time.perf_counter() - t0, 3)
         rows_after_compact = rows()
-        probe_after_compact = first_delivery(gstore, True)
+        probe_after_compact = first_delivery(gstore)
 
         entry[label] = {
             "corpus_rows": corpus.count(),
             "batch_rows": BATCH,
-            "unversioned_first_delivery_sec": {"median": m_unv, "samples": unv},
             "versioned_first_delivery_sec": {"median": m_ver, "samples": ver},
-            "versioned_overhead_x": round(m_ver / max(m_unv, 1e-9), 3),
             "store_rows_base": base_rows,
             "appended_rows_per_delivery": appended,
             "store_rows_per_delivery": rows_per_delivery,
@@ -766,8 +751,7 @@ def run_versioned_replay_scale(spark, reps: int) -> None:
         }
         print(
             f"[vrepl] {label}: corpus={entry[label]['corpus_rows']:,} "
-            f"unv={m_unv:.2f}s ver={m_ver:.2f}s "
-            f"(x{entry[label]['versioned_overhead_x']}) "
+            f"ver={m_ver:.2f}s "
             f"growth/delivery={appended:,} rows, compact→{rows_after_compact:,}",
             file=sys.stderr, flush=True,
         )
@@ -786,9 +770,9 @@ def run_versioned_replay_scale(spark, reps: int) -> None:
         res10["versioned_incremental_dedup"] = {"sf10": entry["sf10"]}
         with open("bench/results_sf10.json", "w") as f:
             json.dump(res10, f, indent=1)
-    worst = max(e["versioned_overhead_x"] for e in entry.values())
-    print(json.dumps({"metric": "versioned_probe_overhead_x",
-                      "value": worst, "unit": "x_worst_point"},
+    worst = max(e["versioned_first_delivery_sec"]["median"] for e in entry.values())
+    print(json.dumps({"metric": "versioned_first_delivery_sec",
+                      "value": worst, "unit": "s_worst_point"},
                      separators=(",", ":")))
 
 
@@ -1053,9 +1037,8 @@ def main() -> None:
     )
     ap.add_argument(
         "--versioned-replay", action="store_true",
-        help="versioned-vs-unversioned probe overhead + store growth/"
-        "reclaim under sustained replay (q171's operator; VERDICT r12 "
-        "tasks 4+5); merged into bench/results_sf1.json (+sf10 point "
+        help="versioned first-delivery wall + store growth/reclaim under "
+        "sustained replay (q171's operator); merged into bench/results_sf1.json (+sf10 point "
         "into results_sf10.json when materialized)",
     )
     ap.add_argument(
