@@ -103,27 +103,6 @@ def dec4_sum_d(expr: Column, alias: str) -> Column:
     return cents_sum_to_double(F.sum(cents(expr, 4)), 4).alias(alias)
 
 
-def portable_hash60(col: Column | str) -> Column:
-    """Cross-engine-exact 60-bit string hash: the first 15 hex chars of the
-    UTF-8 MD5 digest parsed as an integer. MD5 is a published standard, so
-    Spark ``conv(substring(md5(s),1,15),16,10)`` and DuckDB
-    ``CAST('0x' || substr(md5(s),1,15) AS BIGINT)`` produce the identical
-    BIGINT — the portable string-hash companion to the integer
-    ``packing.epoch_shuffle_key`` (both make sketch queries DuckDB-twin
-    checkable). 60 bits keeps every value positive and < 2^63 in both
-    engines (no sign / overflow divergence); NULL hashes to NULL (unlike
-    Spark ``xxhash64``, which skips NULL args — the round-5 NULL-class
-    trap). ~2-3× the cost of xxhash64 (full digest + hex parse): default
-    paths keep xxhash64, oracle-graded paths opt in.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
-
-#: DuckDB fragment twin of :func:`portable_hash60` — ``.format(x=expr)``.
-PORTABLE_HASH60_SQL = "CAST('0x' || substr(md5({x}), 1, 15) AS BIGINT)"
-
-
 def weekday_monday(date_col: Column | str) -> Column:
     """Monday=1..Sunday=7, the reference's formula ``((dayofweek+5)%7)+1``
     (/root/reference/etl.py:216). Equivalent to ISO dow."""

@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 
 from data_engineering_nd_datalake_project_4_spark.functions import (
     cosine_similarity,
-    portable_hash60,
     tokens,
 )
 from data_engineering_nd_datalake_project_4_spark.operators import ensure_map_parallelism
@@ -119,7 +118,6 @@ def minhash_band_rows(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """The banded-MinHash fan-out shared by :func:`minhash_lsh_candidate_
     pairs` (batch all-pairs) and :func:`incremental.incremental_lsh_dedup`
@@ -128,11 +126,10 @@ def minhash_band_rows(
     signature slice. Entirely map-side — the fan-out rows are ~24 bytes
     (two longs + an int); document text never leaves the projection.
 
-    ``hash_fn``: ``"xxhash64"`` (fastest; engine-internal) or ``"portable"``
-    (:func:`functions.portable_hash60` — MD5-derived, bit-identical in
-    DuckDB, so downstream results are exactly oracle-checkable). NULL text
-    hashes to NULL under portable (vs xxhash64's NULL→seed class) — filter
-    NULLs upstream when the NULL class must not bucket together.
+    Strings hash with ``xxhash64``; the DuckDB oracles recompute it with a
+    pure-SQL XXH64 twin, so every bucket is exactly oracle-checkable. NULL
+    text hashes to the seed like any xxhash64 argument — filter NULLs
+    upstream when the NULL class must not bucket together.
     """
     if bands <= 0 or num_hashes % bands != 0:
         raise ValueError(
@@ -141,9 +138,6 @@ def minhash_band_rows(
             "in one bucket (O(N^2) candidates); a ragged split silently drops "
             "trailing signature rows"
         )
-    if hash_fn not in ("xxhash64", "portable"):
-        raise ValueError(f"hash_fn must be 'xxhash64' or 'portable', got {hash_fn!r}")
-    str_hash = F.xxhash64 if hash_fn == "xxhash64" else portable_hash60
     rows_per_band = num_hashes // bands
     # the signature build is the cost center — make sure it doesn't run on
     # a single unsplittable input partition (no-op at scale)
@@ -169,7 +163,7 @@ def minhash_band_rows(
     )
     hashed = shingled.select(
         "__id",
-        F.transform(F.col("__sh"), lambda s: F.pmod(str_hash(s), F.lit(M))).alias("__h"),
+        F.transform(F.col("__sh"), lambda s: F.pmod(F.xxhash64(s), F.lit(M))).alias("__h"),
     )
     signed = hashed.select(
         "__id",
@@ -190,7 +184,7 @@ def minhash_band_rows(
         F.posexplode(
             F.array(
                 *[
-                    str_hash(
+                    F.xxhash64(
                         F.array_join(
                             F.transform(
                                 F.slice(F.col("__sig"), b * rows_per_band + 1, rows_per_band),
@@ -215,7 +209,6 @@ def minhash_lsh_candidate_pairs(
     bands: int = 8,
     shingle_n: int = 3,
     max_bucket_size: int | None = None,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """LSH banding: docs sharing any band of the MinHash signature become a
     candidate pair ``(id_a, id_b)`` with ``id_a < id_b``.
@@ -227,12 +220,8 @@ def minhash_lsh_candidate_pairs(
     oversized buckets before the join (standard practice: a bucket with
     thousands of members is boilerplate, not near-duplication; route it to
     exact dedup instead). AQE skew-join splits what remains.
-
-    See :func:`minhash_band_rows` for the ``hash_fn`` contract.
     """
-    banded = minhash_band_rows(
-        df, text_col, id_col, num_hashes, bands, shingle_n, hash_fn
-    )
+    banded = minhash_band_rows(df, text_col, id_col, num_hashes, bands, shingle_n)
     if max_bucket_size is not None:
         # window (not agg + anti-join): banded rows are already tiny
         # (id, band, bucket ≈ 24 bytes), so one shuffle-and-count-over-window
@@ -447,34 +436,22 @@ def ngram_jaccard_pairs(
 
 
 def simhash_fingerprints(
-    df: DataFrame, text_col: str, id_col: str, shingle_n: int = 2,
-    hash_fn: str = "xxhash64",
+    df: DataFrame, text_col: str, id_col: str, shingle_n: int = 2
 ) -> DataFrame:
     """SimHash as a staged DataFrame transform: shingle-hash once into a
     column, then fold the per-bit votes over that column, so the shingle
     hashes are derived once, not once per bit sum.
-    Output: ``(id_col, fp)``.
-
-    ``hash_fn="portable"`` swaps xxhash64 for
-    :func:`functions.portable_hash60` and emits a 60-bit fingerprint
-    (bits 0..59 — all positive, no sign-bit special case), making the
-    fingerprint — and any pairing built on it — exactly computable in a
-    DuckDB oracle. Hamming semantics are unchanged; banding over 60 bits
-    still pigeonholes correctly (``simhash_near_dup_pairs`` splits
-    whatever width rides in the BIGINT)."""
-    if hash_fn not in ("xxhash64", "portable"):
-        raise ValueError(f"hash_fn must be 'xxhash64' or 'portable', got {hash_fn!r}")
+    Output: ``(id_col, fp)``, a 64-bit fingerprint voted from the
+    ``xxhash64`` of every shingle."""
     df = ensure_map_parallelism(df)
-    str_hash = F.xxhash64 if hash_fn == "xxhash64" else portable_hash60
-    bits = 64 if hash_fn == "xxhash64" else 60
     hashed = df.select(
         F.col(id_col),
-        F.transform(_shingles(F.col(text_col), shingle_n), lambda s: str_hash(s)).alias("__h"),
+        F.transform(_shingles(F.col(text_col), shingle_n), lambda s: F.xxhash64(s)).alias("__h"),
     )
-    return hashed.select(id_col, _simhash_from_hashes(F.col("__h"), bits).alias("fp"))
+    return hashed.select(id_col, _simhash_from_hashes(F.col("__h")).alias("fp"))
 
 
-def _simhash_from_hashes(hashes: Column, bits: int = 64) -> Column:
+def _simhash_from_hashes(hashes: Column) -> Column:
     def bit_sum(j: int) -> Column:
         return F.aggregate(
             hashes,
@@ -483,7 +460,7 @@ def _simhash_from_hashes(hashes: Column, bits: int = 64) -> Column:
         )
 
     fp = F.lit(0).cast("long")
-    for j in range(bits):
+    for j in range(64):
         fp = fp + F.when(bit_sum(j) > 0, F.lit(1).cast("long") * F.lit(2 ** j if j < 63 else -(2 ** 63)).cast("long")).otherwise(F.lit(0).cast("long"))
     return fp
 
@@ -546,7 +523,7 @@ def simhash_near_dup_pairs(
     )
     # r13: fp_df feeds both self-join sides — materialize the (id, fp)
     # 16-byte rows once or the caller's fingerprint compute (e.g. the
-    # md5-lane SimHash folds) runs once per branch (q136/q142 pattern;
+    # 64-lane SimHash vote folds) runs once per branch (q136/q142 pattern;
     # measured on q36: 1.38 s → 0.66 s, identical pairs). Self-join sides
     # are corpus-sized, so the checkpoint's stats erasure costs no
     # broadcast that could exist at scale.
@@ -890,9 +867,9 @@ def domain_quota_sample(
     this yields EXACTLY min(quota, |domain|) survivors per domain, stable
     across runs and row order.
 
-    Rank = :func:`~...functions.portable_hash60` of ``seed || ':' || id``:
-    cross-engine exact (DuckDB twin via ``PORTABLE_HASH60_SQL``), so the
-    selection is oracle-checkable; the id tie-breaks hash collisions.
+    Rank = ``xxhash64`` of ``seed || ':' || id``: the DuckDB oracle's
+    pure-SQL XXH64 twin recomputes it exactly, so the selection is
+    oracle-checkable; the id tie-breaks hash collisions.
     Different seeds draw decorrelated samples (epoch resampling).
 
     Scale shape: one shuffle on the domain key + a row_number window —
@@ -905,7 +882,7 @@ def domain_quota_sample(
     percentile) bounds it; not applied by default because it trades
     exactness for balance.
     """
-    h = portable_hash60(F.concat_ws(":", F.lit(str(seed)), F.col(id_col).cast("string")))
+    h = F.xxhash64(F.concat_ws(":", F.lit(str(seed)), F.col(id_col).cast("string")))
     w = Window.partitionBy(domain_col).orderBy(h.asc(), F.col(id_col).asc())
     return (
         df.withColumn("__qr", F.row_number().over(w))
@@ -922,7 +899,6 @@ def lsh_near_dedup(
     bands: int = 8,
     shingle_n: int = 3,
     max_bucket_size: int | None = 100,
-    hash_fn: str = "xxhash64",
     verify_jaccard: float = 0.5,
 ) -> DataFrame:
     """END-TO-END MinHash near-dedup — the operation an LLM-corpus user
@@ -947,9 +923,9 @@ def lsh_near_dedup(
     payload), label propagation shuffles (node, label) longs for
     diameter-many rounds. The final survivor filter is a left-anti join on
     the id — full document payloads move through exactly one anti-join and
-    no window. With ``hash_fn="portable"`` the ENTIRE pipeline (pairs,
-    verification, closure, survivors) is exactly replicated by a DuckDB
-    recursive-CTE oracle (q152).
+    no window. The ENTIRE pipeline (pairs, verification, closure,
+    survivors) is exactly replicated by a DuckDB recursive-CTE oracle
+    (q152).
     """
     docs = df.filter(F.col(text_col).isNotNull())
     pairs = minhash_lsh_candidate_pairs(
@@ -960,7 +936,6 @@ def lsh_near_dedup(
         bands=bands,
         shingle_n=shingle_n,
         max_bucket_size=max_bucket_size,
-        hash_fn=hash_fn,
     )
     pairs = ngram_jaccard_pairs(
         docs, text_col, id_col, n=shingle_n, threshold=verify_jaccard, candidates=pairs
@@ -985,7 +960,7 @@ def temperature_mix_sample(
     quota ``n_i ∝ c_i^(1/T)`` of the ``target_total`` — T=1 preserves the
     natural distribution, T→∞ approaches uniform, so low-resource domains
     are upsampled relative to their share. Selection within a domain is the
-    deterministic portable-hash rank (same as :func:`domain_quota_sample`),
+    deterministic xxhash64 rank (same as :func:`domain_quota_sample`),
     making the ENTIRE sample oracle-checkable.
 
     Exactness: weights are quantized to integers ``qw_i =
@@ -1044,9 +1019,7 @@ def temperature_mix_sample(
         .withColumn("__num", F.lit(int(target_total)).cast("long") * F.col("__qw"))
         .selectExpr("__dom", "__num div __z as __quota")
     )
-    h = portable_hash60(
-        F.concat_ws(":", F.lit(str(seed)), F.col(id_col).cast("string"))
-    )
+    h = F.xxhash64(F.concat_ws(":", F.lit(str(seed)), F.col(id_col).cast("string")))
     w = Window.partitionBy(domain_col).orderBy(h.asc(), F.col(id_col).asc())
     ranked = df.withColumn("__tr", F.row_number().over(w))
     return (

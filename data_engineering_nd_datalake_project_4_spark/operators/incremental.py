@@ -97,13 +97,12 @@ def _minhash_rows(
     num_hashes: int,
     bands: int,
     shingle_n: int,
-    hash_fn: str,
 ) -> DataFrame:
     """MinHash band fan-out ``(__id, __band, __bucket)``. NULL-text rows
     get no signature (see :func:`incremental_lsh_dedup` for the contract)."""
     return minhash_band_rows(
         df.filter(F.col(text_col).isNotNull()),
-        text_col, id_col, num_hashes, bands, shingle_n, hash_fn,
+        text_col, id_col, num_hashes, bands, shingle_n,
     )
 
 
@@ -251,7 +250,6 @@ def build_band_store(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-    hash_fn: str = "xxhash64",
 ) -> None:
     """Materialize the corpus MinHash band-bucket store: one row per
     distinct band bucket the corpus occupies (``first_id`` the minimum
@@ -261,7 +259,7 @@ def build_band_store(
     nothing. On disk the store is ~bands·20 bytes per distinct corpus
     document signature, never the corpus itself."""
     _build_store(
-        _minhash_rows(df, text_col, id_col, num_hashes, bands, shingle_n, hash_fn),
+        _minhash_rows(df, text_col, id_col, num_hashes, bands, shingle_n),
         store_path,
     )
 
@@ -275,7 +273,6 @@ def incremental_lsh_dedup(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-    hash_fn: str = "xxhash64",
     src_batch: int | None = None,
 ) -> DataFrame:
     """NEAR-duplicate incremental dedup: rows of ``batch`` that are not
@@ -299,10 +296,9 @@ def incremental_lsh_dedup(
     require corpus-wide component state, which is exactly what an
     incremental operator must not maintain.
 
-    NULL-text rows PASS THROUGH (no signature, nothing recorded): with
-    ``hash_fn="portable"`` NULL hashes to NULL, and under xxhash64 a
-    NULL→seed class would near-dup "no content" against every other NULL
-    doc, which is not near-duplication — route NULL/empty docs to
+    NULL-text rows PASS THROUGH (no signature, nothing recorded): under
+    xxhash64 a NULL→seed class would near-dup "no content" against every
+    other NULL doc, which is not near-duplication — route NULL/empty docs to
     :func:`incremental_dedup` (exact mode) instead. Consequence: a LATER
     batch repeating a NULL-text document keeps it too — the store records
     nothing for it.
@@ -337,7 +333,7 @@ def incremental_lsh_dedup(
     """
     keyed = batch.localCheckpoint(eager=True)
     banded = _minhash_rows(
-        keyed, text_col, id_col, num_hashes, bands, shingle_n, hash_fn
+        keyed, text_col, id_col, num_hashes, bands, shingle_n
     ).localCheckpoint(eager=True)
     dropped = _banded_store_dropped(spark, banded, store_path, src_batch)
     survivors = keyed.join(

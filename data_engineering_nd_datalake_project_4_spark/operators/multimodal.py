@@ -405,29 +405,19 @@ def _luminance_grid(arr, rows: int, cols: int):
     return g
 
 
-def perceptual_hash_bits(arr, method: str = "ahash", hash_size: int = 8) -> int:
-    """Perceptual hash of a decoded (H, W, C) uint8 image as a SIGNED 64-bit
-    int (bit i may be the sign bit — same wrap as Spark's ``1L << 63``).
-
-    - ``ahash`` (average hash): ``hash_size²`` block-mean luminance grid;
-      bit k = grid cell k > grid mean. Robust to resize/brightness noise.
-    - ``dhash`` (difference hash): ``hash_size×(hash_size+1)`` grid; bit
-      k = cell[i, j+1] > cell[i, j] (horizontal gradient sign). Robust to
-      global brightness/contrast shifts (any monotone per-pixel map).
+def perceptual_hash_bits(arr, hash_size: int = 8) -> int:
+    """Average hash (aHash) of a decoded (H, W, C) uint8 image as a SIGNED
+    64-bit int (bit i may be the sign bit — same wrap as Spark's
+    ``1L << 63``): ``hash_size²`` block-mean luminance grid; bit k = grid
+    cell k > grid mean. Robust to resize/brightness noise.
 
     ``hash_size`` must satisfy ``hash_size² <= 64`` (the hash rides a
     single BIGINT so the pair join shuffles 8-byte keys).
     """
     if hash_size * hash_size > 64:
         raise ValueError(f"hash_size^2 ({hash_size}^2) must fit in 64 bits")
-    if method == "ahash":
-        g = _luminance_grid(arr, hash_size, hash_size)
-        bits = (g > g.mean()).flatten()
-    elif method == "dhash":
-        g = _luminance_grid(arr, hash_size, hash_size + 1)
-        bits = (g[:, 1:] > g[:, :-1]).flatten()
-    else:
-        raise ValueError(f"method must be 'ahash' or 'dhash', got {method!r}")
+    g = _luminance_grid(arr, hash_size, hash_size)
+    bits = (g > g.mean()).flatten()
     v = 0
     for k, b in enumerate(bits):
         if b:
@@ -437,17 +427,16 @@ def perceptual_hash_bits(arr, method: str = "ahash", hash_size: int = 8) -> int:
 
 def image_perceptual_hashes(
     df: DataFrame,
-    method: str = "ahash",
     hash_size: int = 8,
     strict: bool = False,
 ) -> DataFrame:
-    """Per-image perceptual hash via mapInPandas: MEDIA_SCHEMA in,
+    """Per-image perceptual hash (aHash, :func:`perceptual_hash_bits`) via
+    mapInPandas: MEDIA_SCHEMA in,
     ``(media_id, phash)`` out. netpbm payloads decode for REAL; other
     codecs raise (``strict=True``) or hash to a deterministic
     sha256-derived fake (the container has no JPEG/PNG libs — the
     plumbing and the pair join are what is exercised either way).
-    NULL content → NULL phash (drops out of the pair join, mirroring the
-    portable-hash NULL policy)."""
+    NULL content → NULL phash (drops out of the pair join)."""
     import pandas as pd
 
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -460,7 +449,7 @@ def image_perceptual_hashes(
                     continue
                 arr = decode_netpbm(bytes(c))
                 if arr is not None:
-                    out.append(perceptual_hash_bits(arr, method, hash_size))
+                    out.append(perceptual_hash_bits(arr, hash_size))
                 elif strict:
                     raise NotImplementedError(
                         "only netpbm (P5/P6) decodes natively; JPEG/PNG need "

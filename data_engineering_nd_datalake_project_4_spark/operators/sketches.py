@@ -9,9 +9,9 @@ queries after that are O(depth) lookups against the tiny table — no
 second scan of the data, and sketches from separate partitions/days merge
 by cell-wise addition.
 
-Pure Catalyst: the d hash rows come from ``xxhash64(col, seed_i)`` (the
-extra literal argument reseeds the hash), bucketing via ``pmod``. No UDF,
-no driver-side state.
+Pure Catalyst: one ``xxhash64`` per value, reduced into the Mersenne
+field, and the d hash rows derive from it by universal-hash reseeds
+(``(a_i·h + b_i) mod M mod width``). No UDF, no driver-side state.
 
 The reference has no sketches (it has no aggregates beyond MAX —
 /root/reference/etl.py:143); this is a north-star extension.
@@ -24,23 +24,12 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from data_engineering_nd_datalake_project_4_spark.functions import portable_hash60
-
 #: Mersenne field for the universal-hash reseeds (shared with MinHash).
 _M31 = (1 << 31) - 1
 
 
-def _cms_bucket(value: Column, row: Column, width: int, hash_fn: str) -> Column:
-    """Seeded bucket hash for one CMS row in ``xxhash64`` mode (the extra
-    argument reseeds the hash). The ``portable`` family does NOT hash per
-    row — see :func:`_portable_bucket_array`."""
-    if hash_fn != "xxhash64":
-        raise ValueError(f"hash_fn must be 'xxhash64' or 'portable', got {hash_fn!r}")
-    return F.pmod(F.xxhash64(value, row), F.lit(width))
-
-
 def cms_coeffs(depth: int) -> tuple[list[int], list[int]]:
-    """Universal-hash coefficient schedule for the portable CMS rows —
+    """Universal-hash coefficient schedule for the CMS rows —
     the SAME fixed-seed LCG draw as ``dedup.minhash_coeffs`` (aᵢ ∈
     [1, M-1], bᵢ ∈ [0, M-1], M = 2³¹-1), re-exported here so the oracle
     twin can inline the literals without importing the dedup module."""
@@ -49,17 +38,23 @@ def cms_coeffs(depth: int) -> tuple[list[int], list[int]]:
     return minhash_coeffs(depth)
 
 
-def _portable_bucket_array(hash_col: Column, width: int, depth: int) -> Column:
-    """Array of ``depth`` bucket ids derived from ONE portable string hash
-    (``portable_hash60(v) mod M`` — pass that as ``hash_col``, staged in
-    its own projection): bucketⱼ = ((aⱼ·h mod M) + bⱼ) mod M mod width.
-    This is the MinHash universal-hashing trick (dedup.py): the md5 runs
-    once per value instead of once per (value × depth) — ~5× less hashing
-    at depth 5 — and every product stays < 2⁶² (aⱼ, h < 2³¹), so no ANSI
-    overflow. The caller must materialize ``hash_col`` as a named column
-    in a separate select: it is referenced ``depth`` times here, and a
-    non-cheap multiply-referenced alias is what stops CollapseProject
-    from re-inlining the md5 into every element."""
+def _hash_m31(value: Column) -> Column:
+    """The one string hash per value that every CMS row derives from:
+    ``pmod(xxhash64(v), M)``, M = 2³¹-1."""
+    return F.pmod(F.xxhash64(value), F.lit(_M31))
+
+
+def _bucket_array(hash_col: Column, width: int, depth: int) -> Column:
+    """Array of ``depth`` bucket ids derived from ONE string hash
+    (:func:`_hash_m31` — pass it as ``hash_col``, staged in its own
+    projection): bucketⱼ = ((aⱼ·h mod M) + bⱼ) mod M mod width.
+    This is the MinHash universal-hashing trick (dedup.py): the hash runs
+    once per value instead of once per (value × depth), and every product
+    stays < 2⁶² (aⱼ, h < 2³¹), so no ANSI overflow. The caller must
+    materialize ``hash_col`` as a named column in a separate select: it
+    is referenced ``depth`` times here, and a non-cheap
+    multiply-referenced alias is what stops CollapseProject from
+    re-inlining the hash into every element."""
     a, b = cms_coeffs(depth)
     return F.array(
         *[
@@ -78,20 +73,18 @@ def build_cms(
     col: str,
     width: int = 2048,
     depth: int = 5,
-    hash_fn: str = "xxhash64",
     weight_col: str | None = None,
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
     """One-scan Count-Min sketch: DataFrame[row, bucket, cnt] with
     ``depth`` hash rows of ``width`` buckets. Error: overestimate only,
-    ≤ e/width · N with probability 1 - e^-depth. ``hash_fn='portable'``
-    makes the whole sketch (and every estimate from it) bit-identical in
-    a DuckDB oracle — ONE md5 per DISTINCT value + arithmetic
-    universal-hash reseeds for the depth rows (not one md5 per value×row,
-    the round-6 14× mistake) — default stays xxhash64.
+    ≤ e/width · N with probability 1 - e^-depth. ONE xxhash64 per value
+    plus arithmetic universal-hash reseeds for the depth rows (not one
+    hash per value×row), so the whole sketch — and every estimate from it
+    — is bit-identical in the DuckDB oracle's pure-SQL XXH64 twin.
 
-    Both modes pre-aggregate (value → count) before hashing: the hash
-    runs once per distinct value and the count rides as an integer weight
+    The ungrouped build pre-aggregates (value → count) before hashing:
+    the hash runs once per distinct value and the count rides as an integer weight
     into the cell sum — identical counters (SUM(n) ≡ COUNT(*) per
     instance), one map-side-combining shuffle on the value, and hashing
     cost proportional to the vocabulary instead of the corpus. A caller
@@ -110,12 +103,9 @@ def build_cms(
     cardinality. The hashing price is one string hash per INSTANCE
     (still 1, not depth — the universal reseeds are arithmetic).
 
-    NULL contract: NULL values are DROPPED in both hash families. Before
-    this filter the families disagreed silently (portable: md5(NULL) →
-    NULL array, posexplode emits nothing; xxhash64: NULL hashes to the
-    seed and was counted) — a nullable column got family-dependent
-    totals. Sketch the NULL class explicitly via COALESCE to a sentinel
-    if it matters."""
+    NULL contract: NULL values are DROPPED (xxhash64 would hash NULL to
+    the seed and count it as one value). Sketch the NULL class explicitly
+    via COALESCE to a sentinel if it matters."""
     gcols = list(group_cols)
     df = df.filter(F.col(col).isNotNull())
     if weight_col is not None:
@@ -128,38 +118,17 @@ def build_cms(
         )
     else:
         counts = df.select(*gcols, F.col(col).alias("__v"), F.lit(1).alias("__n"))
-    if hash_fn == "portable":
-        hashed = counts.select(
-            *gcols,
-            F.pmod(portable_hash60(F.col("__v")), F.lit(_M31)).alias("__h"),
-            "__n",
-        )
-        bucketed = hashed.select(
-            *gcols,
-            "__n",
-            F.posexplode(
-                _portable_bucket_array(F.col("__h"), width, depth)
-            ).alias("row", "bucket"),
-        )
-        return bucketed.groupBy(*gcols, "row", "bucket").agg(
-            F.sum("__n").alias("cnt")
-        )
-    rows = F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("row")
-    return (
-        counts.select(*gcols, "__v", "__n", rows)
-        .select(
-            *gcols,
-            "row",
-            _cms_bucket(F.col("__v"), F.col("row"), width, hash_fn).alias("bucket"),
-            "__n",
-        )
-        .groupBy(*gcols, "row", "bucket")
-        .agg(F.sum("__n").alias("cnt"))
+    hashed = counts.select(*gcols, _hash_m31(F.col("__v")).alias("__h"), "__n")
+    bucketed = hashed.select(
+        *gcols,
+        "__n",
+        F.posexplode(_bucket_array(F.col("__h"), width, depth)).alias("row", "bucket"),
     )
+    return bucketed.groupBy(*gcols, "row", "bucket").agg(F.sum("__n").alias("cnt"))
 
 
 def merge_cms(a: DataFrame, b: DataFrame | None = None, group_cols: Sequence[str] = ()) -> DataFrame:
-    """Merge sketches built with the same (width, depth, hash_fn):
+    """Merge sketches built with the same (width, depth):
     cell-wise addition — the property that makes CMS distributable
     (per-partition / per-day sketches combine without touching row data).
 
@@ -196,46 +165,34 @@ def hll_merge(registers: DataFrame, group_cols: Sequence[str] = ()) -> DataFrame
     )
 
 
+def _probe_rows(items: DataFrame, width: int, depth: int) -> DataFrame:
+    """``(item, row, bucket)`` probe cells of a one-column ``item`` frame —
+    the same hashing as :func:`build_cms`."""
+    hashed = items.select("item", _hash_m31(F.col("item")).alias("__h"))
+    return hashed.select(
+        "item",
+        F.posexplode(_bucket_array(F.col("__h"), width, depth)).alias("row", "bucket"),
+    )
+
+
 def cms_estimate(
     cms: DataFrame,
     items: DataFrame,
     col: str,
     width: int = 2048,
     depth: int = 5,
-    hash_fn: str = "xxhash64",
     items_distinct: bool = False,
 ) -> DataFrame:
     """Estimated frequency for each distinct value in ``items[col]``:
     min over the depth hash rows of the matching bucket counters. The
     sketch side is broadcast (it is depth × width rows at most).
-    ``hash_fn`` must match the sketch's build. ``items_distinct=True``
+    ``width``/``depth`` must match the sketch's build. ``items_distinct=True``
     skips the internal dedup when the caller already probes a one-row-
     per-value frame (e.g. the same counts frame that built the sketch) —
     saving an exchange, and letting AQE's ReuseExchange share the counts
     subtree between build and probe."""
     maybe_distinct = (lambda d: d) if items_distinct else (lambda d: d.distinct())
-    if hash_fn == "portable":
-        hashed = maybe_distinct(items.select(F.col(col).alias("item"))).select(
-            "item",
-            F.pmod(portable_hash60(F.col("item")), F.lit(_M31)).alias("__h"),
-        )
-        probes = hashed.select(
-            "item",
-            F.posexplode(
-                _portable_bucket_array(F.col("__h"), width, depth)
-            ).alias("row", "bucket"),
-        )
-    else:
-        rows = F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("row")
-        probes = (
-            maybe_distinct(items.select(F.col(col).alias("item")))
-            .select("item", rows)
-            .select(
-                "item",
-                "row",
-                _cms_bucket(F.col("item"), F.col("row"), width, hash_fn).alias("bucket"),
-            )
-        )
+    probes = _probe_rows(maybe_distinct(items.select(F.col(col).alias("item"))), width, depth)
     return (
         probes.join(F.broadcast(cms), ["row", "bucket"], "left")
         .fillna(0, subset=["cnt"])
@@ -252,7 +209,6 @@ def grouped_heavy_hitters(
     candidate_pool: int = 64,
     width: int = 2048,
     depth: int = 5,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Approximate top-``k`` values per group WITHOUT materializing the
     (group × value) cross product — the published end-to-end CMS use
@@ -288,9 +244,7 @@ def grouped_heavy_hitters(
     if not gcols:
         raise ValueError("group_cols must be non-empty — use cms_estimate for "
                          "the ungrouped top-k")
-    cms = build_cms(
-        df, col, width=width, depth=depth, hash_fn=hash_fn, group_cols=gcols
-    )
+    cms = build_cms(df, col, width=width, depth=depth, group_cols=gcols)
     candidates = (
         df.groupBy(F.col(col).alias("item"))
         .agg(F.count(F.lit(1)).alias("__gc"))
@@ -299,7 +253,7 @@ def grouped_heavy_hitters(
         .select("item")
     )
     return heavy_hitters_from_cms(
-        cms, candidates, gcols, k=k, width=width, depth=depth, hash_fn=hash_fn
+        cms, candidates, gcols, k=k, width=width, depth=depth
     )
 
 
@@ -310,7 +264,6 @@ def heavy_hitters_from_cms(
     k: int = 10,
     width: int = 2048,
     depth: int = 5,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Per-group top-``k`` from a PREBUILT grouped CMS — the probe half of
     :func:`grouped_heavy_hitters`, factored out so persisted/streamed
@@ -318,29 +271,13 @@ def heavy_hitters_from_cms(
     merged with :func:`merge_cms`) answers heavy-hitter questions without
     rescanning raw data. ``candidates`` is a 1-column ``item`` frame of
     probe values (the global head vocabulary); ``cms`` must have been
-    built with the same (width, depth, hash_fn). est(group, v) = min over
+    built with the same (width, depth). est(group, v) = min over
     depth cells, 0 when any cell is absent (CMS never underestimates, so
     an absent cell proves absence)."""
     from pyspark.sql import Window
 
     gcols = list(group_cols)
-    if hash_fn == "portable":
-        hashed = candidates.select(
-            "item", F.pmod(portable_hash60(F.col("item")), F.lit(_M31)).alias("__h")
-        )
-        probes = hashed.select(
-            "item",
-            F.posexplode(
-                _portable_bucket_array(F.col("__h"), width, depth)
-            ).alias("row", "bucket"),
-        )
-    else:
-        rows = F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("row")
-        probes = candidates.select("item", rows).select(
-            "item",
-            "row",
-            _cms_bucket(F.col("item"), F.col("row"), width, hash_fn).alias("bucket"),
-        )
+    probes = _probe_rows(candidates, width, depth)
     per_cell = cms.join(F.broadcast(probes), ["row", "bucket"])
     est = (
         per_cell.groupBy(*gcols, "item")
@@ -363,7 +300,7 @@ def heavy_hitters_from_cms(
 
 
 # ---------------------------------------------------------------------------
-# Explicit HyperLogLog on the portable hash (oracle-checkable distinct count)
+# Explicit HyperLogLog on xxhash64 (oracle-checkable distinct count)
 # ---------------------------------------------------------------------------
 
 def _hll_alpha(m: int) -> float:
@@ -376,10 +313,13 @@ def hll_registers(
     pre_distinct: bool = False,
 ) -> DataFrame:
     """HyperLogLog registers as a DataFrame[bucket, reg] — the classic
-    algorithm implemented as ONE partial-aggregating groupBy over the
-    portable 60-bit hash, so (unlike ``approx_count_distinct`` /
-    ``hll_sketch_agg``, whose register layout is engine-internal) the
-    sketch is exactly computable by a DuckDB oracle:
+    algorithm implemented as ONE partial-aggregating groupBy over a
+    60-bit hash — the top 60 bits of ``xxhash64`` of the key's string
+    form (``shiftrightunsigned(h, 4)``: non-negative, and the exact
+    integer indicator sum in :func:`hll_estimate` stays inside a long) —
+    so (unlike ``approx_count_distinct`` / ``hll_sketch_agg``, whose
+    register layout is engine-internal) the sketch is exactly computable
+    by a DuckDB oracle with its pure-SQL XXH64 twin:
 
     - bucket = low ``p`` hash bits; w = the remaining ``60 - p`` bits;
     - rho(w) = trailing-zero count of w + 1, computed EXACTLY in integer
@@ -398,11 +338,11 @@ def hll_registers(
     shape without per-group scans.
 
     ``pre_distinct`` (r13): registers depend only on the DISTINCT key
-    set (MAX per bucket), but the md5-based portable hash is paid per
-    key INSTANCE. When keys repeat heavily (fact-table foreign keys:
+    set (MAX per bucket), but the string hash is paid per key INSTANCE. When keys repeat heavily (fact-table foreign keys:
     q45's lineitem keys repeat 6-200×), deduplicating first trades one
     partially-aggregated key shuffle for hashing ~6-200× fewer rows —
-    measured 1.05 → 0.82 s on q45 at sf0.1, identical registers. Keep
+    measured 1.05 → 0.82 s on q45 at sf0.1 with the former MD5-based
+    hash, identical registers. Keep
     it OFF for high-cardinality/low-repeat keys, where the extra
     shuffle (bounded by distinct-keys-per-partition × partitions)
     outweighs the hash savings and the default path's shuffle stays
@@ -411,7 +351,7 @@ def hll_registers(
         raise ValueError(f"p must be in [4, 16], got {p}")
     m = 1 << p
     maxrho = 60 - p + 1
-    h = portable_hash60(F.col(col).cast("string"))
+    h = F.shiftrightunsigned(F.xxhash64(F.col(col).cast("string")), 4)
     w = F.shiftright(h, p)
     lsb = w.bitwiseAND(-w)
     rho = F.when(w == 0, F.lit(maxrho)).otherwise(F.bit_count(lsb - 1) + 1)

@@ -12,7 +12,7 @@ import re
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from data_engineering_nd_datalake_project_4_spark.functions import portable_hash60, tokens
+from data_engineering_nd_datalake_project_4_spark.functions import tokens
 from data_engineering_nd_datalake_project_4_spark.operators import ensure_map_parallelism
 
 #: Tiny per-language marker-token lists for the n-gram/stopword heuristic
@@ -124,23 +124,17 @@ def lang_id(text_col: Column | str, toks: Column | None = None) -> Column:
     return out
 
 
-def doc_fingerprint(text_col: Column | str, hash_fn: str = "xxhash64") -> Column:
-    """Content fingerprint of the raw text: 64-bit xxhash64 (default) or
-    the 60-bit cross-engine :func:`functions.portable_hash60`
-    (``hash_fn="portable"`` — exactly computable in a DuckDB oracle). For a
+def doc_fingerprint(text_col: Column | str) -> Column:
+    """Content fingerprint of the raw text: its 64-bit xxhash64. For a
     shift-robust variant combine with rolling-window shingles (see
     operators.dedup.simhash_fingerprints)."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
-    if hash_fn == "portable":
-        return portable_hash60(c)
-    if hash_fn != "xxhash64":
-        raise ValueError(f"hash_fn must be 'xxhash64' or 'portable', got {hash_fn!r}")
     return F.xxhash64(c)
 
 
 def winnowing_fingerprints(
     df, text_col: str, id_col: str, window: int = 5, keep_mod: int = 8,
-    extra=None, hash_fn: str = "xxhash64",
+    extra=None,
 ):
     """Staged winnowing fingerprints: ``(id_col, *extra, fingerprints
     array<bigint>, n_selected)``. ``extra`` is an optional ``{alias:
@@ -153,30 +147,16 @@ def winnowing_fingerprints(
     staging stops CollapseProject from re-inlining the token hashing into
     every window.
 
-    ``hash_fn``: ``"xxhash64"`` (default) hashes tokens with xxhash64 and
-    chains with ``xxhash64(acc, x)``. ``"portable"`` hashes tokens with
-    :func:`functions.portable_hash60` folded into the 31-bit field and
-    chains with the multiply-mod round ``(acc·MUL1 + x) mod 2³¹`` (the
-    ``packing.epoch_shuffle_key`` constants; every product < 2^63 in both
-    engines) — the whole fingerprint set becomes exactly computable by a
-    DuckDB oracle (``list_reduce(list_prepend(0, slice), ...)`` twin).
+    Tokens hash with xxhash64 and each window chains its token hashes as
+    ``xxhash64(acc, x)`` from ``acc = 0`` — a 64-bit chain the DuckDB
+    oracle folds with its pure-SQL XXH64 twin
+    (``list_reduce(list_prepend(0, slice), ...)``).
     """
-    from data_engineering_nd_datalake_project_4_spark.operators.packing import (
-        SHUFFLE_MOD,
-        _SHUFFLE_MUL1,
-    )
-
-    if hash_fn not in ("xxhash64", "portable"):
-        raise ValueError(f"hash_fn must be 'xxhash64' or 'portable', got {hash_fn!r}")
     extra = extra or {}
-    if hash_fn == "portable":
-        tok_hash = lambda t: F.pmod(portable_hash60(t), F.lit(SHUFFLE_MOD))  # noqa: E731
-        combine = lambda acc, x: (acc * F.lit(_SHUFFLE_MUL1) + x) % F.lit(SHUFFLE_MOD)  # noqa: E731
-    else:
-        # wrapped: the variadic F.xxhash64 itself is rejected as a
-        # higher-order-function lambda (non-positional *cols signature)
-        tok_hash = lambda t: F.xxhash64(t)  # noqa: E731
-        combine = lambda acc, x: F.xxhash64(acc, x)  # noqa: E731
+    # wrapped: the variadic F.xxhash64 itself is rejected as a
+    # higher-order-function lambda (non-positional *cols signature)
+    tok_hash = lambda t: F.xxhash64(t)  # noqa: E731
+    combine = lambda acc, x: F.xxhash64(acc, x)  # noqa: E731
     # compute-dense map stage (every 5-token window chain-hashed): a
     # small/test-scale scan arrives as 1-2 unsplittable row-group tasks
     # and serializes the fold onto 2 of 32 cores (measured: the q40 scale
@@ -326,15 +306,13 @@ def dsir_gram_buckets(
     ``(id_col, __bucket)`` row per gram occurrence, bucket in
     ``[0, n_buckets)``.
 
-    The gram→bucket hash must be EXACTLY portable (the DuckDB twin
-    recomputes it), so it is the first 8 hex digits of ``md5(gram)``
-    parsed as an integer, mod ``n_buckets`` — md5 over UTF-8 bytes is
-    bit-identical in every engine, unlike xxhash64 seeds or
-    JVM-string-hash variants. All map-side Catalyst: the token split is
+    The gram→bucket hash is ``pmod(xxhash64(gram), n_buckets)`` over the
+    gram's UTF-8 bytes; the DuckDB oracle recomputes it exactly with its
+    pure-SQL XXH64 twin. All map-side Catalyst: the token split is
     STAGED as a materialized column first (CollapseProject would re-inline
     the split into both the unigram and bigram consumers), bigrams come
     from ``zip_with`` over two slices (no index-lambda trap), and the
-    md5/conv chain runs inside codegen.
+    hash runs inside codegen.
 
     NULL text is excluded up front (a NULL doc has no feature evidence
     either way — scoring it would just hand it delta 0·n grams).
@@ -343,7 +321,7 @@ def dsir_gram_buckets(
         df.filter(F.col(text_col).isNotNull())
         .select(F.col(id_col), tokens(text_col).alias("__toks"))
     )
-    # compute-dense fan-out (one md5 per gram occurrence) over a possibly
+    # compute-dense fan-out (one hash per gram occurrence) over a possibly
     # 1-2-row-group scan: spread the narrow (id, tokens) input first or the
     # whole hash volume runs in the scan tasks (the q40 lesson; no-op at
     # real corpus scale)
@@ -358,10 +336,7 @@ def dsir_gram_buckets(
     grams = staged.select(
         F.col(id_col), F.explode(F.concat(uni, big)).alias("__gram")
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("__gram")), 1, 8), 16, 10).cast("long")
-        % n_buckets
-    )
+    bucket = F.pmod(F.xxhash64(F.col("__gram")), F.lit(n_buckets))
     return grams.select(F.col(id_col), bucket.alias("__bucket"))
 
 

@@ -12,11 +12,10 @@ ordering with unique tie-breaks, µs timestamps, ISO week / Monday=1 weekday.
 Queries marked ``oracle=None`` are genuinely engine-internal sketches or
 RNG-dependent (HLL/approx_percentile/CMS internals, sampleBy, k-means
 float iteration) — the driver records a weaker rows-only check; they are
-property-tested in tests/ instead. The former no-oracle sketch queries
-(q35 MinHash-LSH, q36 SimHash, q40 winnowing, q42 IVF) are now exactly
-oracle-hashed via the portable MD5-60bit hash family
-(``functions.portable_hash60`` — the string companion to
-``packing.epoch_shuffle_key``).
+property-tested in tests/ instead. The hashed sketch and dedup queries
+(MinHash-LSH, SimHash, winnowing, HLL, CMS, DSIR, quota ranks) run the
+package's one string hash, Spark's ``xxhash64``; their oracles recompute
+it exactly with the pure-SQL XXH64 twin below (:func:`_xxh64`).
 """
 
 from __future__ import annotations
@@ -30,7 +29,6 @@ from pyspark.sql import functions as F
 from data_engineering_nd_datalake_project_4_spark.catalog import load_table
 from data_engineering_nd_datalake_project_4_spark.functions import (
     DEC18_4,
-    PORTABLE_HASH60_SQL,
     cents,
     cents_sum_to_double,
     cosine_similarity,
@@ -50,9 +48,151 @@ def _csum_d(col, scale: int = 2):
     return cents_sum_to_double(F.sum(cents(col, scale)), scale)
 
 
-def _ph60(x: str) -> str:
-    """DuckDB twin of functions.portable_hash60 for oracle strings."""
-    return PORTABLE_HASH60_SQL.format(x=x)
+# ---------------------------------------------------------------------------
+# Pure-SQL XXH64: the DuckDB twin of Spark's xxhash64 (seed 42) for oracle
+# strings. ``oracle_sql()`` hands out plain SQL that runs in a bare DuckDB,
+# so no UDF can stand in; these builders expand to one DuckDB expression.
+# Every 64-bit lane is a UHUGEINT masked to 2^64, so multiplies, adds and
+# rotations wrap as in Java; a string is read as little-endian words off
+# ``hex(encode(s))``.
+# Rules the expansion keeps: no CASE inside a list_reduce lambda (DuckDB
+# 1.0 mis-evaluates one when the rows of a vector take different branches),
+# and every lambda parameter is ``xx_``-prefixed so it never shadows a
+# caller's lambda. tests/test_xxh64_twin.py grades it against Spark.
+# ---------------------------------------------------------------------------
+_XX_P1, _XX_P2, _XX_P3, _XX_P4, _XX_P5 = (
+    0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5,
+)
+_XX_MASK = "CAST(18446744073709551615 AS UHUGEINT)"
+
+
+def _xx_u(v) -> str:
+    return f"CAST({v} AS UHUGEINT)"
+
+
+def _xx_mul(a: str, p: int) -> str:
+    return f"((({a}) * {_xx_u(p)}) & {_XX_MASK})"
+
+
+def _xx_add(a: str, b: str) -> str:
+    return f"((({a}) + ({b})) & {_XX_MASK})"
+
+
+def _xx_rotl(x: str, r: int) -> str:
+    return f"(((({x}) << {r}) | (({x}) >> {64 - r})) & {_XX_MASK})"
+
+
+def _xx_round(acc: str, lane: str) -> str:
+    return _xx_mul(_xx_rotl(_xx_add(acc, _xx_mul(lane, _XX_P2)), 31), _XX_P1)
+
+
+def _xx_step8(h: str, k: str) -> str:
+    mixed = f"xor({h}, {_xx_round(_xx_u(0), k)})"
+    return _xx_add(_xx_mul(_xx_rotl(mixed, 27), _XX_P1), _xx_u(_XX_P4))
+
+
+def _xx_step4(h: str, k: str) -> str:
+    mixed = f"xor({h}, {_xx_mul(k, _XX_P1)})"
+    return _xx_add(_xx_mul(_xx_rotl(mixed, 23), _XX_P2), _xx_u(_XX_P3))
+
+
+def _xx_step1(h: str, k: str) -> str:
+    return _xx_mul(_xx_rotl(f"xor({h}, {_xx_mul(k, _XX_P5)})", 11), _XX_P1)
+
+
+def _xx_le(hexstr: str, nbytes: int) -> str:
+    """The little-endian integer of an ``nbytes``-byte hex string."""
+    parts = " || ".join(f"substr({hexstr}, {2 * k + 1}, 2)" for k in reversed(range(nbytes)))
+    return _xx_u(f"CAST('0x' || {parts} AS UBIGINT)")
+
+
+def _xx_u64(v: str) -> str:
+    """A signed BIGINT expression as its unsigned 64-bit pattern."""
+    return _xx_u(f"CAST({v} AS HUGEINT) & 18446744073709551615")
+
+
+def _xx_fold(h: str, chunks: str, nbytes: int, step) -> str:
+    """Fold ``step`` over a list of ``nbytes``-byte hex chunks, from ``h``."""
+    z = _xx_u(0)
+    return (
+        f"list_reduce([{{'h': {h}, 'k': {z}}}] || list_transform({chunks}, "
+        f"xx_j -> {{'h': {z}, 'k': {_xx_le('xx_j', nbytes)}}}), "
+        f"(xx_t, xx_k) -> {{'h': {step('xx_t.h', 'xx_k.k')}, 'k': {z}}}).h"
+    )
+
+
+def _xx_final(h: str) -> str:
+    """XXH64's avalanche of ``h`` (bound once), as a signed BIGINT."""
+    a = _xx_mul("xor(xx_f, xx_f >> 33)", _XX_P2)
+    a = _xx_mul(f"xor({a}, {a} >> 29)", _XX_P3)
+    a = f"xor({a}, {a} >> 32)"
+    signed = f"CAST(CAST(xor({a}, {_xx_u(1 << 63)}) AS HUGEINT) - {1 << 63} AS BIGINT)"
+    return f"list_transform([{h}], xx_f -> {signed})[1]"
+
+
+def _xxh64(x: str, seed: str = "42") -> str:
+    """DuckDB twin of Spark ``xxhash64(x)`` for a VARCHAR expression ``x``
+    (its UTF-8 bytes): a BIGINT, and ``seed`` for NULL as in Spark."""
+    hx, s = "xx_in.x", "xx_in.s"
+    n = f"(length({hx}) // 2)"
+    rest = f"substr({hx}, 64 * ({n} // 32) + 1)"
+    stripes = (
+        f"list_transform(regexp_extract_all({hx}, '.{{64}}'), xx_i -> {{"
+        + ", ".join(
+            f"'{c}': {_xx_le(f'substr(xx_i, {16 * j + 1}, 16)', 8)}"
+            for j, c in enumerate("abcd")
+        )
+        + "})"
+    )
+    init = (
+        f"{{'a': {_xx_add(s, _xx_u((_XX_P1 + _XX_P2) % (1 << 64)))}, "
+        f"'b': {_xx_add(s, _xx_u(_XX_P2))}, 'c': {s}, "
+        f"'d': {_xx_add(s, _xx_u((1 << 64) - _XX_P1))}}}"
+    )
+    lanes = (
+        f"list_reduce(list_prepend({init}, {stripes}), (xx_v, xx_w) -> {{"
+        + ", ".join(f"'{c}': {_xx_round(f'xx_v.{c}', f'xx_w.{c}')}" for c in "abcd")
+        + "})"
+    )
+    conv = _xx_add(
+        _xx_add(_xx_add(_xx_rotl("xx_v.a", 1), _xx_rotl("xx_v.b", 7)), _xx_rotl("xx_v.c", 12)),
+        _xx_rotl("xx_v.d", 18),
+    )
+    for c in "abcd":
+        conv = _xx_add(
+            _xx_mul(f"xor({conv}, {_xx_round(_xx_u(0), f'xx_v.{c}')})", _XX_P1), _xx_u(_XX_P4)
+        )
+    h = _xx_add(
+        f"CASE WHEN {n} >= 32 THEN list_transform([{lanes}], xx_v -> {conv})[1] "
+        f"ELSE {_xx_add(s, _xx_u(_XX_P5))} END",
+        _xx_u(n),
+    )
+    h = _xx_fold(h, f"regexp_extract_all({rest}, '.{{16}}')", 8, _xx_step8)
+    h = _xx_fold(
+        h, f"regexp_extract_all(substr({rest}, 16 * ({n} % 32 // 8) + 1), '^.{{8}}')",
+        4, _xx_step4,
+    )
+    h = _xx_fold(h, f"regexp_extract_all(substr({hx}, 2 * ({n} - {n} % 4) + 1), '..')", 1, _xx_step1)
+    body = f"CASE WHEN {hx} IS NULL THEN CAST({seed} AS BIGINT) ELSE {_xx_final(h)} END"
+    return (
+        f"list_transform([{{'x': hex(encode({x})), 's': {_xx_u64(seed)}}}], "
+        f"xx_in -> {body})[1]"
+    )
+
+
+def _xxh64_long(v: str, seed: str = "42") -> str:
+    """DuckDB twin of Spark ``xxhash64`` of a BIGINT ``v`` (8 bytes) under
+    ``seed`` — so Spark's chained ``xxhash64(a, b)`` is
+    ``_xxh64_long(b, _xxh64_long(a))``. ``v`` must not be NULL."""
+    h = _xx_add(_xx_u64(seed), _xx_u(_XX_P5 + 8))
+    return _xx_final(_xx_step8(h, _xx_u64(v)))
+
+
+def _pmod(h: str, m: int) -> str:
+    """Spark ``pmod(h, m)`` for m > 0 (DuckDB ``%`` keeps the dividend's
+    sign), referencing ``h`` once."""
+    return f"(({h}) % {m} + {m}) % {m}"
 
 
 #: DuckDB twin of functions.valid_vector (the repo-wide degenerate-vector
@@ -931,27 +1071,38 @@ _MH_SIG_SQL = ", ".join(
     for a, b in zip(_MH_A, _MH_B)
 )
 
-
-@q(
-    "q35_minhash_lsh",
-    f"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks
-                   FROM documents WHERE text IS NOT NULL),
+#: The DuckDB twin of ``dedup.minhash_band_rows`` at (num_hashes=32,
+#: bands=8, shingle_n=3) as CTEs ending in ``banded(doc_id, band,
+#: bucket)``; ``sh`` keeps each document's distinct shingles (q152's
+#: verification join). Each distinct shingle is hashed once (the
+#: signature is a MIN, so list order is free), and ``banded`` is
+#: MATERIALIZED: DuckDB 1.0 inlines a CTE into every reference, and each
+#: of the four queries that share it (q35, q152, q169, q171) reads it at
+#: least twice.
+_MH_BANDED_CTES = f"""d AS (SELECT doc_id, string_split(text, ' ') AS toks
+               FROM documents WHERE text IS NOT NULL),
          sh AS (SELECT doc_id,
                   list_distinct(CASE WHEN len(toks) >= 3
                     THEN list_transform(range(1, len(toks) - 1),
                            i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
                     ELSE [array_to_string(toks, ' ')] END) AS shs
                 FROM d),
-         h AS (SELECT doc_id,
-                 list_transform(shs, s -> {_ph60('s')} % 2147483647) AS hs
-               FROM sh),
+         sx AS (SELECT doc_id, unnest(shs) AS s FROM sh),
+         hx AS (SELECT s, {_pmod(_xxh64('s'), 2147483647)} AS hv
+                FROM (SELECT DISTINCT s FROM sx)),
+         h AS (SELECT doc_id, list(hv) AS hs FROM sx JOIN hx USING (s) GROUP BY doc_id),
          sig AS (SELECT doc_id, [{_MH_SIG_SQL}] AS sg FROM h),
-         banded AS (
+         banded AS MATERIALIZED (
            SELECT doc_id, bb.band,
-                  {_ph60("array_to_string(list_transform("
-                         "list_slice(sg, bb.band*4 + 1, bb.band*4 + 4), "
-                         "x -> CAST(x AS VARCHAR)), ',')")} AS bucket
-           FROM sig CROSS JOIN (SELECT unnest(range(0, 8)) AS band) bb),
+                  {_xxh64("array_to_string(list_transform("
+                          "list_slice(sg, bb.band*4 + 1, bb.band*4 + 4), "
+                          "x -> CAST(x AS VARCHAR)), ',')")} AS bucket
+           FROM sig CROSS JOIN (SELECT unnest(range(0, 8)) AS band) bb)"""
+
+
+@q(
+    "q35_minhash_lsh",
+    f"""WITH {_MH_BANDED_CTES},
          capped AS (SELECT doc_id, band, bucket FROM (
              SELECT *, COUNT(*) OVER (PARTITION BY band, bucket) AS bsz
              FROM banded)
@@ -960,15 +1111,15 @@ _MH_SIG_SQL = ", ".join(
        FROM capped a JOIN capped b
          ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
        ORDER BY id_a, id_b""",
-    "MinHash+LSH candidate pairs on the portable MD5-60bit hash family "
-    "(functions.portable_hash60) — the full pipeline (shingles, universal-"
-    "hash signature, band buckets, bucket cap, pair join) is exactly "
-    "replicated by the DuckDB oracle; recall vs planted near-dup groups "
-    "stays property-tested in tests/",
+    "MinHash+LSH candidate pairs on xxhash64 — the full pipeline "
+    "(shingles, universal-hash signature, band buckets, bucket cap, pair "
+    "join) is exactly replicated by the DuckDB oracle through its pure-SQL "
+    "XXH64 twin; recall vs planted near-dup groups stays property-tested "
+    "in tests/",
 )
 def q35_minhash_lsh(spark, sf_dir):
-    # NULL text filtered on both sides: the portable hash maps NULL→NULL
-    # (no xxhash64 NULL→seed class), so NULL docs have no signature.
+    # NULL text filtered on both sides: NULL docs have no signature (an
+    # xxhash64 NULL→seed class would bucket every NULL doc together).
     d = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     # trigram shingles: the synthetic docs draw from a small token vocabulary,
     # so unigram shingles collapse into a handful of giant LSH buckets
@@ -976,7 +1127,7 @@ def q35_minhash_lsh(spark, sf_dir):
     # bucket cap guards the residual skew — the boilerplate defense at 100TB.
     return dedup.minhash_lsh_candidate_pairs(
         d, "text", "doc_id", num_hashes=32, bands=8, shingle_n=3,
-        max_bucket_size=100, hash_fn="portable",
+        max_bucket_size=100,
     ).orderBy("id_a", "id_b")
 
 
@@ -984,15 +1135,18 @@ def q35_minhash_lsh(spark, sf_dir):
     "q36_simhash",
     f"""WITH d AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS shs
                    FROM documents WHERE doc_id < 300 AND text IS NOT NULL),
-         hh AS (SELECT doc_id, {_ph60('s')} AS h
-                FROM (SELECT doc_id, unnest(shs) AS s FROM d)),
+         ds AS (SELECT doc_id, unnest(shs) AS s FROM d),
+         sh AS (SELECT s, {_xxh64('s')} AS h FROM (SELECT DISTINCT s FROM ds)),
+         hh AS (SELECT doc_id, h FROM ds JOIN sh USING (s)),
          bits AS (SELECT doc_id, j,
                     SUM(CASE WHEN (h >> j) & 1 = 1 THEN 1 ELSE -1 END) AS v
-                  FROM hh CROSS JOIN (SELECT unnest(range(0, 60)) AS j) js
+                  FROM hh CROSS JOIN (SELECT unnest(range(0, 64)) AS j) js
                   GROUP BY doc_id, j),
+         -- bit 63 is the sign bit: its weight is -2^63 (1 << 63 overflows)
          fp AS (SELECT doc_id,
-                  CAST(SUM(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << j)
-                           ELSE 0 END) AS BIGINT) AS f
+                  CAST(SUM(CASE WHEN v <= 0 THEN 0
+                                WHEN j = 63 THEN -9223372036854775808
+                                ELSE CAST(1 AS BIGINT) << j END) AS BIGINT) AS f
                 FROM bits GROUP BY doc_id)
        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
               CAST(bit_count(xor(a.f, b.f)) AS INT) AS hamming
@@ -1002,15 +1156,15 @@ def q35_minhash_lsh(spark, sf_dir):
     "SimHash near-dup pairs at hamming ≤ 8 among doc_id<300, paired via "
     "pigeonhole banding (any pair within 8 bits shares a whole band — an "
     "exact candidate superset, so the banded result is identical to "
-    "all-pairs, which is exactly what the oracle computes). Portable "
-    "MD5-60bit fingerprint: bit-votes over bits 0..59 of "
-    "functions.portable_hash60, exactly replicated in DuckDB",
+    "all-pairs, which is exactly what the oracle computes). 64-bit "
+    "fingerprint: bit-votes over the xxhash64 of each distinct token, "
+    "exactly replicated in DuckDB by the pure-SQL XXH64 twin",
 )
 def q36_simhash(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").filter(
         (F.col("doc_id") < 300) & F.col("text").isNotNull()
     )
-    fp = dedup.simhash_fingerprints(d, "text", "doc_id", shingle_n=1, hash_fn="portable")
+    fp = dedup.simhash_fingerprints(d, "text", "doc_id", shingle_n=1)
     return dedup.simhash_near_dup_pairs(fp, "doc_id", "fp", max_hamming=8).orderBy(
         "id_a", "id_b"
     )
@@ -1118,31 +1272,33 @@ def q39_token_counts(spark, sf_dir):
     )
 
 
+#: Winnowing's window chain ``acc -> xxhash64(acc, x)`` as a list_reduce lambda.
+_WINNOW_CHAIN = f"(a, x) -> {_xxh64_long('x', _xxh64_long('a'))}"
+
+
 @q(
     "q40_fingerprints",
     f"""WITH d AS (SELECT doc_id, text, string_split(text, ' ') AS toks
                    FROM documents WHERE text IS NOT NULL),
          th AS (SELECT doc_id, text,
-                  list_transform(toks, t -> {_ph60('t')} % 2147483648) AS h
+                  list_transform(toks, t -> {_xxh64('t')}) AS h
                 FROM d),
          fps AS (SELECT doc_id, text,
                    CASE WHEN len(h) >= 5 THEN
                      list_transform(range(1, len(h) - 3),
                        i -> list_reduce(
                               list_prepend(CAST(0 AS BIGINT), list_slice(h, i, i + 4)),
-                              (a, x) -> (a * 2654435761 + x) % 2147483648))
+                              {_WINNOW_CHAIN}))
                    ELSE [list_reduce(
-                           list_prepend(CAST(0 AS BIGINT), h),
-                           (a, x) -> (a * 2654435761 + x) % 2147483648)] END AS f
+                           list_prepend(CAST(0 AS BIGINT), h), {_WINNOW_CHAIN})] END AS f
                  FROM th)
-       SELECT doc_id, {_ph60('text')} AS fp64,
+       SELECT doc_id, {_xxh64('text')} AS fp64,
               CAST(len(list_filter(f, x -> x % 8 = 0)) AS INT) AS n_selected
        FROM fps ORDER BY doc_id""",
-    "winnowing rolling-hash fingerprints on the portable hash family: "
-    "tokens hashed once with portable_hash60 folded into the 31-bit field, "
-    "5-token windows chained with the epoch-shuffle multiply-mod round, "
-    "keep-mod selection — count and whole-doc fingerprint exactly "
-    "replicated by the DuckDB oracle (list_reduce fold twin)",
+    "winnowing rolling-hash fingerprints: tokens hashed once with "
+    "xxhash64, 5-token windows chained as xxhash64(acc, x), keep-mod "
+    "selection — count and whole-doc fingerprint exactly replicated by "
+    "the DuckDB oracle (list_reduce fold over the pure-SQL XXH64 twin)",
 )
 def q40_fingerprints(spark, sf_dir):
     # staged chain-hash winnowing (2.5x the string-join expression form:
@@ -1151,8 +1307,7 @@ def q40_fingerprints(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     return text.winnowing_fingerprints(
         d, "text", "doc_id", window=5, keep_mod=8,
-        extra={"fp64": text.doc_fingerprint("text", hash_fn="portable")},
-        hash_fn="portable",
+        extra={"fp64": text.doc_fingerprint("text")},
     ).select("doc_id", "fp64", "n_selected").orderBy("doc_id")
 
 
@@ -1503,10 +1658,15 @@ def q44_pandas_udf(spark, sf_dir):
     )
 
 
+#: sketches.hll_registers' 60-bit key hash of a VARCHAR column ``k``:
+#: ``shiftrightunsigned(xxhash64(k), 4)``.
+_HLL60 = f"(({_xxh64('k')}) >> 4) & 1152921504606846975"
+
+
 @q(
     "q45_approx_distinct",
-    """WITH ph AS (SELECT CAST('0x' || substr(md5(CAST(l_partkey AS VARCHAR)), 1, 15) AS BIGINT) AS h
-                 FROM lineitem WHERE l_partkey IS NOT NULL),
+    f"""WITH ph AS (SELECT {_HLL60} AS h FROM (SELECT DISTINCT
+                   CAST(l_partkey AS VARCHAR) AS k FROM lineitem WHERE l_partkey IS NOT NULL)),
        pr AS (SELECT h % 4096 AS bucket,
                   MAX(CASE WHEN (h >> 12) = 0 THEN 49
                       ELSE bit_count(((h >> 12) & (-(h >> 12))) - 1) + 1 END) AS reg
@@ -1516,8 +1676,8 @@ def q44_pandas_udf(spark, sf_dir):
                        + (4096 - COUNT(*)) * (CAST(1 AS BIGINT) << 49) AS DOUBLE) AS zz,
                   4096 - COUNT(*) AS v
                 FROM pr),
-       sh AS (SELECT CAST('0x' || substr(md5(CAST(l_suppkey AS VARCHAR)), 1, 15) AS BIGINT) AS h
-                 FROM lineitem WHERE l_suppkey IS NOT NULL),
+       sh AS (SELECT {_HLL60} AS h FROM (SELECT DISTINCT
+                   CAST(l_suppkey AS VARCHAR) AS k FROM lineitem WHERE l_suppkey IS NOT NULL)),
        sr AS (SELECT h % 4096 AS bucket,
                   MAX(CASE WHEN (h >> 12) = 0 THEN 49
                       ELSE bit_count(((h >> 12) & (-(h >> 12))) - 1) + 1 END) AS reg
@@ -1535,7 +1695,7 @@ def q44_pandas_udf(spark, sf_dir):
                       ELSE round(6.810691763087074e+21 / zz, 3) END FROM sa) AS n_supp_approx""",
     "HLL distinct counts — the 100TB path for q03's exact counts (<=4096 "
     "rows of mergeable register state, no key-universe shuffle) — as an "
-    "EXPLICIT HyperLogLog on the portable MD5-60bit hash "
+    "EXPLICIT HyperLogLog on the top 60 bits of xxhash64 "
     "(sketches.hll_registers/hll_estimate), so the registers and the "
     "estimate are exactly computable by the DuckDB oracle: integer-exact "
     "trailing-zero rho (bit_count((w & -w) - 1) + 1, no float log2), "
@@ -1557,7 +1717,7 @@ def q45_approx_distinct(spark, sf_dir):
     )
     # r13: pre_distinct — TPC-H foreign keys repeat 6-200×, so hashing the
     # distinct (tag, k) set pays one small partially-aggregated shuffle to
-    # skip ~85% of the md5 work (registers identical by MAX semantics)
+    # skip ~85% of the hash work (registers identical by MAX semantics)
     est = sketches.hll_estimate(
         sketches.hll_registers(tagged, "k", group_cols=["tag"], pre_distinct=True),
         group_cols=["tag"],
@@ -3228,8 +3388,8 @@ def q93_correlated_scalar_subquery(spark, sf_dir):
 
 
 # CMS universal-hash row coefficients shared verbatim with the oracle twin
-# (one md5 per token, arithmetic reseeds for the 5 depth rows — the
-# MinHash trick; round 6 paid 14× for an md5 per token×row here).
+# (one xxhash64 per token, arithmetic reseeds for the 5 depth rows — the
+# MinHash trick).
 _CMS_A, _CMS_B = sketches.cms_coeffs(5)
 _CMS_SEEDS_SQL = ", ".join(
     f"({j}, CAST({a} AS BIGINT), CAST({b} AS BIGINT))"
@@ -3242,27 +3402,25 @@ _CMS_SEEDS_SQL = ", ".join(
     f"""WITH tok AS (SELECT unnest(string_split(text, ' ')) AS token
                     FROM documents WHERE text IS NOT NULL),
        seeds(j, a, b) AS (VALUES {_CMS_SEEDS_SQL}),
-       hashed AS (SELECT token, {_ph60('token')} % 2147483647 AS h FROM tok),
+       vocab AS (SELECT token AS item, n, {_pmod(_xxh64('token'), 2147483647)} AS h
+                 FROM (SELECT token, COUNT(*) AS n FROM tok GROUP BY token)),
        cms AS (SELECT j, ((a * h) % 2147483647 + b) % 2147483647 % 2048 AS bucket,
-                      COUNT(*) AS cnt
-               FROM hashed CROSS JOIN seeds
+                      CAST(SUM(n) AS BIGINT) AS cnt
+               FROM vocab CROSS JOIN seeds
                GROUP BY 1, 2),
        probes AS (SELECT item, j,
                          ((a * h) % 2147483647 + b) % 2147483647 % 2048 AS bucket
-                  FROM (SELECT DISTINCT token AS item,
-                               {_ph60('token')} % 2147483647 AS h FROM tok)
-                  CROSS JOIN seeds),
+                  FROM vocab CROSS JOIN seeds),
        est AS (SELECT item, MIN(COALESCE(c.cnt, 0)) AS est
                FROM probes p LEFT JOIN cms c USING (j, bucket)
                GROUP BY item)
        SELECT item, est FROM est ORDER BY est DESC, item LIMIT 10""",
     "Count-Min-sketch heavy hitters: one-scan fixed-size (5x2048) sketch, "
-    "broadcast probe join, top-10 by estimated frequency — on the "
-    "portable MD5-60bit hash family with UNIVERSAL-HASH row reseeds "
-    "(one md5 per token; bucket_j = ((a_j*h mod M)+b_j) mod M mod width, "
-    "M=2^31-1), so sketch registers AND estimates are bit-identical in "
-    "the DuckDB oracle at 1/depth the hashing cost of the seeded-md5 "
-    "construction. Over/merge bounds stay property-tested",
+    "broadcast probe join, top-10 by estimated frequency — xxhash64 with "
+    "UNIVERSAL-HASH row reseeds (one hash per distinct token; bucket_j = "
+    "((a_j*h mod M)+b_j) mod M mod width, M=2^31-1), so sketch registers "
+    "AND estimates are bit-identical in the DuckDB oracle's pure-SQL "
+    "XXH64 twin. Over/merge bounds stay property-tested",
 )
 def q94_cms_heavy_hitters(spark, sf_dir):
     # ONE corpus pass: a single map-side-combining groupBy yields the
@@ -3275,10 +3433,8 @@ def q94_cms_heavy_hitters(spark, sf_dir):
         F.explode(tokens("text")).alias("token")
     )
     counts = tok.groupBy("token").agg(F.count(F.lit(1)).alias("n")).localCheckpoint()
-    cms = sketches.build_cms(counts, "token", hash_fn="portable", weight_col="n")
-    est = sketches.cms_estimate(
-        cms, counts, "token", hash_fn="portable", items_distinct=True
-    )
+    cms = sketches.build_cms(counts, "token", weight_col="n")
+    est = sketches.cms_estimate(cms, counts, "token", items_distinct=True)
     return est.orderBy(F.desc("est"), F.asc("item")).limit(10)
 
 
@@ -5448,7 +5604,7 @@ def q146_image_phash(spark, sf_dir):
         ).alias("px"),
     )
     media = multimodal.images_from_pixel_arrays(px, "media_id", "px", width=8, height=8)
-    return multimodal.image_perceptual_hashes(media, method="ahash", hash_size=8).orderBy(
+    return multimodal.image_perceptual_hashes(media, hash_size=8).orderBy(
         "media_id"
     )
 
@@ -5571,20 +5727,25 @@ def q148_cdc_apply(spark, sf_dir):
     return merged.orderBy("c_custkey")
 
 
+#: dedup.domain_quota_sample / temperature_mix_sample's per-document rank
+#: at seed 0: ``xxhash64(concat_ws(':', '0', id))``.
+_QUOTA_RANK = _xxh64("concat_ws(':', '0', CAST(doc_id AS VARCHAR))")
+
+
 @q(
     "q149_domain_quota",
     f"""SELECT doc_id, source, n_chars
        FROM (SELECT doc_id, source, n_chars,
                     row_number() OVER (
-                      PARTITION BY source
-                      ORDER BY {_ph60("'0:' || CAST(doc_id AS VARCHAR)")}, doc_id) AS rn
+                      PARTITION BY source ORDER BY {_QUOTA_RANK}, doc_id) AS rn
              FROM documents)
        WHERE rn <= 7 ORDER BY doc_id""",
     "domain-quota subsampling (dedup.domain_quota_sample): cap every "
-    "source at 7 docs chosen by deterministic portable-hash rank — the "
+    "source at 7 docs chosen by deterministic xxhash64 rank — the "
     "C4/RefinedWeb anti-host-domination cap, EXACT per-domain counts "
     "(vs stratified_sample's Bernoulli rates) and oracle-checkable "
-    "because the rank hash is the cross-engine portable_hash60. One "
+    "because the DuckDB oracle recomputes the rank hash with its "
+    "pure-SQL XXH64 twin. One "
     "shuffle on the domain key; NULL sources form their own capped "
     "class in both engines",
 )
@@ -5663,24 +5824,7 @@ def q151_pq_adc_topk(spark, sf_dir):
 @q(
     "q152_lsh_near_dedup",
     f"""WITH RECURSIVE
-         d AS (SELECT doc_id, string_split(text, ' ') AS toks
-               FROM documents WHERE text IS NOT NULL),
-         sh AS (SELECT doc_id,
-                  list_distinct(CASE WHEN len(toks) >= 3
-                    THEN list_transform(range(1, len(toks) - 1),
-                           i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                    ELSE [array_to_string(toks, ' ')] END) AS shs
-                FROM d),
-         h AS (SELECT doc_id,
-                 list_transform(shs, s -> {_ph60('s')} % 2147483647) AS hs
-               FROM sh),
-         sig AS (SELECT doc_id, [{_MH_SIG_SQL}] AS sg FROM h),
-         banded AS (
-           SELECT doc_id, bb.band,
-                  {_ph60("array_to_string(list_transform("
-                         "list_slice(sg, bb.band*4 + 1, bb.band*4 + 4), "
-                         "x -> CAST(x AS VARCHAR)), ',')")} AS bucket
-           FROM sig CROSS JOIN (SELECT unnest(range(0, 8)) AS band) bb),
+         {_MH_BANDED_CTES},
          capped AS (SELECT doc_id, band, bucket FROM (
              SELECT *, COUNT(*) OVER (PARTITION BY band, bucket) AS bsz
              FROM banded)
@@ -5712,8 +5856,8 @@ def q151_pq_adc_topk(spark, sf_dir):
     "END-TO-END MinHash near-dedup (dedup.lsh_near_dedup): LSH banding -> "
     "exact-Jaccard verification of candidates (one IEEE division of "
     "shingle-set sizes) -> connected components -> keep min-id per "
-    "cluster; NULL-text docs always survive. The full pipeline on the "
-    "portable hash family is exactly replicated by the DuckDB "
+    "cluster; NULL-text docs always survive. The full pipeline on "
+    "xxhash64 is exactly replicated by the DuckDB "
     "recursive-CTE twin (q35's CTE chain + verification join + "
     "transitive closure + anti-filter)",
 )
@@ -5721,7 +5865,7 @@ def q152_lsh_near_dedup(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     out = dedup.lsh_near_dedup(
         docs, "text", "doc_id", num_hashes=32, bands=8, shingle_n=3,
-        max_bucket_size=100, hash_fn="portable", verify_jaccard=0.8,
+        max_bucket_size=100, verify_jaccard=0.8,
     )
     return out.select("doc_id", "source", "n_chars").orderBy("doc_id")
 
@@ -5768,8 +5912,7 @@ def q153_ivfpq_adc_topk(spark, sf_dir):
          quo AS (SELECT dom, (CAST(2000 AS BIGINT) * qw) // z AS n FROM w, z),
          r AS (SELECT doc_id, source, n_chars,
                  row_number() OVER (
-                   PARTITION BY source
-                   ORDER BY {_ph60("'0:' || CAST(doc_id AS VARCHAR)")}, doc_id
+                   PARTITION BY source ORDER BY {_QUOTA_RANK}, doc_id
                  ) AS rn
                FROM documents)
        SELECT doc_id, source, n_chars
@@ -5779,7 +5922,7 @@ def q153_ivfpq_adc_topk(spark, sf_dir):
     "the Conneau et al. multilingual sampling rule): per-domain quota "
     "n_i = (target · floor(sqrt(c_i)·1e6)) div Σ — IEEE sqrt is correctly "
     "rounded so the T=2 weight quantization is bit-identical cross-engine "
-    "and the quota math is pure BIGINT; docs picked by portable-hash rank "
+    "and the quota math is pure BIGINT; docs picked by xxhash64 rank "
     "within domain; NULL domains are their own quota class (null-safe "
     "join both sides)",
 )
@@ -6183,16 +6326,16 @@ def q162_halflife_decay(spark, sf_dir):
 
 @q(
     "q163_dsir_weights",
-    """WITH rt AS (SELECT doc_id, lang, string_split(text, ' ') AS toks
+    f"""WITH rt AS (SELECT doc_id, lang, string_split(text, ' ') AS toks
                    FROM documents WHERE text IS NOT NULL),
-         rg AS (SELECT doc_id, lang,
-                       CAST(('0x' || substr(md5(gram), 1, 8)) AS BIGINT)
-                         % 4096 AS bucket
-                FROM (SELECT doc_id, lang,
-                             unnest(list_concat(toks,
-                               list_transform(range(1, len(toks)),
-                                 i -> toks[i] || ' ' || toks[i+1]))) AS gram
-                      FROM rt)),
+         rgr AS (SELECT doc_id, lang,
+                        unnest(list_concat(toks,
+                          list_transform(range(1, len(toks)),
+                            i -> toks[i] || ' ' || toks[i+1]))) AS gram
+                 FROM rt),
+         gb AS (SELECT gram, {_pmod(_xxh64('gram'), 4096)} AS bucket
+                FROM (SELECT DISTINCT gram FROM rgr)),
+         rg AS (SELECT doc_id, lang, bucket FROM rgr JOIN gb USING (gram)),
          rb AS (SELECT bucket, COUNT(*) AS rcnt FROM rg GROUP BY bucket),
          tb AS (SELECT bucket, COUNT(*) AS tcnt FROM rg
                 WHERE lang = 'en' GROUP BY bucket),
@@ -6212,8 +6355,8 @@ def q162_halflife_decay(spark, sf_dir):
     "score every doc by sum over its unigram+bigram features of "
     "ln p_target(bucket) - ln p_raw(bucket), Laplace-smoothed "
     "bag-of-4096-buckets models, target = the lang='en' slice. The "
-    "gram->bucket hash is the first 8 hex digits of md5 (bit-identical "
-    "cross-engine); each ln DECIMAL(18,6)-quantized so per-bucket deltas "
+    "gram->bucket hash is pmod(xxhash64(gram), 4096) (the oracle's pure-SQL "
+    "XXH64 twin); each ln DECIMAL(18,6)-quantized so per-bucket deltas "
     "and the per-doc SUM are exact and order-independent (q136 "
     "discipline, same accepted 1-ulp ln caveat). Feature hashing bounds "
     "model state at 4096 rows regardless of vocab: bucket counts "
@@ -6232,16 +6375,16 @@ def q163_dsir_weights(spark, sf_dir):
 
 @q(
     "q164_corpus_drift",
-    """WITH rt AS (SELECT doc_id, string_split(text, ' ') AS toks
+    f"""WITH rt AS (SELECT doc_id, string_split(text, ' ') AS toks
                    FROM documents WHERE text IS NOT NULL),
-         g AS (SELECT doc_id,
-                      CAST(('0x' || substr(md5(gram), 1, 8)) AS BIGINT)
-                        % 4096 AS bucket
-               FROM (SELECT doc_id,
-                            unnest(list_concat(toks,
-                              list_transform(range(1, len(toks)),
-                                i -> toks[i] || ' ' || toks[i+1]))) AS gram
-                     FROM rt)),
+         gr AS (SELECT doc_id,
+                       unnest(list_concat(toks,
+                         list_transform(range(1, len(toks)),
+                           i -> toks[i] || ' ' || toks[i+1]))) AS gram
+                FROM rt),
+         gb AS (SELECT gram, {_pmod(_xxh64('gram'), 4096)} AS bucket
+                FROM (SELECT DISTINCT gram FROM gr)),
+         g AS (SELECT doc_id, bucket FROM gr JOIN gb USING (gram)),
          ca AS (SELECT bucket, COUNT(*) AS n_a FROM g
                 WHERE doc_id % 2 = 0 GROUP BY bucket),
          cb AS (SELECT bucket, COUNT(*) AS n_b FROM g
@@ -6378,14 +6521,16 @@ def q166_max_dup_spans(spark, sf_dir):
     f"""WITH tok AS (SELECT lang, unnest(string_split(text, ' ')) AS token
                     FROM documents WHERE text IS NOT NULL),
        seeds(j, a, b) AS (VALUES {_CMS_SEEDS_SQL}),
-       hashed AS (SELECT lang, {_ph60('token')} % 2147483647 AS h FROM tok),
+       th AS (SELECT token, {_pmod(_xxh64('token'), 2147483647)} AS h
+              FROM (SELECT DISTINCT token FROM tok)),
+       hashed AS (SELECT lang, h FROM tok JOIN th USING (token)),
        cms AS (SELECT lang, j,
                       ((a * h) % 2147483647 + b) % 2147483647 % 2048 AS bucket,
                       COUNT(*) AS cnt
                FROM hashed CROSS JOIN seeds GROUP BY 1, 2, 3),
        cand AS (SELECT token AS item FROM tok GROUP BY token
                 ORDER BY COUNT(*) DESC, token LIMIT 20),
-       ph AS (SELECT item, {_ph60('item')} % 2147483647 AS h FROM cand),
+       ph AS (SELECT item, h FROM cand JOIN th ON th.token = cand.item),
        probes AS (SELECT item, j,
                          ((a * h) % 2147483647 + b) % 2147483647 % 2048 AS bucket
                   FROM ph CROSS JOIN seeds),
@@ -6409,14 +6554,14 @@ def q166_max_dup_spans(spark, sf_dir):
     "whatever the vocabulary, candidates come from a 20-item global "
     "top-count pool (deterministic count-desc/token-asc tie-break) and "
     "probe every group's sketch (est=min over cells, 0 when any cell is "
-    "absent). Portable MD5-60bit + universal reseeds, so every sketch "
-    "cell AND estimate is bit-identical in the DuckDB twin. NULL lang "
+    "absent). xxhash64 + universal reseeds, so every sketch cell AND "
+    "estimate is bit-identical in the DuckDB twin. NULL lang "
     "is a real group; NULLS FIRST pinned",
 )
 def q167_grouped_heavy_hitters(spark, sf_dir):
     from data_engineering_nd_datalake_project_4_spark.operators import ensure_map_parallelism
 
-    # the sketch build hashes md5 once per token INSTANCE — compute-dense
+    # the sketch build hashes once per token INSTANCE — compute-dense
     # map work that must not serialize onto a single-row-group scan task
     tok = (
         ensure_map_parallelism(_t(spark, sf_dir, "documents"))
@@ -6424,16 +6569,16 @@ def q167_grouped_heavy_hitters(spark, sf_dir):
         .select("lang", F.explode(tokens("text")).alias("token"))
     )
     out = sketches.grouped_heavy_hitters(
-        tok, "token", ["lang"], k=3, candidate_pool=20, hash_fn="portable"
+        tok, "token", ["lang"], k=3, candidate_pool=20
     )
     return out.orderBy(F.asc("lang"), F.desc("est"), F.asc("item"))
 
 
 @q(
     "q168_sketch_state_rollup",
-    """WITH h AS (SELECT event_type,
-                CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15) AS BIGINT) AS h
-              FROM events WHERE user_id IS NOT NULL),
+    f"""WITH h AS (SELECT event_type, {_HLL60} AS h
+              FROM (SELECT DISTINCT event_type, CAST(user_id AS VARCHAR) AS k
+                    FROM events WHERE user_id IS NOT NULL)),
        r AS (SELECT event_type, h % 4096 AS bucket,
                 MAX(CASE WHEN (h >> 12) = 0 THEN 49
                     ELSE bit_count(((h >> 12) & (-(h >> 12))) - 1) + 1 END) AS reg
@@ -6456,7 +6601,7 @@ def q167_grouped_heavy_hitters(spark, sf_dir):
     "merge theorem makes this EXACTLY oracle-checkable: max of daily "
     "registers == registers of the union, so the oracle computes the "
     "direct per-type sketch from raw rows and the estimates match "
-    "bit-for-bit (q45's portable-hash register arithmetic, grouped). "
+    "bit-for-bit (q45's xxhash64 register arithmetic, grouped). "
     "ln() in the linear-counting branch is the accepted 1-ulp class",
 )
 def q168_sketch_state_rollup(spark, sf_dir):
@@ -6476,24 +6621,7 @@ def q168_sketch_state_rollup(spark, sf_dir):
 
 @q(
     "q169_incremental_lsh_dedup",
-    f"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks
-                   FROM documents WHERE text IS NOT NULL),
-         sh AS (SELECT doc_id,
-                  list_distinct(CASE WHEN len(toks) >= 3
-                    THEN list_transform(range(1, len(toks) - 1),
-                           i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                    ELSE [array_to_string(toks, ' ')] END) AS shs
-                FROM d),
-         h AS (SELECT doc_id,
-                 list_transform(shs, s -> {_ph60('s')} % 2147483647) AS hs
-               FROM sh),
-         sig AS (SELECT doc_id, [{_MH_SIG_SQL}] AS sg FROM h),
-         banded AS (
-           SELECT doc_id, bb.band,
-                  {_ph60("array_to_string(list_transform("
-                         "list_slice(sg, bb.band*4 + 1, bb.band*4 + 4), "
-                         "x -> CAST(x AS VARCHAR)), ',')")} AS bucket
-           FROM sig CROSS JOIN (SELECT unnest(range(0, 8)) AS band) bb),
+    f"""WITH {_MH_BANDED_CTES},
          corpus_b AS (SELECT DISTINCT band, bucket FROM banded WHERE doc_id < 250),
          batch_b AS (SELECT * FROM banded WHERE doc_id >= 250),
          dropped AS (
@@ -6514,8 +6642,8 @@ def q168_sketch_state_rollup(spark, sf_dir):
     "any band-bucket hit against the store or a smaller-id "
     "batch doc (pairwise-greedy rule — deliberately non-iterative, so "
     "the ENTIRE operator is this exact SQL twin; CC keep-min stays in "
-    "q152). NULL-text docs pass through (no signature). Portable "
-    "MD5-60bit hash family makes every bucket bit-identical in DuckDB; "
+    "q152). NULL-text docs pass through (no signature). The pure-SQL "
+    "XXH64 twin makes every xxhash64 bucket bit-identical in DuckDB; "
     "corpus text is never rescanned and batch text rides no keyed "
     "exchange (output omits it; band rows are 24-byte hashes)",
 )
@@ -6529,12 +6657,10 @@ def q169_incremental_lsh_dedup(spark, sf_dir):
     )
     store = _pid_scoped_store(sf_dir, "q169")
     incremental.build_band_store(
-        corpus, "text", "doc_id", store,
-        num_hashes=32, bands=8, shingle_n=3, hash_fn="portable",
+        corpus, "text", "doc_id", store, num_hashes=32, bands=8, shingle_n=3
     )
     survivors = incremental.incremental_lsh_dedup(
-        spark, batch, "text", "doc_id", store,
-        num_hashes=32, bands=8, shingle_n=3, hash_fn="portable",
+        spark, batch, "text", "doc_id", store, num_hashes=32, bands=8, shingle_n=3
     )
     return survivors.select("doc_id", "source", "n_chars").orderBy("doc_id")
 
@@ -6604,24 +6730,7 @@ def q170_incremental_semantic_dedup(spark, sf_dir):
 
 @q(
     "q171_versioned_lsh_dedup_replay",
-    f"""WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks
-                   FROM documents WHERE text IS NOT NULL),
-         sh AS (SELECT doc_id,
-                  list_distinct(CASE WHEN len(toks) >= 3
-                    THEN list_transform(range(1, len(toks) - 1),
-                           i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                    ELSE [array_to_string(toks, ' ')] END) AS shs
-                FROM d),
-         h AS (SELECT doc_id,
-                 list_transform(shs, s -> {_ph60('s')} % 2147483647) AS hs
-               FROM sh),
-         sig AS (SELECT doc_id, [{_MH_SIG_SQL}] AS sg FROM h),
-         banded AS (
-           SELECT doc_id, bb.band,
-                  {_ph60("array_to_string(list_transform("
-                         "list_slice(sg, bb.band*4 + 1, bb.band*4 + 4), "
-                         "x -> CAST(x AS VARCHAR)), ',')")} AS bucket
-           FROM sig CROSS JOIN (SELECT unnest(range(0, 8)) AS band) bb),
+    f"""WITH {_MH_BANDED_CTES},
          corpus_b AS (SELECT DISTINCT band, bucket FROM banded WHERE doc_id < 250),
          b0 AS (SELECT * FROM banded WHERE doc_id >= 250 AND doc_id < 375),
          dropped0 AS (
@@ -6675,7 +6784,7 @@ def q171_versioned_lsh_dedup_replay(spark, sf_dir):
     )
     b1 = d.filter(F.col("doc_id") >= 375).select("doc_id", "text", "source")
     store = _pid_scoped_store(sf_dir, "q171")
-    kw = dict(num_hashes=32, bands=8, shingle_n=3, hash_fn="portable")
+    kw = dict(num_hashes=32, bands=8, shingle_n=3)
     incremental.build_band_store(corpus, "text", "doc_id", store, **kw)
     s0 = incremental.incremental_lsh_dedup(
         spark, b0, "text", "doc_id", store, src_batch=0, **kw

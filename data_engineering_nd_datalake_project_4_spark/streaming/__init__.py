@@ -343,7 +343,6 @@ def run_cms_state_stream(
     checkpoint: str,
     width: int = 2048,
     depth: int = 5,
-    hash_fn: str = "xxhash64",
     group_cols=(),
     query_name: str = "cms_state",
 ) -> None:
@@ -371,9 +370,7 @@ def run_cms_state_stream(
     gcols = list(group_cols)
 
     def step(batch_df, prior):
-        cells = build_cms(
-            batch_df, col, width=width, depth=depth, hash_fn=hash_fn, group_cols=gcols
-        )
+        cells = build_cms(batch_df, col, width=width, depth=depth, group_cols=gcols)
         if prior is not None:
             cells = prior.unionByName(cells)
         return merge_cms(cells, group_cols=gcols)
@@ -490,7 +487,6 @@ def run_incremental_lsh_dedup_stream(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_n: int = 3,
-    hash_fn: str = "xxhash64",
     query_name: str = "incremental_lsh_dedup",
     compact_every: int | None = None,
 ) -> None:
@@ -539,7 +535,6 @@ def run_incremental_lsh_dedup_stream(
         stream_docs, incremental.incremental_lsh_dedup, (text_col, id_col),
         store_path, decisions_root, checkpoint, query_name, compact_every,
         num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
-        hash_fn=hash_fn,
     )
 
 

@@ -461,9 +461,9 @@ def test_count_min_sketch_bounds(spark, sf_dir):
 
 def test_cms_weighted_build_and_distinct_probe_equivalence(spark, sf_dir):
     """build_cms(weight_col=) from a pre-aggregated (value, count) frame
-    produces the IDENTICAL sketch as the per-instance build, in both hash
-    families; cms_estimate(items_distinct=True) on the counts frame gives
-    the identical estimates — the one-corpus-pass q94 shape."""
+    produces the IDENTICAL sketch as the per-instance build;
+    cms_estimate(items_distinct=True) on the counts frame gives the
+    identical estimates — the one-corpus-pass q94 shape."""
     from data_engineering_nd_datalake_project_4_spark.operators import sketches
 
     tok = (
@@ -471,20 +471,16 @@ def test_cms_weighted_build_and_distinct_probe_equivalence(spark, sf_dir):
         .select(F.explode(F.split("text", " ")).alias("token"))
     )
     counts = tok.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
-    for hf in ("xxhash64", "portable"):
-        plain = {(r["row"], r["bucket"]): r["cnt"]
-                 for r in sketches.build_cms(tok, "token", hash_fn=hf).collect()}
-        weighted = {(r["row"], r["bucket"]): r["cnt"]
-                    for r in sketches.build_cms(
-                        counts, "token", hash_fn=hf, weight_col="n").collect()}
-        assert plain == weighted, hf
-        cms = sketches.build_cms(counts, "token", hash_fn=hf, weight_col="n")
-        e1 = {r["item"]: r["est"]
-              for r in sketches.cms_estimate(cms, tok, "token", hash_fn=hf).collect()}
-        e2 = {r["item"]: r["est"]
-              for r in sketches.cms_estimate(
-                  cms, counts, "token", hash_fn=hf, items_distinct=True).collect()}
-        assert e1 == e2, hf
+    plain = {(r["row"], r["bucket"]): r["cnt"]
+             for r in sketches.build_cms(tok, "token").collect()}
+    weighted = {(r["row"], r["bucket"]): r["cnt"]
+                for r in sketches.build_cms(counts, "token", weight_col="n").collect()}
+    assert plain == weighted
+    cms = sketches.build_cms(counts, "token", weight_col="n")
+    e1 = {r["item"]: r["est"] for r in sketches.cms_estimate(cms, tok, "token").collect()}
+    e2 = {r["item"]: r["est"]
+          for r in sketches.cms_estimate(cms, counts, "token", items_distinct=True).collect()}
+    assert e1 == e2
 
 
 def test_grouped_heavy_hitters_bounds_and_exact_head(spark):
@@ -503,22 +499,21 @@ def test_grouped_heavy_hitters_bounds_and_exact_head(spark):
         for tok, c in fs.items():
             rows += [(g, tok)] * c
     df = spark.createDataFrame(rows, "lang string, token string")
-    for hf in ("xxhash64", "portable"):
-        out = sketches.grouped_heavy_hitters(
-            df, "token", ["lang"], k=3, candidate_pool=8, hash_fn=hf
-        ).collect()
-        got = {}
-        for r in out:
-            got.setdefault(r["lang"], []).append((r["item"], r["est"]))
-        for g, items in got.items():
-            for tok, est in items:
-                assert est >= freqs[g].get(tok, 0), (hf, g, tok)
-        # wide sketch, tiny vocab: no collisions -> exact head per group
-        assert [t for t, _ in got["en"]] == ["the", "cat", "sat"], hf
-        assert [t for t, _ in got["fr"]] == ["le", "chat", "the"], hf
-        assert got[None][0] == ("mix", 15), hf
-        # absent-from-group candidates must not appear
-        assert all(t != "le" for t, _ in got["en"]), hf
+    out = sketches.grouped_heavy_hitters(
+        df, "token", ["lang"], k=3, candidate_pool=8
+    ).collect()
+    got = {}
+    for r in out:
+        got.setdefault(r["lang"], []).append((r["item"], r["est"]))
+    for g, items in got.items():
+        for tok, est in items:
+            assert est >= freqs[g].get(tok, 0), (g, tok)
+    # wide sketch, tiny vocab: no collisions -> exact head per group
+    assert [t for t, _ in got["en"]] == ["the", "cat", "sat"]
+    assert [t for t, _ in got["fr"]] == ["le", "chat", "the"]
+    assert got[None][0] == ("mix", 15)
+    # absent-from-group candidates must not appear
+    assert all(t != "le" for t, _ in got["en"])
     cms = sketches.build_cms(df, "token", group_cols=["lang"])
     per_group = {r["lang"]: r["c"] for r in
                  cms.groupBy("lang").agg(F.count(F.lit(1)).alias("c")).collect()}
@@ -915,7 +910,7 @@ def test_q129_contamination_hash_boundary(spark, tmp_path):
 
 
 def test_hll_explicit_accuracy_and_merge(spark, sf_dir):
-    """The explicit portable-hash HLL (q45's engine): estimate within the
+    """The explicit xxhash64-based HLL (q45's engine): estimate within the
     ~1.04/sqrt(m) rsd envelope of the exact count at several
     cardinalities, and registers merge by MAX exactly (shard sketches ==
     whole-corpus sketch)."""
@@ -1277,21 +1272,18 @@ def test_cms_grouped_merge_up(spark, sf_dir):
     assert urows == drows
 
 
-def test_build_cms_drops_nulls_in_both_hash_families(spark):
-    """NULL contract: NULLs are dropped uniformly. Before the filter the
-    families disagreed (portable: md5(NULL)->NULL array, nothing emitted;
-    xxhash64: NULL counted under the seed hash) — a nullable column got
-    family-dependent totals with no warning."""
+def test_build_cms_drops_nulls(spark):
+    """NULL contract: NULL values are dropped, not counted as one value
+    under xxhash64's NULL→seed hash."""
     from data_engineering_nd_datalake_project_4_spark.operators import sketches
 
     df = spark.createDataFrame(
         [("a",), (None,), ("a",), (None,), ("b",)], "token string"
     )
-    for hf in ("xxhash64", "portable"):
-        cells = sketches.build_cms(df, "token", width=64, depth=3, hash_fn=hf)
-        total = cells.groupBy("row").agg(F.sum("cnt").alias("n")).collect()
-        # every depth row sums to the NON-NULL instance count (3), both families
-        assert all(r["n"] == 3 for r in total), (hf, total)
+    cells = sketches.build_cms(df, "token", width=64, depth=3)
+    total = cells.groupBy("row").agg(F.sum("cnt").alias("n")).collect()
+    # every depth row sums to the NON-NULL instance count (3)
+    assert len(total) == 3 and all(r["n"] == 3 for r in total), total
 
 
 def test_ngram_jaccard_hashed_intersect_equals_string_sets(spark):

@@ -54,9 +54,10 @@ PREVIOUS_WINDOW = [
 PREVIOUS_WINDOW[19:19] = ["q20"]
 
 #: graded entries deliberately without an oracle — the driver records
-#: rows-only for these. Round 6 emptied the set: q35/q36/q40 moved to the
-#: portable MD5-60bit hash family, q42 to decimal-quantized centroids +
-#: the q30 cosine idiom, and q45 to an EXPLICIT HyperLogLog
+#: rows-only for these. Round 6 emptied the set: q35/q36/q40 gained
+#: exactly hashed oracles (today through the pure-SQL XXH64 twin of
+#: Spark's xxhash64), q42 moved to decimal-quantized centroids + the q30
+#: cosine idiom, and q45 to an EXPLICIT HyperLogLog
 #: (sketches.hll_registers/hll_estimate) whose registers and estimate are
 #: exact integer arithmetic — all 50 graded rows now carry full DuckDB
 #: oracles. (Outside the window, q60/q91/q115 stay rows-only: they

@@ -596,14 +596,14 @@ def run_incremental_dedup_scale(spark, reps: int) -> None:
         t0 = time.perf_counter()
         incremental.build_band_store(
             corpus, "text", "doc_id", store, num_hashes=32, bands=8,
-            shingle_n=3, hash_fn="xxhash64",
+            shingle_n=3,
         )
         build_sec = round(time.perf_counter() - t0, 3)
 
         def run_batch():
             surv = incremental.incremental_lsh_dedup(
                 spark, batch, "text", "doc_id", store, num_hashes=32,
-                bands=8, shingle_n=3, hash_fn="xxhash64",
+                bands=8, shingle_n=3,
             )
             _run(surv.select("doc_id", "source", "n_chars"))
             return surv
@@ -682,7 +682,7 @@ def run_versioned_replay_scale(spark, reps: int) -> None:
     from data_engineering_nd_datalake_project_4_spark.operators import incremental
 
     BATCH = 2000
-    KW = dict(num_hashes=32, bands=8, shingle_n=3, hash_fn="xxhash64")
+    KW = dict(num_hashes=32, bands=8, shingle_n=3)
     VSCHEMA = "band INT, bucket LONG, first_id LONG, src_batch LONG"
     points = [("sf0.1", SF01), ("sf1.0", SF10)]
     if os.path.exists(f"{SF100}/documents.parquet"):
