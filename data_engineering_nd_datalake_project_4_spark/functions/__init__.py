@@ -169,10 +169,10 @@ def valid_vector(a: Column) -> Column:
     return a.isNotNull() & (F.size(a) > 0) & ~F.exists(a, lambda x: x.isNull())
 
 
-def tokens(text_col: Column | str, sep: str = " ") -> Column:
-    """Whitespace tokenization used across the text operators."""
+def tokens(text_col: Column | str) -> Column:
+    """Single-space tokenization used across the text operators."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.split(c, sep)
+    return F.split(c, " ")
 
 
 DEC18_4 = DecimalType(18, 4)

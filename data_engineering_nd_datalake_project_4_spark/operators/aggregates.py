@@ -137,16 +137,11 @@ def grouping_sets(
     sets: Sequence[Sequence[str]],
     keys: Sequence[str],
     aggs: Sequence[Column],
-    keep_grouping_id: str | None = None,
 ) -> DataFrame:
     """GROUP BY GROUPING SETS (…) via the Spark 4 ``groupingSets`` API.
-    ``keys`` is the union of grouped columns (defines grouping_id bit
-    order); the empty-input grand-total repair applies only when ``()``
-    is one of the sets."""
+    ``keys`` is the union of grouped columns; the empty-input grand-total
+    repair applies only when ``()`` is one of the sets."""
     gd = df.groupingSets([list(s) for s in sets], *keys)
     if any(len(s) == 0 for s in sets):
-        return _with_standard_grand_total(df, gd, keys, aggs, keep_grouping_id)
-    out = gd.agg(*aggs, F.grouping_id().alias(_GID))
-    if keep_grouping_id:
-        return out.withColumnRenamed(_GID, keep_grouping_id)
-    return out.drop(_GID)
+        return _with_standard_grand_total(df, gd, keys, aggs, None)
+    return gd.agg(*aggs)

@@ -60,7 +60,6 @@ def mad_outliers(
     id_col: str,
     value_col: str,
     k: int = 3,
-    value_scale: int = 10_000,
 ) -> DataFrame:
     """Robust per-group outlier detection via median / MAD (median
     absolute deviation): flag rows where ``|value - median| > k · MAD``
@@ -72,8 +71,8 @@ def mad_outliers(
     Exactness (the half2/half4-soak-proof construction): comparing
     ``|dev| > k·MAD`` on raw doubles would tie on grid-valued money where
     engine median-interpolation formulas differ in the last ulp. Instead
-    values are integerized FIRST — ``CAST(v AS DECIMAL(18,4)) ·
-    value_scale`` is an exact integer (the decimal cast is the repo's
+    values are integerized FIRST — ``CAST(v AS DECIMAL(18,4)) · 10⁴`` is
+    an exact integer (the decimal cast is the repo's
     cross-engine-aligned quantize) — so every median is an exact multiple
     of 0.5, every |dev| a multiple of 0.5, every MAD a multiple of 0.25:
     interpolation, subtraction, the k· multiply and the strict comparison
@@ -92,8 +91,9 @@ def mad_outliers(
     the tiny stats frames broadcast back; no window over the data, no
     driver collect.
     """
-    if k <= 0 or value_scale <= 0:
-        raise ValueError("k and value_scale must be positive")
+    if k <= 0:
+        raise ValueError("k must be positive")
+    value_scale = 10_000
     cents = (F.col(value_col).cast("decimal(18,4)") * value_scale).cast("long")
     base = df.filter(F.col(value_col).isNotNull()).select(
         F.col(group_col).alias("__g"),

@@ -47,19 +47,20 @@ def latest_per_key(
     )
 
 
-def canonical_text_key(text_col: Column | str, sep: str = " ") -> Column:
-    """Canonical near-dedup key: sorted distinct token set re-joined
-    (SURVEY.md Q28). Two docs that are permutations / repetitions of the same
-    token set collide."""
-    return F.array_join(F.array_sort(F.array_distinct(tokens(text_col, sep))), sep)
+def canonical_text_key(text_col: Column | str) -> Column:
+    """Canonical near-dedup key: sorted distinct token set re-joined by
+    single spaces (SURVEY.md Q28). Two docs that are permutations /
+    repetitions of the same token set collide."""
+    return F.array_join(F.array_sort(F.array_distinct(tokens(text_col))), " ")
 
 
 def canonical_near_dedup_groups(
-    df: DataFrame, text_col: str, id_col: str, min_group: int = 2
+    df: DataFrame, text_col: str, id_col: str
 ) -> DataFrame:
     """Groups of near-duplicate docs under the canonical-token key.
 
-    Returns ``(group_min_id, group_size)`` per duplicate group. The groupBy
+    Returns ``(group_min_id, group_size)`` per duplicate group (two or
+    more docs). The groupBy
     key is ``xxhash64(canonical_key)`` — at scale the shuffle moves 8-byte
     hashes, not document text.
     """
@@ -69,7 +70,7 @@ def canonical_near_dedup_groups(
     return (
         keyed.groupBy("__key")
         .agg(F.min(id_col).alias("group_min_id"), F.count(F.lit(1)).alias("group_size"))
-        .filter(F.col("group_size") >= min_group)
+        .filter(F.col("group_size") >= 2)
         .drop("__key")
     )
 

@@ -443,24 +443,27 @@ def build_sign_band_store(
     _build_store(_sign_band_rows(df, id_col, vec_col, bands, band_bits), store_path)
 
 
-def compact_band_store(
-    spark: SparkSession,
-    store_path: str,
-    dedup_exact: bool = False,
-) -> int:
+def compact_band_store(spark: SparkSession, store_path: str) -> int:
     """Compact an append-only store in place — any store of this module
     (fingerprint, MinHash or sign-LSH; they share one format): every
     versioned (``src_batch``) batch appends ~one small file, so months of
     daily batches leave thousands of KB-sized files whose per-file task +
     footer fetch eventually dominates the probe scan. One rewrite
     (:func:`..sources.sinks.compact_parquet_dir`) restores ~target-sized
-    files.
+    files. Same single-writer assumption as the appends themselves:
+    don't compact concurrently with a batch. Returns the post-compaction
+    data-file count.
 
-    Pure layout change: the row multiset is untouched, so batch decisions
-    — and replay stability — are identical before and after
-    (``tests/test_incremental_lsh.py`` proves it). Same single-writer
-    assumption as the appends themselves: don't compact concurrently with
-    a batch. Returns the post-compaction data-file count.
+    The rewrite collapses EXACT duplicate rows — the row-level reclaim
+    for sustained at-least-once replay: every replayed delivery of a
+    batch re-appends its surviving ``(band, bucket, first_id,
+    src_batch)`` rows VERBATIM (same stamp → identical rows), so k extra
+    deliveries grow the store by k× the batch's surviving rows. Identical
+    rows are probe-invisible (existence + min-id semantics, and the stamp
+    filter treats equal stamps equally), so batch decisions — and replay
+    stability — are identical before and after
+    (``tests/test_incremental_lsh.py`` proves it). Distinct rows from
+    DIFFERENT batches/stamps are never collapsed.
 
     ``src_batch`` is ALWAYS carried through the rewrite: files without
     the column read it as NULL and the rewrite writes the NULL column
@@ -468,24 +471,11 @@ def compact_band_store(
     read the column) AND for a later versioned probe (explicit NULL ==
     absent == bootstrap-visible). Dropping it would make every stamped
     row bootstrap-visible and silently break the streaming wrappers'
-    replay-stability contract.
-
-    ``dedup_exact`` additionally collapses EXACT duplicate rows during
-    the rewrite — the row-level reclaim for sustained at-least-once
-    replay: every replayed delivery of a batch re-appends its surviving
-    ``(band, bucket, first_id, src_batch)`` rows VERBATIM (same stamp →
-    identical rows), so k extra deliveries grow the store by k× the
-    batch's surviving rows. Identical rows are probe-invisible (existence
-    + min-id semantics, and the stamp filter treats equal stamps
-    equally), so ``distinct()`` is decision-identical — replay stability
-    and later batches' decisions are untouched (tests prove it). Distinct
-    rows from DIFFERENT batches/stamps are never collapsed. Default off:
-    the plain compaction stays a pure layout change."""
+    replay-stability contract."""
     from data_engineering_nd_datalake_project_4_spark.sources.sinks import compact_parquet_dir
 
     return compact_parquet_dir(
-        spark, store_path, schema=_STORE_SCHEMA,
-        transform=(lambda df: df.distinct()) if dedup_exact else None,
+        spark, store_path, schema=_STORE_SCHEMA, transform=lambda df: df.distinct()
     )
 
 

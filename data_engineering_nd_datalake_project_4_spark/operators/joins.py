@@ -23,12 +23,9 @@ def equi_join(
     right: DataFrame,
     on: Sequence[str] | Column,
     how: str = "inner",
-    broadcast_right: bool = False,
 ) -> DataFrame:
-    """inner/left/right/full/semi/anti equi-join; optionally broadcast the
-    right side (use for dims ≲ a few hundred MB — skips the fact shuffle)."""
-    r = F.broadcast(right) if broadcast_right else right
-    return left.join(r, on if isinstance(on, Column) else list(on), how)
+    """inner/left/right/full/semi/anti equi-join."""
+    return left.join(right, on if isinstance(on, Column) else list(on), how)
 
 
 def semi_join(left: DataFrame, right: DataFrame, on: Sequence[str] | Column) -> DataFrame:
@@ -50,12 +47,11 @@ def range_join(
     right: DataFrame,
     equi: Column,
     range_pred: Column,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join + range predicate (e.g. ship date within 30 days of order
-    date). The equi conjunct keeps the join hash-partitionable; the range
-    predicate is applied as a post-join filter by the planner."""
-    return left.join(right, equi & range_pred, how)
+    """Inner equi-join + range predicate (e.g. ship date within 30 days of
+    order date). The equi conjunct keeps the join hash-partitionable; the
+    range predicate is applied as a post-join filter by the planner."""
+    return left.join(right, equi & range_pred)
 
 
 def asof_join(
@@ -291,7 +287,6 @@ def bloom_prefilter_join(
     on: str,
     how: str = "inner",
     num_bits: int = 1 << 20,
-    num_hashes: int = 5,
 ) -> DataFrame:
     """Semi-join reduction: filter the big ``probe`` side through a Bloom
     filter of ``build``'s join keys BEFORE the join's shuffle — at 100 TB
@@ -313,8 +308,8 @@ def bloom_prefilter_join(
             f"(inner/left_semi), got {how!r}: outer types keep "
             "non-matching probe rows, which the prefilter would drop"
         )
-    words = build_bloom_words(build, on, num_bits, num_hashes)
-    filtered = probe.where(bloom_might_contain(words, F.col(on), num_hashes))
+    words = build_bloom_words(build, on, num_bits)
+    filtered = probe.where(bloom_might_contain(words, F.col(on)))
     return filtered.join(build, on, "left_semi" if how == "semi" else how)
 
 

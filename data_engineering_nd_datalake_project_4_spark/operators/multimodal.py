@@ -10,9 +10,9 @@ partition-preserving transforms, output contracts. Codec status:
   (decode → features / resize) runs end-to-end with NO fake anywhere.
 - Compressed codecs (JPEG/PNG, audio resample, video frame extraction)
   require libraries not present in this container — those steps are
-  STUBBED behind ``_decode_*`` functions that either raise
-  ``NotImplementedError`` (``strict=True``) or produce a deterministic
-  fake derived from the bytes (default, so pipelines stay testable).
+  STUBBED: the decode kernels either raise ``NotImplementedError``
+  (``strict=True``, where offered) or produce a deterministic fake
+  derived from the bytes (default, so pipelines stay testable).
 
 Scale notes: ``mapInPandas`` streams Arrow batches — memory is bounded by
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` regardless of blob size;
@@ -297,11 +297,11 @@ RESIZED_SCHEMA = StructType(
 )
 
 
-def resize_images(df: DataFrame, width: int, height: int, strict: bool = False) -> DataFrame:
+def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
     """Nearest-neighbor resize of netpbm image blobs to (width, height) —
     REAL pixel work, pure numpy index selection, re-encoded as netpbm.
-    Non-netpbm payloads raise (``strict=True``) or pass through unchanged
-    with their declared metadata. Narrow transform, Arrow-batched."""
+    Non-netpbm payloads pass through unchanged with their declared
+    metadata. Narrow transform, Arrow-batched."""
     import numpy as np
     import pandas as pd
 
@@ -313,10 +313,6 @@ def resize_images(df: DataFrame, width: int, height: int, strict: bool = False) 
                 content = bytes(r["content"]) if r["content"] is not None else b""
                 arr = decode_netpbm(content)
                 if arr is None:
-                    if strict:
-                        raise NotImplementedError(
-                            "resize of non-netpbm payloads needs a codec library"
-                        )
                     ids.append(r["media_id"]); ws.append(r["width"] or 0)
                     hs.append(r["height"] or 0); outs.append(content)
                     continue
@@ -333,7 +329,7 @@ def resize_images(df: DataFrame, width: int, height: int, strict: bool = False) 
     return df.mapInPandas(batches, RESIZED_SCHEMA)
 
 
-def sample_video_frames(df: DataFrame, every_ms: int = 1000, strict: bool = False) -> DataFrame:
+def sample_video_frames(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Sample frames from video blobs: one output row per sampled frame.
 
     The fake samples ``duration_ms // every_ms`` pseudo-frames (sha256
@@ -348,8 +344,6 @@ def sample_video_frames(df: DataFrame, every_ms: int = 1000, strict: bool = Fals
             idxs: list[int] = []
             frames: list[bytes] = []
             for _, r in rows.iterrows():
-                if strict:
-                    raise NotImplementedError("real video decode not available here")
                 n = max(1, int((r["duration_ms"] or 0) // every_ms))
                 for i in range(n):
                     ids.append(r["media_id"])

@@ -478,15 +478,15 @@ def blocked_all_pairs_cosine(
     )
 
 
-def sized_gemm_block(n_vectors: int, min_blocks: int = 12, floor: int = 256, cap: int = 2048) -> int:
+def sized_gemm_block(n_vectors: int) -> int:
     """Block-size sizing discipline for :func:`blocked_all_pairs_cosine`
     (the GEMM twin of :func:`sized_band_bits`): the exchange moves each
     vector once per partner block — total ``N²·rowbytes / (2B)`` — so
     shuffle volume is DECREASING in the block size, while per-kernel
     memory is ``8·B²`` bytes of float64 sim matrix (32 MB at the 2048
     cap) plus two ``B×d`` blocks, and task parallelism needs at least
-    ``min_blocks`` blocks. Returns the largest power of two satisfying
-    all three: ``min(cap, max(floor, 2^floor(log2(N/min_blocks))))``.
+    12 blocks. Returns the largest power of two satisfying all three:
+    ``min(2048, max(256, 2^floor(log2(N/12))))``.
 
     At a fixed B the block-pair count grows as ``(N/B)²`` — the lane's
     block-pair growth law (``tools/bench_scale.py --gemm``). Sizing B up
@@ -497,6 +497,7 @@ def sized_gemm_block(n_vectors: int, min_blocks: int = 12, floor: int = 256, cap
     """
     import math
 
+    min_blocks, floor, cap = 12, 256, 2048
     if n_vectors <= min_blocks:
         return floor
     b = 2 ** int(math.floor(math.log2(max(n_vectors / min_blocks, 1.0))))
@@ -509,7 +510,6 @@ def kmeans(
     vec_col: str,
     k: int = 8,
     iters: int = 5,
-    cache: bool = True,
 ) -> tuple[DataFrame, list[list[float]]]:
     """Lloyd's k-means over an ``array<float>`` column; returns
     ``(assignments DataFrame[id, cluster], final centroids)``.
@@ -537,14 +537,12 @@ def kmeans(
     property-tested against a numpy replication instead of the DuckDB
     oracle.
 
-    ``cache=True`` localCheckpoints the (id, double-vector) training
-    frame ONCE so the ``iters`` assignment/recompute passes read a
+    With ``iters > 1`` the (id, double-vector) training frame is
+    localCheckpointed ONCE so the assignment/recompute passes read a
     materialized copy instead of re-running the scan + projection
     lineage per iteration — the standard iterative-training discipline
     (Spark MLlib caches its training set the same way). Train on a
-    sample when the corpus itself is the input; pass ``cache=False``
-    when the caller already materialized the frame (e.g. pq_train's
-    shared base).
+    sample when the corpus itself is the input.
 
     Degenerate vectors (``valid_vector``) are excluded from training AND
     assignment: a NULL-element vector would poison centroid means (and
@@ -562,7 +560,7 @@ def kmeans(
     if first:
         dim = len(first[0]["v"])
         rows = rows.filter(F.size("v") == dim)
-    if cache and iters > 1:
+    if iters > 1:
         rows = rows.localCheckpoint(eager=False)
     init = rows.orderBy("id").limit(k).collect()
     centroids = [list(r["v"]) for r in init]
@@ -955,7 +953,6 @@ def pq_train(
     m: int = 4,
     k: int = 16,
     iters: int = 5,
-    max_train_rows: int | None = None,
 ) -> list[list[list[float]]]:
     """Train product-quantization codebooks (Jégou et al., "Product
     Quantization for Nearest Neighbor Search", TPAMI 2011): split each
@@ -969,7 +966,7 @@ def pq_train(
 
     TRAINING IS A BOUNDED-SAMPLE DRIVER-SIDE STAGE (the FAISS-canonical
     shape: faiss trains quantizers on ~max_points_per_centroid·k sampled
-    vectors, never the corpus): the ``max_train_rows`` lowest-id vectors
+    vectors, never the corpus): the ``256·k`` lowest-id vectors
     are collected once (one TakeOrderedAndProject job — a scalable top-k
     heap, deterministic across runs/partitionings) and all m subspace
     Lloyd's runs happen in numpy on that sample. At 100 TB this is the
@@ -982,7 +979,7 @@ def pq_train(
     (identical contract to the distributed partial+final avg — the PQ
     gates are recall/exactness properties, not centroid bits).
     """
-    X = _collect_train_sample(df, id_col, vec_col, max_train_rows or 256 * k)
+    X = _collect_train_sample(df, id_col, vec_col, 256 * k)
     if X is None:
         return []  # empty training input: no codebooks (empty soak)
     dim = X.shape[1]
@@ -1193,7 +1190,6 @@ def ivfpq_train(
     m: int = 4,
     k: int = 16,
     iters: int = 5,
-    max_train_rows: int | None = None,
 ) -> tuple[list[list[float]], list[list[list[float]]]]:
     """Train the FAISS-canonical IVFADC index (Jégou et al. 2011 §V):
     ``nlist`` coarse k-means centroids, then PQ codebooks over the
@@ -1203,14 +1199,13 @@ def ivfpq_train(
     Returns ``(coarse_centroids, residual_codebooks)``. Model state is
     nlist*dim + k*dim driver-side floats. Training is the same
     bounded-sample driver-side stage as :func:`pq_train` (FAISS-canonical
-    — one sample collect, then coarse Lloyd's + residual projection +
-    per-subspace Lloyd's all in numpy; encode/search stay distributed).
+    — one collect of the ``256·max(nlist, k)`` lowest-id vectors, then
+    coarse Lloyd's + residual projection + per-subspace Lloyd's all in
+    numpy; encode/search stay distributed).
     """
     import numpy as np
 
-    X = _collect_train_sample(
-        df, id_col, vec_col, max_train_rows or 256 * max(nlist, k)
-    )
+    X = _collect_train_sample(df, id_col, vec_col, 256 * max(nlist, k))
     if X is None:
         return [], []  # empty training input: no model (empty soak)
     dim = X.shape[1]
@@ -1283,6 +1278,10 @@ def ivfpq_encode(
     return _pq_codes(staged, codebooks, "__resid", "pq_codes").drop("__resid")
 
 
+#: the largest probe set :func:`ivfpq_adc_topk` takes in one call
+_IVFADC_MAX_QUERIES = 1024
+
+
 def ivfpq_adc_topk(
     codes_df: DataFrame,
     queries: DataFrame,
@@ -1293,7 +1292,6 @@ def ivfpq_adc_topk(
     query_vec_col: str = "embedding",
     k: int = 5,
     nprobe: int = 2,
-    max_queries: int = 1024,
 ) -> DataFrame:
     """IVFADC search: each query probes its ``nprobe`` nearest coarse
     cells; within a probed cell the approximate squared L2 is the ADC sum
@@ -1306,8 +1304,9 @@ def ivfpq_adc_topk(
     probed cells are scored (the inverted-list pruning), the codes scan
     reads just the cell+code columns, and the kernel per candidate is m
     lookups + adds. Cell selection runs driver-side over the nlist coarse
-    centroids (model state, not data). Output: ``query_id, neighbor_id,
-    adc_dist``.
+    centroids (model state, not data); more than 1024 queries are refused
+    (one LUT per query and probed cell is built on the driver). Output:
+    ``query_id, neighbor_id, adc_dist``.
     """
     if not coarse or not codebooks:
         return _empty_adc_frame(codes_df, queries, id_col, query_id_col)
@@ -1328,9 +1327,9 @@ def ivfpq_adc_topk(
         F.col(query_id_col).alias("query_id"),
         as_double_array(F.col(query_vec_col)).alias("v"),
     ).collect()
-    if len(qrows) > max_queries:
+    if len(qrows) > _IVFADC_MAX_QUERIES:
         raise ValueError(
-            f"{len(qrows)} queries > max_queries={max_queries}: IVFADC builds "
+            f"{len(qrows)} queries > {_IVFADC_MAX_QUERIES}: IVFADC builds "
             "one LUT per (query, probed cell) on the driver — chunk the probe set"
         )
     if not qrows:

@@ -181,18 +181,16 @@ def cms_estimate(
     col: str,
     width: int = 2048,
     depth: int = 5,
-    items_distinct: bool = False,
 ) -> DataFrame:
     """Estimated frequency for each distinct value in ``items[col]``:
     min over the depth hash rows of the matching bucket counters. The
     sketch side is broadcast (it is depth × width rows at most).
-    ``width``/``depth`` must match the sketch's build. ``items_distinct=True``
-    skips the internal dedup when the caller already probes a one-row-
-    per-value frame (e.g. the same counts frame that built the sketch) —
-    saving an exchange, and letting AQE's ReuseExchange share the counts
-    subtree between build and probe."""
-    maybe_distinct = (lambda d: d) if items_distinct else (lambda d: d.distinct())
-    probes = _probe_rows(maybe_distinct(items.select(F.col(col).alias("item"))), width, depth)
+    ``width``/``depth`` must match the sketch's build. ``items`` is probed
+    as given, without a dedup exchange: repeated values hash to the same
+    cells, and the closing per-item MIN gives them one estimate. Probing
+    the counts frame that built the sketch lets AQE's ReuseExchange share
+    that subtree between build and probe."""
+    probes = _probe_rows(items.select(F.col(col).alias("item")), width, depth)
     return (
         probes.join(F.broadcast(cms), ["row", "bucket"], "left")
         .fillna(0, subset=["cnt"])
@@ -309,8 +307,7 @@ def _hll_alpha(m: int) -> float:
 
 
 def hll_registers(
-    df: DataFrame, col: str, p: int = 12, group_cols: Sequence[str] = (),
-    pre_distinct: bool = False,
+    df: DataFrame, col: str, p: int = 12, group_cols: Sequence[str] = ()
 ) -> DataFrame:
     """HyperLogLog registers as a DataFrame[bucket, reg] — the classic
     algorithm implemented as ONE partial-aggregating groupBy over a
@@ -337,16 +334,10 @@ def hll_registers(
     EACH) in the same single pass — the "distinct per tag/day/shard"
     shape without per-group scans.
 
-    ``pre_distinct`` (r13): registers depend only on the DISTINCT key
-    set (MAX per bucket), but the string hash is paid per key INSTANCE. When keys repeat heavily (fact-table foreign keys:
-    q45's lineitem keys repeat 6-200×), deduplicating first trades one
-    partially-aggregated key shuffle for hashing ~6-200× fewer rows —
-    measured 1.05 → 0.82 s on q45 at sf0.1 with the former MD5-based
-    hash, identical registers. Keep
-    it OFF for high-cardinality/low-repeat keys, where the extra
-    shuffle (bounded by distinct-keys-per-partition × partitions)
-    outweighs the hash savings and the default path's shuffle stays
-    ≤ 2^p rows per partition."""
+    Repeated keys need no dedup first: registers are a MAX per bucket, so
+    repeats cannot change them, and Spark's optimizer
+    (``RemoveRedundantAggregates``) drops a ``distinct()`` put below this
+    aggregate anyway."""
     if not 4 <= p <= 16:
         raise ValueError(f"p must be in [4, 16], got {p}")
     m = 1 << p
@@ -356,11 +347,9 @@ def hll_registers(
     lsb = w.bitwiseAND(-w)
     rho = F.when(w == 0, F.lit(maxrho)).otherwise(F.bit_count(lsb - 1) + 1)
     gcols = list(group_cols)
-    src = df.filter(F.col(col).isNotNull())
-    if pre_distinct:
-        src = src.select(*gcols, col).distinct()
     return (
-        src.select(*gcols, F.pmod(h, F.lit(m)).alias("bucket"), rho.alias("rho"))
+        df.filter(F.col(col).isNotNull())
+        .select(*gcols, F.pmod(h, F.lit(m)).alias("bucket"), rho.alias("rho"))
         .groupBy(*gcols, "bucket")
         .agg(F.max("rho").alias("reg"))
     )

@@ -50,10 +50,9 @@ def sampled_hot_keys(
     key: str,
     min_share: float = 0.001,
     sample_fraction: float = 0.01,
-    seed: int = 42,
-    max_keys: int = 10_000,
 ) -> list:
-    """Approximate hot-key detection from a seeded Bernoulli sample.
+    """Approximate hot-key detection from a Bernoulli sample (seed 42, so
+    the same input yields the same keys).
 
     Hot-key detection is a PERFORMANCE decision, not a correctness one —
     a missed hot key just shuffles (what it would have done anyway), a
@@ -61,14 +60,14 @@ def sampled_hot_keys(
     ``sample_fraction`` scan instead of a full-table frequency count: at
     100 TB a 1% sample still holds millions of occurrences of any key
     with ``min_share`` of the rows, and the driver-side result is bounded
-    by ``min(1/min_share, max_keys)`` values (metadata, never data).
+    by ``min(1/min_share, 10_000)`` values (metadata, never data).
     NULL keys are excluded — an equi-join never matches them.
 
     ``sample_fraction=1.0`` skips the sample node — for callers that
     already hold a cheaper sample (e.g. sampling documents BEFORE an
     explode, which Catalyst cannot push through on its own).
     """
-    s = df if sample_fraction >= 1.0 else df.sample(fraction=sample_fraction, seed=seed)
+    s = df if sample_fraction >= 1.0 else df.sample(fraction=sample_fraction, seed=42)
     counts = s.groupBy(key).agg(F.count(F.lit(1)).alias("n"))
     total = counts.agg(F.sum("n").alias("__total"))
     rows = (
@@ -76,7 +75,7 @@ def sampled_hot_keys(
         .filter(F.col("n") >= F.col("__total") * min_share)
         .filter(F.col(key).isNotNull())
         .orderBy(F.desc("n"))
-        .limit(max_keys)
+        .limit(10_000)
         .collect()
     )
     return [r[0] for r in rows]

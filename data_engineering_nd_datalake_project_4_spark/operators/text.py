@@ -63,11 +63,11 @@ _ALPHA_SPACE_CHARS = (
 
 def quality_score(
     text_col: Column | str,
-    stopwords: tuple[str, ...] = LANG_MARKERS["en"],
     toks: Column | None = None,
 ) -> Column:
     """Heuristic document quality in [0,1]: blend of length band, alpha
-    ratio, and stopword hit-rate (Gopher/C4-style rules, arithmetic only).
+    ratio, and hit-rate of the English stopwords ``LANG_MARKERS["en"]``
+    (Gopher/C4-style rules, arithmetic only).
 
     score = 0.4·len_ok + 0.3·alpha_ratio + 0.3·min(1, stopword_hits/2)
 
@@ -92,7 +92,7 @@ def quality_score(
     alpha = (
         F.length(c) - F.length(F.translate(c, _ALPHA_SPACE_CHARS, ""))
     ).cast("double") / F.greatest(F.length(c).cast("double"), F.lit(1.0))
-    hits = F.size(F.array_intersect(F.array_distinct(tk), F.array(*[F.lit(s) for s in stopwords]))).cast("double")
+    hits = F.size(F.array_intersect(F.array_distinct(tk), F.array(*[F.lit(s) for s in LANG_MARKERS["en"]]))).cast("double")
     raw = F.lit(0.4) * len_ok + F.lit(0.3) * alpha + F.lit(0.3) * F.least(F.lit(1.0), hits / 2)
     # scale-then-quantize (NOT F.round): the 4-dp quantize must be the
     # same op sequence as the oracle's VARCHAR-routed decimal cast. A raw
@@ -923,13 +923,12 @@ def bm25_topk(
     id_col: str,
     query_terms: list[str],
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """BM25 ranked retrieval (Robertson/Spärck Jones; the Lucene-default
     positive-IDF variant): score(d) = Σ_t idf(t) · tf·(k1+1) /
-    (tf + k1·(1−b+b·dl/avgdl)), idf = ln(1 + (N−df+0.5)/(df+0.5)) — the
-    lexical-retrieval complement to the embedding ANN family.
+    (tf + k1·(1−b+b·dl/avgdl)), idf = ln(1 + (N−df+0.5)/(df+0.5)), with
+    Lucene's k1 = 1.2 and b = 0.75 — the lexical-retrieval complement to
+    the embedding ANN family.
 
     Scale shape: one doc scan explodes tokens WITH the doc length riding
     each row (8 bytes) and filters to the query-term set BEFORE any
@@ -949,6 +948,7 @@ def bm25_topk(
     """
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
+    k1, b = 1.2, 0.75
     docs = ensure_map_parallelism(df.filter(F.col(text_col).isNotNull()))
     # r13: stage the token array ONCE per branch — the old shape ran
     # tokens() three times per corpus pass (stats' size() plus size() AND

@@ -120,7 +120,6 @@ def halflife_decay_score(
     ts_col: str,
     value_col: str,
     half_life_seconds: int,
-    max_halvings: int = 62,
 ) -> DataFrame:
     """Exponentially-decayed activity score per key, the recency-weighted
     feature behind "recent engagement" ranking signals: each observation
@@ -133,8 +132,8 @@ def halflife_decay_score(
 
     - ``k`` is BIGINT floor division of non-negative µs ages — exact.
     - the weight denominator is ``1 << k`` (``k <= 62``), a BIGINT whose
-      double cast is an exact power of two; rows older than
-      ``max_halvings`` half-lives are DROPPED in both engines (their
+      double cast is an exact power of two; rows older than 62
+      half-lives are DROPPED in both engines (their
       weight, < 2.2e-19, is below the decimal quantum anyway) rather than
       left to underflow differently.
     - each term is ONE IEEE division ``value / 2^k`` (exact scaling by a
@@ -151,8 +150,6 @@ def halflife_decay_score(
     audit), the k/term arithmetic entirely map-side, then one
     partial-combining groupBy on the key. No window, no per-row Python.
     """
-    if not 0 < max_halvings <= 62:
-        raise ValueError("max_halvings must be in 1..62 (bigint shift range)")
     hl_us = half_life_seconds * 1_000_000
     t = F.unix_micros(F.col(ts_col))
     obs = df.filter(
@@ -167,7 +164,7 @@ def halflife_decay_score(
     return (
         obs.crossJoin(ref)
         .withColumn("__k", k)
-        .filter(F.col("__k") <= max_halvings)
+        .filter(F.col("__k") <= 62)
         .groupBy(key)
         .agg(
             F.sum(term).cast("double").alias("decay_score"),

@@ -317,7 +317,7 @@ def wide_shuffle_sites(
     return sites
 
 
-def observed_shuffle_bytes(df: DataFrame, *, execute: bool = True) -> dict:
+def observed_shuffle_bytes(df: DataFrame) -> dict:
     """MEASURED shuffle volume for one execution of ``df``'s plan — the
     quantity the shape audits can only bound, not observe. Plan audits
     pin WHAT a shuffle carries; this pins HOW MUCH it moved, so a lane
@@ -332,11 +332,11 @@ def observed_shuffle_bytes(df: DataFrame, *, execute: bool = True) -> dict:
     volume). ReusedExchange nodes and repeat visits of the same stage
     object are skipped — a reused shuffle moves its bytes once.
 
-    ``execute=True`` (default) materializes the plan first via an
-    RDD-level count over ``executedPlan().execute()`` — every partition
-    computes, nothing ships to Python (``collect`` would pay row
-    transfer; ``df.count()`` builds a DIFFERENT pruned plan and its
-    metrics would describe the wrong query — the CLAUDE.md trap).
+    The plan is materialized first via an RDD-level count over
+    ``executedPlan().execute()`` — every partition computes, nothing
+    ships to Python (``collect`` would pay row transfer; ``df.count()``
+    builds a DIFFERENT pruned plan and its metrics would describe the
+    wrong query — the CLAUDE.md trap).
 
     RoundRobinPartitioning exchanges are totaled SEPARATELY
     (``roundrobin_written``): in this repo they come only from
@@ -354,8 +354,7 @@ def observed_shuffle_bytes(df: DataFrame, *, execute: bool = True) -> dict:
     width across a decade without mix-shift confounds.
     """
     jdf_plan = df._jdf.queryExecution().executedPlan()
-    if execute:
-        jdf_plan.execute().count()
+    jdf_plan.execute().count()
 
     totals: dict = {
         "written": 0,

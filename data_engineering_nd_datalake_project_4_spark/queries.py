@@ -1715,11 +1715,10 @@ def q45_approx_distinct(spark, sf_dir):
     tagged = li.select(F.lit("part").alias("tag"), F.col("l_partkey").alias("k")).unionAll(
         li.select(F.lit("supp").alias("tag"), F.col("l_suppkey").alias("k"))
     )
-    # r13: pre_distinct — TPC-H foreign keys repeat 6-200×, so hashing the
-    # distinct (tag, k) set pays one small partially-aggregated shuffle to
-    # skip ~85% of the hash work (registers identical by MAX semantics)
+    # no distinct first, although TPC-H foreign keys repeat 6-200×:
+    # registers are a MAX, and Spark drops a distinct below that aggregate
     est = sketches.hll_estimate(
-        sketches.hll_registers(tagged, "k", group_cols=["tag"], pre_distinct=True),
+        sketches.hll_registers(tagged, "k", group_cols=["tag"]),
         group_cols=["tag"],
     )
     # COALESCE 0.0: on zero-row input the tag groups don't exist, so the
@@ -3434,7 +3433,7 @@ def q94_cms_heavy_hitters(spark, sf_dir):
     )
     counts = tok.groupBy("token").agg(F.count(F.lit(1)).alias("n")).localCheckpoint()
     cms = sketches.build_cms(counts, "token", weight_col="n")
-    est = sketches.cms_estimate(cms, counts, "token", items_distinct=True)
+    est = sketches.cms_estimate(cms, counts, "token")
     return est.orderBy(F.desc("est"), F.asc("item")).limit(10)
 
 

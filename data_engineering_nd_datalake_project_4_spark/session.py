@@ -65,7 +65,6 @@ def get_spark(**kwargs) -> SparkSession:
 
 def scale_conf(
     input_bytes: int,
-    target_partition_bytes: int = 128 * 1024 * 1024,
     executor_cores_total: int | None = None,
 ) -> dict[str, str]:
     """Shuffle/scan sizing for a given input volume — the knobs that matter
@@ -75,8 +74,8 @@ def scale_conf(
     - ``spark.sql.files.maxPartitionBytes`` bounds scan-task size; 128 MB
       keeps a task's working set comfortably inside an executor core's
       memory share while amortizing task overhead.
-    - initial ``spark.sql.shuffle.partitions`` targets ~target_partition_bytes
-      per reduce partition pre-AQE; AQE then *coalesces* down — starting high
+    - initial ``spark.sql.shuffle.partitions`` targets ~128 MB per reduce
+      partition pre-AQE; AQE then *coalesces* down — starting high
       and coalescing is safe, starting low and splitting is not possible
       (except for skew-join splits), so round UP and never below total cores.
     - advisory partition size feeds AQE's coalescing target.
@@ -87,6 +86,7 @@ def scale_conf(
     """
     import math
 
+    target_partition_bytes = 128 * 1024 * 1024
     n_shuffle = max(
         executor_cores_total or 32,
         math.ceil(input_bytes / target_partition_bytes),

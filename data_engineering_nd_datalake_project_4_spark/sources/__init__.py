@@ -144,16 +144,15 @@ def read_csv(
     spark: SparkSession,
     path: str,
     schema: StructType | str,
-    header: bool = True,
-    sep: str = ",",
     mode: str = "PERMISSIVE",
     corrupt_record_col: str | None = None,
     bad_records_path: str | None = None,
 ) -> DataFrame:
-    """CSV scan with a declared schema. Same malformed-record posture as
-    :func:`read_json`; ``bad_records_path`` is an EAGER audit scan+write
-    at call time into a per-invocation subdir (:func:`_bad_records_split`)."""
-    reader = spark.read.option("header", str(header).lower()).option("sep", sep)
+    """Headered, comma-separated CSV scan with a declared schema. Same
+    malformed-record posture as :func:`read_json`; ``bad_records_path`` is
+    an EAGER audit scan+write at call time into a per-invocation subdir
+    (:func:`_bad_records_split`)."""
+    reader = spark.read.option("header", "true")
     df = _malformed_options(
         reader, schema, mode, corrupt_record_col, bad_records_path
     ).csv(path)
@@ -177,18 +176,6 @@ def read_parquet(
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
     return reader.parquet(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — same columnar pushdown/pruning properties as parquet
-    (Spark's native ORC reader is vectorized and stats-pruned)."""
-    return spark.read.orc(path)
-
-
-def read_text(spark: SparkSession, path: str, whole: bool = False) -> DataFrame:
-    """Line-per-row (or whole-file-per-row) text scan into a single
-    ``value`` string column — the raw-ingest entry for unstructured data."""
-    return spark.read.text(path, wholetext=whole)
 
 
 def read_binary_files(

@@ -49,16 +49,16 @@ def write_bucketed_table(
     bucket_by: Sequence[str],
     num_buckets: int,
     sort_by: Sequence[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Persist as a bucketed (and optionally sorted) managed table.
+    """Persist as a bucketed (and optionally sorted) managed table,
+    replacing any table of that name.
 
     Two tables bucketed identically on their join key join WITHOUT a
     shuffle (both sides already hash-partitioned on disk) — at 100 TB this
     turns the recurring fact⋈fact join from the dominant cost into a local
     merge. Requires the session catalog (saveAsTable), not a bare path.
     """
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_by)
+    writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_by)
     if sort_by:
         writer = writer.sortBy(*sort_by)
     writer.format("parquet").saveAsTable(table)
@@ -160,15 +160,19 @@ def upsert_partitioned(
         updates.unpersist()
 
 
+#: the file size :func:`compact_parquet_dir` coalesces to (Spark's default
+#: ``spark.sql.files.maxPartitionBytes``: one file per scan task)
+_TARGET_FILE_BYTES = 128 * 1024 * 1024
+
+
 def compact_parquet_dir(
     spark,
     path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
     schema: str | None = None,
     transform=None,
 ) -> int:
     """Compact a small-file parquet directory in place: read, coalesce to
-    ~target-sized files, swap in via rename. Returns the post-compaction
+    ~128 MiB files, swap in via rename. Returns the post-compaction
     data-file count. The antidote to streaming sinks, append-heavy stores
     (:mod:`..operators.incremental`'s signature stores) and over-parallel
     writes accumulating thousands of KB-sized files (each file costs a
@@ -180,9 +184,9 @@ def compact_parquet_dir(
     failing schema inference. ``transform`` (optional ``df -> df``) is
     applied to the whole table before the rewrite — the hook row-level
     maintenance rides on (e.g.
-    :func:`..operators.incremental.compact_band_store`'s ``dedup_exact``
-    reclaim of at-least-once replay duplicates). The default (None)
-    preserves the row multiset exactly.
+    :func:`..operators.incremental.compact_band_store`'s reclaim of
+    at-least-once replay duplicates). The default (None) preserves the row
+    multiset exactly.
 
     Sizing and the swap go through :mod:`.lakefs` (the Hadoop FileSystem
     API), so ``file://``, ``hdfs://`` and ``s3a://`` paths work alike; the
@@ -195,7 +199,7 @@ def compact_parquet_dir(
     df = (spark.read.schema(schema) if schema else spark.read).parquet(path)
     if transform is not None:
         df = transform(df)
-    n_files = max(1, math.ceil(lakefs.size_bytes(spark, path) / target_file_bytes))
+    n_files = max(1, math.ceil(lakefs.size_bytes(spark, path) / _TARGET_FILE_BYTES))
     lakefs.swap_in(
         spark,
         path,
@@ -204,39 +208,19 @@ def compact_parquet_dir(
     return lakefs.data_file_count(spark, path)
 
 
-def write_orc(df: DataFrame, path: str, partition_by: Sequence[str] | None = None) -> None:
-    """ORC sink, overwrite + snappy — mirror of :func:`write_parquet` for
-    ORC-standardized lakes."""
-    w = df.write.mode("overwrite").option("compression", "snappy")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
-
-
-def write_csv(df: DataFrame, path: str, header: bool = True, sep: str = ",") -> None:
-    """CSV sink (overwrite, headered) — the interchange/export path; flat
-    schemas only, callers serialize arrays/maps first."""
-    df.write.mode("overwrite").option("header", str(header).lower()).option(
-        "sep", sep
-    ).csv(path)
-
-
 def write_jsonl(
     df: DataFrame,
     path: str,
     partition_by: Sequence[str] | None = None,
     max_records_per_file: int | None = None,
-    compression: str | None = "gzip",
 ) -> None:
-    """JSON-Lines sink — the training-data interchange format (one JSON
-    object per line; nested arrays/structs serialize natively, unlike CSV).
-    Spark's json writer IS line-delimited; ``max_records_per_file`` bounds
-    shard sizes for data-loader consumption, ``partition_by`` gives
+    """Gzipped JSON-Lines sink — the training-data interchange format (one
+    JSON object per line; nested arrays/structs serialize natively, unlike
+    CSV). Spark's json writer IS line-delimited; ``max_records_per_file``
+    bounds shard sizes for data-loader consumption, ``partition_by`` gives
     source/language-split exports, gzip keeps text shards ~5x smaller
     (gzip splits per FILE, not within — bound shard size accordingly)."""
-    w = df.write.mode("overwrite")
-    if compression:
-        w = w.option("compression", compression)
+    w = df.write.mode("overwrite").option("compression", "gzip")
     if max_records_per_file:
         w = w.option("maxRecordsPerFile", str(max_records_per_file))
     if partition_by:

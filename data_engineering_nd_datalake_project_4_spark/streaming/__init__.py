@@ -31,27 +31,26 @@ def read_file_stream(
 
 def read_rate_stream(
     spark: SparkSession,
-    rows_per_second: int = 10,
     num_partitions: int | None = None,
     micro_batch: bool = False,
     rows_per_batch: int | None = None,
 ) -> DataFrame:
     """Built-in rate source (SURVEY §2.2 J "file/rate source"): synthetic
-    ``(timestamp, value)`` rows for load tests and pipeline smoke runs.
+    ``(timestamp, value)`` rows for load tests and pipeline smoke runs, 10
+    rows a second.
 
     ``micro_batch=True`` selects the ``rate-micro-batch`` provider, which
-    emits exactly ``rows_per_batch`` rows per trigger — deterministic row
-    counts (the plain ``rate`` provider is wall-clock-driven), which is what
-    tests and reproducible load generators want.
+    emits exactly ``rows_per_batch`` rows (default 10) per trigger —
+    deterministic row counts (the plain ``rate`` provider is
+    wall-clock-driven), which is what tests and reproducible load
+    generators want.
     """
     if micro_batch:
         reader = spark.readStream.format("rate-micro-batch").option(
-            "rowsPerBatch", str(rows_per_batch or rows_per_second)
+            "rowsPerBatch", str(rows_per_batch or 10)
         )
     else:
-        reader = spark.readStream.format("rate").option(
-            "rowsPerSecond", str(rows_per_second)
-        )
+        reader = spark.readStream.format("rate").option("rowsPerSecond", "10")
     if num_partitions:
         reader = reader.option("numPartitions", str(num_partitions))
     return reader.load()
@@ -159,17 +158,12 @@ def stream_static_join(
     stream_df: DataFrame,
     static_df: DataFrame,
     on: list[str] | Column,
-    how: str = "inner",
-    broadcast_static: bool = True,
 ) -> DataFrame:
-    """Enrich a stream against a static dimension (the reference joins log
-    events to song/artist dims, /root/reference/etl.py:150-162 — here as a
-    continuous stream). Stateless: the static side is re-planned per
-    micro-batch, so a broadcast keeps every micro-batch shuffle-free —
-    the default for dimension tables; disable for a static side too big
-    to broadcast (falls back to a per-batch shuffle join)."""
-    s = F.broadcast(static_df) if broadcast_static else static_df
-    return stream_df.join(s, on, how)
+    """Inner-join a stream to a static dimension (the reference ETL joins
+    log events to its song/artist dims — here as a continuous stream).
+    Stateless: the static side is re-planned per micro-batch, and a
+    broadcast keeps every micro-batch shuffle-free."""
+    return stream_df.join(F.broadcast(static_df), on)
 
 
 def stream_stream_interval_join(
@@ -461,7 +455,7 @@ def _run_versioned_dedup_stream(
     """The body of the three incremental dedup stream wrappers: per
     micro-batch, ``operator(spark, batch, *cols, store_path, **kw)`` in
     versioned mode overwrites ``decisions_root/v<batch_id>``; every
-    ``compact_every``-th batch then runs ``compact_band_store(dedup_exact=True)``."""
+    ``compact_every``-th batch then runs ``compact_band_store``."""
 
     def batch_fn(batch_df, batch_id: int) -> None:
         out = operator(
@@ -470,9 +464,7 @@ def _run_versioned_dedup_stream(
         )
         out.write.mode("overwrite").parquet(f"{decisions_root}/v{int(batch_id)}")
         if compact_every and int(batch_id) % compact_every == compact_every - 1:
-            incremental.compact_band_store(
-                batch_df.sparkSession, store_path, dedup_exact=True
-            )
+            incremental.compact_band_store(batch_df.sparkSession, store_path)
 
     run_foreach_batch(stream, batch_fn, checkpoint, query_name)
 
@@ -518,8 +510,8 @@ def run_incremental_lsh_dedup_stream(
     (test_lsh_stream_crash_between_store_append_and_decisions_write pins
     it); sustained replay grows the store by one duplicate stamped row
     per surviving (band, bucket) per extra delivery —
-    ``compact_band_store(..., dedup_exact=True)`` reclaims them
-    (decision-identical: exact-duplicate rows are probe-invisible).
+    ``compact_band_store`` reclaims them (decision-identical:
+    exact-duplicate rows are probe-invisible).
 
     ``compact_every=N`` runs that reclaim IN-STREAM after every Nth
     batch's decisions commit (batch_id % N == N-1). Safe by
@@ -547,7 +539,6 @@ def run_incremental_exact_dedup_stream(
     checkpoint: str,
     mode: str = "exact",
     query_name: str = "incremental_exact_dedup",
-    compact_every: int | None = None,
 ) -> None:
     """The EXACT-fingerprint member of the continuous-ingest dedup trio
     (exact here / MinHash-LSH :func:`run_incremental_lsh_dedup_stream` /
@@ -564,13 +555,11 @@ def run_incremental_exact_dedup_stream(
     the identical survivor set and overwrite ``v<batch_id>`` with the
     same rows; a crash between the store append and the decisions write
     is healed by the replay. Store maintenance: ``compact_band_store``
-    (the fingerprint store is a one-band band store; stamps always
-    carried; ``dedup_exact=True`` reclaims replay-duplicate rows);
-    ``compact_every=N`` runs it in-stream after every Nth batch (see
-    :func:`run_incremental_lsh_dedup_stream` for the safety argument)."""
+    between runs (the fingerprint store is a one-band band store; stamps
+    always carried; replay-duplicate rows reclaimed)."""
     _run_versioned_dedup_stream(
         stream_docs, incremental.incremental_dedup, (text_col, id_col),
-        store_path, decisions_root, checkpoint, query_name, compact_every,
+        store_path, decisions_root, checkpoint, query_name, None,
         mode=mode,
     )
 
@@ -585,7 +574,6 @@ def run_incremental_semantic_dedup_stream(
     bands: int = 4,
     band_bits: int = 6,
     query_name: str = "incremental_semantic_dedup",
-    compact_every: int | None = None,
 ) -> None:
     """The sign-LSH twin of :func:`run_incremental_lsh_dedup_stream` for
     embedding feeds (q170's operator, versioned mode): per micro-batch,
@@ -593,10 +581,10 @@ def run_incremental_semantic_dedup_stream(
     ``sem_removed`` flag (degenerate vectors pass through flagged False,
     the q170 contract). Same stamp-filter exactly-once contract, same
     store coexistence with batch-mode appends and
-    ``build_sign_band_store`` bootstraps; same ``compact_every``
-    in-stream reclaim (every incremental store shares one format)."""
+    ``build_sign_band_store`` bootstraps; the same ``compact_band_store``
+    maintenance (every incremental store shares one format)."""
     _run_versioned_dedup_stream(
         stream_vecs, incremental.incremental_semantic_dedup, (id_col, vec_col),
-        store_path, decisions_root, checkpoint, query_name, compact_every,
+        store_path, decisions_root, checkpoint, query_name, None,
         bands=bands, band_bits=band_bits,
     )

@@ -359,7 +359,7 @@ def test_semantic_degenerate_vectors_pass_through(spark, vec_corpus_and_batch, t
 
 
 # ---------------------------------------------------------------------------
-# compact_band_store: layout-only rewrite of the append-only stores
+# compact_band_store: compaction of the append-only stores
 # ---------------------------------------------------------------------------
 
 #: every store kind shares one format: these tests run once per builder
@@ -509,7 +509,7 @@ def test_compact_band_store_dedup_exact_reclaims_replay_duplicates(
     store kind: each replayed delivery of a versioned batch re-appends its
     surviving rows verbatim (identical stamp → identical rows), so k extra
     deliveries add exactly k× the batch's surviving rows.
-    compact_band_store(dedup_exact=True) collapses exact duplicates and
+    compact_band_store collapses exact duplicates and
     carries every stamp through: replay of the same batch decides the
     same, and a LATER batch still sees the batch's rows."""
     w = _store_world(spark, kind, corpus_and_batch, vec_corpus_and_batch)
@@ -528,7 +528,7 @@ def test_compact_band_store_dedup_exact_reclaims_replay_duplicates(
     distinct_before = sorted(set(_store_rows(spark, store, _VSCHEMA)))
     uncompacted = str(tmp_path / "uncompacted")
     shutil.copytree(store, uncompacted)
-    incremental.compact_band_store(spark, store, dedup_exact=True)
+    incremental.compact_band_store(spark, store)
     rows_after = _store_rows(spark, store, _VSCHEMA)
     assert rows_after == distinct_before          # exact dups reclaimed
     assert len(rows_after) == after_first         # back to single-delivery size

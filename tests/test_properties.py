@@ -461,9 +461,9 @@ def test_count_min_sketch_bounds(spark, sf_dir):
 
 def test_cms_weighted_build_and_distinct_probe_equivalence(spark, sf_dir):
     """build_cms(weight_col=) from a pre-aggregated (value, count) frame
-    produces the IDENTICAL sketch as the per-instance build;
-    cms_estimate(items_distinct=True) on the counts frame gives the
-    identical estimates — the one-corpus-pass q94 shape."""
+    produces the IDENTICAL sketch as the per-instance build; probing
+    with the one-row-per-token counts frame gives the estimates of
+    probing every token instance — the one-corpus-pass q94 shape."""
     from data_engineering_nd_datalake_project_4_spark.operators import sketches
 
     tok = (
@@ -479,7 +479,7 @@ def test_cms_weighted_build_and_distinct_probe_equivalence(spark, sf_dir):
     cms = sketches.build_cms(counts, "token", weight_col="n")
     e1 = {r["item"]: r["est"] for r in sketches.cms_estimate(cms, tok, "token").collect()}
     e2 = {r["item"]: r["est"]
-          for r in sketches.cms_estimate(cms, counts, "token", items_distinct=True).collect()}
+          for r in sketches.cms_estimate(cms, counts, "token").collect()}
     assert e1 == e2
 
 
@@ -715,7 +715,7 @@ def test_halflife_decay_score_hand_check(spark):
     """Decay hand check, half-life 10s anchored at the newest row (t=30):
     ages 0/10/25s -> k = 0/1/2 halvings -> 8/1 + 4/2 + 8/4 = 12.0 exactly
     (each term a pure power-of-two scaling). NULL ts/value rows excluded,
-    a row older than max_halvings half-lives dropped, not underflowed."""
+    a row older than 62 half-lives dropped, not underflowed."""
     from data_engineering_nd_datalake_project_4_spark.operators.timeseries import (
         halflife_decay_score,
     )

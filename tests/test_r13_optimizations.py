@@ -9,7 +9,8 @@ its results bit-identical; these tests pin the equivalence DIRECTLY
 - text._dup_flagged_spans == the COUNT(DISTINCT)-agg formulation for
   min_docs=2 (min/max path) AND min_docs=3 (dense_rank path — no graded
   query exercises it);
-- sketches.hll_registers(pre_distinct=True) == instance-hashing registers;
+- sketches.hll_registers over heavily repeated keys == the registers of
+  the distinct key set (MAX per bucket, so q45 needs no distinct);
 - similarity.banded_sign_lsh_keys(keep_vec=True) == the key frame plus
   the staged double vector (the bucket-rescore join removal).
 """
@@ -133,7 +134,7 @@ def test_hll_pre_distinct_registers_identical(spark):
         (F.col("id") % 137).alias("k"),  # heavy key repetition
     )
     base = sketches.hll_registers(df, "k", group_cols=["tag"])
-    pre = sketches.hll_registers(df, "k", group_cols=["tag"], pre_distinct=True)
+    pre = sketches.hll_registers(df.distinct(), "k", group_cols=["tag"])
     a = sorted(tuple(r) for r in base.collect())
     b = sorted(tuple(r) for r in pre.collect())
     assert a == b

@@ -66,43 +66,6 @@ def test_partitioned_sink_one_file_per_partition(spark, tmp_path):
     assert back == sorted(map(tuple, df.select(*cols).collect()))
 
 
-def test_orc_roundtrip_partitioned(spark, sf_dir, tmp_path):
-    from data_engineering_nd_datalake_project_4_spark.sources import read_orc
-    from data_engineering_nd_datalake_project_4_spark.sources.sinks import write_orc
-
-    nation = load_table(spark, sf_dir, "nation")
-    d = str(tmp_path / "orc")
-    write_orc(nation, d, partition_by=["n_regionkey"])
-    back = read_orc(spark, d)
-    assert sorted(back.columns) == sorted(nation.columns)
-    a = sorted(tuple(r) for r in nation.collect())
-    b = sorted(tuple(r) for r in back.select(*nation.columns).collect())
-    assert a == b
-
-
-def test_csv_sink_roundtrip(spark, sf_dir, tmp_path):
-    from data_engineering_nd_datalake_project_4_spark.sources.sinks import write_csv
-
-    region = load_table(spark, sf_dir, "region")
-    d = str(tmp_path / "csv")
-    write_csv(region, d)
-    back = read_csv(spark, d, schema=region.schema)
-    a = sorted(tuple(r) for r in region.collect())
-    b = sorted(tuple(r) for r in back.select(*region.columns).collect())
-    assert a == b
-
-
-def test_text_source_reads_lines(spark, tmp_path):
-    from data_engineering_nd_datalake_project_4_spark.sources import read_text
-
-    p = tmp_path / "t.txt"
-    p.write_text("alpha\nbeta\ngamma\n")
-    got = sorted(r["value"] for r in read_text(spark, str(p)).collect())
-    assert got == ["alpha", "beta", "gamma"]
-    whole = read_text(spark, str(p), whole=True).collect()
-    assert len(whole) == 1 and whole[0]["value"].startswith("alpha")
-
-
 def test_object_store_style_roundtrip(spark, sf_dir, tmp_path):
     """The reference's day-1 path: write partitioned parquet to a BUCKET-style
     URI and read it back through the same API (reference R04/R07,

@@ -356,8 +356,7 @@ def test_versioned_exact_dedup_replay_stability(spark, tmp_path):
 def test_compact_fingerprint_store_preserves_stamps_and_reclaims(spark, tmp_path):
     """Compacting a fingerprint store (compact_band_store, the one
     compactor) always carries src_batch (the ADVICE r12 stamp-erasure
-    class) and dedup_exact reclaims replay duplicates with identical
-    decisions."""
+    class) and reclaims replay duplicates with identical decisions."""
     corpus = spark.createDataFrame(
         [(i, _doc(i)) for i in range(10)], "doc_id LONG, text STRING"
     )
@@ -377,7 +376,7 @@ def test_compact_fingerprint_store_preserves_stamps_and_reclaims(spark, tmp_path
         assert _ids(incremental.incremental_dedup(
             spark, b0, "text", "doc_id", store, src_batch=5, **KW)) == s0
     assert rows() == after_first + 2 * 2  # +2 survivor fp rows per replay
-    incremental.compact_band_store(spark, store, dedup_exact=True)
+    incremental.compact_band_store(spark, store)
     assert rows() == after_first
     # stamps survived: same-id replay still returns identical survivors,
     # and a later batch still sees batch-5 fingerprints (5 < 6)

@@ -666,7 +666,7 @@ def run_versioned_replay_scale(spark, reps: int) -> None:
     batch 3 extra times (the at-least-once worst case), recording store
     rows per delivery (law: +surviving-band-rows per delivery, exact
     duplicates) and the replay wall; then
-    ``compact_band_store(dedup_exact=True)`` and verify rows return to
+    ``compact_band_store`` (which collapses exact duplicates) and verify rows return to
     single-delivery size with an identical replay decision and a
     measured before/after probe wall. Cadence recommendation recorded in
     the entry: compact when duplicate rows exceed ~1x the live store
@@ -732,7 +732,7 @@ def run_versioned_replay_scale(spark, reps: int) -> None:
             rows_per_delivery.append(rows())
         appended = rows_per_delivery[0] - base_rows
         t0 = time.perf_counter()
-        incremental.compact_band_store(spark, gstore, dedup_exact=True)
+        incremental.compact_band_store(spark, gstore)
         compact_sec = round(time.perf_counter() - t0, 3)
         rows_after_compact = rows()
         probe_after_compact = first_delivery(gstore)

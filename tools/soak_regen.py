@@ -190,6 +190,7 @@ from __future__ import annotations
 
 import hashlib
 import importlib.util
+import os
 import shutil
 import sys
 import tempfile
@@ -648,9 +649,25 @@ def build_variant(name: str, out_dir: Path, src_dir: Path | None = None) -> None
             shutil.copyfile(src, dst)
 
 
+#: the checkout this file belongs to: the soak grades the tree it is run
+#: from, so a copy of the repository grades that copy
+CHECKOUT = Path(__file__).resolve().parents[1]
+
+
+def use_checkout() -> None:
+    """Import the package from :data:`CHECKOUT`, in this process and in
+    Spark's Python workers: a ``mapInPandas`` worker imports the package
+    by module path, and it inherits ``PYTHONPATH``, not ``sys.path``. Call
+    before the Spark session starts."""
+    sys.path.insert(0, str(CHECKOUT))
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (str(CHECKOUT), os.environ.get("PYTHONPATH")) if p
+    )
+
+
 def run_strict_sim(sf_dir: str, spark, con_factory, compare) -> list[str]:
     spec = importlib.util.spec_from_file_location(
-        "entry_mod", "/root/repo/__spark_entry__.py"
+        "entry_mod", CHECKOUT / "__spark_entry__.py"
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
@@ -670,7 +687,7 @@ def run_strict_sim(sf_dir: str, spark, con_factory, compare) -> list[str]:
 
 
 def main(argv: list[str]) -> int:
-    sys.path.insert(0, "/root/repo")
+    use_checkout()
     from data_engineering_nd_datalake_project_4_spark.session import get_spark
     from tests.oracle_util import compare, duck_con
 
