@@ -80,19 +80,24 @@ def canonical_near_dedup_groups(
 # ---------------------------------------------------------------------------
 
 def _shingles(text_col: Column, n: int) -> Column:
-    """Word n-gram shingles as an array<string> (distinct)."""
+    """Word n-gram shingles as an array<string>, distinct, in first-seen
+    order. A text with fewer than ``n`` tokens is one shingle (its whole
+    token run); NULL text gives NULL for ``n = 1`` and ``[NULL]`` above.
+
+    The sliding window is a ``transform`` over ``array_repeat(toks, k)``,
+    one reference to the token array per start position, so the split
+    reaches the lambda as its ARGUMENT. A column expression inside a
+    lambda body runs once per element, so ``slice(split(text), i + 1, n)``
+    in the body would split the whole text again for every shingle."""
     toks = tokens(text_col)
     if n == 1:
         return F.array_distinct(toks)
-    # sliding window over the token array, built with transform over indices —
-    # stays inside codegen, no UDF.
-    k = F.size(toks) - F.lit(n - 1)
-    idx = F.sequence(F.lit(0), F.greatest(k - 1, F.lit(0)))
+    windows = F.transform(
+        F.array_repeat(toks, F.size(toks) - F.lit(n - 1)),
+        lambda t, i: F.array_join(F.slice(t, i + 1, n), " "),
+    )
     return F.array_distinct(
-        F.when(
-            F.size(toks) >= n,
-            F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " ")),
-        ).otherwise(F.array(F.array_join(toks, " ")))
+        F.when(F.size(toks) >= n, windows).otherwise(F.array(F.array_join(toks, " ")))
     )
 
 
@@ -145,18 +150,24 @@ def minhash_band_rows(
     df = ensure_map_parallelism(df)
 
     # Staged projections: shingles → shingle hashes → signature → bands.
-    # Each stage's output is referenced MANY times by the next (num_hashes
-    # derivations over __h, `bands` slices of __sig), which stops Catalyst's
-    # CollapseProject from inlining the expensive array expression into
-    # every consumer — without the staging, the shingle construction runs
-    # num_hashes× per row.
+    # The signature and the band keys are each ONE fixed-size expression:
+    # a transform over array_repeat(<previous stage>, lanes), so the stage
+    # reaches every lane as the lambda's argument and the lane index picks
+    # the coefficients or the slice. CollapseProject may fuse the stages
+    # into one projection; each is still evaluated once per row. Had a lane
+    # body referenced __h or __sig itself, the fused shingle-and-hash chain
+    # would run once per lane.
     #
     # Universal hashing: each shingle STRING is hashed exactly once;
     # the per-seed values derive arithmetically as (aᵢ·h + bᵢ) mod M in a
     # 31-bit field (products stay < 2^62 — no ANSI overflow). This replaces
     # num_hashes string hashes per shingle with one hash + cheap mult-adds.
     M = (1 << 31) - 1  # Mersenne prime 2^31-1
-    rng_a, rng_b = minhash_coeffs(num_hashes)
+    # array<int> literals, parsed once (F.lit of a list costs a py4j call
+    # per element)
+    coef_a, coef_b = (
+        F.expr(f"array({', '.join(map(str, c))})") for c in minhash_coeffs(num_hashes)
+    )
 
     shingled = df.select(
         F.col(id_col).alias("__id"),
@@ -168,38 +179,26 @@ def minhash_band_rows(
     )
     signed = hashed.select(
         "__id",
-        F.array(
-            *[
-                F.array_min(
-                    F.transform(
-                        F.col("__h"),
-                        (lambda a, b: lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(M))(rng_a[i], rng_b[i]),
-                    )
-                )
-                for i in range(num_hashes)
-            ]
+        F.transform(
+            F.array_repeat(F.col("__h"), num_hashes),
+            lambda hs, i: F.array_min(
+                F.transform(hs, lambda h: (h * coef_a[i] + coef_b[i]) % F.lit(M))
+            ),
         ).alias("__sig"),
     )
-    banded = signed.select(
-        "__id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.array_join(
-                            F.transform(
-                                F.slice(F.col("__sig"), b * rows_per_band + 1, rows_per_band),
-                                lambda x: x.cast("string"),
-                            ),
-                            ",",
-                        )
-                    )
-                    for b in range(bands)
-                ]
+    band_keys = F.transform(
+        F.array_repeat(F.col("__sig"), bands),
+        lambda s, b: F.xxhash64(
+            F.array_join(
+                F.transform(
+                    F.slice(s, b * rows_per_band + 1, rows_per_band),
+                    lambda x: x.cast("string"),
+                ),
+                ",",
             )
-        ).alias("__band", "__bucket"),
+        ),
     )
-    return banded
+    return signed.select("__id", F.posexplode(band_keys).alias("__band", "__bucket"))
 
 
 def minhash_lsh_candidate_pairs(
@@ -586,8 +585,11 @@ def connected_components(
     and its neighbors' labels; stop when a round changes nothing. That
     always happens within diameter + 1 rounds, so there is no round cap
     and the labels returned are always converged — for dedup graphs
-    (small, dense clusters) 2-4 rounds. Each round is one shuffle join +
-    one groupBy min, all DataFrame ops, run as ONE job: the round's eager
+    (small, dense clusters) 2-4 rounds. Round 1 is one aggregate over the
+    symmetric edges, ``least(u, min(v))`` per node: its labels are still
+    the node ids, so it needs no join and no separate node-set pass. Each
+    later round is one shuffle join + one groupBy min. Every round,
+    all DataFrame ops, runs as ONE job: the round's eager
     ``localCheckpoint`` (which truncates the growing lineage so round N's
     plan doesn't replay rounds 1..N-1) also fills an ``Observation`` of
     the label sum. Labels only ever decrease, so a round changed nothing
@@ -617,8 +619,11 @@ def connected_components(
         ).localCheckpoint()
         return frame, obs.get["s"]
 
+    # round 1: every label is still its node's own id, so no join
     labels, total = checkpoint(
-        sym.select(F.col("u").alias("node")).distinct().withColumn("component", F.col("node"))
+        sym.groupBy("u")
+        .agg(F.least(F.col("u"), F.min("v")).alias("component"))
+        .select(F.col("u").alias("node"), "component")
     )
     while True:
         # neighbor labels: edge (u,v) carries v's current label to u

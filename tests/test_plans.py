@@ -7,6 +7,8 @@ top-k without global sort, codegen coverage).
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -168,6 +170,128 @@ def test_curation_scorer_never_reevaluated_in_a_filter(registry_frames, name):
         if "split(" in c or "translate(" in c
     ]
     assert not offenders, f"{name}: curation scorer in Filter: {offenders}"
+
+
+def _node_lists(value):
+    """Every flattened tree in a ``TreeNode.toJSON()`` value: a pre-order
+    list of ``{"class", "num-children", ...}`` nodes. A plan is one such
+    list; each expression field of a node holds more of them."""
+    if isinstance(value, list):
+        if value and all(isinstance(v, dict) and "num-children" in v for v in value):
+            yield value
+        for v in value:
+            yield from _node_lists(v)
+    elif isinstance(value, dict):
+        for v in value.values():
+            yield from _node_lists(v)
+
+
+def _tree(nodes: list[dict]) -> tuple[list[list[int]], list[int]]:
+    """Children indices of each node of a pre-order node list, and the
+    index one past each node's subtree (iterative: unrolled expressions
+    nest deeper than Python's recursion limit)."""
+    kids: list[list[int]] = [[] for _ in nodes]
+    end = [0] * len(nodes)
+    roots: list[int] = []  # subtrees already read, leftmost on top
+    for i in range(len(nodes) - 1, -1, -1):
+        kids[i] = [roots.pop() for _ in range(nodes[i]["num-children"])]
+        end[i] = end[kids[i][-1]] if kids[i] else i + 1
+        roots.append(i)
+    return kids, end
+
+
+def _is(node: dict, cls: str) -> bool:
+    return node["class"].rsplit(".", 1)[-1] == cls
+
+
+def optimized_plan_json(df):
+    """The optimized logical plan as parsed JSON: one py4j call per plan,
+    where a node-by-node py4j walk costs seconds over the registry."""
+    return json.loads(df._jdf.queryExecution().optimizedPlan().toJSON())
+
+
+def lambda_body_split_sites(df) -> list[str]:
+    """Column-reading ``split`` calls inside a higher-order function's
+    lambda body. A lambda body runs once per array element, so a split of
+    a column there re-tokenizes the whole row for every element (the
+    n-gram window that split the text once per shingle). A split of a
+    lambda variable is per-element work and passes."""
+    sites = set()
+    for nodes in _node_lists(optimized_plan_json(df)):
+        kids, end = _tree(nodes)
+        for i, node in enumerate(nodes):
+            if not _is(node, "LambdaFunction"):
+                continue
+            body = kids[i][node["function"]]
+            for j in range(body, end[body]):
+                if not _is(nodes[j], "StringSplit"):
+                    continue
+                cols = sorted(
+                    nodes[k]["name"]
+                    for k in range(j, end[j])
+                    if _is(nodes[k], "AttributeReference")
+                )
+                if cols:
+                    sites.add(f"split({', '.join(cols)})")
+    return sorted(sites)
+
+
+#: queries allowed a column-reading split() inside a lambda body. Empty
+#: by policy: hand the token array to the lambda as an argument
+#: (``transform(array_repeat(toks, k), (t, i) -> ...)``) instead.
+SPLIT_IN_LAMBDA_BY_DESIGN: dict[str, str] = {}
+
+
+def test_no_column_split_in_lambda_bodies(registry_frames):
+    """Higher-order functions are interpreted, and their lambda bodies
+    run once per element: a column's split() inside one tokenizes the
+    row once per element, O(tokens²) per document. No registry plan may
+    hold one (q129's 5-gram window did)."""
+    offenders = {
+        name: sites
+        for name, df in registry_frames.items()
+        if name not in SPLIT_IN_LAMBDA_BY_DESIGN and (sites := lambda_body_split_sites(df))
+    }
+    assert not offenders, f"column split() inside a lambda body: {offenders}"
+
+
+def test_no_column_split_in_lambda_bodies_of_eager_build_frames(spark, sf_dir):
+    """The frames an eager build consumes (checkpoints, store builds) are
+    invisible to the registry audit, which reads only the plan that
+    spark_fn() returns: plan the dedup operators' shingle frames directly."""
+    from data_engineering_nd_datalake_project_4_spark.operators import dedup
+
+    docs = load_table(spark, sf_dir, "documents")
+    frames = {
+        "minhash_band_rows": dedup.minhash_band_rows(docs, "text", "doc_id"),
+        "ngram_jaccard_pairs(n=3)": dedup.ngram_jaccard_pairs(docs, "text", "doc_id", n=3),
+        "simhash_fingerprints": dedup.simhash_fingerprints(docs, "text", "doc_id"),
+    }
+    offenders = {
+        name: sites for name, df in frames.items() if (sites := lambda_body_split_sites(df))
+    }
+    assert not offenders, f"column split() inside a lambda body: {offenders}"
+
+
+def test_lambda_body_split_audit_discriminates(spark, sf_dir):
+    """Red/green for the audit: a window over start indices that slices
+    split(text) in the body flags; the same window over array_repeat of
+    the split, and a split of the lambda's own element, pass."""
+    docs = load_table(spark, sf_dir, "documents")
+    toks = F.split("text", " ")
+    bad = docs.select(
+        F.transform(F.sequence(F.lit(0), F.lit(3)), lambda i: F.slice(toks, i + 1, 2)).alias("w")
+    )
+    assert lambda_body_split_sites(bad) == ["split(text)"]
+
+    good = docs.select(
+        F.transform(F.array_repeat(toks, 4), lambda t, i: F.slice(t, i + 1, 2)).alias("w")
+    )
+    assert not lambda_body_split_sites(good)
+    per_element = docs.select(
+        F.transform(F.array("text", "text"), lambda s: F.split(s, " ")).alias("w")
+    )
+    assert not lambda_body_split_sites(per_element)
 
 
 def _q152_pairs_frame(spark, sf_dir, monkeypatch):

@@ -385,6 +385,27 @@ def test_connected_components_runs_no_count_job(spark, monkeypatch):
     assert {(r["node"], r["component"]) for r in labels.collect()} == want
 
 
+def test_connected_components_checkpoints_once_per_round(spark, monkeypatch):
+    """Round 1 is one join-free aggregate (labels are still the node
+    ids), so the build checkpoints the symmetric edges once and then once
+    per round: no node-set checkpoint ahead of round 1. The path 1..23
+    needs 22 label-moving rounds and one unchanged round: 1 + 23 eager
+    localCheckpoint calls."""
+    edges, want = _path_and_islands(spark)
+    real = type(edges).localCheckpoint
+    calls = []
+
+    def counting(self, eager=True, storageLevel=None):
+        calls.append(eager)
+        return real(self, eager, storageLevel)
+
+    monkeypatch.setattr(type(edges), "localCheckpoint", counting)
+    labels = dedup.connected_components(edges)
+    monkeypatch.undo()
+    assert calls.count(True) == 24, calls
+    assert {(r["node"], r["component"]) for r in labels.collect()} == want
+
+
 def test_connected_components_empty_edges(spark):
     edges = spark.createDataFrame([], "id_a long, id_b long")
     assert dedup.connected_components(edges).count() == 0
